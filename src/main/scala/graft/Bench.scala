@@ -29,7 +29,8 @@ object Bench {
   @volatile private var calSink = 0.0
 
   /** One dependent-chain FMA block in a METHOD (C2-compiled after a few
-    * calls — never OSR, see the HalfDecodeProbe methodology note).
+    * calls — never OSR: a one-call huge loop gets OSR-compiled and often
+    * reads several times slow).
     */
   private def calChunk(seed: Double): Double = {
     var x = seed

@@ -193,8 +193,8 @@ object CentroidOps {
     * bottleneck. The single-point screen already runs at the float-FMA
     * kernel's speed, but one point's screen streams the whole k×dim
     * centroid matrix (6.3 MB at 4096×384) from L3 — ~22 GB/s per thread
-    * measured (MicroArgmin), so 32 assignment threads saturate the
-    * shared L3 and throttle ~4×. This is why FAISS assigns with a
+    * measured (r10, COVERAGE.md §2.7 row C1), so 32 assignment threads
+    * saturate the shared L3 and throttle ~4×. This is why FAISS assigns with a
     * blocked GEMM: BLOCK OVER POINTS TOO. Here a 128-centroid chunk
     * (L2-resident) is screened against up to 16 buffered points before
     * moving on, cutting per-point L3 traffic 16× — per-iteration

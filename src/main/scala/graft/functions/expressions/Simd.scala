@@ -279,7 +279,8 @@ object Simd {
     * out(0..7) — [[dot4FSeq]] widened to 8 independent accumulator
     * chains: float FMA latency×throughput needs ~8 in-flight chains to
     * saturate both FMA ports, and the 4-wide tile measured only ~1.45×
-    * over the double-lane kernel where ~4× is available (MicroArgmin).
+    * over the double-lane kernel where ~4× is available (r10 assignment
+    * diagnosis, COVERAGE.md §2.7 row C1).
     */
   def dot8FSeq(a: Array[Float], cs: Array[Array[Float]], c: Int, n: Int,
                out: Array[Double]): Unit = {
@@ -976,343 +977,6 @@ object Simd {
       accE.rearrange(PQ4_SHUF_LO, accO).intoArray(out, c)
       accE.rearrange(PQ4_SHUF_HI, accO).intoArray(out, c + halfS)
       c += step
-    }
-  }
-
-  // ---- f16 (IEEE-754 binary16) kernels: in-register decode + the same
-  // double-lane accumulation trees as the f32 kernels. The scalar decode
-  // (`VectorKernels.halfToFloat`, one branchy call per element) costs
-  // more than the dot it feeds on wide rows; the vector decode is ~8 int
-  // ops per 16 lanes and BITWISE-equal to the scalar for all 65536 bit
-  // patterns (SimdSpec gates it exhaustively): normals/Inf/NaN remap the
-  // exponent by +112 in int space, subnormals go through the exact
-  // magic-subtraction trick (Giesen's float→half public-domain family),
-  // where `float(m·2⁻²³ scaled) − 2⁻¹⁴` is exact by construction.
-
-  private val IS = jdk.incubator.vector.IntVector.SPECIES_PREFERRED
-
-  /** Whether the fused f16 kernels apply: a short vector must split into
-    * exactly two float-shaped int vectors via S2I parts.
-    */
-  def halfKernelsAvailable: Boolean =
-    available && SS.vectorBitSize() == FS.vectorBitSize() &&
-      SS.length() == 2 * FS.length() && IS.length() == FS.length()
-
-  private val HALF_MAGIC = java.lang.Float.intBitsToFloat(113 << 23)
-
-  /** 16 f16 bit patterns (sign-extended into int lanes; only the low 16
-    * bits are read) → f32 lanes, bitwise `VectorKernels.halfToFloat`.
-    */
-  private def halfLanes(x16: jdk.incubator.vector.IntVector): FloatVector = {
-    val x = x16.and(0x7fff)
-    val sign = x16.and(0x8000).lanewise(VectorOperators.LSHL, 16)
-    val base = x.lanewise(VectorOperators.LSHL, 13).add(112 << 23)
-    val isInf = x.compare(VectorOperators.GE, 0x7c00)
-    val isSub = x.compare(VectorOperators.LT, 0x0400)
-    val inf = base.add(112 << 23)
-    val sub = base.add(1 << 23).reinterpretAsFloats()
-      .sub(HALF_MAGIC).reinterpretAsInts()
-    base.blend(inf, isInf).blend(sub, isSub).or(sign).reinterpretAsFloats()
-  }
-
-  /** dot(a_f32, decode(h_f16)) over the first `n` elements — bitwise
-    * `Simd.dot(a, decoded)` (identical per-lane accumulation tree; the
-    * decode itself is bitwise the scalar), without materializing the
-    * decoded row. The HNSW f16-graph build path's kernel.
-    */
-  def dotHalf(a: Array[Float], h: Array[Short], n: Int): Double = {
-    var acc0 = DoubleVector.zero(DS)
-    var acc1 = DoubleVector.zero(DS)
-    val step = FS.length()
-    val step2 = SS.length()
-    val upper16 = FS.loopBound(n)
-    val upper32 = upper16 - upper16 % step2
-    var i = 0
-    while (i < upper32) {
-      val sv = jdk.incubator.vector.ShortVector.fromArray(SS, h, i)
-      var p = 0
-      while (p < 2) {
-        val fv = halfLanes(
-          sv.convert(VectorOperators.S2I, p).asInstanceOf[jdk.incubator.vector.IntVector])
-        val va = FloatVector.fromArray(FS, a, i + p * step)
-        acc0 = va.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector]
-          .fma(fv.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector], acc0)
-        acc1 = va.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector]
-          .fma(fv.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector], acc1)
-        p += 1
-      }
-      i += step2
-    }
-    if (i < upper16) { // one straggler float-width block (n % 32 >= 16)
-      val buf = new Array[Float](step)
-      var j = 0
-      while (j < step) { buf(j) = VectorKernels.halfToFloat(h(i + j)); j += 1 }
-      val fv = FloatVector.fromArray(FS, buf, 0)
-      val va = FloatVector.fromArray(FS, a, i)
-      acc0 = va.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector]
-        .fma(fv.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector], acc0)
-      acc1 = va.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector]
-        .fma(fv.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector], acc1)
-      i += step
-    }
-    var s = acc0.add(acc1).reduceLanes(VectorOperators.ADD)
-    while (i < n) {
-      s += a(i).toDouble * VectorKernels.halfToFloat(h(i)).toDouble
-      i += 1
-    }
-    s
-  }
-
-  /** ‖a − decode(h)‖² — the l2Sq twin of [[dotHalf]], bitwise
-    * `Simd.l2Sq(a, decoded)`.
-    */
-  def l2SqHalf(a: Array[Float], h: Array[Short], n: Int): Double = {
-    var acc0 = DoubleVector.zero(DS)
-    var acc1 = DoubleVector.zero(DS)
-    val step = FS.length()
-    val step2 = SS.length()
-    val upper16 = FS.loopBound(n)
-    val upper32 = upper16 - upper16 % step2
-    var i = 0
-    while (i < upper32) {
-      val sv = jdk.incubator.vector.ShortVector.fromArray(SS, h, i)
-      var p = 0
-      while (p < 2) {
-        val fv = halfLanes(
-          sv.convert(VectorOperators.S2I, p).asInstanceOf[jdk.incubator.vector.IntVector])
-        val va = FloatVector.fromArray(FS, a, i + p * step)
-        val d0 = va.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector]
-          .sub(fv.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector])
-        val d1 = va.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector]
-          .sub(fv.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector])
-        acc0 = d0.fma(d0, acc0)
-        acc1 = d1.fma(d1, acc1)
-        p += 1
-      }
-      i += step2
-    }
-    if (i < upper16) {
-      val buf = new Array[Float](step)
-      var j = 0
-      while (j < step) { buf(j) = VectorKernels.halfToFloat(h(i + j)); j += 1 }
-      val fv = FloatVector.fromArray(FS, buf, 0)
-      val va = FloatVector.fromArray(FS, a, i)
-      val d0 = va.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector]
-        .sub(fv.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector])
-      val d1 = va.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector]
-        .sub(fv.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector])
-      acc0 = d0.fma(d0, acc0)
-      acc1 = d1.fma(d1, acc1)
-      i += step
-    }
-    var s = acc0.add(acc1).reduceLanes(VectorOperators.ADD)
-    while (i < n) {
-      val d = a(i).toDouble - VectorKernels.halfToFloat(h(i)).toDouble
-      s += d * d
-      i += 1
-    }
-    s
-  }
-
-  /** Four [[dotHalf]] values against gathered f16 rows — the f16 twin of
-    * [[dot4At]]: the a-side loads/widens once per chunk, each row keeps
-    * its own lane pair in [[dotHalf]]'s exact order, so every output is
-    * bitwise `dotHalf(a, rows(ij), n)` (SimdSpec gates it).
-    */
-  def dotHalf4At(a: Array[Float], rows: Array[Array[Short]],
-                 i0: Int, i1: Int, i2: Int, i3: Int, n: Int,
-                 out: Array[Double]): Unit = {
-    val h0 = rows(i0); val h1 = rows(i1); val h2 = rows(i2); val h3 = rows(i3)
-    var a00 = DoubleVector.zero(DS); var a01 = DoubleVector.zero(DS)
-    var a10 = DoubleVector.zero(DS); var a11 = DoubleVector.zero(DS)
-    var a20 = DoubleVector.zero(DS); var a21 = DoubleVector.zero(DS)
-    var a30 = DoubleVector.zero(DS); var a31 = DoubleVector.zero(DS)
-    val step = FS.length()
-    val step2 = SS.length()
-    val upper16 = FS.loopBound(n)
-    val upper32 = upper16 - upper16 % step2
-    var i = 0
-    while (i < upper32) {
-      val sv0 = jdk.incubator.vector.ShortVector.fromArray(SS, h0, i)
-      val sv1 = jdk.incubator.vector.ShortVector.fromArray(SS, h1, i)
-      val sv2 = jdk.incubator.vector.ShortVector.fromArray(SS, h2, i)
-      val sv3 = jdk.incubator.vector.ShortVector.fromArray(SS, h3, i)
-      var p = 0
-      while (p < 2) {
-        val va = FloatVector.fromArray(FS, a, i + p * step)
-        val va0 = va.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector]
-        val va1 = va.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector]
-        val f0 = halfLanes(sv0.convert(VectorOperators.S2I, p).asInstanceOf[jdk.incubator.vector.IntVector])
-        a00 = va0.fma(f0.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector], a00)
-        a01 = va1.fma(f0.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector], a01)
-        val f1 = halfLanes(sv1.convert(VectorOperators.S2I, p).asInstanceOf[jdk.incubator.vector.IntVector])
-        a10 = va0.fma(f1.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector], a10)
-        a11 = va1.fma(f1.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector], a11)
-        val f2 = halfLanes(sv2.convert(VectorOperators.S2I, p).asInstanceOf[jdk.incubator.vector.IntVector])
-        a20 = va0.fma(f2.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector], a20)
-        a21 = va1.fma(f2.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector], a21)
-        val f3 = halfLanes(sv3.convert(VectorOperators.S2I, p).asInstanceOf[jdk.incubator.vector.IntVector])
-        a30 = va0.fma(f3.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector], a30)
-        a31 = va1.fma(f3.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector], a31)
-        p += 1
-      }
-      i += step2
-    }
-    var s0 = a00.add(a01).reduceLanes(VectorOperators.ADD)
-    var s1 = a10.add(a11).reduceLanes(VectorOperators.ADD)
-    var s2 = a20.add(a21).reduceLanes(VectorOperators.ADD)
-    var s3 = a30.add(a31).reduceLanes(VectorOperators.ADD)
-    // the straggler 16-block and ragged tail run per-row through the
-    // scalar continuation of dotHalf's own order: the 16-block would need
-    // four decode buffers here for marginal gain, and dims are 32-aligned
-    // in every stored-table layout — bitwise equality is preserved
-    // because dotHalf itself takes the same scalar path past upper32
-    if (i < n) {
-      s0 = tailDotHalf(a, h0, i, n, a00, a01)
-      s1 = tailDotHalf(a, h1, i, n, a10, a11)
-      s2 = tailDotHalf(a, h2, i, n, a20, a21)
-      s3 = tailDotHalf(a, h3, i, n, a30, a31)
-    }
-    out(0) = s0; out(1) = s1; out(2) = s2; out(3) = s3
-  }
-
-  // shared tail: replay dotHalf's post-upper32 path (one possible
-  // 16-block via a decode buffer, then scalar) on top of the lane accs
-  private def tailDotHalf(a: Array[Float], h: Array[Short], from: Int, n: Int,
-                          acc0in: DoubleVector, acc1in: DoubleVector): Double = {
-    var acc0 = acc0in
-    var acc1 = acc1in
-    val step = FS.length()
-    val upper16 = FS.loopBound(n)
-    var i = from
-    if (i < upper16) {
-      val buf = new Array[Float](step)
-      var j = 0
-      while (j < step) { buf(j) = VectorKernels.halfToFloat(h(i + j)); j += 1 }
-      val fv = FloatVector.fromArray(FS, buf, 0)
-      val va = FloatVector.fromArray(FS, a, i)
-      acc0 = va.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector]
-        .fma(fv.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector], acc0)
-      acc1 = va.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector]
-        .fma(fv.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector], acc1)
-      i += step
-    }
-    var s = acc0.add(acc1).reduceLanes(VectorOperators.ADD)
-    while (i < n) {
-      s += a(i).toDouble * VectorKernels.halfToFloat(h(i)).toDouble
-      i += 1
-    }
-    s
-  }
-
-  /** Four [[l2SqHalf]] values against gathered f16 rows — the f16 twin of
-    * [[l2Sq4At]]; per-row lane order identical to [[l2SqHalf]].
-    */
-  def l2SqHalf4At(a: Array[Float], rows: Array[Array[Short]],
-                  i0: Int, i1: Int, i2: Int, i3: Int, n: Int,
-                  out: Array[Double]): Unit = {
-    val h0 = rows(i0); val h1 = rows(i1); val h2 = rows(i2); val h3 = rows(i3)
-    var a00 = DoubleVector.zero(DS); var a01 = DoubleVector.zero(DS)
-    var a10 = DoubleVector.zero(DS); var a11 = DoubleVector.zero(DS)
-    var a20 = DoubleVector.zero(DS); var a21 = DoubleVector.zero(DS)
-    var a30 = DoubleVector.zero(DS); var a31 = DoubleVector.zero(DS)
-    val step = FS.length()
-    val step2 = SS.length()
-    val upper16 = FS.loopBound(n)
-    val upper32 = upper16 - upper16 % step2
-    var i = 0
-    while (i < upper32) {
-      val sv0 = jdk.incubator.vector.ShortVector.fromArray(SS, h0, i)
-      val sv1 = jdk.incubator.vector.ShortVector.fromArray(SS, h1, i)
-      val sv2 = jdk.incubator.vector.ShortVector.fromArray(SS, h2, i)
-      val sv3 = jdk.incubator.vector.ShortVector.fromArray(SS, h3, i)
-      var p = 0
-      while (p < 2) {
-        val va = FloatVector.fromArray(FS, a, i + p * step)
-        val va0 = va.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector]
-        val va1 = va.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector]
-        val f0 = halfLanes(sv0.convert(VectorOperators.S2I, p).asInstanceOf[jdk.incubator.vector.IntVector])
-        val d00 = va0.sub(f0.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector])
-        val d01 = va1.sub(f0.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector])
-        a00 = d00.fma(d00, a00); a01 = d01.fma(d01, a01)
-        val f1 = halfLanes(sv1.convert(VectorOperators.S2I, p).asInstanceOf[jdk.incubator.vector.IntVector])
-        val d10 = va0.sub(f1.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector])
-        val d11 = va1.sub(f1.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector])
-        a10 = d10.fma(d10, a10); a11 = d11.fma(d11, a11)
-        val f2 = halfLanes(sv2.convert(VectorOperators.S2I, p).asInstanceOf[jdk.incubator.vector.IntVector])
-        val d20 = va0.sub(f2.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector])
-        val d21 = va1.sub(f2.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector])
-        a20 = d20.fma(d20, a20); a21 = d21.fma(d21, a21)
-        val f3 = halfLanes(sv3.convert(VectorOperators.S2I, p).asInstanceOf[jdk.incubator.vector.IntVector])
-        val d30 = va0.sub(f3.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector])
-        val d31 = va1.sub(f3.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector])
-        a30 = d30.fma(d30, a30); a31 = d31.fma(d31, a31)
-        p += 1
-      }
-      i += step2
-    }
-    var s0 = a00.add(a01).reduceLanes(VectorOperators.ADD)
-    var s1 = a10.add(a11).reduceLanes(VectorOperators.ADD)
-    var s2 = a20.add(a21).reduceLanes(VectorOperators.ADD)
-    var s3 = a30.add(a31).reduceLanes(VectorOperators.ADD)
-    if (i < n) {
-      s0 = tailL2SqHalf(a, h0, i, n, a00, a01)
-      s1 = tailL2SqHalf(a, h1, i, n, a10, a11)
-      s2 = tailL2SqHalf(a, h2, i, n, a20, a21)
-      s3 = tailL2SqHalf(a, h3, i, n, a30, a31)
-    }
-    out(0) = s0; out(1) = s1; out(2) = s2; out(3) = s3
-  }
-
-  private def tailL2SqHalf(a: Array[Float], h: Array[Short], from: Int, n: Int,
-                           acc0in: DoubleVector, acc1in: DoubleVector): Double = {
-    var acc0 = acc0in
-    var acc1 = acc1in
-    val step = FS.length()
-    val upper16 = FS.loopBound(n)
-    var i = from
-    if (i < upper16) {
-      val buf = new Array[Float](step)
-      var j = 0
-      while (j < step) { buf(j) = VectorKernels.halfToFloat(h(i + j)); j += 1 }
-      val fv = FloatVector.fromArray(FS, buf, 0)
-      val va = FloatVector.fromArray(FS, a, i)
-      val d0 = va.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector]
-        .sub(fv.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector])
-      val d1 = va.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector]
-        .sub(fv.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector])
-      acc0 = d0.fma(d0, acc0)
-      acc1 = d1.fma(d1, acc1)
-      i += step
-    }
-    var s = acc0.add(acc1).reduceLanes(VectorOperators.ADD)
-    while (i < n) {
-      val d = a(i).toDouble - VectorKernels.halfToFloat(h(i)).toDouble
-      s += d * d
-      i += 1
-    }
-    s
-  }
-
-  /** Exposed for the exhaustive decode-equality gate (SimdSpec). */
-  private[graft] def halfLanesDecode(bits: Array[Short], out: Array[Float]): Unit = {
-    val step2 = SS.length()
-    val step = FS.length()
-    var i = 0
-    val upper = bits.length - bits.length % step2
-    while (i < upper) {
-      val sv = jdk.incubator.vector.ShortVector.fromArray(SS, bits, i)
-      var p = 0
-      while (p < 2) {
-        halfLanes(sv.convert(VectorOperators.S2I, p).asInstanceOf[jdk.incubator.vector.IntVector])
-          .intoArray(out, i + p * step)
-        p += 1
-      }
-      i += step2
-    }
-    while (i < bits.length) {
-      out(i) = VectorKernels.halfToFloat(bits(i))
-      i += 1
     }
   }
 

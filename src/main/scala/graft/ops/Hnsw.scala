@@ -44,25 +44,24 @@ object Hnsw {
     * touch while the current tile computes — the serve walk's software
     * prefetch stand-in (see the serve expansion in searchLayer). 0
     * disables touching. Value-neutral by construction (the touches are
-    * pure loads into a blackhole); tunable live for A/B probing
-    * (ServeProbe sweeps it), default from `-Dgraft.hnsw.touchLines`.
+    * pure loads into a blackhole). 24 measured best across three r14
+    * sweeps of {0, 4, 8, 24} (COVERAGE.md §"Serving posture").
     */
-  @volatile private[graft] var touchLines: Int =
-    java.lang.Integer.getInteger("graft.hnsw.touchLines", 24)
+  private val touchLines = 24
 
   /** Walk-working-set crossover for [[ShardGraph.autoI8]] in bytes:
     * above it the auto flavor serves the i8 walk, below it the contract
-    * walk. Set from the r15 AutoFlavorProbe ef-ladder on the 500K store
-    * graph (see COVERAGE.md §"Serving posture"); override with
+    * walk. Set from the r15 ef-ladder on the 500K store graph
+    * (COVERAGE.md §"Serving posture"); override with
     * `-Dgraft.hnsw.i8.autoBytes=N`.
     */
   @volatile private[graft] var autoI8Bytes: Long = {
     val v = java.lang.Long.getLong("graft.hnsw.i8.autoBytes")
     // 3 MB: below the ef=128 walk estimate at the reference geometry
     // (128·16·384·4 ≈ 3.1 MB) — the first rung where every r15
-    // measurement (AutoFlavorProbe both regimes; the artifact's
-    // i8_ef128 row) agrees the i8 walk wins; at ef ≤ 64 the two walks
-    // measured parity-to-contract-ahead across rounds, so the
+    // measurement (COVERAGE.md §"Serving posture", both regimes; the
+    // artifact's i8_ef128 row) agrees the i8 walk wins; at ef ≤ 64 the
+    // two walks measured parity-to-contract-ahead across rounds, so the
     // conservative side of the crossover keeps the contract kernel
     if (v == null) 3000000L else v.longValue()
   }
@@ -264,8 +263,8 @@ object Hnsw {
     // the distance kernels, dominated the serve walk (r13 attribution:
     // facc bought ~20 %, layout ~0 — the residual vs hnswlib's 208 µs is
     // bookkeeping). Values and iteration order are IDENTICAL to the
-    // ragged path, so traversal — and every result — is bit-identical
-    // (HnswSpec local==warm + determinism gates ride on it).
+    // ragged path, so on the contract kernels traversal — and every
+    // result — is bit-identical (HnswSpec's CSR == ragged gate).
     private var l0off: Array[Int] = null
     private var l0adj: Array[Int] = null
 
@@ -307,7 +306,7 @@ object Hnsw {
       }
     }
 
-    /** Measurement hook ([[graft.tools.ServeProbe]] A/B): drop the CSR so
+    /** Test hook (HnswSpec's CSR == ragged serve gate): drop the CSR so
       * the walk falls back to the ragged-links path; freeze() restores it.
       */
     private[graft] def dropCsr(): Unit = { l0off = null; l0adj = null }
@@ -476,15 +475,15 @@ object Hnsw {
       * walk's touched set ≈ ef·m gathered rows of dim·4 bytes, capped
       * by the payload itself — when that exceeds the cache-size
       * crossover the gathers miss LLC and byte count is the wall. The
-      * default crossover comes from the r15 AutoFlavorProbe sweep on
-      * the 500K store graph; `-Dgraft.hnsw.i8.autoBytes=N` overrides,
-      * and the explicit `quantized`/contract flags always win over auto.
+      * default crossover comes from the r15 ef-ladder sweep on the
+      * 500K store graph (COVERAGE.md §"Serving posture");
+      * `-Dgraft.hnsw.i8.autoBytes=N` overrides, and the explicit `quantized`/contract flags always win over auto.
       *
       * MAPPED graphs pick i8 whenever the sidecar exists: the contract
       * walk on a mapped payload prices bounds-checked ByteBuffer float
       * gathers (r15 artifact, 500K store: contract 894 µs vs i8 503 at
-      * ef64 — i8 ahead at EVERY measured mapped point, r14 MmapProbe
-      * included), so the heap crossover doesn't apply there.
+      * ef64 — i8 ahead at EVERY measured mapped point, the r14 store
+      * A/B included), so the heap crossover doesn't apply there.
       */
     def autoI8(efSearch: Int): Boolean =
       i8Available && {
@@ -506,8 +505,8 @@ object Hnsw {
       */
     @volatile private var i8EfCrossover: Int = -1
 
-    /** Diagnostic view of the measured crossover (AutoFlavorProbe
-      * prints it beside the byte-heuristic estimate).
+    /** Diagnostic view of the measured crossover (HnswSpec reads it
+      * back after [[calibrateFlavor]]).
       */
     def measuredCrossover: Int = i8EfCrossover
 
@@ -570,11 +569,6 @@ object Hnsw {
       i8EfCrossover = crossover
       crossover
     }
-
-    /** Payload size in bytes (diagnostic; the auto-flavor probe prints
-      * it beside the walk estimate).
-      */
-    def flatBytes: Long = flatLen.toLong * 4
 
     /** Build the i8 serve sidecar (idempotent; ~n·dim work once; a no-op
       * when a v2 store already supplied it).
@@ -1210,7 +1204,10 @@ object Hnsw {
             // live blackhole load is the closest legal form). Admissions
             // run in gather order on bitwise-identical values, so
             // traversal — and every result — matches the interleaved
-            // path exactly (ServeProbe gates the equality per run).
+            // path exactly on the contract kernels (HnswSpec gates CSR ==
+            // ragged results). Under facc a 3-row remainder scores as a
+            // padded float tile here but per pair there, and those float
+            // kernels sum in different orders, so facc results may differ.
             if (s.gat.length < nbN)
               s.gat = new Array[Int](math.max(nbN, s.gat.length * 2))
             var gn = 0
@@ -1228,9 +1225,9 @@ object Hnsw {
             var bh = 0f
             // facc's float lanes halve the kernel's compute leg, leaving
             // no stall window for the touches to hide in — measured, they
-            // only contend for load ports there (ServeProbe r14: facc+t8
-            // 620-656 µs vs facc+t0 441-533), so the touch pipeline is
-            // contract-path-only
+            // only contend for load ports there (COVERAGE.md §"Serving
+            // posture", r14: facc+t8 620-656 µs vs facc+t0 441-533), so
+            // the touch pipeline is contract-path-only
             val tl = if (facc) 0 else touchLines
             def touch(from: Int): Unit = {
               var u = from
@@ -1558,8 +1555,8 @@ object Hnsw {
     g
   }
 
-  /** Diagnostic-only single-shard build entry for
-    * [[graft.tools.HnswBuildProbe]] — same path as the executor build.
+  /** Single-shard build entry for the specs — same path as the executor
+    * build.
     */
   private[graft] def probeBuild(rows: Array[(Long, Array[Float])], m: Int,
                                 efC: Int, seed: Long,

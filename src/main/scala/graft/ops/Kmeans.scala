@@ -462,10 +462,9 @@ object Kmeans {
   private val verbose = java.lang.Boolean.getBoolean("graft.kmeans.log")
 
   /** Restart budget for the small-sample driver-local path (FAISS nredo
-    * semantics). Overridable for calibration runs (`-Dgraft.kmeans.nredo`).
+    * semantics).
     */
-  private def localNredo: Int =
-    math.max(1, Integer.getInteger("graft.kmeans.nredo", 4))
+  private val localNredo = 4
 
   /** Partition-group width for the two-level combine: past this many
     * sample partitions, consecutive-pid groups fold on executors first.

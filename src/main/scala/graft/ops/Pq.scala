@@ -1013,15 +1013,10 @@ object Pq {
     * Spark side — [[blockedRelation]]'s layout contract (one blob row
     * per cell); a cell split across partitions would widen the Spark
     * side's candidate pool to a superset of the local reservoir's.
-    *
-    * `floatAcc = true` switches the refine's exact-L2 kernel to the
-    * float-accumulation serving flavor ([[Simd.l2SqF]]) — can flip true
-    * near-ties, so it is recall-gated only and no oracle/spec-identity
-    * path enables it. Returns ≤ k (id, l2sq) pairs, best-first.
+    * Returns ≤ k (id, l2sq) pairs, best-first.
     */
   def searchLocalIvf4(qvec: Array[Float], idx: Index, cacheKey: String,
                       nprobe: Int, k: Int, refineK: Int = 100,
-                      floatAcc: Boolean = false,
                       exclude: Long => Boolean = null): Array[(Long, Double)] = {
     import graft.functions.expressions.{CentroidOps, PqOps, Simd, VectorKernels}
     import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -1146,9 +1141,7 @@ object Pq {
       require(vi >= 0, s"candidate id $id missing from the vector store")
       refIds(j) = id
       val v = img.vecs(vi)
-      refD(j) =
-        if (floatAcc && simd) Simd.l2SqF(qvec, v, math.min(qvec.length, v.length))
-        else VectorKernels.l2Sq(qvec, v)
+      refD(j) = VectorKernels.l2Sq(qvec, v)
       j += 1
     }
     Array.range(0, take).sortBy(i => (refD(i), refIds(i))).take(k)

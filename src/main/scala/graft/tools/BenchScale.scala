@@ -894,33 +894,6 @@ object BenchScale {
           "avg_us" -> lat.sum / nServe, "nprobe" -> 8.0, "refine_k" -> 100.0,
           "n_queries" -> nServe.toDouble)
         println(f"[scale] ann_pq4_local_serve   p50=${pctL(0.5)}%8.1f us  p95=${pctL(0.95)}%8.1f  p99=${pctL(0.99)}%8.1f us")
-        // float-acc refine twin (r13, verdict task #3): the pq4 serve's
-        // only double-lane stage is the exact refine of rk candidates, so
-        // the facc delta HERE isolates that stage's share of the p50
-        var ovl = 0L
-        val latF = serveQs.map { qv =>
-          val t0 = System.nanoTime()
-          val got = Pq.searchLocalIvf4(qv, ivf4, "bench_local_ivf4",
-            nprobe = 8, k = 10, refineK = 100, floatAcc = true)
-          val dt = (System.nanoTime() - t0) / 1e3
-          val contract = Pq.searchLocalIvf4(qv, ivf4, "bench_local_ivf4",
-            nprobe = 8, k = 10, refineK = 100)
-          ovl += got.map(_._1).toSet.intersect(contract.map(_._1).toSet).size
-          dt
-        }
-        java.util.Arrays.sort(latF)
-        def pctF(p: Double): Double = {
-          val idx = p * (nServe - 1)
-          val lo = idx.toInt
-          val frac = idx - lo
-          if (lo + 1 < nServe) latF(lo) * (1 - frac) + latF(lo + 1) * frac
-          else latF(lo)
-        }
-        annResults("ann_pq4_local_serve_facc") = Map(
-          "p50_us" -> pctF(0.50), "p95_us" -> pctF(0.95), "p99_us" -> pctF(0.99),
-          "avg_us" -> latF.sum / nServe, "nprobe" -> 8.0, "refine_k" -> 100.0,
-          "overlap_vs_contract" -> ovl.toDouble / (nServe * 10))
-        println(f"[scale] ann_pq4_local_serve_facc p50=${pctF(0.5)}%8.1f us  p99=${pctF(0.99)}%8.1f us  overlap=${ovl.toDouble / (nServe * 10)}%.4f")
         Pq.invalidateLocal("bench_local_ivf4")
       }
 

@@ -320,6 +320,30 @@ class HnswSpec extends AnyFunSuite {
     Hnsw.invalidate(key)
   }
 
+  test("serve expansion: CSR walk == ragged-links walk, before and after re-freeze") {
+    // freeze()'s layer-0 CSR routes the serve walk through the gather +
+    // 4-row tile + touch pipeline; without it the walk takes the ragged
+    // interleaved path. On the contract kernels both must admit the same
+    // values in the same order. (Under facc they may not: the serve walk
+    // scores a 3-row remainder as a padded tile, the ragged walk per pair,
+    // and the float tile and per-pair kernels sum in different orders.)
+    // dim 32 keeps the tiled kernels live; queries are non-members.
+    val rows = SyntheticVectors.lowRankFast(spark, 3000, 32, intrinsic = 16)
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+      .sortBy(_._1)
+    val qs = SyntheticVectors.lowRankFast(spark, 64, 32, intrinsic = 16, seed = 7L)
+      .collect().map(_.getSeq[Float](1).toArray)
+    for (metric <- Seq(Metric.L2, Metric.Dot)) {
+      val g = Hnsw.probeBuild(rows, m = 8, efC = 64, seed = 42L, metric)
+      def serve() = qs.map(g.search(_, 10, 64).toSeq)
+      val csr = serve()
+      g.dropCsr()
+      assert(serve().sameElements(csr), s"$metric: ragged walk diverged from the CSR walk")
+      g.freeze()
+      assert(serve().sameElements(csr), s"$metric: re-frozen CSR walk diverged")
+    }
+  }
+
   test("routed serve from a mapped store == direct routed search (a14 composition)") {
     // the a14 oracle query's exact shape: build the routed group, persist
     // it, drop the in-JVM graphs, restore MAPPED, serve via searchWarm's

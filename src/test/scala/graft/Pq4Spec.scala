@@ -291,17 +291,6 @@ class Pq4Spec extends AnyFunSuite {
           s"np=$np rk=$rk qid=$qid row count mismatch")
       }
     }
-    // float-acc refine flavor: serve-only contract relaxation — gate the
-    // returned id SET against the double-lane path (near-tie order may
-    // differ), never scores
-    qRows.foreach { case (_, qvec) =>
-      val contract = Pq.searchLocalIvf4(qvec, ivf4, "pq4spec_local",
-        nprobe = 8, k = 10, refineK = 100).map(_._1).toSet
-      val facc = Pq.searchLocalIvf4(qvec, ivf4, "pq4spec_local",
-        nprobe = 8, k = 10, refineK = 100, floatAcc = true).map(_._1).toSet
-      assert(contract.intersect(facc).size >= 9,
-        s"floatAcc refine recall ${contract.intersect(facc).size}/10")
-    }
     // the identity contract needs refineK > k — the boundary fails loudly
     val bad = intercept[IllegalArgumentException] {
       Pq.searchLocalIvf4(qRows.head._2, ivf4, "pq4spec_local",

@@ -298,58 +298,6 @@ class SimdSpec extends AnyFunSuite {
     }
   }
 
-  test("vector f16 decode == scalar halfToFloat, bitwise, ALL 65536 patterns") {
-    assume(Simd.halfKernelsAvailable)
-    val bits = Array.tabulate(65536)(i => i.toShort)
-    val out = new Array[Float](65536)
-    Simd.halfLanesDecode(bits, out)
-    var i = 0
-    while (i < 65536) {
-      val want = VectorKernels.halfToFloat(bits(i))
-      assert(java.lang.Float.floatToRawIntBits(out(i))
-        == java.lang.Float.floatToRawIntBits(want),
-        f"decode mismatch at 0x$i%04x: got=${out(i)} want=$want")
-      i += 1
-    }
-  }
-
-  test("fused dotHalf/l2SqHalf == decode-then-SIMD, bitwise; 4-wide tiles " +
-    "== per-pair") {
-    assume(Simd.halfKernelsAvailable)
-    val dims = Seq(384, 64, 32, 96, 100, 17, 48) // 32-aligned, 16-block straggler, ragged
-    dims.foreach { d =>
-      val rows = Array.fill(4)(Array.fill(d)(
-        VectorKernels.floatToHalf(rng.nextFloat() * 2 - 1)))
-      val q = Array.fill(d)(rng.nextFloat() * 2 - 1)
-      rows.foreach { h =>
-        val decoded = new Array[Float](d)
-        var i = 0
-        while (i < d) { decoded(i) = VectorKernels.halfToFloat(h(i)); i += 1 }
-        val wantDot = Simd.dot(q, decoded, d)
-        val gotDot = Simd.dotHalf(q, h, d)
-        assert(java.lang.Double.doubleToRawLongBits(gotDot)
-          == java.lang.Double.doubleToRawLongBits(wantDot), s"dotHalf d=$d")
-        val wantL2 = Simd.l2Sq(q, decoded, d)
-        val gotL2 = Simd.l2SqHalf(q, h, d)
-        assert(java.lang.Double.doubleToRawLongBits(gotL2)
-          == java.lang.Double.doubleToRawLongBits(wantL2), s"l2SqHalf d=$d")
-      }
-      val out = new Array[Double](4)
-      Simd.dotHalf4At(q, rows, 0, 1, 2, 3, d, out)
-      (0 until 4).foreach { j =>
-        assert(java.lang.Double.doubleToRawLongBits(out(j))
-          == java.lang.Double.doubleToRawLongBits(Simd.dotHalf(q, rows(j), d)),
-          s"dotHalf4At lane $j d=$d")
-      }
-      Simd.l2SqHalf4At(q, rows, 0, 1, 2, 3, d, out)
-      (0 until 4).foreach { j =>
-        assert(java.lang.Double.doubleToRawLongBits(out(j))
-          == java.lang.Double.doubleToRawLongBits(Simd.l2SqHalf(q, rows(j), d)),
-          s"l2SqHalf4At lane $j d=$d")
-      }
-    }
-  }
-
   test("per-pair dotI8/dotHalf stay bit-identical to their batched hoists") {
     // dotI8/dotHalf route through the same widen/decode + dot shape as
     // BatchScore.scoresI8/scoresHalf — identity must hold with SIMD live.
