@@ -53,10 +53,13 @@ object BatchScore {
       var i = 1
       while (uniform && i < nq) { uniform = queries(i).length == qdim; i += 1 }
       if (uniform) {
-        if (floatAcc)
-          while (q + 4 <= nq) { Simd.dot4F(x, queries, q, n, out, q); q += 4 }
-        else
-          while (q + 4 <= nq) { Simd.dot4(x, queries, q, n, out, q); q += 4 }
+        while (q + 4 <= nq) {
+          val q0 = queries(q); val q1 = queries(q + 1)
+          val q2 = queries(q + 2); val q3 = queries(q + 3)
+          if (floatAcc) Simd.dot4F(x, q0, 0, q1, 0, q2, 0, q3, 0, n, out, q)
+          else Simd.dot4(x, q0, 0, q1, 0, q2, 0, q3, 0, n, out, q)
+          q += 4
+        }
       }
     }
     while (q < nq) { out(q) = VectorKernels.dot(x, queries(q)); q += 1 }
@@ -78,7 +81,11 @@ object BatchScore {
       var i = 1
       while (uniform && i < nq) { uniform = queries(i).length == qdim; i += 1 }
       if (uniform) {
-        while (q + 4 <= nq) { Simd.l2Sq4(x, queries, q, n, out, q); q += 4 }
+        while (q + 4 <= nq) {
+          Simd.l2Sq4(x, queries(q), 0, queries(q + 1), 0, queries(q + 2), 0,
+            queries(q + 3), 0, n, out, q)
+          q += 4
+        }
       }
     }
     while (q < nq) { out(q) = VectorKernels.l2Sq(x, queries(q)); q += 1 }

@@ -100,12 +100,12 @@ object CentroidOps {
     * best-first order, so bestD tightens fastest), with an EXACT stop:
     * |gap| is monotone outward on each side, so the first position whose
     * gap² fails the bound ends that side. Eligible candidates buffer four
-    * at a time into [[Simd.l2Sq4At]], which reuses the point's loads and
+    * at a time into [[Simd.l2Sq4]], which reuses the point's loads and
     * float→double widening from registers across the 4 centroids — the
     * 2–3× per-pair win the scattered-survivor scan could not get.
     *
     * BITWISE-IDENTICAL to the index-order scan by construction:
-    * per-pair distances are bitwise equal ([[Simd.l2Sq4At]] lane math ==
+    * per-pair distances are bitwise equal ([[Simd.l2Sq4]] lane math ==
     * `l2Sq`), pruned candidates satisfy d ≥ gap² ≥ bestD/slack > bestD so
     * they can never win (and an exact tie is NEVER pruned: gap² ≤ d =
     * bestD ⇒ gap²·slack < bestD), and the selection rule
@@ -282,7 +282,7 @@ object CentroidOps {
             c += 8
           }
           if (c + 4 <= cEnd) {
-            Simd.dot4FSeq(x, cs, c, dim, out8)
+            Simd.dot4F(x, cs(c), 0, cs(c + 1), 0, cs(c + 2), 0, cs(c + 3), 0, dim, out8, 0)
             var j = 0
             while (j < 4) { df(c + j) = xx + meta.sumSqs(c + j) - 2.0 * out8(j); j += 1 }
             c += 4
@@ -354,7 +354,7 @@ object CentroidOps {
 
   /** The GEMM-shaped argmin (FAISS `distance_computation` re-expressed:
     * screen with a cheap blocked X·Cᵀ, exactly re-evaluate a shortlist):
-    * a FLOAT-accumulated dot pass over ALL centroids ([[Simd.dot4FSeq]] —
+    * a FLOAT-accumulated dot pass over ALL centroids ([[Simd.dot4F]] —
     * 1 FMA/element at 2× the double-lane width, ~4× cheaper than exact
     * tiled l2Sq) forms screen distances d̃(c) = ‖x‖² + ‖c‖² − 2·x·c̃, and
     * only candidates within an ANALYTIC error bound of the screen minimum
@@ -421,7 +421,7 @@ object CentroidOps {
       c += 8
     }
     if (c + 4 <= k) {
-      Simd.dot4FSeq(x, cs, c, dim, out)
+      Simd.dot4F(x, cs(c), 0, cs(c + 1), 0, cs(c + 2), 0, cs(c + 3), 0, dim, out, 0)
       var j = 0
       while (j < 4) {
         val d = xx + meta.sumSqs(c + j) - 2.0 * out(j)
@@ -493,7 +493,9 @@ object CentroidOps {
         buf(bufN) = order(pos)
         bufN += 1
         if (bufN == 4) {
-          if (tiled) Simd.l2Sq4At(x, cs, buf(0), buf(1), buf(2), buf(3), dim, out)
+          if (tiled)
+            Simd.l2Sq4(x, cs(buf(0)), 0, cs(buf(1)), 0, cs(buf(2)), 0, cs(buf(3)), 0,
+              dim, out, 0)
           else {
             out(0) = VectorKernels.l2Sq(x, cs(buf(0)))
             out(1) = VectorKernels.l2Sq(x, cs(buf(1)))
@@ -549,8 +551,11 @@ object CentroidOps {
   }
 
   /** Exhaustive selection reference (and small-k / non-finite fallback):
-    * O(n·np) repeated strict-`<` min-scan — nearest first, lowest index
-    * on exact ties, i.e. ordered by (distance, index).
+    * O(n·np) repeated min-scan — nearest first, lowest index on exact
+    * ties, i.e. ordered by (`Double.compare` distance, index). The total
+    * order ranks non-finite distances (a NaN or ±Inf query) last instead
+    * of leaving no candidate, so such a query gets the lowest indices,
+    * like [[argminL2F]]'s 0.
     */
   private[graft] def topNprobeDirect(x: Array[Float], cs: Array[Array[Float]],
                                      np: Int): Array[Int] = {
@@ -563,10 +568,10 @@ object CentroidOps {
     var j = 0
     while (j < np) {
       var best = -1
-      var bestDist = Double.MaxValue
       var i = 0
       while (i < n) {
-        if (!used(i) && dist(i) < bestDist) { bestDist = dist(i); best = i }
+        if (!used(i) &&
+            (best < 0 || java.lang.Double.compare(dist(i), dist(best)) < 0)) best = i
         i += 1
       }
       used(best) = true

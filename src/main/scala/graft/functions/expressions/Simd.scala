@@ -40,8 +40,23 @@ object Simd {
   /** Lane width exposed for specs/diagnostics. */
   def floatLanes: Int = FS.length()
 
-  /** dot(a, b) over the first `n` elements, double-accumulated. */
-  def dot(a: Array[Float], b: Array[Float], n: Int): Double = {
+  // ---- Heap kernels: one per (operation, tile width, accumulator) ------
+  // Every stored row is passed as an (array, offset) pair and read at
+  // `row(off + i)`; the query side `a` is read from index 0. A row-array
+  // caller passes offset 0, the HNSW packed store passes `flat` with the
+  // node's offset (r13: `Array[Array[Float]]` rows cost a pointer
+  // dereference + scattered cache lines per distance eval), and a 4-row
+  // tile takes four independent pairs, so query tiles, index gathers and
+  // packed-store gathers all run the same loop. Each tile lane performs
+  // the identical adds in the identical order as the single-row kernel
+  // of its operation (SimdSpec gates every pair bitwise), so graphs built
+  // over either storage are identical and every determinism oracle rides
+  // through unchanged.
+
+  /** dot(a, row) over the first `n` elements, row read at
+    * `flat(boff + i)`, double-accumulated.
+    */
+  def dotOff(a: Array[Float], flat: Array[Float], boff: Int, n: Int): Double = {
     var acc0 = DoubleVector.zero(DS)
     var acc1 = DoubleVector.zero(DS)
     val step = FS.length()
@@ -49,7 +64,7 @@ object Simd {
     var i = 0
     while (i < upper) {
       val va = FloatVector.fromArray(FS, a, i)
-      val vb = FloatVector.fromArray(FS, b, i)
+      val vb = FloatVector.fromArray(FS, flat, boff + i)
       acc0 = va.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector]
         .fma(vb.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector], acc0)
       acc1 = va.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector]
@@ -57,16 +72,17 @@ object Simd {
       i += step
     }
     var s = acc0.add(acc1).reduceLanes(VectorOperators.ADD)
-    while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
+    while (i < n) { s += a(i).toDouble * flat(boff + i).toDouble; i += 1 }
     s
   }
 
-  /** Squared L2 over the first `n` elements. Lane math: `d = a - b` in
-    * double (same single rounding as the scalar kernel), then `fma(d, d)`
-    * — one rounding where the scalar kernel's `acc + d*d` takes two, a
+  /** Squared L2 over the first `n` elements, row read at
+    * `flat(boff + i)`. Lane math: `d = a - b` in double (same single
+    * rounding as the scalar kernel), then `fma(d, d)` — one rounding
+    * where the scalar kernel's `acc + d*d` takes two, a
     * ≤1-ulp-per-element divergence inside the same reassociation budget.
     */
-  def l2Sq(a: Array[Float], b: Array[Float], n: Int): Double = {
+  def l2SqOff(a: Array[Float], flat: Array[Float], boff: Int, n: Int): Double = {
     var acc0 = DoubleVector.zero(DS)
     var acc1 = DoubleVector.zero(DS)
     val step = FS.length()
@@ -74,7 +90,7 @@ object Simd {
     var i = 0
     while (i < upper) {
       val va = FloatVector.fromArray(FS, a, i)
-      val vb = FloatVector.fromArray(FS, b, i)
+      val vb = FloatVector.fromArray(FS, flat, boff + i)
       val d0 = va.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector]
         .sub(vb.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector])
       val d1 = va.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector]
@@ -84,22 +100,48 @@ object Simd {
       i += step
     }
     var s = acc0.add(acc1).reduceLanes(VectorOperators.ADD)
-    while (i < n) { val d = a(i).toDouble - b(i).toDouble; s += d * d; i += 1 }
+    while (i < n) {
+      val d = a(i).toDouble - flat(boff + i).toDouble; s += d * d; i += 1
+    }
     s
   }
 
-  /** Four dots in one pass: a · qs(qoff+j) → out(j), j ∈ 0..3.
+  /** Sum of squares over `flat(off until off + n)` (norm2 = sqrt of this). */
+  def sumSqOff(flat: Array[Float], off: Int, n: Int): Double = {
+    var acc0 = DoubleVector.zero(DS)
+    var acc1 = DoubleVector.zero(DS)
+    val step = FS.length()
+    val upper = FS.loopBound(n)
+    var i = 0
+    while (i < upper) {
+      val va = FloatVector.fromArray(FS, flat, off + i)
+      val va0 = va.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector]
+      val va1 = va.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector]
+      acc0 = va0.fma(va0, acc0)
+      acc1 = va1.fma(va1, acc1)
+      i += step
+    }
+    var s = acc0.add(acc1).reduceLanes(VectorOperators.ADD)
+    while (i < n) { val d = flat(off + i).toDouble; s += d * d; i += 1 }
+    s
+  }
+
+  /** Four dots in one pass: a · r_j (read at `r_j(o_j + i)`) →
+    * out(ooff + j), j ∈ 0..3.
     *
     * The batched scan's memory shape: scoring Q queries per row re-streams
     * the row once PER QUERY from cache; tiling 4 queries reuses each
     * row chunk (and its F2D widening) from registers, cutting the row's
-    * load+convert traffic 4×. Each (row, query) pair still accumulates in
-    * its OWN lane pair in the identical order as [[dot]], so every output
-    * is bitwise equal to `dot(a, qs(qoff+j), n)` — SimdSpec gates it.
+    * load+convert traffic 4×. The same tile serves consumers whose
+    * candidate set is scattered by index (the HNSW beam expansion): the
+    * four rows are independent pairs. Each pair still accumulates in its
+    * OWN lane pair in the identical order as [[dotOff]], so every output
+    * is bitwise equal to `dotOff(a, r_j, o_j, n)` — SimdSpec gates it.
     */
-  def dot4(a: Array[Float], qs: Array[Array[Float]], qoff: Int, n: Int,
-           out: Array[Double], ooff: Int): Unit = {
-    val q0 = qs(qoff); val q1 = qs(qoff + 1); val q2 = qs(qoff + 2); val q3 = qs(qoff + 3)
+  def dot4(a: Array[Float],
+           r0: Array[Float], o0: Int, r1: Array[Float], o1: Int,
+           r2: Array[Float], o2: Int, r3: Array[Float], o3: Int,
+           n: Int, out: Array[Double], ooff: Int): Unit = {
     var a00 = DoubleVector.zero(DS); var a01 = DoubleVector.zero(DS)
     var a10 = DoubleVector.zero(DS); var a11 = DoubleVector.zero(DS)
     var a20 = DoubleVector.zero(DS); var a21 = DoubleVector.zero(DS)
@@ -111,16 +153,16 @@ object Simd {
       val va = FloatVector.fromArray(FS, a, i)
       val va0 = va.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector]
       val va1 = va.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector]
-      val v0 = FloatVector.fromArray(FS, q0, i)
+      val v0 = FloatVector.fromArray(FS, r0, o0 + i)
       a00 = va0.fma(v0.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector], a00)
       a01 = va1.fma(v0.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector], a01)
-      val v1 = FloatVector.fromArray(FS, q1, i)
+      val v1 = FloatVector.fromArray(FS, r1, o1 + i)
       a10 = va0.fma(v1.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector], a10)
       a11 = va1.fma(v1.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector], a11)
-      val v2 = FloatVector.fromArray(FS, q2, i)
+      val v2 = FloatVector.fromArray(FS, r2, o2 + i)
       a20 = va0.fma(v2.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector], a20)
       a21 = va1.fma(v2.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector], a21)
-      val v3 = FloatVector.fromArray(FS, q3, i)
+      val v3 = FloatVector.fromArray(FS, r3, o3 + i)
       a30 = va0.fma(v3.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector], a30)
       a31 = va1.fma(v3.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector], a31)
       i += step
@@ -131,21 +173,25 @@ object Simd {
     var s3 = a30.add(a31).reduceLanes(VectorOperators.ADD)
     while (i < n) {
       val ad = a(i).toDouble
-      s0 += ad * q0(i).toDouble; s1 += ad * q1(i).toDouble
-      s2 += ad * q2(i).toDouble; s3 += ad * q3(i).toDouble
+      s0 += ad * r0(o0 + i).toDouble; s1 += ad * r1(o1 + i).toDouble
+      s2 += ad * r2(o2 + i).toDouble; s3 += ad * r3(o3 + i).toDouble
       i += 1
     }
     out(ooff) = s0; out(ooff + 1) = s1; out(ooff + 2) = s2; out(ooff + 3) = s3
   }
 
-  /** Four squared-L2 distances in one pass: ‖a − qs(qoff+j)‖² → out(j).
-    * Per-pair lane math identical to [[l2Sq]] (sub in double, `fma(d,d)`),
-    * same register-reuse rationale as [[dot4]]; SimdSpec gates the
+  /** Four squared-L2 distances in one pass: ‖a − r_j‖² → out(ooff + j).
+    * Per-pair lane math identical to [[l2SqOff]] (sub in double,
+    * `fma(d,d)`, own lane pair per output), same register-reuse rationale
+    * as [[dot4]] — it is also the gather tile of the norm-ordered argmin
+    * ([[CentroidOps.argminNormOrdered]]), whose candidate window is
+    * contiguous in NORM order, not in storage order. SimdSpec gates the
     * bitwise equality.
     */
-  def l2Sq4(a: Array[Float], qs: Array[Array[Float]], qoff: Int, n: Int,
-            out: Array[Double], ooff: Int): Unit = {
-    val q0 = qs(qoff); val q1 = qs(qoff + 1); val q2 = qs(qoff + 2); val q3 = qs(qoff + 3)
+  def l2Sq4(a: Array[Float],
+            r0: Array[Float], o0: Int, r1: Array[Float], o1: Int,
+            r2: Array[Float], o2: Int, r3: Array[Float], o3: Int,
+            n: Int, out: Array[Double], ooff: Int): Unit = {
     var a00 = DoubleVector.zero(DS); var a01 = DoubleVector.zero(DS)
     var a10 = DoubleVector.zero(DS); var a11 = DoubleVector.zero(DS)
     var a20 = DoubleVector.zero(DS); var a21 = DoubleVector.zero(DS)
@@ -157,19 +203,19 @@ object Simd {
       val va = FloatVector.fromArray(FS, a, i)
       val va0 = va.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector]
       val va1 = va.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector]
-      val v0 = FloatVector.fromArray(FS, q0, i)
+      val v0 = FloatVector.fromArray(FS, r0, o0 + i)
       val d00 = va0.sub(v0.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector])
       val d01 = va1.sub(v0.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector])
       a00 = d00.fma(d00, a00); a01 = d01.fma(d01, a01)
-      val v1 = FloatVector.fromArray(FS, q1, i)
+      val v1 = FloatVector.fromArray(FS, r1, o1 + i)
       val d10 = va0.sub(v1.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector])
       val d11 = va1.sub(v1.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector])
       a10 = d10.fma(d10, a10); a11 = d11.fma(d11, a11)
-      val v2 = FloatVector.fromArray(FS, q2, i)
+      val v2 = FloatVector.fromArray(FS, r2, o2 + i)
       val d20 = va0.sub(v2.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector])
       val d21 = va1.sub(v2.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector])
       a20 = d20.fma(d20, a20); a21 = d21.fma(d21, a21)
-      val v3 = FloatVector.fromArray(FS, q3, i)
+      val v3 = FloatVector.fromArray(FS, r3, o3 + i)
       val d30 = va0.sub(v3.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector])
       val d31 = va1.sub(v3.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector])
       a30 = d30.fma(d30, a30); a31 = d31.fma(d31, a31)
@@ -181,62 +227,91 @@ object Simd {
     var s3 = a30.add(a31).reduceLanes(VectorOperators.ADD)
     while (i < n) {
       val ad = a(i).toDouble
-      val e0 = ad - q0(i).toDouble; s0 += e0 * e0
-      val e1 = ad - q1(i).toDouble; s1 += e1 * e1
-      val e2 = ad - q2(i).toDouble; s2 += e2 * e2
-      val e3 = ad - q3(i).toDouble; s3 += e3 * e3
+      val e0 = ad - r0(o0 + i).toDouble; s0 += e0 * e0
+      val e1 = ad - r1(o1 + i).toDouble; s1 += e1 * e1
+      val e2 = ad - r2(o2 + i).toDouble; s2 += e2 * e2
+      val e3 = ad - r3(o3 + i).toDouble; s3 += e3 * e3
       i += 1
     }
     out(ooff) = s0; out(ooff + 1) = s1; out(ooff + 2) = s2; out(ooff + 3) = s3
   }
 
-  /** Four dots in one pass with FLOAT-lane accumulation — the opt-in
-    * SERVING flavor of [[dot4]]. Float FMA runs 2× the lane width of the
-    * double-lane contract (no F2D widening, twice the elements per
-    * vector op), which matters exactly where the blocked quantized scans
-    * are compute-bound (the r9 INT8-ladder finding: double-lane FMA
-    * throughput caps 384-d scans at ~0.6 s/1M×16q, compressing
-    * stored-byte ratios). NOT bitwise-comparable to the oracle kernels:
-    * all-float accumulation of n nonnegative-magnitude products carries
-    * ≲ n·ε_f32 ≈ 2.3e-5 relative error at n=384 — far above the 1e-9
-    * oracle rounding, fine for approximate serving (it can flip only
-    * true near-ties; SearchSpec gates top-k SET equality on the
-    * fixture). Every oracle/default path keeps [[dot4]]'s double-lane
-    * contract untouched.
+  // ---- FLOAT-lane accumulation: the opt-in SERVING flavor and the
+  // k-means screen. Float FMA runs 2× the lane width of the double-lane
+  // contract (no F2D widening, twice the elements per vector op), which
+  // matters exactly where the scans are compute-bound (the r9 INT8-ladder
+  // finding: double-lane FMA throughput caps 384-d scans at
+  // ~0.6 s/1M×16q, compressing stored-byte ratios). NOT
+  // bitwise-comparable to the oracle kernels: all-float accumulation of n
+  // nonnegative-magnitude products carries ≲ n·ε_f32 ≈ 2.3e-5 relative
+  // error at n=384 — far above the 1e-9 oracle rounding, fine for
+  // approximate serving (it can flip only true near-ties; SearchSpec
+  // gates top-k SET equality on the fixture). Every oracle/default path
+  // keeps the double-lane contract above untouched.
+
+  /** dot(a, row) with FLOAT-lane accumulation, row read at
+    * `flat(boff + i)`. Two independent accumulator chains cover FMA
+    * latency. Serve-only, never an oracle path.
     */
-  def dot4F(a: Array[Float], qs: Array[Array[Float]], qoff: Int, n: Int,
-            out: Array[Double], ooff: Int): Unit = {
-    val q0 = qs(qoff); val q1 = qs(qoff + 1); val q2 = qs(qoff + 2); val q3 = qs(qoff + 3)
-    var a0 = FloatVector.zero(FS)
-    var a1 = FloatVector.zero(FS)
-    var a2 = FloatVector.zero(FS)
-    var a3 = FloatVector.zero(FS)
+  def dotFOff(a: Array[Float], flat: Array[Float], boff: Int, n: Int): Double = {
+    var acc0 = FloatVector.zero(FS)
+    var acc1 = FloatVector.zero(FS)
     val step = FS.length()
-    val upper = FS.loopBound(n)
+    val upper2 = FS.loopBound(n - step)
     var i = 0
+    while (i < upper2) {
+      acc0 = FloatVector.fromArray(FS, a, i)
+        .fma(FloatVector.fromArray(FS, flat, boff + i), acc0)
+      acc1 = FloatVector.fromArray(FS, a, i + step)
+        .fma(FloatVector.fromArray(FS, flat, boff + i + step), acc1)
+      i += 2 * step
+    }
+    val upper = FS.loopBound(n)
     while (i < upper) {
-      val va = FloatVector.fromArray(FS, a, i)
-      a0 = va.fma(FloatVector.fromArray(FS, q0, i), a0)
-      a1 = va.fma(FloatVector.fromArray(FS, q1, i), a1)
-      a2 = va.fma(FloatVector.fromArray(FS, q2, i), a2)
-      a3 = va.fma(FloatVector.fromArray(FS, q3, i), a3)
+      acc0 = FloatVector.fromArray(FS, a, i)
+        .fma(FloatVector.fromArray(FS, flat, boff + i), acc0)
       i += step
     }
-    var s0 = a0.reduceLanes(VectorOperators.ADD).toDouble
-    var s1 = a1.reduceLanes(VectorOperators.ADD).toDouble
-    var s2 = a2.reduceLanes(VectorOperators.ADD).toDouble
-    var s3 = a3.reduceLanes(VectorOperators.ADD).toDouble
-    while (i < n) {
-      val ad = a(i).toDouble
-      s0 += ad * q0(i).toDouble; s1 += ad * q1(i).toDouble
-      s2 += ad * q2(i).toDouble; s3 += ad * q3(i).toDouble
-      i += 1
-    }
-    out(ooff) = s0; out(ooff + 1) = s1; out(ooff + 2) = s2; out(ooff + 3) = s3
+    var s = acc0.add(acc1).reduceLanes(VectorOperators.ADD).toDouble
+    while (i < n) { s += a(i).toDouble * flat(boff + i).toDouble; i += 1 }
+    s
   }
 
-  /** Four float-accumulated dots against CONSECUTIVE rows cs(c..c+3) →
-    * out(0..3) — the SCREENING kernel of the GEMM-shaped argmin
+  /** Squared L2 with FLOAT-lane accumulation — [[dotFOff]]'s L2 sibling
+    * (sub and fma both in float). Serve-only.
+    */
+  def l2SqFOff(a: Array[Float], flat: Array[Float], boff: Int, n: Int): Double = {
+    var acc0 = FloatVector.zero(FS)
+    var acc1 = FloatVector.zero(FS)
+    val step = FS.length()
+    val upper2 = FS.loopBound(n - step)
+    var i = 0
+    while (i < upper2) {
+      val d0 = FloatVector.fromArray(FS, a, i)
+        .sub(FloatVector.fromArray(FS, flat, boff + i))
+      val d1 = FloatVector.fromArray(FS, a, i + step)
+        .sub(FloatVector.fromArray(FS, flat, boff + i + step))
+      acc0 = d0.fma(d0, acc0)
+      acc1 = d1.fma(d1, acc1)
+      i += 2 * step
+    }
+    val upper = FS.loopBound(n)
+    while (i < upper) {
+      val d = FloatVector.fromArray(FS, a, i)
+        .sub(FloatVector.fromArray(FS, flat, boff + i))
+      acc0 = d.fma(d, acc0)
+      i += step
+    }
+    var s = acc0.add(acc1).reduceLanes(VectorOperators.ADD).toDouble
+    while (i < n) {
+      val d = a(i).toDouble - flat(boff + i).toDouble; s += d * d; i += 1
+    }
+    s
+  }
+
+  /** Four float-accumulated dots: a · r_j → out(ooff + j) — the serving
+    * flavor of [[dot4]] (blocked scans, the HNSW beam expansion under
+    * float-acc) and the SCREENING kernel of the GEMM-shaped argmin
     * ([[CentroidOps.argminScreened]]). Dot is 1 FMA/element where l2Sq
     * pays sub+FMA, and float lanes run 2× the width of the double-lane
     * contract, so a screening pass over all k centroids costs ~4× less
@@ -244,9 +319,10 @@ object Simd {
     * analytically and an exact double-kernel re-eval of the shortlist
     * restores the bit-exact argmin (soundness argument at the call site).
     */
-  def dot4FSeq(a: Array[Float], cs: Array[Array[Float]], c: Int, n: Int,
-               out: Array[Double]): Unit = {
-    val q0 = cs(c); val q1 = cs(c + 1); val q2 = cs(c + 2); val q3 = cs(c + 3)
+  def dot4F(a: Array[Float],
+            r0: Array[Float], o0: Int, r1: Array[Float], o1: Int,
+            r2: Array[Float], o2: Int, r3: Array[Float], o3: Int,
+            n: Int, out: Array[Double], ooff: Int): Unit = {
     var a0 = FloatVector.zero(FS)
     var a1 = FloatVector.zero(FS)
     var a2 = FloatVector.zero(FS)
@@ -256,10 +332,10 @@ object Simd {
     var i = 0
     while (i < upper) {
       val va = FloatVector.fromArray(FS, a, i)
-      a0 = va.fma(FloatVector.fromArray(FS, q0, i), a0)
-      a1 = va.fma(FloatVector.fromArray(FS, q1, i), a1)
-      a2 = va.fma(FloatVector.fromArray(FS, q2, i), a2)
-      a3 = va.fma(FloatVector.fromArray(FS, q3, i), a3)
+      a0 = va.fma(FloatVector.fromArray(FS, r0, o0 + i), a0)
+      a1 = va.fma(FloatVector.fromArray(FS, r1, o1 + i), a1)
+      a2 = va.fma(FloatVector.fromArray(FS, r2, o2 + i), a2)
+      a3 = va.fma(FloatVector.fromArray(FS, r3, o3 + i), a3)
       i += step
     }
     var s0 = a0.reduceLanes(VectorOperators.ADD).toDouble
@@ -268,15 +344,55 @@ object Simd {
     var s3 = a3.reduceLanes(VectorOperators.ADD).toDouble
     while (i < n) {
       val ad = a(i).toDouble
-      s0 += ad * q0(i).toDouble; s1 += ad * q1(i).toDouble
-      s2 += ad * q2(i).toDouble; s3 += ad * q3(i).toDouble
+      s0 += ad * r0(o0 + i).toDouble; s1 += ad * r1(o1 + i).toDouble
+      s2 += ad * r2(o2 + i).toDouble; s3 += ad * r3(o3 + i).toDouble
       i += 1
     }
-    out(0) = s0; out(1) = s1; out(2) = s2; out(3) = s3
+    out(ooff) = s0; out(ooff + 1) = s1; out(ooff + 2) = s2; out(ooff + 3) = s3
+  }
+
+  /** Four float-accumulated squared-L2s: ‖a − r_j‖² → out(ooff + j) —
+    * [[l2Sq4]]'s serving flavor (the HNSW beam-expansion tile under
+    * float-acc). Serve-only.
+    */
+  def l2Sq4F(a: Array[Float],
+             r0: Array[Float], o0: Int, r1: Array[Float], o1: Int,
+             r2: Array[Float], o2: Int, r3: Array[Float], o3: Int,
+             n: Int, out: Array[Double], ooff: Int): Unit = {
+    var a0 = FloatVector.zero(FS)
+    var a1 = FloatVector.zero(FS)
+    var a2 = FloatVector.zero(FS)
+    var a3 = FloatVector.zero(FS)
+    val step = FS.length()
+    val upper = FS.loopBound(n)
+    var i = 0
+    while (i < upper) {
+      val va = FloatVector.fromArray(FS, a, i)
+      val d0 = va.sub(FloatVector.fromArray(FS, r0, o0 + i))
+      val d1 = va.sub(FloatVector.fromArray(FS, r1, o1 + i))
+      val d2 = va.sub(FloatVector.fromArray(FS, r2, o2 + i))
+      val d3 = va.sub(FloatVector.fromArray(FS, r3, o3 + i))
+      a0 = d0.fma(d0, a0); a1 = d1.fma(d1, a1)
+      a2 = d2.fma(d2, a2); a3 = d3.fma(d3, a3)
+      i += step
+    }
+    var s0 = a0.reduceLanes(VectorOperators.ADD).toDouble
+    var s1 = a1.reduceLanes(VectorOperators.ADD).toDouble
+    var s2 = a2.reduceLanes(VectorOperators.ADD).toDouble
+    var s3 = a3.reduceLanes(VectorOperators.ADD).toDouble
+    while (i < n) {
+      val ad = a(i).toDouble
+      val e0 = ad - r0(o0 + i).toDouble; s0 += e0 * e0
+      val e1 = ad - r1(o1 + i).toDouble; s1 += e1 * e1
+      val e2 = ad - r2(o2 + i).toDouble; s2 += e2 * e2
+      val e3 = ad - r3(o3 + i).toDouble; s3 += e3 * e3
+      i += 1
+    }
+    out(ooff) = s0; out(ooff + 1) = s1; out(ooff + 2) = s2; out(ooff + 3) = s3
   }
 
   /** Eight float-accumulated dots against CONSECUTIVE rows cs(c..c+7) →
-    * out(0..7) — [[dot4FSeq]] widened to 8 independent accumulator
+    * out(0..7) — [[dot4F]] widened to 8 independent accumulator
     * chains: float FMA latency×throughput needs ~8 in-flight chains to
     * saturate both FMA ports, and the 4-wide tile measured only ~1.45×
     * over the double-lane kernel where ~4× is available (r10 assignment
@@ -323,537 +439,6 @@ object Simd {
     }
     out(0) = s0; out(1) = s1; out(2) = s2; out(3) = s3
     out(4) = s4; out(5) = s5; out(6) = s6; out(7) = s7
-  }
-
-  /** Four squared-L2 distances against GATHERED rows: ‖a − cs(ij)‖² →
-    * out(j), j ∈ 0..3. The index-gather twin of [[l2Sq4]] for the
-    * norm-ordered argmin ([[CentroidOps.argminNormOrdered]]): the
-    * candidate window is contiguous in NORM order, not in storage order,
-    * so the tile takes four explicit row indices. Per-pair lane math is
-    * identical to [[l2Sq]] (sub in double, `fma(d,d)`, own lane pair per
-    * output), so each out(j) is bitwise equal to `l2Sq(a, cs(ij), n)` —
-    * SimdSpec gates it.
-    */
-  def l2Sq4At(a: Array[Float], cs: Array[Array[Float]],
-              i0: Int, i1: Int, i2: Int, i3: Int, n: Int,
-              out: Array[Double]): Unit = {
-    val q0 = cs(i0); val q1 = cs(i1); val q2 = cs(i2); val q3 = cs(i3)
-    var a00 = DoubleVector.zero(DS); var a01 = DoubleVector.zero(DS)
-    var a10 = DoubleVector.zero(DS); var a11 = DoubleVector.zero(DS)
-    var a20 = DoubleVector.zero(DS); var a21 = DoubleVector.zero(DS)
-    var a30 = DoubleVector.zero(DS); var a31 = DoubleVector.zero(DS)
-    val step = FS.length()
-    val upper = FS.loopBound(n)
-    var i = 0
-    while (i < upper) {
-      val va = FloatVector.fromArray(FS, a, i)
-      val va0 = va.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector]
-      val va1 = va.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector]
-      val v0 = FloatVector.fromArray(FS, q0, i)
-      val d00 = va0.sub(v0.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector])
-      val d01 = va1.sub(v0.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector])
-      a00 = d00.fma(d00, a00); a01 = d01.fma(d01, a01)
-      val v1 = FloatVector.fromArray(FS, q1, i)
-      val d10 = va0.sub(v1.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector])
-      val d11 = va1.sub(v1.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector])
-      a10 = d10.fma(d10, a10); a11 = d11.fma(d11, a11)
-      val v2 = FloatVector.fromArray(FS, q2, i)
-      val d20 = va0.sub(v2.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector])
-      val d21 = va1.sub(v2.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector])
-      a20 = d20.fma(d20, a20); a21 = d21.fma(d21, a21)
-      val v3 = FloatVector.fromArray(FS, q3, i)
-      val d30 = va0.sub(v3.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector])
-      val d31 = va1.sub(v3.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector])
-      a30 = d30.fma(d30, a30); a31 = d31.fma(d31, a31)
-      i += step
-    }
-    var s0 = a00.add(a01).reduceLanes(VectorOperators.ADD)
-    var s1 = a10.add(a11).reduceLanes(VectorOperators.ADD)
-    var s2 = a20.add(a21).reduceLanes(VectorOperators.ADD)
-    var s3 = a30.add(a31).reduceLanes(VectorOperators.ADD)
-    while (i < n) {
-      val ad = a(i).toDouble
-      val e0 = ad - q0(i).toDouble; s0 += e0 * e0
-      val e1 = ad - q1(i).toDouble; s1 += e1 * e1
-      val e2 = ad - q2(i).toDouble; s2 += e2 * e2
-      val e3 = ad - q3(i).toDouble; s3 += e3 * e3
-      i += 1
-    }
-    out(0) = s0; out(1) = s1; out(2) = s2; out(3) = s3
-  }
-
-  /** Four double-accumulated dots against GATHERED rows: a · cs(ij) →
-    * out(j), j ∈ 0..3 — the index-gather twin of [[dot]] (and the
-    * dot-metric sibling of [[l2Sq4At]]), for consumers whose candidate
-    * set is scattered by index (the HNSW beam expansion). Per-pair lane
-    * math is identical to [[dot]] (two double-lane FMA chains per row,
-    * `acc0.add(acc1).reduceLanes`), so each out(j) is bitwise equal to
-    * `dot(a, cs(ij), n)` — SimdSpec gates it.
-    */
-  def dot4At(a: Array[Float], cs: Array[Array[Float]],
-             i0: Int, i1: Int, i2: Int, i3: Int, n: Int,
-             out: Array[Double]): Unit = {
-    val q0 = cs(i0); val q1 = cs(i1); val q2 = cs(i2); val q3 = cs(i3)
-    var a00 = DoubleVector.zero(DS); var a01 = DoubleVector.zero(DS)
-    var a10 = DoubleVector.zero(DS); var a11 = DoubleVector.zero(DS)
-    var a20 = DoubleVector.zero(DS); var a21 = DoubleVector.zero(DS)
-    var a30 = DoubleVector.zero(DS); var a31 = DoubleVector.zero(DS)
-    val step = FS.length()
-    val upper = FS.loopBound(n)
-    var i = 0
-    while (i < upper) {
-      val va = FloatVector.fromArray(FS, a, i)
-      val va0 = va.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector]
-      val va1 = va.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector]
-      val v0 = FloatVector.fromArray(FS, q0, i)
-      a00 = va0.fma(v0.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector], a00)
-      a01 = va1.fma(v0.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector], a01)
-      val v1 = FloatVector.fromArray(FS, q1, i)
-      a10 = va0.fma(v1.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector], a10)
-      a11 = va1.fma(v1.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector], a11)
-      val v2 = FloatVector.fromArray(FS, q2, i)
-      a20 = va0.fma(v2.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector], a20)
-      a21 = va1.fma(v2.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector], a21)
-      val v3 = FloatVector.fromArray(FS, q3, i)
-      a30 = va0.fma(v3.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector], a30)
-      a31 = va1.fma(v3.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector], a31)
-      i += step
-    }
-    var s0 = a00.add(a01).reduceLanes(VectorOperators.ADD)
-    var s1 = a10.add(a11).reduceLanes(VectorOperators.ADD)
-    var s2 = a20.add(a21).reduceLanes(VectorOperators.ADD)
-    var s3 = a30.add(a31).reduceLanes(VectorOperators.ADD)
-    while (i < n) {
-      val ad = a(i).toDouble
-      s0 += ad * q0(i).toDouble; s1 += ad * q1(i).toDouble
-      s2 += ad * q2(i).toDouble; s3 += ad * q3(i).toDouble
-      i += 1
-    }
-    out(0) = s0; out(1) = s1; out(2) = s2; out(3) = s3
-  }
-
-  // ---- FLAT-OFFSET kernel twins -------------------------------------
-  // The HNSW graph stores its vectors in ONE packed float array (r13:
-  // `Array[Array[Float]]` rows cost a pointer dereference + scattered
-  // cache lines per distance eval — the dominant share of the serve
-  // margin left after the facc study). Each kernel below is the
-  // BITWISE twin of its array sibling: identical lane math, identical
-  // order, the row merely read at `flat(off + i)` instead of `row(i)`
-  // (SimdSpec gates every pair), so graphs built over either storage
-  // are identical and every determinism oracle rides through unchanged.
-
-  /** [[dot]] reading b at `flat(boff + i)` — bitwise twin. */
-  def dotOff(a: Array[Float], flat: Array[Float], boff: Int, n: Int): Double = {
-    var acc0 = DoubleVector.zero(DS)
-    var acc1 = DoubleVector.zero(DS)
-    val step = FS.length()
-    val upper = FS.loopBound(n)
-    var i = 0
-    while (i < upper) {
-      val va = FloatVector.fromArray(FS, a, i)
-      val vb = FloatVector.fromArray(FS, flat, boff + i)
-      acc0 = va.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector]
-        .fma(vb.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector], acc0)
-      acc1 = va.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector]
-        .fma(vb.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector], acc1)
-      i += step
-    }
-    var s = acc0.add(acc1).reduceLanes(VectorOperators.ADD)
-    while (i < n) { s += a(i).toDouble * flat(boff + i).toDouble; i += 1 }
-    s
-  }
-
-  /** [[l2Sq]] reading b at `flat(boff + i)` — bitwise twin. */
-  def l2SqOff(a: Array[Float], flat: Array[Float], boff: Int, n: Int): Double = {
-    var acc0 = DoubleVector.zero(DS)
-    var acc1 = DoubleVector.zero(DS)
-    val step = FS.length()
-    val upper = FS.loopBound(n)
-    var i = 0
-    while (i < upper) {
-      val va = FloatVector.fromArray(FS, a, i)
-      val vb = FloatVector.fromArray(FS, flat, boff + i)
-      val d0 = va.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector]
-        .sub(vb.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector])
-      val d1 = va.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector]
-        .sub(vb.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector])
-      acc0 = d0.fma(d0, acc0)
-      acc1 = d1.fma(d1, acc1)
-      i += step
-    }
-    var s = acc0.add(acc1).reduceLanes(VectorOperators.ADD)
-    while (i < n) {
-      val d = a(i).toDouble - flat(boff + i).toDouble; s += d * d; i += 1
-    }
-    s
-  }
-
-  /** [[sumSq]] over `flat(off until off + n)` — bitwise twin. */
-  def sumSqOff(flat: Array[Float], off: Int, n: Int): Double = {
-    var acc0 = DoubleVector.zero(DS)
-    var acc1 = DoubleVector.zero(DS)
-    val step = FS.length()
-    val upper = FS.loopBound(n)
-    var i = 0
-    while (i < upper) {
-      val va = FloatVector.fromArray(FS, flat, off + i)
-      val va0 = va.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector]
-      val va1 = va.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector]
-      acc0 = va0.fma(va0, acc0)
-      acc1 = va1.fma(va1, acc1)
-      i += step
-    }
-    var s = acc0.add(acc1).reduceLanes(VectorOperators.ADD)
-    while (i < n) { val d = flat(off + i).toDouble; s += d * d; i += 1 }
-    s
-  }
-
-  /** [[dot4At]] over four flat offsets — bitwise twin. */
-  def dot4AtOff(a: Array[Float], flat: Array[Float],
-                o0: Int, o1: Int, o2: Int, o3: Int, n: Int,
-                out: Array[Double]): Unit = {
-    var a00 = DoubleVector.zero(DS); var a01 = DoubleVector.zero(DS)
-    var a10 = DoubleVector.zero(DS); var a11 = DoubleVector.zero(DS)
-    var a20 = DoubleVector.zero(DS); var a21 = DoubleVector.zero(DS)
-    var a30 = DoubleVector.zero(DS); var a31 = DoubleVector.zero(DS)
-    val step = FS.length()
-    val upper = FS.loopBound(n)
-    var i = 0
-    while (i < upper) {
-      val va = FloatVector.fromArray(FS, a, i)
-      val va0 = va.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector]
-      val va1 = va.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector]
-      val v0 = FloatVector.fromArray(FS, flat, o0 + i)
-      a00 = va0.fma(v0.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector], a00)
-      a01 = va1.fma(v0.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector], a01)
-      val v1 = FloatVector.fromArray(FS, flat, o1 + i)
-      a10 = va0.fma(v1.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector], a10)
-      a11 = va1.fma(v1.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector], a11)
-      val v2 = FloatVector.fromArray(FS, flat, o2 + i)
-      a20 = va0.fma(v2.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector], a20)
-      a21 = va1.fma(v2.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector], a21)
-      val v3 = FloatVector.fromArray(FS, flat, o3 + i)
-      a30 = va0.fma(v3.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector], a30)
-      a31 = va1.fma(v3.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector], a31)
-      i += step
-    }
-    var s0 = a00.add(a01).reduceLanes(VectorOperators.ADD)
-    var s1 = a10.add(a11).reduceLanes(VectorOperators.ADD)
-    var s2 = a20.add(a21).reduceLanes(VectorOperators.ADD)
-    var s3 = a30.add(a31).reduceLanes(VectorOperators.ADD)
-    while (i < n) {
-      val ad = a(i).toDouble
-      s0 += ad * flat(o0 + i).toDouble; s1 += ad * flat(o1 + i).toDouble
-      s2 += ad * flat(o2 + i).toDouble; s3 += ad * flat(o3 + i).toDouble
-      i += 1
-    }
-    out(0) = s0; out(1) = s1; out(2) = s2; out(3) = s3
-  }
-
-  /** [[l2Sq4At]] over four flat offsets — bitwise twin. */
-  def l2Sq4AtOff(a: Array[Float], flat: Array[Float],
-                 o0: Int, o1: Int, o2: Int, o3: Int, n: Int,
-                 out: Array[Double]): Unit = {
-    var a00 = DoubleVector.zero(DS); var a01 = DoubleVector.zero(DS)
-    var a10 = DoubleVector.zero(DS); var a11 = DoubleVector.zero(DS)
-    var a20 = DoubleVector.zero(DS); var a21 = DoubleVector.zero(DS)
-    var a30 = DoubleVector.zero(DS); var a31 = DoubleVector.zero(DS)
-    val step = FS.length()
-    val upper = FS.loopBound(n)
-    var i = 0
-    while (i < upper) {
-      val va = FloatVector.fromArray(FS, a, i)
-      val va0 = va.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector]
-      val va1 = va.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector]
-      val v0 = FloatVector.fromArray(FS, flat, o0 + i)
-      val d00 = va0.sub(v0.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector])
-      val d01 = va1.sub(v0.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector])
-      a00 = d00.fma(d00, a00); a01 = d01.fma(d01, a01)
-      val v1 = FloatVector.fromArray(FS, flat, o1 + i)
-      val d10 = va0.sub(v1.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector])
-      val d11 = va1.sub(v1.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector])
-      a10 = d10.fma(d10, a10); a11 = d11.fma(d11, a11)
-      val v2 = FloatVector.fromArray(FS, flat, o2 + i)
-      val d20 = va0.sub(v2.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector])
-      val d21 = va1.sub(v2.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector])
-      a20 = d20.fma(d20, a20); a21 = d21.fma(d21, a21)
-      val v3 = FloatVector.fromArray(FS, flat, o3 + i)
-      val d30 = va0.sub(v3.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector])
-      val d31 = va1.sub(v3.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector])
-      a30 = d30.fma(d30, a30); a31 = d31.fma(d31, a31)
-      i += step
-    }
-    var s0 = a00.add(a01).reduceLanes(VectorOperators.ADD)
-    var s1 = a10.add(a11).reduceLanes(VectorOperators.ADD)
-    var s2 = a20.add(a21).reduceLanes(VectorOperators.ADD)
-    var s3 = a30.add(a31).reduceLanes(VectorOperators.ADD)
-    while (i < n) {
-      val ad = a(i).toDouble
-      val e0 = ad - flat(o0 + i).toDouble; s0 += e0 * e0
-      val e1 = ad - flat(o1 + i).toDouble; s1 += e1 * e1
-      val e2 = ad - flat(o2 + i).toDouble; s2 += e2 * e2
-      val e3 = ad - flat(o3 + i).toDouble; s3 += e3 * e3
-      i += 1
-    }
-    out(0) = s0; out(1) = s1; out(2) = s2; out(3) = s3
-  }
-
-  /** [[dotF]] reading b at `flat(boff + i)` — the facc serving twin. */
-  def dotFOff(a: Array[Float], flat: Array[Float], boff: Int, n: Int): Double = {
-    var acc0 = FloatVector.zero(FS)
-    var acc1 = FloatVector.zero(FS)
-    val step = FS.length()
-    val upper2 = FS.loopBound(n - step)
-    var i = 0
-    while (i < upper2) {
-      acc0 = FloatVector.fromArray(FS, a, i)
-        .fma(FloatVector.fromArray(FS, flat, boff + i), acc0)
-      acc1 = FloatVector.fromArray(FS, a, i + step)
-        .fma(FloatVector.fromArray(FS, flat, boff + i + step), acc1)
-      i += 2 * step
-    }
-    val upper = FS.loopBound(n)
-    while (i < upper) {
-      acc0 = FloatVector.fromArray(FS, a, i)
-        .fma(FloatVector.fromArray(FS, flat, boff + i), acc0)
-      i += step
-    }
-    var s = acc0.add(acc1).reduceLanes(VectorOperators.ADD).toDouble
-    while (i < n) { s += a(i).toDouble * flat(boff + i).toDouble; i += 1 }
-    s
-  }
-
-  /** [[l2SqF]] reading b at `flat(boff + i)` — the facc serving twin. */
-  def l2SqFOff(a: Array[Float], flat: Array[Float], boff: Int, n: Int): Double = {
-    var acc0 = FloatVector.zero(FS)
-    var acc1 = FloatVector.zero(FS)
-    val step = FS.length()
-    val upper2 = FS.loopBound(n - step)
-    var i = 0
-    while (i < upper2) {
-      val d0 = FloatVector.fromArray(FS, a, i)
-        .sub(FloatVector.fromArray(FS, flat, boff + i))
-      val d1 = FloatVector.fromArray(FS, a, i + step)
-        .sub(FloatVector.fromArray(FS, flat, boff + i + step))
-      acc0 = d0.fma(d0, acc0)
-      acc1 = d1.fma(d1, acc1)
-      i += 2 * step
-    }
-    val upper = FS.loopBound(n)
-    while (i < upper) {
-      val d = FloatVector.fromArray(FS, a, i)
-        .sub(FloatVector.fromArray(FS, flat, boff + i))
-      acc0 = d.fma(d, acc0)
-      i += step
-    }
-    var s = acc0.add(acc1).reduceLanes(VectorOperators.ADD).toDouble
-    while (i < n) {
-      val d = a(i).toDouble - flat(boff + i).toDouble; s += d * d; i += 1
-    }
-    s
-  }
-
-  /** [[dot4AtF]] over four flat offsets — the facc serving twin. */
-  def dot4AtFOff(a: Array[Float], flat: Array[Float],
-                 o0: Int, o1: Int, o2: Int, o3: Int, n: Int,
-                 out: Array[Double]): Unit = {
-    var a0 = FloatVector.zero(FS)
-    var a1 = FloatVector.zero(FS)
-    var a2 = FloatVector.zero(FS)
-    var a3 = FloatVector.zero(FS)
-    val step = FS.length()
-    val upper = FS.loopBound(n)
-    var i = 0
-    while (i < upper) {
-      val va = FloatVector.fromArray(FS, a, i)
-      a0 = va.fma(FloatVector.fromArray(FS, flat, o0 + i), a0)
-      a1 = va.fma(FloatVector.fromArray(FS, flat, o1 + i), a1)
-      a2 = va.fma(FloatVector.fromArray(FS, flat, o2 + i), a2)
-      a3 = va.fma(FloatVector.fromArray(FS, flat, o3 + i), a3)
-      i += step
-    }
-    var s0 = a0.reduceLanes(VectorOperators.ADD).toDouble
-    var s1 = a1.reduceLanes(VectorOperators.ADD).toDouble
-    var s2 = a2.reduceLanes(VectorOperators.ADD).toDouble
-    var s3 = a3.reduceLanes(VectorOperators.ADD).toDouble
-    while (i < n) {
-      val ad = a(i).toDouble
-      s0 += ad * flat(o0 + i).toDouble; s1 += ad * flat(o1 + i).toDouble
-      s2 += ad * flat(o2 + i).toDouble; s3 += ad * flat(o3 + i).toDouble
-      i += 1
-    }
-    out(0) = s0; out(1) = s1; out(2) = s2; out(3) = s3
-  }
-
-  /** [[l2Sq4AtF]] over four flat offsets — the facc serving twin. */
-  def l2Sq4AtFOff(a: Array[Float], flat: Array[Float],
-                  o0: Int, o1: Int, o2: Int, o3: Int, n: Int,
-                  out: Array[Double]): Unit = {
-    var a0 = FloatVector.zero(FS)
-    var a1 = FloatVector.zero(FS)
-    var a2 = FloatVector.zero(FS)
-    var a3 = FloatVector.zero(FS)
-    val step = FS.length()
-    val upper = FS.loopBound(n)
-    var i = 0
-    while (i < upper) {
-      val va = FloatVector.fromArray(FS, a, i)
-      val d0 = va.sub(FloatVector.fromArray(FS, flat, o0 + i))
-      val d1 = va.sub(FloatVector.fromArray(FS, flat, o1 + i))
-      val d2 = va.sub(FloatVector.fromArray(FS, flat, o2 + i))
-      val d3 = va.sub(FloatVector.fromArray(FS, flat, o3 + i))
-      a0 = d0.fma(d0, a0); a1 = d1.fma(d1, a1)
-      a2 = d2.fma(d2, a2); a3 = d3.fma(d3, a3)
-      i += step
-    }
-    var s0 = a0.reduceLanes(VectorOperators.ADD).toDouble
-    var s1 = a1.reduceLanes(VectorOperators.ADD).toDouble
-    var s2 = a2.reduceLanes(VectorOperators.ADD).toDouble
-    var s3 = a3.reduceLanes(VectorOperators.ADD).toDouble
-    while (i < n) {
-      val ad = a(i).toDouble
-      val e0 = ad - flat(o0 + i).toDouble; s0 += e0 * e0
-      val e1 = ad - flat(o1 + i).toDouble; s1 += e1 * e1
-      val e2 = ad - flat(o2 + i).toDouble; s2 += e2 * e2
-      val e3 = ad - flat(o3 + i).toDouble; s3 += e3 * e3
-      i += 1
-    }
-    out(0) = s0; out(1) = s1; out(2) = s2; out(3) = s3
-  }
-
-  /** dot(a, b) with FLOAT-lane accumulation — the opt-in SERVING twin of
-    * [[dot]] (see [[dot4F]]'s rationale: float FMA runs 2× the lane width,
-    * no F2D widening). Two independent accumulator chains cover FMA
-    * latency. NOT bitwise-comparable to [[dot]] (~n·ε_f32 relative drift);
-    * serve-only, never an oracle path.
-    */
-  def dotF(a: Array[Float], b: Array[Float], n: Int): Double = {
-    var acc0 = FloatVector.zero(FS)
-    var acc1 = FloatVector.zero(FS)
-    val step = FS.length()
-    val upper2 = FS.loopBound(n - step)
-    var i = 0
-    while (i < upper2) {
-      acc0 = FloatVector.fromArray(FS, a, i)
-        .fma(FloatVector.fromArray(FS, b, i), acc0)
-      acc1 = FloatVector.fromArray(FS, a, i + step)
-        .fma(FloatVector.fromArray(FS, b, i + step), acc1)
-      i += 2 * step
-    }
-    val upper = FS.loopBound(n)
-    while (i < upper) {
-      acc0 = FloatVector.fromArray(FS, a, i)
-        .fma(FloatVector.fromArray(FS, b, i), acc0)
-      i += step
-    }
-    var s = acc0.add(acc1).reduceLanes(VectorOperators.ADD).toDouble
-    while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-    s
-  }
-
-  /** Squared L2 with FLOAT-lane accumulation — [[dotF]]'s L2 sibling
-    * (sub and fma both in float). Serve-only; see [[dotF]].
-    */
-  def l2SqF(a: Array[Float], b: Array[Float], n: Int): Double = {
-    var acc0 = FloatVector.zero(FS)
-    var acc1 = FloatVector.zero(FS)
-    val step = FS.length()
-    val upper2 = FS.loopBound(n - step)
-    var i = 0
-    while (i < upper2) {
-      val d0 = FloatVector.fromArray(FS, a, i)
-        .sub(FloatVector.fromArray(FS, b, i))
-      val d1 = FloatVector.fromArray(FS, a, i + step)
-        .sub(FloatVector.fromArray(FS, b, i + step))
-      acc0 = d0.fma(d0, acc0)
-      acc1 = d1.fma(d1, acc1)
-      i += 2 * step
-    }
-    val upper = FS.loopBound(n)
-    while (i < upper) {
-      val d = FloatVector.fromArray(FS, a, i)
-        .sub(FloatVector.fromArray(FS, b, i))
-      acc0 = d.fma(d, acc0)
-      i += step
-    }
-    var s = acc0.add(acc1).reduceLanes(VectorOperators.ADD).toDouble
-    while (i < n) { val d = a(i).toDouble - b(i).toDouble; s += d * d; i += 1 }
-    s
-  }
-
-  /** Four float-accumulated dots against GATHERED rows — [[dot4At]]'s
-    * serving twin (the HNSW beam-expansion tile under the float-acc
-    * flavor). Serve-only; see [[dotF]].
-    */
-  def dot4AtF(a: Array[Float], cs: Array[Array[Float]],
-              i0: Int, i1: Int, i2: Int, i3: Int, n: Int,
-              out: Array[Double]): Unit = {
-    val q0 = cs(i0); val q1 = cs(i1); val q2 = cs(i2); val q3 = cs(i3)
-    var a0 = FloatVector.zero(FS)
-    var a1 = FloatVector.zero(FS)
-    var a2 = FloatVector.zero(FS)
-    var a3 = FloatVector.zero(FS)
-    val step = FS.length()
-    val upper = FS.loopBound(n)
-    var i = 0
-    while (i < upper) {
-      val va = FloatVector.fromArray(FS, a, i)
-      a0 = va.fma(FloatVector.fromArray(FS, q0, i), a0)
-      a1 = va.fma(FloatVector.fromArray(FS, q1, i), a1)
-      a2 = va.fma(FloatVector.fromArray(FS, q2, i), a2)
-      a3 = va.fma(FloatVector.fromArray(FS, q3, i), a3)
-      i += step
-    }
-    var s0 = a0.reduceLanes(VectorOperators.ADD).toDouble
-    var s1 = a1.reduceLanes(VectorOperators.ADD).toDouble
-    var s2 = a2.reduceLanes(VectorOperators.ADD).toDouble
-    var s3 = a3.reduceLanes(VectorOperators.ADD).toDouble
-    while (i < n) {
-      val ad = a(i).toDouble
-      s0 += ad * q0(i).toDouble; s1 += ad * q1(i).toDouble
-      s2 += ad * q2(i).toDouble; s3 += ad * q3(i).toDouble
-      i += 1
-    }
-    out(0) = s0; out(1) = s1; out(2) = s2; out(3) = s3
-  }
-
-  /** Four float-accumulated squared-L2s against GATHERED rows —
-    * [[l2Sq4At]]'s serving twin. Serve-only; see [[dotF]].
-    */
-  def l2Sq4AtF(a: Array[Float], cs: Array[Array[Float]],
-               i0: Int, i1: Int, i2: Int, i3: Int, n: Int,
-               out: Array[Double]): Unit = {
-    val q0 = cs(i0); val q1 = cs(i1); val q2 = cs(i2); val q3 = cs(i3)
-    var a0 = FloatVector.zero(FS)
-    var a1 = FloatVector.zero(FS)
-    var a2 = FloatVector.zero(FS)
-    var a3 = FloatVector.zero(FS)
-    val step = FS.length()
-    val upper = FS.loopBound(n)
-    var i = 0
-    while (i < upper) {
-      val va = FloatVector.fromArray(FS, a, i)
-      val d0 = va.sub(FloatVector.fromArray(FS, q0, i))
-      val d1 = va.sub(FloatVector.fromArray(FS, q1, i))
-      val d2 = va.sub(FloatVector.fromArray(FS, q2, i))
-      val d3 = va.sub(FloatVector.fromArray(FS, q3, i))
-      a0 = d0.fma(d0, a0); a1 = d1.fma(d1, a1)
-      a2 = d2.fma(d2, a2); a3 = d3.fma(d3, a3)
-      i += step
-    }
-    var s0 = a0.reduceLanes(VectorOperators.ADD).toDouble
-    var s1 = a1.reduceLanes(VectorOperators.ADD).toDouble
-    var s2 = a2.reduceLanes(VectorOperators.ADD).toDouble
-    var s3 = a3.reduceLanes(VectorOperators.ADD).toDouble
-    while (i < n) {
-      val ad = a(i).toDouble
-      val e0 = ad - q0(i).toDouble; s0 += e0 * e0
-      val e1 = ad - q1(i).toDouble; s1 += e1 * e1
-      val e2 = ad - q2(i).toDouble; s2 += e2 * e2
-      val e3 = ad - q3(i).toDouble; s3 += e3 * e3
-      i += 1
-    }
-    out(0) = s0; out(1) = s1; out(2) = s2; out(3) = s3
   }
 
   private val BS = ByteVector.SPECIES_PREFERRED
@@ -980,27 +565,6 @@ object Simd {
     }
   }
 
-  /** Sum of squares over the whole array (norm2 = sqrt of this). */
-  def sumSq(a: Array[Float]): Double = {
-    val n = a.length
-    var acc0 = DoubleVector.zero(DS)
-    var acc1 = DoubleVector.zero(DS)
-    val step = FS.length()
-    val upper = FS.loopBound(n)
-    var i = 0
-    while (i < upper) {
-      val va = FloatVector.fromArray(FS, a, i)
-      val v0 = va.convert(VectorOperators.F2D, 0).asInstanceOf[DoubleVector]
-      val v1 = va.convert(VectorOperators.F2D, 1).asInstanceOf[DoubleVector]
-      acc0 = v0.fma(v0, acc0)
-      acc1 = v1.fma(v1, acc1)
-      i += step
-    }
-    var s = acc0.add(acc1).reduceLanes(VectorOperators.ADD)
-    while (i < n) { s += a(i).toDouble * a(i).toDouble; i += 1 }
-    s
-  }
-
   /** Fused f32·i8 dot with FLOAT accumulation — the i8-quantized serve
     * flavor's beam kernel (r14): Σ a(i) · codes(off + i), UNSCALED (the
     * caller multiplies by the row's quantization scale). No widening
@@ -1034,7 +598,7 @@ object Simd {
 
   /** [[dotI8F]] over four rows — the i8 serve walk's gather tile: four
     * independent byte-row streams per call (the MLP the per-row kernel
-    * lacks — same motivation as [[dot4AtOff]]). Unscaled, float-acc.
+    * lacks — same motivation as [[dot4]]). Unscaled, float-acc.
     */
   def dotI8F4At(a: Array[Float], codes: Array[Byte],
                 o0: Int, o1: Int, o2: Int, o3: Int, n: Int,
@@ -1078,13 +642,15 @@ object Simd {
     out(0) = s0; out(1) = s1; out(2) = s2; out(3) = s3
   }
 
-  // ---- ByteBuffer twins (r14 mmap-store spike): the `-Off` kernels with
-  // the stored side read from a (typically mmapped, little-endian) direct
-  // ByteBuffer instead of a heap float array. Accumulation order, lane
-  // interleave and scalar tails are IDENTICAL to the array twins, so
-  // every value is bitwise equal over the same payload — the precision
-  // contract transfers unchanged to an off-heap packed store. `boff` is
-  // a FLOAT offset like the array twins'; byte position = boff * 4.
+  // ---- ByteBuffer twins (r14 mmap-store spike): each mirrors exactly
+  // one heap kernel above (`dotOff`, `l2SqOff`, `sumSqOff`, `dot4`,
+  // `l2Sq4`, `dotI8F`, `dotI8F4At`) with the stored side read from a
+  // (typically mmapped, little-endian) direct ByteBuffer instead of a
+  // heap array — the only path for mapped graph stores. Accumulation
+  // order, lane interleave and scalar tails are IDENTICAL to the heap
+  // kernel, so every value is bitwise equal over the same payload — the
+  // precision contract transfers unchanged to an off-heap packed store.
+  // Float offsets like the heap kernels'; byte position = offset * 4.
 
   private val LE = java.nio.ByteOrder.LITTLE_ENDIAN
 
@@ -1162,10 +728,10 @@ object Simd {
     s
   }
 
-  /** [[dot4AtOff]] over a ByteBuffer payload — bitwise twin. */
-  def dot4AtOffBB(a: Array[Float], bb: java.nio.ByteBuffer,
-                  o0: Int, o1: Int, o2: Int, o3: Int, n: Int,
-                  out: Array[Double]): Unit = {
+  /** [[dot4]] over a ByteBuffer payload, out(0..3) — bitwise twin. */
+  def dot4BB(a: Array[Float], bb: java.nio.ByteBuffer,
+             o0: Int, o1: Int, o2: Int, o3: Int, n: Int,
+             out: Array[Double]): Unit = {
     var a00 = DoubleVector.zero(DS); var a01 = DoubleVector.zero(DS)
     var a10 = DoubleVector.zero(DS); var a11 = DoubleVector.zero(DS)
     var a20 = DoubleVector.zero(DS); var a21 = DoubleVector.zero(DS)
@@ -1209,10 +775,10 @@ object Simd {
     out(0) = s0; out(1) = s1; out(2) = s2; out(3) = s3
   }
 
-  /** [[l2Sq4AtOff]] over a ByteBuffer payload — bitwise twin. */
-  def l2Sq4AtOffBB(a: Array[Float], bb: java.nio.ByteBuffer,
-                   o0: Int, o1: Int, o2: Int, o3: Int, n: Int,
-                   out: Array[Double]): Unit = {
+  /** [[l2Sq4]] over a ByteBuffer payload, out(0..3) — bitwise twin. */
+  def l2Sq4BB(a: Array[Float], bb: java.nio.ByteBuffer,
+              o0: Int, o1: Int, o2: Int, o3: Int, n: Int,
+              out: Array[Double]): Unit = {
     var a00 = DoubleVector.zero(DS); var a01 = DoubleVector.zero(DS)
     var a10 = DoubleVector.zero(DS); var a11 = DoubleVector.zero(DS)
     var a20 = DoubleVector.zero(DS); var a21 = DoubleVector.zero(DS)

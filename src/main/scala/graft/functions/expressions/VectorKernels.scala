@@ -36,50 +36,29 @@ object VectorKernels {
   /** Below this length the vector loop is all tail; skip the dispatch. */
   private final val SimdMinLen = 16
 
-  def dot(a: Array[Float], b: Array[Float]): Double = {
-    val n = math.min(a.length, b.length)
-    if (simdEnabled && n >= SimdMinLen) return Simd.dot(a, b, n)
-    var acc = 0.0
-    var i = 0
-    while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-    acc
-  }
+  def dot(a: Array[Float], b: Array[Float]): Double =
+    dotOff(a, b, 0, math.min(a.length, b.length))
 
   /** Squared L2 distance (`apps/nvdb_ivf_eval.cpp:232-240`). */
-  def l2Sq(a: Array[Float], b: Array[Float]): Double = {
-    val n = math.min(a.length, b.length)
-    if (simdEnabled && n >= SimdMinLen) return Simd.l2Sq(a, b, n)
-    var acc = 0.0
-    var i = 0
-    while (i < n) { val d = a(i).toDouble - b(i).toDouble; acc += d * d; i += 1 }
-    acc
-  }
+  def l2Sq(a: Array[Float], b: Array[Float]): Double =
+    l2SqOff(a, b, 0, math.min(a.length, b.length))
 
   /** Sum of squares (double-accumulated) — norm2 is its sqrt; exposed
     * separately because the screened argmin needs the unsquared form
     * (‖x‖² enters d = ‖x‖² + ‖c‖² − 2x·c directly; squaring a rounded
     * sqrt would pay two extra roundings for nothing).
     */
-  def sumSq(a: Array[Float]): Double = {
-    if (simdEnabled && a.length >= SimdMinLen) return Simd.sumSq(a)
-    var acc = 0.0
-    var i = 0
-    while (i < a.length) { acc += a(i).toDouble * a(i).toDouble; i += 1 }
-    acc
-  }
+  def sumSq(a: Array[Float]): Double = sumSqOff(a, 0, a.length)
 
   def norm2(a: Array[Float]): Double = math.sqrt(sumSq(a))
 
-  def cosine(a: Array[Float], b: Array[Float]): Double = {
-    val na = norm2(a); val nb = norm2(b)
-    if (na == 0.0 || nb == 0.0) 0.0 else dot(a, b) / (na * nb)
-  }
+  def cosine(a: Array[Float], b: Array[Float]): Double = cosineOff(a, b, 0, b.length)
 
-  // ---- flat-offset twins (the HNSW packed vector store; see
-  // [[Simd.dotOff]]'s rationale) — each bitwise-identical to its array
-  // sibling over the same values, VectorKernelsSpec-gated ----
+  // ---- (array, offset) kernels: the stored row is read at `flat(off + i)`
+  // (offset 0 for a plain row array, the node offset in the HNSW packed
+  // vector store; see [[Simd]]'s heap-kernel family) ----
 
-  /** [[dot]] of `a` against `n` floats of `flat` starting at `off`. */
+  /** Dot of `a` against `n` floats of `flat` starting at `off`. */
   def dotOff(a: Array[Float], flat: Array[Float], off: Int, n: Int): Double = {
     if (simdEnabled && n >= SimdMinLen) return Simd.dotOff(a, flat, off, n)
     var acc = 0.0
@@ -88,7 +67,7 @@ object VectorKernels {
     acc
   }
 
-  /** [[l2Sq]] flat-offset twin. */
+  /** Squared L2 of `a` against `n` floats of `flat` starting at `off`. */
   def l2SqOff(a: Array[Float], flat: Array[Float], off: Int, n: Int): Double = {
     if (simdEnabled && n >= SimdMinLen) return Simd.l2SqOff(a, flat, off, n)
     var acc = 0.0
@@ -99,7 +78,7 @@ object VectorKernels {
     acc
   }
 
-  /** [[sumSq]] flat-offset twin. */
+  /** Sum of squares over `flat(off until off + n)`. */
   def sumSqOff(flat: Array[Float], off: Int, n: Int): Double = {
     if (simdEnabled && n >= SimdMinLen) return Simd.sumSqOff(flat, off, n)
     var acc = 0.0
@@ -108,10 +87,10 @@ object VectorKernels {
     acc
   }
 
-  /** [[cosine]] flat-offset twin: same dot/(sqrt·sqrt) formulation over
-    * the SAME per-side element counts as `cosine(a, flat-row)` — the row
-    * norm runs over its full `n` stored floats, the query norm over all
-    * of `a`, matching the array twin's `norm2(a) * norm2(b)` exactly.
+  /** Cosine of `a` against `n` floats of `flat` starting at `off`:
+    * dot/(sqrt·sqrt), the row norm over its full `n` stored floats, the
+    * query norm over all of `a`, the dot over `min(a.length, n)` —
+    * [[cosine]] is the offset-0 case over the whole row.
     */
   def cosineOff(a: Array[Float], flat: Array[Float], off: Int, n: Int): Double = {
     val na = norm2(a)

@@ -100,9 +100,10 @@ object Hnsw {
     // Array[Array[Float]] rows — a row dereference was a pointer chase to
     // a scattered heap object per distance eval, the dominant share of
     // the serve margin left after the facc study. All kernels read
-    // flat(offs(x) + i) through bitwise-twin -Off kernels, so graphs and
-    // results are identical to the row-array storage (SimdSpec gates the
-    // kernels, HnswSpec the behavior).
+    // flat(offs(x) + i) through the same (array, offset) kernels a
+    // row-array caller runs at offset 0, so graphs and results are
+    // identical to the row-array storage (SimdSpec gates the kernels,
+    // HnswSpec the behavior).
     private var flat = new Array[Float](cap * 16)
     private var flatLen = 0
     private var offs = new Array[Int](cap)
@@ -123,8 +124,16 @@ object Hnsw {
 
     /** Ranking distance (smaller = closer): L2 squared, or negated
       * dot/cosine — hnswlib's ip-space trick for similarity metrics.
+      *
+      * `facc = true` is the opt-in float-accumulation SERVING flavor
+      * ([[Simd.dotFOff]]/[[Simd.l2SqFOff]]): ~2× FMA lane width, ~n·ε_f32
+      * relative drift — can flip true near-ties, so it exists only on the
+      * QUERY path behind `floatAcc = true` (builds and every oracle path
+      * keep the double-lane contract; graphs stay bit-identical). Without
+      * SIMD, for cosine (no float-acc kernel) and on a mapped graph (no
+      * float-acc BB kernels) the flavor is a no-op, never an error.
       */
-    private def dist(q: Array[Float], x: Int): Double = {
+    private def dist(q: Array[Float], x: Int, facc: Boolean = false): Double = {
       evals += 1
       val nn = math.min(q.length, lens(x))
       val o = offs(x)
@@ -135,6 +144,9 @@ object Hnsw {
         case Metric.L2     => VectorKernels.l2SqOffBB(q, flatBB, o, nn)
         case Metric.Dot    => -VectorKernels.dotOffBB(q, flatBB, o, nn)
         case Metric.Cosine => -VectorKernels.cosineOffBB(q, flatBB, o, lens(x))
+      } else if (facc && VectorKernels.simdEnabled && metric != Metric.Cosine) {
+        if (metric == Metric.L2) Simd.l2SqFOff(q, flat, o, nn)
+        else -Simd.dotFOff(q, flat, o, nn)
       } else metric match {
         case Metric.L2     => VectorKernels.l2SqOff(q, flat, o, nn)
         case Metric.Dot    => -VectorKernels.dotOff(q, flat, o, nn)
@@ -145,30 +157,6 @@ object Hnsw {
       }
     }
 
-    /** [[dist]] under the opt-in float-accumulation SERVING flavor
-      * ([[Simd.dotF]]/[[Simd.l2SqF]]): ~2× FMA lane width, ~n·ε_f32
-      * relative drift — can flip true near-ties, so it exists only on the
-      * QUERY path behind `floatAcc = true` (builds and every oracle path
-      * keep [[dist]]'s double-lane contract; graphs stay bit-identical).
-      * Falls back to [[dist]] without SIMD or for cosine (no float-acc
-      * kernel; the flavor is then a no-op, never an error).
-      */
-    private def distF(q: Array[Float], x: Int): Double = {
-      // no float-acc BB kernels: a mapped graph serves facc requests on
-      // the contract path (flavor is a no-op there, never an error)
-      if (flatBB != null || !VectorKernels.simdEnabled) return dist(q, x)
-      val nn = math.min(q.length, lens(x))
-      evals += 1
-      metric match {
-        case Metric.L2     => Simd.l2SqFOff(q, flat, offs(x), nn)
-        case Metric.Dot    => -Simd.dotFOff(q, flat, offs(x), nn)
-        case Metric.Cosine => { evals -= 1; dist(q, x) }
-      }
-    }
-
-    private def distX(q: Array[Float], x: Int, facc: Boolean): Double =
-      if (facc) distF(q, x) else dist(q, x)
-
     /** Whether the 4-wide gather tile applies: uniform-dim rows (engine
       * contract; tracked defensively across inserts), SIMD linked, and a
       * tiled kernel for the metric (L2/Dot; cosine stays per-pair).
@@ -178,54 +166,34 @@ object Hnsw {
     private def tiledGraph: Boolean =
       uniform && VectorKernels.simdEnabled && dimU >= 16 &&
         (metric == Metric.L2 || metric == Metric.Dot)
-    private def tiled(q: Array[Float]): Boolean = tiledGraph
 
     /** Four [[dist]] values against gathered rows — bitwise per-pair equal
-      * to [[dist]] ([[Simd.l2Sq4At]]/[[Simd.dot4At]] lane contracts), so
+      * to [[dist]] ([[Simd.l2Sq4]]/[[Simd.dot4]] lane contracts), so
       * tiling the beam expansion changes kernel-call batching only, never
-      * a value or the traversal order.
+      * a value or the traversal order. `facc` selects the float-acc tiles
+      * ([[Simd.l2Sq4F]]/[[Simd.dot4F]]) as in [[dist]]; only reachable
+      * when the tile gate already holds (SIMD, L2/Dot), and a no-op on a
+      * mapped graph.
       */
     private def dist4(q: Array[Float], i0: Int, i1: Int, i2: Int, i3: Int,
-                      out: Array[Double]): Unit = {
+                      out: Array[Double], facc: Boolean = false): Unit = {
       evals += 4
       val tn = math.min(q.length, dimU)
-      if (flatBB != null) metric match {
-        case Metric.L2 =>
-          Simd.l2Sq4AtOffBB(q, flatBB, offs(i0), offs(i1), offs(i2), offs(i3), tn, out)
-        case _ =>
-          Simd.dot4AtOffBB(q, flatBB, offs(i0), offs(i1), offs(i2), offs(i3), tn, out)
-          out(0) = -out(0); out(1) = -out(1); out(2) = -out(2); out(3) = -out(3)
-      } else metric match {
-        case Metric.L2 =>
-          Simd.l2Sq4AtOff(q, flat, offs(i0), offs(i1), offs(i2), offs(i3), tn, out)
-        case _ =>
-          Simd.dot4AtOff(q, flat, offs(i0), offs(i1), offs(i2), offs(i3), tn, out)
-          out(0) = -out(0); out(1) = -out(1); out(2) = -out(2); out(3) = -out(3)
+      val o0 = offs(i0); val o1 = offs(i1); val o2 = offs(i2); val o3 = offs(i3)
+      val l2 = metric == Metric.L2
+      if (flatBB != null) {
+        if (l2) Simd.l2Sq4BB(q, flatBB, o0, o1, o2, o3, tn, out)
+        else Simd.dot4BB(q, flatBB, o0, o1, o2, o3, tn, out)
+      } else if (facc) {
+        if (l2) Simd.l2Sq4F(q, flat, o0, flat, o1, flat, o2, flat, o3, tn, out, 0)
+        else Simd.dot4F(q, flat, o0, flat, o1, flat, o2, flat, o3, tn, out, 0)
+      } else {
+        if (l2) Simd.l2Sq4(q, flat, o0, flat, o1, flat, o2, flat, o3, tn, out, 0)
+        else Simd.dot4(q, flat, o0, flat, o1, flat, o2, flat, o3, tn, out, 0)
       }
+      if (!l2) { out(0) = -out(0); out(1) = -out(1); out(2) = -out(2); out(3) = -out(3) }
     }
 
-    /** [[dist4]]'s float-accumulation serving twin (see [[distF]]). Only
-      * reachable when the tile gate already holds (SIMD, L2/Dot), so no
-      * fallback arm is needed.
-      */
-    private def dist4F(q: Array[Float], i0: Int, i1: Int, i2: Int, i3: Int,
-                       out: Array[Double]): Unit = {
-      if (flatBB != null) { dist4(q, i0, i1, i2, i3, out); return }
-      evals += 4
-      val tn = math.min(q.length, dimU)
-      metric match {
-        case Metric.L2 =>
-          Simd.l2Sq4AtFOff(q, flat, offs(i0), offs(i1), offs(i2), offs(i3), tn, out)
-        case _ =>
-          Simd.dot4AtFOff(q, flat, offs(i0), offs(i1), offs(i2), offs(i3), tn, out)
-          out(0) = -out(0); out(1) = -out(1); out(2) = -out(2); out(3) = -out(3)
-      }
-    }
-
-    private def dist4X(q: Array[Float], i0: Int, i1: Int, i2: Int, i3: Int,
-                       out: Array[Double], facc: Boolean): Unit =
-      if (facc) dist4F(q, i0, i1, i2, i3, out)
-      else dist4(q, i0, i1, i2, i3, out)
     /** Distance → the metric's score column value. */
     private def score(d: Double): Double = metric match {
       case Metric.L2 => d
@@ -1013,14 +981,14 @@ object Hnsw {
     private def greedy(q: Array[Float], ep: Int, layer: Int,
                        facc: Boolean = false): Int = {
       var cur = ep
-      var curD = distX(q, cur, facc)
+      var curD = dist(q, cur, facc)
       var improved = true
       while (improved) {
         improved = false
         val nbrs = links(cur)(layer)
         var i = 0
         while (i < nbrs.length) {
-          val d = distX(q, nbrs(i), facc)
+          val d = dist(q, nbrs(i), facc)
           if (d < curD) { curD = d; cur = nbrs(i); improved = true }
           i += 1
         }
@@ -1177,13 +1145,13 @@ object Hnsw {
                             layer: Int, s: Scratch,
                             facc: Boolean = false): Int = {
       s.reset(n)
-      val useTile = tiled(q)
+      val useTile = tiledGraph
       // post-freeze layer-0 expansion reads the flat CSR — same neighbor
       // values in the same order as the ragged path, so admissions and
       // traversal are bit-identical; only the load chain is shorter
       val csr = layer == 0 && l0adj != null
       val adj = l0adj; val off = l0off
-      val d0 = distX(q, ep, facc)
+      val d0 = dist(q, ep, facc)
       s.cPush(d0, ep); s.rPush(d0, ep); s.visit(ep)
       var stop = false
       while (!stop && s.cn > 0) {
@@ -1254,7 +1222,7 @@ object Hnsw {
               val e1 = s.gat(b + 1)
               val e2 = if (b + 2 < gn) s.gat(b + 2) else e1
               val e3 = if (b + 3 < gn) s.gat(b + 3) else e1
-              dist4X(q, s.gat(b), e1, e2, e3, s.tout, facc)
+              dist4(q, s.gat(b), e1, e2, e3, s.tout, facc)
               // padded lanes recompute a real row — bitwise-identical per
               // lane, discarded below; keep the eval counter honest
               val real = math.min(4, gn - b)
@@ -1264,7 +1232,7 @@ object Hnsw {
               if (b + 3 < gn) admit(s.tout(3), e3)
               b += 4
             }
-            while (b < gn) { admit(distX(q, s.gat(b), facc), s.gat(b)); b += 1 }
+            while (b < gn) { admit(dist(q, s.gat(b), facc), s.gat(b)); b += 1 }
             // cross-expansion prefetch: after this expansion's admissions,
             // cd(0) IS the next pop (cPop takes the heap min), so its
             // adjacency line and first neighbor-row heads are known now —
@@ -1299,7 +1267,7 @@ object Hnsw {
                 s.ti(tn) = e
                 tn += 1
                 if (tn == 4) {
-                  dist4X(q, s.ti(0), s.ti(1), s.ti(2), s.ti(3), s.tout, facc)
+                  dist4(q, s.ti(0), s.ti(1), s.ti(2), s.ti(3), s.tout, facc)
                   admit(s.tout(0), s.ti(0)); admit(s.tout(1), s.ti(1))
                   admit(s.tout(2), s.ti(2)); admit(s.tout(3), s.ti(3))
                   tn = 0
@@ -1308,13 +1276,13 @@ object Hnsw {
               i += 1
             }
             var j = 0
-            while (j < tn) { admit(distX(q, s.ti(j), facc), s.ti(j)); j += 1 }
+            while (j < tn) { admit(dist(q, s.ti(j), facc), s.ti(j)); j += 1 }
           } else {
             while (i < nbN) {
               val e = if (csr) adj(nb0 + i) else nbrs(i)
               if (!s.visited(e)) {
                 s.visit(e)
-                val d = distX(q, e, facc)
+                val d = dist(q, e, facc)
                 if (s.rn < ef || d < s.rd(0)) {
                   s.cPush(d, e)
                   s.rPush(d, e)

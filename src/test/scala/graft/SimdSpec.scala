@@ -49,7 +49,7 @@ class SimdSpec extends AnyFunSuite {
     forAllPairs { (a, b) =>
       val n = math.min(a.length, b.length)
       val s = scalarDot(a, b)
-      val v = Simd.dot(a, b, n)
+      val v = Simd.dotOff(a, b, 0, n)
       assert(math.abs(v - s) <= 1e-12 * math.max(1.0, math.abs(s)),
         s"n=$n simd=$v scalar=$s")
     }
@@ -58,10 +58,10 @@ class SimdSpec extends AnyFunSuite {
   test("l2Sq/sumSq: SIMD agrees with the scalar definition") {
     forAllPairs { (a, b) =>
       val n = a.length
-      assert(math.abs(Simd.l2Sq(a, b, n) - scalarL2(a, b)) <=
+      assert(math.abs(Simd.l2SqOff(a, b, 0, n) - scalarL2(a, b)) <=
         1e-12 * math.max(1.0, scalarL2(a, b)))
       val ss = scalarDot(a, a)
-      assert(math.abs(Simd.sumSq(a) - ss) <= 1e-12 * math.max(1.0, ss))
+      assert(math.abs(Simd.sumSqOff(a, 0, n) - ss) <= 1e-12 * math.max(1.0, ss))
     }
   }
 
@@ -69,12 +69,12 @@ class SimdSpec extends AnyFunSuite {
     val a = randVec().take(383) // odd length: exercises the tail
     val b = randVec().take(383)
     val n = math.min(a.length, b.length)
-    val d1 = Simd.dot(a, b, n)
-    val l1 = Simd.l2Sq(a, b, n)
+    val d1 = Simd.dotOff(a, b, 0, n)
+    val l1 = Simd.l2SqOff(a, b, 0, n)
     (1 to 5).foreach { _ =>
-      assert(java.lang.Double.doubleToRawLongBits(Simd.dot(a, b, n)) ==
+      assert(java.lang.Double.doubleToRawLongBits(Simd.dotOff(a, b, 0, n)) ==
         java.lang.Double.doubleToRawLongBits(d1))
-      assert(java.lang.Double.doubleToRawLongBits(Simd.l2Sq(a, b, n)) ==
+      assert(java.lang.Double.doubleToRawLongBits(Simd.l2SqOff(a, b, 0, n)) ==
         java.lang.Double.doubleToRawLongBits(l1))
     }
   }
@@ -84,7 +84,7 @@ class SimdSpec extends AnyFunSuite {
     val q = Array.fill(dim)(rng.nextFloat() * 2 - 1)
     val base = Array.fill(500)(Array.fill(dim)(rng.nextFloat() * 2 - 1))
     val bySimd = base.zipWithIndex
-      .map { case (v, i) => (i, Simd.dot(q, v, dim)) }.sortBy(-_._2).map(_._1)
+      .map { case (v, i) => (i, Simd.dotOff(q, v, 0, dim)) }.sortBy(-_._2).map(_._1)
     val byScalar = base.zipWithIndex
       .map { case (v, i) => (i, scalarDot(q, v)) }.sortBy(-_._2).map(_._1)
     assert(bySimd.toSeq == byScalar.toSeq)
@@ -96,10 +96,10 @@ class SimdSpec extends AnyFunSuite {
       val a = Array.fill(n)(rng.nextFloat() * 2 - 1)
       val qs = Array.fill(6)(Array.fill(n)(rng.nextFloat() * 2 - 1))
       val out = new Array[Double](4)
-      Simd.dot4(a, qs, 1, n, out, 0) // offset 1: exercises qoff
+      Simd.dot4(a, qs(1), 0, qs(2), 0, qs(3), 0, qs(4), 0, n, out, 0)
       (0 until 4).foreach { j =>
         assert(java.lang.Double.doubleToRawLongBits(out(j)) ==
-          java.lang.Double.doubleToRawLongBits(Simd.dot(a, qs(1 + j), n)),
+          java.lang.Double.doubleToRawLongBits(Simd.dotOff(a, qs(1 + j), 0, n)),
           s"pair $j diverged at n=$n")
       }
     }
@@ -111,70 +111,77 @@ class SimdSpec extends AnyFunSuite {
       val a = Array.fill(n)(rng.nextFloat() * 2 - 1)
       val qs = Array.fill(5)(Array.fill(n)(rng.nextFloat() * 2 - 1))
       val out = new Array[Double](4)
-      Simd.l2Sq4(a, qs, 1, n, out, 0)
+      Simd.l2Sq4(a, qs(1), 0, qs(2), 0, qs(3), 0, qs(4), 0, n, out, 0)
       (0 until 4).foreach { j =>
         assert(java.lang.Double.doubleToRawLongBits(out(j)) ==
-          java.lang.Double.doubleToRawLongBits(Simd.l2Sq(a, qs(1 + j), n)),
+          java.lang.Double.doubleToRawLongBits(Simd.l2SqOff(a, qs(1 + j), 0, n)),
           s"pair $j diverged at n=$n")
       }
     }
   }
 
-  test("flat-offset kernels are bitwise twins of their array siblings") {
-    // the HNSW packed store reads rows at flat(off + i); every -Off kernel
-    // must produce the EXACT bits of its array sibling or graphs built
-    // over the two storages would diverge
-    val rng2 = new scala.util.Random(11)
-    (1 to 50).foreach { _ =>
-      val n = 16 + rng2.nextInt(685)
-      val a = Array.fill(n)(rng2.nextFloat() * 2 - 1)
-      val rows = Array.fill(5)(Array.fill(n)(rng2.nextFloat() * 2 - 1))
-      // pack rows at random non-zero offsets into one flat buffer
-      val pad = rng2.nextInt(7)
-      val flat = new Array[Float](pad + 5 * n)
-      val offs = Array.tabulate(5)(j => pad + j * n)
-      rows.zipWithIndex.foreach { case (r, j) =>
-        System.arraycopy(r, 0, flat, offs(j), n)
-      }
+  /** The n·eps_f32 band the float-acc kernels' scaladoc promises, as a
+    * multiple of the value's scale (a kernel bug would blow far past it).
+    */
+  private def faccBudget(n: Int): Double = n * 1.2e-7 * (1.0 + n.toDouble / 64)
+
+  private type Tile = (Array[Float], Array[Array[Float]], Array[Int], Int,
+    Array[Double], Int) => Unit
+
+  // Every 4-row tile against its single-row kernel in the general call
+  // shape: four rows in four separate arrays, each at its own non-zero
+  // offset, the outputs written at ooff > 0. The double-lane tiles must
+  // match bitwise (graph builds, argmins and scans all ride on it); the
+  // float-acc tiles must stay inside the float-acc budget.
+  private val tiles: Seq[(String, Tile, String, (Array[Float], Array[Float], Int, Int) => Double,
+      Boolean)] = Seq(
+    ("dot4", (a, rs, os, n, out, oo) =>
+      Simd.dot4(a, rs(0), os(0), rs(1), os(1), rs(2), os(2), rs(3), os(3), n, out, oo),
+      "dotOff", Simd.dotOff, true),
+    ("l2Sq4", (a, rs, os, n, out, oo) =>
+      Simd.l2Sq4(a, rs(0), os(0), rs(1), os(1), rs(2), os(2), rs(3), os(3), n, out, oo),
+      "l2SqOff", Simd.l2SqOff, true),
+    ("dot4F", (a, rs, os, n, out, oo) =>
+      Simd.dot4F(a, rs(0), os(0), rs(1), os(1), rs(2), os(2), rs(3), os(3), n, out, oo),
+      "dotOff", Simd.dotOff, false),
+    ("l2Sq4F", (a, rs, os, n, out, oo) =>
+      Simd.l2Sq4F(a, rs(0), os(0), rs(1), os(1), rs(2), os(2), rs(3), os(3), n, out, oo),
+      "l2SqOff", Simd.l2SqOff, false))
+
+  tiles.foreach { case (name, tile, singleName, single, exact) =>
+    val claim = if (exact) s"== $singleName bitwise" else "within facc budget"
+    test(s"$name: four (array, offset) rows, out at ooff > 0, each lane $claim") {
+      val r = new scala.util.Random(11)
       def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
-      (0 until 5).foreach { j =>
-        assert(bits(Simd.dotOff(a, flat, offs(j), n)) ==
-          bits(Simd.dot(a, rows(j), n)), s"dotOff diverged n=$n")
-        assert(bits(Simd.l2SqOff(a, flat, offs(j), n)) ==
-          bits(Simd.l2Sq(a, rows(j), n)), s"l2SqOff diverged n=$n")
-        assert(bits(Simd.sumSqOff(flat, offs(j), n)) ==
-          bits(Simd.sumSq(rows(j))), s"sumSqOff diverged n=$n")
-        assert(bits(Simd.dotFOff(a, flat, offs(j), n)) ==
-          bits(Simd.dotF(a, rows(j), n)), s"dotFOff diverged n=$n")
-        assert(bits(Simd.l2SqFOff(a, flat, offs(j), n)) ==
-          bits(Simd.l2SqF(a, rows(j), n)), s"l2SqFOff diverged n=$n")
+      // lane-width multiples, odd tails and random lengths in 16..700
+      val ns = Seq(16, 17, 23, 64, 100, 383, 384, 385, 700) ++
+        Seq.fill(40)(16 + r.nextInt(685))
+      ns.foreach { n =>
+        val a = Array.fill(n)(r.nextFloat() * 2 - 1)
+        val offs = Array.tabulate(4)(j => 1 + 3 * j + r.nextInt(3)) // distinct, > 0
+        val rows = Array.tabulate(4)(j =>
+          Array.fill(offs(j) + n + r.nextInt(5))(r.nextFloat() * 2 - 1))
+        val ooff = 1 + r.nextInt(3)
+        val out = Array.fill(ooff + 6)(Double.NaN)
+        tile(a, rows, offs, n, out, ooff)
+        (0 until 4).foreach { j =>
+          val want = single(a, rows(j), offs(j), n)
+          val got = out(ooff + j)
+          if (exact) assert(bits(got) == bits(want), s"lane $j diverged at n=$n")
+          else {
+            // the float-acc budget test's scales: Σ|a| bounds a dot's
+            // magnitude sum, a squared L2 is its own
+            val scale = if (name.startsWith("dot")) a.map(x => math.abs(x.toDouble)).sum else want
+            assert(math.abs(got - want) <= faccBudget(n) * math.max(1.0, scale),
+              s"lane $j outside the float-acc budget at n=$n")
+          }
+        }
+        // nothing written outside out(ooff until ooff + 4)
+        out.indices.filterNot(i => i >= ooff && i < ooff + 4).foreach { i =>
+          assert(out(i).isNaN, s"$name wrote out($i) at ooff=$ooff")
+        }
       }
-      val outA = new Array[Double](4); val outF = new Array[Double](4)
-      Simd.dot4At(a, rows, 1, 2, 3, 4, n, outA)
-      Simd.dot4AtOff(a, flat, offs(1), offs(2), offs(3), offs(4), n, outF)
-      (0 until 4).foreach(j => assert(bits(outA(j)) == bits(outF(j)), "dot4AtOff"))
-      Simd.l2Sq4At(a, rows, 1, 2, 3, 4, n, outA)
-      Simd.l2Sq4AtOff(a, flat, offs(1), offs(2), offs(3), offs(4), n, outF)
-      (0 until 4).foreach(j => assert(bits(outA(j)) == bits(outF(j)), "l2Sq4AtOff"))
-      Simd.dot4AtF(a, rows, 1, 2, 3, 4, n, outA)
-      Simd.dot4AtFOff(a, flat, offs(1), offs(2), offs(3), offs(4), n, outF)
-      (0 until 4).foreach(j => assert(bits(outA(j)) == bits(outF(j)), "dot4AtFOff"))
-      Simd.l2Sq4AtF(a, rows, 1, 2, 3, 4, n, outA)
-      Simd.l2Sq4AtFOff(a, flat, offs(1), offs(2), offs(3), offs(4), n, outF)
-      (0 until 4).foreach(j => assert(bits(outA(j)) == bits(outF(j)), "l2Sq4AtFOff"))
     }
-    // scalar (simd-off) twins through the VectorKernels dispatchers too
-    val a = Array.fill(13)(rng2.nextFloat()) // below SimdMinLen: scalar path
-    val row = Array.fill(13)(rng2.nextFloat())
-    val flat = new Array[Float](20)
-    System.arraycopy(row, 0, flat, 5, 13)
-    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
-    assert(bits(VectorKernels.dotOff(a, flat, 5, 13)) ==
-      bits(VectorKernels.dot(a, row)))
-    assert(bits(VectorKernels.l2SqOff(a, flat, 5, 13)) ==
-      bits(VectorKernels.l2Sq(a, row)))
-    assert(bits(VectorKernels.cosineOff(a, flat, 5, 13)) ==
-      bits(VectorKernels.cosine(a, row)))
   }
 
   test("ByteBuffer kernels are bitwise twins of the -Off family") {
@@ -203,12 +210,12 @@ class SimdSpec extends AnyFunSuite {
           bits(Simd.sumSqOff(flat, offs(j), n)), s"sumSqOffBB diverged n=$n")
       }
       val outA = new Array[Double](4); val outB = new Array[Double](4)
-      Simd.dot4AtOff(a, flat, offs(1), offs(2), offs(3), offs(4), n, outA)
-      Simd.dot4AtOffBB(a, bb, offs(1), offs(2), offs(3), offs(4), n, outB)
-      (0 until 4).foreach(j => assert(bits(outA(j)) == bits(outB(j)), "dot4AtOffBB"))
-      Simd.l2Sq4AtOff(a, flat, offs(1), offs(2), offs(3), offs(4), n, outA)
-      Simd.l2Sq4AtOffBB(a, bb, offs(1), offs(2), offs(3), offs(4), n, outB)
-      (0 until 4).foreach(j => assert(bits(outA(j)) == bits(outB(j)), "l2Sq4AtOffBB"))
+      Simd.dot4(a, flat, offs(1), flat, offs(2), flat, offs(3), flat, offs(4), n, outA, 0)
+      Simd.dot4BB(a, bb, offs(1), offs(2), offs(3), offs(4), n, outB)
+      (0 until 4).foreach(j => assert(bits(outA(j)) == bits(outB(j)), "dot4BB"))
+      Simd.l2Sq4(a, flat, offs(1), flat, offs(2), flat, offs(3), flat, offs(4), n, outA, 0)
+      Simd.l2Sq4BB(a, bb, offs(1), offs(2), offs(3), offs(4), n, outB)
+      (0 until 4).foreach(j => assert(bits(outA(j)) == bits(outB(j)), "l2Sq4BB"))
       // i8 sidecar twins (v2 mapped store): byte offsets, float acc
       val codes = Array.fill(pad + 5 * n)((rng2.nextInt(255) - 127).toByte)
       val cbb = java.nio.ByteBuffer.allocateDirect(codes.length)
@@ -225,11 +232,19 @@ class SimdSpec extends AnyFunSuite {
       (0 until 4).foreach(j =>
         assert(fbits(out8A(j)) == fbits(out8B(j)), "dotI8F4AtBB"))
     }
-    // scalar dispatch twins (below SimdMinLen) including cosine
+    // scalar dispatch twins (below SimdMinLen) including cosine: the
+    // heap kernels at a non-zero offset equal the offset-0 row form, and
+    // the BB kernels equal the heap kernels
     val a = Array.fill(13)(rng2.nextFloat())
     val row = Array.fill(13)(rng2.nextFloat())
     val flat = new Array[Float](20)
     System.arraycopy(row, 0, flat, 5, 13)
+    assert(bits(VectorKernels.dotOff(a, flat, 5, 13)) ==
+      bits(VectorKernels.dot(a, row)))
+    assert(bits(VectorKernels.l2SqOff(a, flat, 5, 13)) ==
+      bits(VectorKernels.l2Sq(a, row)))
+    assert(bits(VectorKernels.cosineOff(a, flat, 5, 13)) ==
+      bits(VectorKernels.cosine(a, row)))
     val bb = java.nio.ByteBuffer.allocateDirect(80)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     bb.asFloatBuffer().put(flat)
@@ -251,35 +266,35 @@ class SimdSpec extends AnyFunSuite {
 
   test("float-acc serving kernels track the double-lane contract within " +
        "the documented n·eps_f32 budget") {
-    // dotF/l2SqF/dot4AtF/l2Sq4AtF are the OPT-IN serve flavors — never
+    // dotFOff/l2SqFOff/dot4F/l2Sq4F are the OPT-IN serve flavors — never
     // bitwise-comparable, but they must stay inside the ~n·2^-24 relative
     // band the scaladoc promises (a kernel bug would blow far past it)
     forAllPairs { (a, b) =>
       val n = math.min(a.length, b.length)
-      val budget = n * 1.2e-7 * (1.0 + n.toDouble / 64)
-      val sD = Simd.dot(a, b, n)
-      assert(math.abs(Simd.dotF(a, b, n) - sD) <=
+      val budget = faccBudget(n)
+      val sD = Simd.dotOff(a, b, 0, n)
+      assert(math.abs(Simd.dotFOff(a, b, 0, n) - sD) <=
         budget * math.max(1.0, a.map(x => math.abs(x.toDouble)).sum),
-        s"dotF outside the float-acc budget at n=$n")
-      val sL = Simd.l2Sq(a, b, n)
-      assert(math.abs(Simd.l2SqF(a, b, n) - sL) <=
-        budget * math.max(1.0, sL), s"l2SqF outside the budget at n=$n")
+        s"dotFOff outside the float-acc budget at n=$n")
+      val sL = Simd.l2SqOff(a, b, 0, n)
+      assert(math.abs(Simd.l2SqFOff(a, b, 0, n) - sL) <=
+        budget * math.max(1.0, sL), s"l2SqFOff outside the budget at n=$n")
     }
     (1 to 20).foreach { _ =>
       val n = 16 + rng.nextInt(685)
       val a = Array.fill(n)(rng.nextFloat() * 2 - 1)
       val rows = Array.fill(6)(Array.fill(n)(rng.nextFloat() * 2 - 1))
       val outF = new Array[Double](4)
-      val budget = n * 1.2e-7 * (1.0 + n.toDouble / 64)
-      Simd.dot4AtF(a, rows, 1, 2, 3, 4, n, outF)
+      val budget = faccBudget(n)
+      Simd.dot4F(a, rows(1), 0, rows(2), 0, rows(3), 0, rows(4), 0, n, outF, 0)
       (0 until 4).foreach { j =>
-        val d = Simd.dot(a, rows(1 + j), n)
+        val d = Simd.dotOff(a, rows(1 + j), 0, n)
         assert(math.abs(outF(j) - d) <=
           budget * math.max(1.0, a.map(x => math.abs(x.toDouble)).sum))
       }
-      Simd.l2Sq4AtF(a, rows, 1, 2, 3, 4, n, outF)
+      Simd.l2Sq4F(a, rows(1), 0, rows(2), 0, rows(3), 0, rows(4), 0, n, outF, 0)
       (0 until 4).foreach { j =>
-        val d = Simd.l2Sq(a, rows(1 + j), n)
+        val d = Simd.l2SqOff(a, rows(1 + j), 0, n)
         assert(math.abs(outF(j) - d) <= budget * math.max(1.0, d))
       }
     }

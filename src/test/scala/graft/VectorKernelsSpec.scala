@@ -174,7 +174,9 @@ class VectorKernelsSpec extends AnyFunSuite {
         val cs = Array.fill(9)(Array.fill(dim)((r.nextFloat() - 0.5f) * 100f))
         val idx = Array.fill(4)(r.nextInt(9))
         val out = new Array[Double](4)
-        Simd.l2Sq4At(x, cs, idx(0), idx(1), idx(2), idx(3), dim, out)
+        // the gather form of the merged tile: four rows of one matrix
+        Simd.l2Sq4(x, cs(idx(0)), 0, cs(idx(1)), 0, cs(idx(2)), 0, cs(idx(3)), 0,
+          dim, out, 0)
         idx.indices.foreach { j =>
           val exp = VectorKernels.l2Sq(x, cs(idx(j)))
           assert(java.lang.Double.doubleToRawLongBits(out(j)) ==
@@ -256,7 +258,8 @@ class VectorKernelsSpec extends AnyFunSuite {
         val cs = Array.fill(9)(Array.fill(dim)((r.nextFloat() - 0.5f) * 100f))
         val idx = Array.fill(4)(r.nextInt(9))
         val out = new Array[Double](4)
-        Simd.dot4At(x, cs, idx(0), idx(1), idx(2), idx(3), dim, out)
+        Simd.dot4(x, cs(idx(0)), 0, cs(idx(1)), 0, cs(idx(2)), 0, cs(idx(3)), 0,
+          dim, out, 0)
         idx.indices.foreach { j =>
           val exp = VectorKernels.dot(x, cs(idx(j)))
           assert(java.lang.Double.doubleToRawLongBits(out(j)) ==
@@ -291,6 +294,28 @@ class VectorKernelsSpec extends AnyFunSuite {
         assert(got.sameElements(want),
           s"screened top-nprobe diverged (k=$k dim=$dim np=$np trial=$t): " +
             s"got=${got.take(6).mkString(",")} want=${want.take(6).mkString(",")}")
+      }
+    }
+  }
+
+  test("top-nprobe on a non-finite query: np distinct ids, first == argminL2F") {
+    // a NaN or ±Inf component makes every distance NaN/Inf; the selection
+    // must still return np distinct ids (the (Double.compare, index) order
+    // ranks them by index) and agree with the argmin's choice — both the
+    // direct path (k = 8) and the screened dispatch (k = 256, whose
+    // non-finite screen falls back to the direct path)
+    import graft.functions.expressions.CentroidOps
+    val r = new scala.util.Random(4242)
+    val dim = 32
+    for (k <- Seq(8, 256); bad <- Seq(Float.NaN, Float.PositiveInfinity)) {
+      val cents = Array.fill(k)(Array.fill(dim)((r.nextFloat() - 0.5f) * 2f))
+      val x = Array.fill(dim)((r.nextFloat() - 0.5f) * 2f)
+      x(r.nextInt(dim)) = bad
+      for (np <- Seq(1, 3, 8)) {
+        val got = CentroidOps.topNprobeF(x, cents, np)
+        assert(got.length == math.min(np, k) && got.distinct.length == got.length,
+          s"k=$k query=$bad np=$np: ${got.mkString(",")}")
+        assert(got(0) == CentroidOps.argminL2F(x, cents), s"k=$k query=$bad np=$np")
       }
     }
   }
