@@ -355,6 +355,8 @@ object AnnSql {
     * measured per-graph ef crossover when [[graft.ops.Hnsw.calibrateWarmed]]
     * has timed both walks on the graph's own rows (r16), else by the
     * payload-size byte heuristic ([[graft.ops.Hnsw]]'s `autoI8Bytes`).
+    * The three strings name [[graft.ops.Hnsw.Flavor]]'s `Contract`, `I8`
+    * and `Auto`.
     * The non-contract flavors serve the WARMED graph
     * cache only (a disk-restored store group, or a prior built run
     * under the registered cacheKey) — a cold cache fails loudly at
@@ -369,9 +371,11 @@ object AnnSql {
     val name = strArg(es.head, fn, "index_name")
     val k = intArg(es(2), fn, "k")
     val efSearch = if (es.length >= 4) intArg(es(3), fn, "ef_search") else 64
-    val flavor = if (es.length >= 5) strArg(es(4), fn, "flavor") else "contract"
-    require(Set("contract", "i8", "auto")(flavor),
-      s"$fn: flavor must be 'contract', 'i8' or 'auto', got '$flavor'")
+    val flavorName = if (es.length >= 5) strArg(es(4), fn, "flavor") else "contract"
+    val flavor = Map("contract" -> Hnsw.Flavor.Contract,
+      "i8" -> Hnsw.Flavor.I8, "auto" -> Hnsw.Flavor.Auto).getOrElse(flavorName,
+      throw new IllegalArgumentException(
+        s"$fn: flavor must be 'contract', 'i8' or 'auto', got '$flavorName'"))
     val e = hnswIndexes.get(key(spark, name))
     if (e == null) {
       throw new IllegalArgumentException(
@@ -380,13 +384,13 @@ object AnnSql {
           "AnnSql.registerHnsw(spark, name, base, centroids, ...) first")
     }
     val qs = queriesArg(spark, es(1), fn)
-    if (flavor == "contract")
+    if (flavor == Hnsw.Flavor.Contract)
       Hnsw.searchRouted(e.base, qs, e.centroids, e.routeProbe, k, e.metric,
         e.m, e.efConstruction, efSearch, e.seed, e.cacheKey)
         .queryExecution.logical
     else {
       require(e.cacheKey.nonEmpty && Hnsw.warmed(e.cacheKey),
-        s"$fn: flavor '$flavor' serves the warmed graph cache — register " +
+        s"$fn: flavor '$flavorName' serves the warmed graph cache — register " +
           "with a cacheKey and warm it first (Hnsw.warmFromDisk over a " +
           "saved store, or one built run; then Hnsw.quantizeWarmed for " +
           "'i8' unless the store is v2)")
@@ -412,8 +416,7 @@ object AnnSql {
           "would silently drop probed shards)")
       Hnsw.searchWarm(qs, e.cacheKey, e.centroids.length, k, e.metric,
         e.m, e.efConstruction, efSearch, e.seed, e.centroids, e.routeProbe,
-        allowMissing = true, quantized = flavor == "i8",
-        autoFlavor = flavor == "auto")
+        allowMissing = true, flavor = flavor)
         .queryExecution.logical
     }
   }

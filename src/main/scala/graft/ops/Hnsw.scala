@@ -66,6 +66,25 @@ object Hnsw {
     if (v == null) 3000000L else v.longValue()
   }
 
+  /** Serve flavor: the distance source of a query walk. Every flavor runs
+    * the same descent, beam and emit; builds always run `Contract`.
+    *  - `Contract`: the double-lane kernels every oracle path uses.
+    *  - `FloatAcc`: the float-accumulation kernels — ~2× FMA lane width,
+    *    ~n·ε_f32 drift that can flip true near-ties, so recall-gated. A
+    *    no-op (contract) on a mapped graph, for cosine, or without SIMD.
+    *  - `I8`: the quantized sidecar ([[ShardGraph.quantizeStore]]), then an
+    *    exact contract re-rank of the live survivors; returned scores are
+    *    exact, recall is gated. Fails loudly without the sidecar.
+    *  - `Auto`: `I8` where [[ShardGraph.autoI8]] picks it, else `Contract`.
+    */
+  sealed trait Flavor
+  object Flavor {
+    case object Contract extends Flavor
+    case object FloatAcc extends Flavor
+    case object I8 extends Flavor
+    case object Auto extends Flavor
+  }
+
   /** splitmix64 finalizer — the repo-standard seeded hash (same shape as
     * `SyntheticVectors.uLocal`).
     */
@@ -125,26 +144,31 @@ object Hnsw {
     /** Ranking distance (smaller = closer): L2 squared, or negated
       * dot/cosine — hnswlib's ip-space trick for similarity metrics.
       *
-      * `facc = true` is the opt-in float-accumulation SERVING flavor
-      * ([[Simd.dotFOff]]/[[Simd.l2SqFOff]]): ~2× FMA lane width, ~n·ε_f32
-      * relative drift — can flip true near-ties, so it exists only on the
-      * QUERY path behind `floatAcc = true` (builds and every oracle path
-      * keep the double-lane contract; graphs stay bit-identical). Without
-      * SIMD, for cosine (no float-acc kernel) and on a mapped graph (no
-      * float-acc BB kernels) the flavor is a no-op, never an error.
+      * `fl` picks the serve flavor's kernels ([[Flavor]]; builds and every
+      * oracle path keep `Contract`, so graphs stay bit-identical).
+      * `FloatAcc` runs [[Simd.dotFOff]]/[[Simd.l2SqFOff]]; without SIMD,
+      * for cosine (no float-acc kernel) and on a mapped graph (no
+      * float-acc BB kernels) it is a no-op, never an error. `I8` scores
+      * the sidecar codes through [[d8Of]], with `qn2` = |q|² hoisted per
+      * search.
       */
-    private def dist(q: Array[Float], x: Int, facc: Boolean = false): Double = {
+    private def dist(q: Array[Float], x: Int, fl: Flavor = Flavor.Contract,
+                     qn2: Double = 0.0): Double = {
       evals += 1
       val nn = math.min(q.length, lens(x))
       val o = offs(x)
-      if (flatBB != null) metric match {
+      if (fl eq Flavor.I8) d8Of(
+        if (i8codesBB != null) VectorKernels.dotI8FOffBB(q, i8codesBB, o, nn)
+        else VectorKernels.dotI8FOff(q, i8codes, o, nn), x, qn2)
+      else if (flatBB != null) metric match {
         // mmap-backed payload (readStore(mapped = true)): the BB kernel
         // twins are bitwise-equal over the same bytes, so a mapped graph
         // returns IDENTICAL results to its on-heap original
         case Metric.L2     => VectorKernels.l2SqOffBB(q, flatBB, o, nn)
         case Metric.Dot    => -VectorKernels.dotOffBB(q, flatBB, o, nn)
         case Metric.Cosine => -VectorKernels.cosineOffBB(q, flatBB, o, lens(x))
-      } else if (facc && VectorKernels.simdEnabled && metric != Metric.Cosine) {
+      } else if ((fl eq Flavor.FloatAcc) && VectorKernels.simdEnabled &&
+                 metric != Metric.Cosine) {
         if (metric == Metric.L2) Simd.l2SqFOff(q, flat, o, nn)
         else -Simd.dotFOff(q, flat, o, nn)
       } else metric match {
@@ -167,31 +191,60 @@ object Hnsw {
       uniform && VectorKernels.simdEnabled && dimU >= 16 &&
         (metric == Metric.L2 || metric == Metric.Dot)
 
-    /** Four [[dist]] values against gathered rows — bitwise per-pair equal
-      * to [[dist]] ([[Simd.l2Sq4]]/[[Simd.dot4]] lane contracts), so
-      * tiling the beam expansion changes kernel-call batching only, never
-      * a value or the traversal order. `facc` selects the float-acc tiles
-      * ([[Simd.l2Sq4F]]/[[Simd.dot4F]]) as in [[dist]]; only reachable
-      * when the tile gate already holds (SIMD, L2/Dot), and a no-op on a
-      * mapped graph.
+    /** Four [[dist]] values against gathered rows into `s.tout` — bitwise
+      * per-pair equal to [[dist]] on the contract kernels
+      * ([[Simd.l2Sq4]]/[[Simd.dot4]] lane contracts), so tiling the beam
+      * expansion changes kernel-call batching only, never a value or the
+      * traversal order. `FloatAcc` selects the float-acc tiles
+      * ([[Simd.l2Sq4F]]/[[Simd.dot4F]]), a no-op on a mapped graph; `I8`
+      * streams four code rows per call ([[Simd.dotI8F4At]]) — the
+      * memory-level parallelism where its 4×-fewer-bytes win lives. Only
+      * reachable when the flavor's tile gate holds ([[searchLayer]]).
       */
     private def dist4(q: Array[Float], i0: Int, i1: Int, i2: Int, i3: Int,
-                      out: Array[Double], facc: Boolean = false): Unit = {
+                      s: Scratch, fl: Flavor = Flavor.Contract,
+                      qn2: Double = 0.0): Unit = {
       evals += 4
+      val out = s.tout
       val tn = math.min(q.length, dimU)
       val o0 = offs(i0); val o1 = offs(i1); val o2 = offs(i2); val o3 = offs(i3)
       val l2 = metric == Metric.L2
-      if (flatBB != null) {
-        if (l2) Simd.l2Sq4BB(q, flatBB, o0, o1, o2, o3, tn, out)
-        else Simd.dot4BB(q, flatBB, o0, o1, o2, o3, tn, out)
-      } else if (facc) {
-        if (l2) Simd.l2Sq4F(q, flat, o0, flat, o1, flat, o2, flat, o3, tn, out, 0)
-        else Simd.dot4F(q, flat, o0, flat, o1, flat, o2, flat, o3, tn, out, 0)
+      if (fl eq Flavor.I8) {
+        val t8 = s.t8out
+        if (i8codesBB != null) Simd.dotI8F4AtBB(q, i8codesBB, o0, o1, o2, o3, tn, t8)
+        else Simd.dotI8F4At(q, i8codes, o0, o1, o2, o3, tn, t8)
+        out(0) = d8Of(t8(0), i0, qn2); out(1) = d8Of(t8(1), i1, qn2)
+        out(2) = d8Of(t8(2), i2, qn2); out(3) = d8Of(t8(3), i3, qn2)
       } else {
-        if (l2) Simd.l2Sq4(q, flat, o0, flat, o1, flat, o2, flat, o3, tn, out, 0)
-        else Simd.dot4(q, flat, o0, flat, o1, flat, o2, flat, o3, tn, out, 0)
+        if (flatBB != null) {
+          if (l2) Simd.l2Sq4BB(q, flatBB, o0, o1, o2, o3, tn, out)
+          else Simd.dot4BB(q, flatBB, o0, o1, o2, o3, tn, out)
+        } else if (fl eq Flavor.FloatAcc) {
+          if (l2) Simd.l2Sq4F(q, flat, o0, flat, o1, flat, o2, flat, o3, tn, out, 0)
+          else Simd.dot4F(q, flat, o0, flat, o1, flat, o2, flat, o3, tn, out, 0)
+        } else {
+          if (l2) Simd.l2Sq4(q, flat, o0, flat, o1, flat, o2, flat, o3, tn, out, 0)
+          else Simd.dot4(q, flat, o0, flat, o1, flat, o2, flat, o3, tn, out, 0)
+        }
+        if (!l2) { out(0) = -out(0); out(1) = -out(1); out(2) = -out(2); out(3) = -out(3) }
       }
-      if (!l2) { out(0) = -out(0); out(1) = -out(1); out(2) = -out(2); out(3) = -out(3) }
+    }
+
+    /** Quantized distance (smaller = closer) of row `x` from its unscaled
+      * int dot `raw`: dot ≈ s·raw; L2² ≈ |q|² − 2s·raw + s²·Σc²; cosine ≈
+      * raw / (|q|·√Σc²) (the scale cancels). `qn2` = |q|².
+      */
+    private def d8Of(raw: Float, x: Int, qn2: Double): Double = {
+      val sc = i8scale(x).toDouble
+      val d8 = raw.toDouble
+      metric match {
+        case Metric.Dot => -(sc * d8)
+        case Metric.L2  => qn2 - 2.0 * sc * d8 + sc * sc * i8cnorm2(x)
+        case Metric.Cosine =>
+          val rn = math.sqrt(i8cnorm2(x).toDouble)
+          val qn = math.sqrt(qn2)
+          if (rn == 0.0 || qn == 0.0) 0.0 else -(d8 / (qn * rn))
+      }
     }
 
     /** Distance → the metric's score column value. */
@@ -231,8 +284,8 @@ object Hnsw {
     // the distance kernels, dominated the serve walk (r13 attribution:
     // facc bought ~20 %, layout ~0 — the residual vs hnswlib's 208 µs is
     // bookkeeping). Values and iteration order are IDENTICAL to the
-    // ragged path, so on the contract kernels traversal — and every
-    // result — is bit-identical (HnswSpec's CSR == ragged gate).
+    // ragged path, so on every flavor the traversal — and every result
+    // — is bit-identical (HnswSpec's CSR == ragged gate).
     private var l0off: Array[Int] = null
     private var l0adj: Array[Int] = null
 
@@ -323,9 +376,9 @@ object Hnsw {
     // node's edges would sever the paths that route THROUGH it (graph
     // connectivity is why HNSW works; a deleted hub's neighbors must
     // stay mutually reachable). The beam walks tombstoned nodes like any
-    // other; only RESULT emission filters them ([[search]]/[[searchI8]]
-    // widen ef and retry when tombstones crowd live results out of the
-    // beam). Tombstone growth is bounded by [[compacted]] — a canonical
+    // other; only RESULT emission filters them ([[search]] widens ef
+    // and retries when tombstones crowd live results out of the beam).
+    // Tombstone growth is bounded by [[compacted]] — a canonical
     // id-sorted rebuild from the live rows.
     private var del: java.util.BitSet = null
     private var nDel = 0
@@ -445,7 +498,8 @@ object Hnsw {
       * crossover the gathers miss LLC and byte count is the wall. The
       * default crossover comes from the r15 ef-ladder sweep on the
       * 500K store graph (COVERAGE.md §"Serving posture");
-      * `-Dgraft.hnsw.i8.autoBytes=N` overrides, and the explicit `quantized`/contract flags always win over auto.
+      * `-Dgraft.hnsw.i8.autoBytes=N` overrides, and an explicit
+      * [[Flavor]] other than `Auto` always wins over the pick.
       *
       * MAPPED graphs pick i8 whenever the sidecar exists: the contract
       * walk on a mapped payload prices bounds-checked ByteBuffer float
@@ -489,9 +543,15 @@ object Hnsw {
       * shape). Rep 0 per (flavor, rung) is an untimed JIT/cache warm
       * pass; the timed reps take the best (latency floors compare more
       * stably than means under scheduler noise). Returns the crossover.
+      * Needs at least one rung, one sample query and one timed rep — with
+      * none there is no measurement to record.
       */
     def calibrateFlavor(efLadder: Array[Int] = Array(16, 32, 64, 128),
                         sampleQ: Int = 32, reps: Int = 3): Int = {
+      require(reps >= 1 && sampleQ >= 1 && efLadder.nonEmpty,
+        s"calibrateFlavor needs reps >= 1, sampleQ >= 1 and a non-empty " +
+          s"efLadder (got reps=$reps, sampleQ=$sampleQ, " +
+          s"efLadder=${efLadder.mkString("[", ",", "]")})")
       require(i8Available,
         "calibrateFlavor needs the i8 sidecar — quantizeStore() first" +
           " (or a v2+ store that carries it)")
@@ -507,14 +567,14 @@ object Hnsw {
         qs(i) = v
         i += 1
       }
-      def timeWalk(i8: Boolean, ef: Int): Long = {
+      def timeWalk(fl: Flavor, ef: Int): Long = {
         var best = Long.MaxValue
         var r = 0
         while (r <= reps) {
           val t0 = System.nanoTime()
           var q = 0
           while (q < nq) {
-            if (i8) searchI8(qs(q), 10, ef) else search(qs(q), 10, ef)
+            search(qs(q), 10, ef, fl)
             q += 1
           }
           val dt = System.nanoTime() - t0
@@ -529,7 +589,7 @@ object Hnsw {
       var go = true
       while (go && k >= 0) {
         val ef = ladder(k)
-        if (timeWalk(i8 = true, ef) < timeWalk(i8 = false, ef))
+        if (timeWalk(Flavor.I8, ef) < timeWalk(Flavor.Contract, ef))
           crossover = ef
         else go = false
         k -= 1
@@ -564,171 +624,6 @@ object Hnsw {
         x += 1
       }
       i8cnorm2 = cn2; i8scale = scales; i8codes = codes
-    }
-
-    /** Quantized distance (smaller = closer), derived from the unscaled
-      * int dot: dot ≈ s·d8; L2² ≈ |q|² − 2s·d8 + s²·Σc²; cosine ≈
-      * s·d8 / (|q|·s·√Σc²). `qn2` = |q|² is hoisted per search.
-      */
-    private def distI8(q: Array[Float], x: Int, qn2: Double): Double = {
-      evals += 1
-      val nn = math.min(q.length, lens(x))
-      val raw =
-        if (i8codesBB != null) VectorKernels.dotI8FOffBB(q, i8codesBB, offs(x), nn)
-        else VectorKernels.dotI8FOff(q, i8codes, offs(x), nn)
-      val d8 = raw.toDouble
-      val sc = i8scale(x).toDouble
-      metric match {
-        case Metric.Dot => -(sc * d8)
-        case Metric.L2  => qn2 - 2.0 * sc * d8 + sc * sc * i8cnorm2(x)
-        case Metric.Cosine =>
-          val rn = math.sqrt(i8cnorm2(x).toDouble) // scale cancels
-          val qn = math.sqrt(qn2)
-          if (rn == 0.0 || qn == 0.0) 0.0 else -(d8 / (qn * rn))
-      }
-    }
-
-    /** The i8-quantized serve walk: greedy descent + layer-0 beam over
-      * quantized distances, then an exact CONTRACT-kernel re-rank of the
-      * ef survivors down to k — FAISS's SQ-then-refine serving shape.
-      * Returned scores are therefore exact; recall is gated (HnswSpec),
-      * never hashed. Requires [[quantizeStore]].
-      */
-    def searchI8(q: Array[Float], k: Int, efSearch: Int): Array[(Long, Double)] = {
-      require(i8codes != null || i8codesBB != null,
-        "searchI8 needs the i8 sidecar — call quantizeStore() first" +
-          " (or load a v2 store that carries it)")
-      if (n == 0) return Array.empty
-      val s = scratchTL.get()
-      var qn2 = 0.0
-      var qi = 0
-      while (qi < q.length) { qn2 += q(qi).toDouble * q(qi); qi += 1 }
-      // greedy descent on quantized distances
-      var ep = entry
-      var lc = levels(entry)
-      while (lc > 0) {
-        var cur = ep
-        var curD = distI8(q, cur, qn2)
-        var improved = true
-        while (improved) {
-          improved = false
-          val nbrs = links(cur)(lc)
-          var i = 0
-          while (i < nbrs.length) {
-            val d = distI8(q, nbrs(i), qn2)
-            if (d < curD) { curD = d; cur = nbrs(i); improved = true }
-            i += 1
-          }
-        }
-        ep = cur
-        lc -= 1
-      }
-      // layer-0 beam on quantized distances. Expansion mirrors the serve
-      // walk's gather-then-tile shape: the 4-row i8 tile streams four
-      // byte rows per kernel call (the per-row kernel measured only ~12 %
-      // under contract at 200K because it had no memory-level
-      // parallelism — the tile is where the 4×-fewer-bytes win lives).
-      var ef = math.max(efSearch, k)
-      var out: Array[(Long, Double)] = null
-      while (out == null) {
-      s.reset(n)
-      val csr = l0adj != null
-      val adj = l0adj; val off = l0off
-      val useTile8 = uniform && VectorKernels.simdEnabled && dimU >= 16
-      val tn = math.min(q.length, dimU)
-      def d8Of(dotRaw: Float, x: Int): Double = {
-        val sc = i8scale(x).toDouble
-        val d8 = dotRaw.toDouble
-        metric match {
-          case Metric.Dot => -(sc * d8)
-          case Metric.L2  => qn2 - 2.0 * sc * d8 + sc * sc * i8cnorm2(x)
-          case Metric.Cosine =>
-            val rn = math.sqrt(i8cnorm2(x).toDouble)
-            val qn = math.sqrt(qn2)
-            if (rn == 0.0 || qn == 0.0) 0.0 else -(d8 / (qn * rn))
-        }
-      }
-      def admit8(d: Double, e: Int): Unit =
-        if (s.rn < ef || d < s.rd(0)) {
-          s.cPush(d, e)
-          s.rPush(d, e)
-          if (s.rn > ef) s.rPopMax()
-        }
-      val d0 = distI8(q, ep, qn2)
-      s.cPush(d0, ep); s.rPush(d0, ep); s.visit(ep)
-      var stop = false
-      while (!stop && s.cn > 0) {
-        s.cPop()
-        if (s.popD > s.rd(0) && s.rn >= ef) {
-          stop = true
-        } else {
-          val nbrs = if (csr) null else links(s.popI)(0)
-          val nb0 = if (csr) off(s.popI) else 0
-          val nbN = if (csr) off(s.popI + 1) - nb0 else nbrs.length
-          var i = 0
-          if (useTile8) {
-            if (s.gat.length < nbN)
-              s.gat = new Array[Int](math.max(nbN, s.gat.length * 2))
-            var gn = 0
-            while (i < nbN) {
-              val e = if (csr) adj(nb0 + i) else nbrs(i)
-              if (!s.visited(e)) { s.visit(e); s.gat(gn) = e; gn += 1 }
-              i += 1
-            }
-            var b = 0
-            val cbb = i8codesBB
-            while (b + 3 <= gn) { // full or once-padded tile
-              val e0 = s.gat(b); val e1 = s.gat(b + 1)
-              val e2 = if (b + 2 < gn) s.gat(b + 2) else e1
-              val e3 = if (b + 3 < gn) s.gat(b + 3) else e1
-              if (cbb != null)
-                Simd.dotI8F4AtBB(q, cbb, offs(e0), offs(e1), offs(e2),
-                  offs(e3), tn, s.t8out)
-              else
-                Simd.dotI8F4At(q, i8codes, offs(e0), offs(e1), offs(e2),
-                  offs(e3), tn, s.t8out)
-              evals += math.min(4, gn - b)
-              admit8(d8Of(s.t8out(0), e0), e0)
-              admit8(d8Of(s.t8out(1), e1), e1)
-              if (b + 2 < gn) admit8(d8Of(s.t8out(2), e2), e2)
-              if (b + 3 < gn) admit8(d8Of(s.t8out(3), e3), e3)
-              b += 4
-            }
-            while (b < gn) { admit8(distI8(q, s.gat(b), qn2), s.gat(b)); b += 1 }
-          } else {
-            while (i < nbN) {
-              val e = if (csr) adj(nb0 + i) else nbrs(i)
-              if (!s.visited(e)) {
-                s.visit(e)
-                admit8(distI8(q, e, qn2), e)
-              }
-              i += 1
-            }
-          }
-        }
-      }
-      val cnt = s.rSortAsc()
-      // exact re-rank of the LIVE ef survivors under the contract
-      // kernel: ≤ ef full-precision evals per query — cheap insurance
-      // that returns exact scores and absorbs in-beam quantization rank
-      // noise. Tombstoned survivors drop here; if that leaves fewer
-      // than k while the beam was full (more reachable nodes existed
-      // past the ef horizon), retry wider — same policy as [[search]].
-      val rer = new Array[(Long, Double)](cnt)
-      var j = 0
-      var w = 0
-      while (j < cnt) {
-        val x = s.ri(j)
-        if (!isDel(x)) { rer(w) = (ids(x), score(dist(q, x))); w += 1 }
-        j += 1
-      }
-      if (nDel == 0 || w >= k || cnt < ef || ef >= n)
-        out = java.util.Arrays.copyOf(rer, w).sortBy { case (id, sc) =>
-          (if (metric.larger) -sc else sc, id)
-        }.take(math.min(k, w))
-      else ef = math.min(ef * 2, n)
-      }
-      out
     }
 
     /** Serialize this graph to `file`: a header (construction params +
@@ -979,16 +874,16 @@ object Hnsw {
       * keeps the walk deterministic and terminating).
       */
     private def greedy(q: Array[Float], ep: Int, layer: Int,
-                       facc: Boolean = false): Int = {
+                       fl: Flavor = Flavor.Contract, qn2: Double = 0.0): Int = {
       var cur = ep
-      var curD = dist(q, cur, facc)
+      var curD = dist(q, cur, fl, qn2)
       var improved = true
       while (improved) {
         improved = false
         val nbrs = links(cur)(layer)
         var i = 0
         while (i < nbrs.length) {
-          val d = dist(q, nbrs(i), facc)
+          val d = dist(q, nbrs(i), fl, qn2)
           if (d < curD) { curD = d; cur = nbrs(i); improved = true }
           i += 1
         }
@@ -1018,8 +913,8 @@ object Hnsw {
       var rd = new Array[Double](256); var ri = new Array[Int](256); var rn = 0
       // re-select staging (sized on demand to maxDeg + 1)
       var sd = new Array[Double](8); var si = new Array[Int](8)
-      // beam-expansion distance tile (4 gathered rows per kernel call)
-      val ti = new Array[Int](4); val tout = new Array[Double](4)
+      // distance tile output (4 gathered rows per kernel call)
+      val tout = new Array[Double](4)
       var popD = 0.0; var popI = 0
 
       def reset(sz: Int): Unit = {
@@ -1138,20 +1033,65 @@ object Hnsw {
       override def initialValue(): Scratch = new Scratch
     }
 
-    /** Algorithm 2: beam search one layer from `ep`, beam width `ef`.
-      * Fills `s.rd`/`s.ri` ascending by (dist, idx) and returns the count.
+    /** Algorithm 2: beam search one layer from `ep`, beam width `ef`, on
+      * flavor `fl`'s distances. Fills `s.rd`/`s.ri` ascending by (dist,
+      * idx) and returns the count.
+      *
+      * One expansion serves the build and every flavor: gather every
+      * unvisited neighbor, then — when the flavor's tile gate holds —
+      * score full or once-padded 4-row tiles, then the remainder pair by
+      * pair. Admissions run in gather order, and on the contract kernels
+      * the tile lanes equal [[dist]] bitwise, so the build's graphs do not
+      * depend on the batching. Post-freeze layer-0 expansion reads the
+      * flat CSR — same neighbor values in the same order as the ragged
+      * links, so traversal on ANY flavor is identical with or without it
+      * (HnswSpec's CSR == ragged gate); only the load chain is shorter.
       */
     private def searchLayer(q: Array[Float], ep: Int, ef: Int,
                             layer: Int, s: Scratch,
-                            facc: Boolean = false): Int = {
+                            fl: Flavor = Flavor.Contract,
+                            qn2: Double = 0.0): Int = {
       s.reset(n)
-      val useTile = tiledGraph
-      // post-freeze layer-0 expansion reads the flat CSR — same neighbor
-      // values in the same order as the ragged path, so admissions and
-      // traversal are bit-identical; only the load chain is shorter
+      // the i8 tile scores every metric, cosine included
+      val useTile =
+        if (fl eq Flavor.I8) uniform && VectorKernels.simdEnabled && dimU >= 16
+        else tiledGraph
       val csr = layer == 0 && l0adj != null
       val adj = l0adj; val off = l0off
-      val d0 = dist(q, ep, facc)
+      // Touch pipeline, contract CSR serve walk only (builds never reach
+      // it): the NEXT tile's leading cache lines are touched while the
+      // current tile computes — a software prefetch stand-in (the JVM has
+      // no prefetch intrinsic; a live blackhole load is the closest legal
+      // form). facc's float lanes halve the kernel's compute leg, leaving
+      // no stall window for the touches to hide in — measured, they only
+      // contend for load ports there (COVERAGE.md §"Serving posture", r14:
+      // facc+t8 620-656 µs vs facc+t0 441-533).
+      val tl = if (useTile && csr && (fl eq Flavor.Contract)) touchLines else 0
+      def touch(from: Int, gn: Int): Float = {
+        var t = 0f
+        var u = from
+        val un = math.min(from + 4, gn)
+        while (u < un) {
+          val o = offs(s.gat(u))
+          var l = 0
+          if (flatBB == null)
+            while (l < tl && l * 16 < dimU) { t += flat(o + l * 16); l += 1 }
+          else
+            while (l < tl && l * 16 < dimU) {
+              t += flatBB.getFloat((o + l * 16) * 4); l += 1
+            }
+          u += 1
+        }
+        t
+      }
+      def admit(d: Double, e: Int): Unit =
+        if (s.rn < ef || d < s.rd(0)) {
+          s.cPush(d, e)
+          s.rPush(d, e)
+          if (s.rn > ef) s.rPopMax()
+        }
+      var bh = 0f // touch blackhole, published to s.sink once
+      val d0 = dist(q, ep, fl, qn2)
       s.cPush(d0, ep); s.rPush(d0, ep); s.visit(ep)
       var stop = false
       while (!stop && s.cn > 0) {
@@ -1162,138 +1102,55 @@ object Hnsw {
           val nbrs = if (csr) null else links(s.popI)(layer)
           val nb0 = if (csr) off(s.popI) else 0
           val nbN = if (csr) off(s.popI + 1) - nb0 else nbrs.length
+          if (s.gat.length < nbN)
+            s.gat = new Array[Int](math.max(nbN, s.gat.length * 2))
+          var gn = 0
           var i = 0
-          if (useTile && csr) {
-            // SERVE expansion (post-freeze only — builds never reach it):
-            // gather every unvisited neighbor first, then compute in
-            // 4-row tiles with the NEXT tile's leading cache lines
-            // touched while the current tile computes — a software
-            // prefetch stand-in (the JVM has no prefetch intrinsic; a
-            // live blackhole load is the closest legal form). Admissions
-            // run in gather order on bitwise-identical values, so
-            // traversal — and every result — matches the interleaved
-            // path exactly on the contract kernels (HnswSpec gates CSR ==
-            // ragged results). Under facc a 3-row remainder scores as a
-            // padded float tile here but per pair there, and those float
-            // kernels sum in different orders, so facc results may differ.
-            if (s.gat.length < nbN)
-              s.gat = new Array[Int](math.max(nbN, s.gat.length * 2))
-            var gn = 0
-            while (i < nbN) {
-              val e = adj(nb0 + i)
-              if (!s.visited(e)) { s.visit(e); s.gat(gn) = e; gn += 1 }
-              i += 1
-            }
-            def admit(d: Double, e: Int): Unit =
-              if (s.rn < ef || d < s.rd(0)) {
-                s.cPush(d, e)
-                s.rPush(d, e)
-                if (s.rn > ef) s.rPopMax()
-              }
-            var bh = 0f
-            // facc's float lanes halve the kernel's compute leg, leaving
-            // no stall window for the touches to hide in — measured, they
-            // only contend for load ports there (COVERAGE.md §"Serving
-            // posture", r14: facc+t8 620-656 µs vs facc+t0 441-533), so
-            // the touch pipeline is contract-path-only
-            val tl = if (facc) 0 else touchLines
-            def touch(from: Int): Unit = {
-              var u = from
-              val un = math.min(from + 4, gn)
-              while (u < un) {
-                val o = offs(s.gat(u))
-                var l = 0
-                if (flatBB == null)
-                  while (l < tl && l * 16 < dimU) { bh += flat(o + l * 16); l += 1 }
-                else
-                  while (l < tl && l * 16 < dimU) {
-                    bh += flatBB.getFloat((o + l * 16) * 4); l += 1
-                  }
-                u += 1
-              }
-            }
+          while (i < nbN) {
+            val e = if (csr) adj(nb0 + i) else nbrs(i)
+            if (!s.visited(e)) { s.visit(e); s.gat(gn) = e; gn += 1 }
+            i += 1
+          }
+          var b = 0
+          if (useTile) {
             // two-tile-deep touch pipeline: prime tiles 0 and 1, then each
             // iteration touches tile b/4+2 while tile b/4 computes — every
             // row's lines are in flight ~2 kernel calls before they're read
-            if (tl > 0) { touch(0); touch(4) }
-            var b = 0
+            if (tl > 0) bh += touch(0, gn) + touch(4, gn)
             while (b + 3 <= gn) { // full or once-padded tile (≤1/4 waste)
-              if (tl > 0) touch(b + 8)
+              if (tl > 0) bh += touch(b + 8, gn)
               val e1 = s.gat(b + 1)
               val e2 = if (b + 2 < gn) s.gat(b + 2) else e1
               val e3 = if (b + 3 < gn) s.gat(b + 3) else e1
-              dist4(q, s.gat(b), e1, e2, e3, s.tout, facc)
-              // padded lanes recompute a real row — bitwise-identical per
-              // lane, discarded below; keep the eval counter honest
-              val real = math.min(4, gn - b)
-              evals -= 4 - real
+              dist4(q, s.gat(b), e1, e2, e3, s, fl, qn2)
+              // padded lanes recompute a real row — discarded below; keep
+              // the eval counter honest
+              evals -= 4 - math.min(4, gn - b)
               admit(s.tout(0), s.gat(b)); admit(s.tout(1), e1)
               if (b + 2 < gn) admit(s.tout(2), e2)
               if (b + 3 < gn) admit(s.tout(3), e3)
               b += 4
             }
-            while (b < gn) { admit(dist(q, s.gat(b), facc), s.gat(b)); b += 1 }
-            // cross-expansion prefetch: after this expansion's admissions,
-            // cd(0) IS the next pop (cPop takes the heap min), so its
-            // adjacency line and first neighbor-row heads are known now —
-            // touch them so the next expansion's serial head (adjacency
-            // load → first rows) is already in flight
-            if (tl > 0 && s.cn > 0) {
-              val nx = s.ci(0)
-              val ao = off(nx)
-              val ae = math.min(ao + 4, off(nx + 1))
-              var z = ao
-              if (flatBB == null)
-                while (z < ae) { bh += flat(offs(adj(z))); z += 1 }
-              else
-                while (z < ae) { bh += flatBB.getFloat(offs(adj(z)) * 4); z += 1 }
-            }
-            s.sink += bh
-          } else if (useTile) {
-            // gather unvisited neighbors 4 at a time through the tiled
-            // kernel; admission runs sequentially on the same values in
-            // the same order, so traversal is unchanged
-            var tn = 0
-            def admit(d: Double, e: Int): Unit =
-              if (s.rn < ef || d < s.rd(0)) {
-                s.cPush(d, e)
-                s.rPush(d, e)
-                if (s.rn > ef) s.rPopMax()
-              }
-            while (i < nbN) {
-              val e = if (csr) adj(nb0 + i) else nbrs(i)
-              if (!s.visited(e)) {
-                s.visit(e)
-                s.ti(tn) = e
-                tn += 1
-                if (tn == 4) {
-                  dist4(q, s.ti(0), s.ti(1), s.ti(2), s.ti(3), s.tout, facc)
-                  admit(s.tout(0), s.ti(0)); admit(s.tout(1), s.ti(1))
-                  admit(s.tout(2), s.ti(2)); admit(s.tout(3), s.ti(3))
-                  tn = 0
-                }
-              }
-              i += 1
-            }
-            var j = 0
-            while (j < tn) { admit(dist(q, s.ti(j), facc), s.ti(j)); j += 1 }
-          } else {
-            while (i < nbN) {
-              val e = if (csr) adj(nb0 + i) else nbrs(i)
-              if (!s.visited(e)) {
-                s.visit(e)
-                val d = dist(q, e, facc)
-                if (s.rn < ef || d < s.rd(0)) {
-                  s.cPush(d, e)
-                  s.rPush(d, e)
-                  if (s.rn > ef) s.rPopMax()
-                }
-              }
-              i += 1
-            }
+          }
+          while (b < gn) { admit(dist(q, s.gat(b), fl, qn2), s.gat(b)); b += 1 }
+          // cross-expansion prefetch: after this expansion's admissions,
+          // cd(0) IS the next pop (cPop takes the heap min), so its
+          // adjacency line and first neighbor-row heads are known now —
+          // touch them so the next expansion's serial head (adjacency
+          // load → first rows) is already in flight
+          if (tl > 0 && s.cn > 0) {
+            val nx = s.ci(0)
+            val ao = off(nx)
+            val ae = math.min(ao + 4, off(nx + 1))
+            var z = ao
+            if (flatBB == null)
+              while (z < ae) { bh += flat(offs(adj(z))); z += 1 }
+            else
+              while (z < ae) { bh += flatBB.getFloat(offs(adj(z)) * 4); z += 1 }
           }
         }
       }
+      s.sink += bh
       s.rSortAsc()
     }
 
@@ -1325,7 +1182,7 @@ object Hnsw {
           // up to 3 distances past the first occluder; pure waste, never
           // a different outcome)
           while (ok && j + 4 <= nKept) {
-            dist4(cv, kept(j), kept(j + 1), kept(j + 2), kept(j + 3), s.tout)
+            dist4(cv, kept(j), kept(j + 1), kept(j + 2), kept(j + 3), s)
             if (s.tout(0) < dq || s.tout(1) < dq ||
                 s.tout(2) < dq || s.tout(3) < dq) ok = false
             j += 4
@@ -1432,7 +1289,7 @@ object Hnsw {
                 val x1 = if (c + 1 < cur.length) cur(c + 1) else idx
                 val x2 = if (c + 2 < cur.length) cur(c + 2) else idx
                 val x3 = if (c + 3 < cur.length) cur(c + 3) else idx
-                dist4(nv, cur(c), x1, x2, x3, s.tout)
+                dist4(nv, cur(c), x1, x2, x3, s)
                 td(c) = s.tout(0); td(c + 1) = s.tout(1)
                 td(c + 2) = s.tout(2); td(c + 3) = s.tout(3)
                 c += 4
@@ -1469,42 +1326,66 @@ object Hnsw {
       if (lvl > topL) entry = idx
     }
 
-    /** Query top-k: greedy descent through the upper layers, one beam
-      * search at layer 0 with `ef = max(efSearch, k)`. Returns (id, score)
+    /** Query top-k on serve flavor `flavor` — the one entry every serve
+      * path and [[calibrateFlavor]] walk through. `Auto` resolves here
+      * through [[autoI8]]. Greedy descent through the upper layers, one
+      * beam search at layer 0 with `ef = max(efSearch, k)`, then the
+      * emit: the beam's first k live entries, or for `I8` an exact
+      * CONTRACT-kernel re-rank of the live survivors down to k — FAISS's
+      * SQ-then-refine serving shape, which returns exact scores and
+      * absorbs in-beam quantization rank noise. Returns (id, score)
       * best-first in the METRIC's order.
       */
     def search(q: Array[Float], k: Int, efSearch: Int,
-               facc: Boolean = false): Array[(Long, Double)] = {
+               flavor: Flavor = Flavor.Contract): Array[(Long, Double)] = {
+      val fl =
+        if (flavor ne Flavor.Auto) flavor
+        else if (autoI8(efSearch)) Flavor.I8
+        else Flavor.Contract
+      val i8 = fl eq Flavor.I8
+      require(!i8 || i8Available,
+        "the i8 flavor needs the i8 sidecar — call quantizeStore() first" +
+          " (or load a v2+ store that carries it)")
       if (n == 0) return Array.empty
+      var qn2 = 0.0
+      if (i8) { var i = 0; while (i < q.length) { qn2 += q(i).toDouble * q(i); i += 1 } }
       // the upper-layer descent is deterministic in (q, graph) — hoisted
       // out of the ef-widening retry loop (its result cannot change
       // between retries; re-running it would only waste kernel evals on
       // tombstone-heavy serves and inflate the evals accounting)
       var ep = entry
       var lc = levels(entry)
-      while (lc > 0) { ep = greedy(q, ep, lc, facc); lc -= 1 }
+      while (lc > 0) { ep = greedy(q, ep, lc, fl, qn2); lc -= 1 }
       var ef = math.max(efSearch, k)
+      val s = scratchTL.get()
       while (true) {
-        val s = scratchTL.get()
-        val cnt = searchLayer(q, ep, ef, 0, s, facc)
+        val cnt = searchLayer(q, ep, ef, 0, s, fl, qn2)
         // emit the k best LIVE results. With zero tombstones this is the
-        // first min(k, cnt) beam entries — the historical path, bit-
-        // identical. With tombstones, beam slots they occupied are
-        // skipped; if live results run short while the beam was FULL
-        // (cnt == ef — more reachable nodes existed past the ef horizon),
-        // the walk retries at 2× ef until satisfied, the beam exhausts
-        // the component, or ef reaches the whole graph.
-        val out = new Array[(Long, Double)](math.min(k, cnt))
+        // first min(k, cnt) beam entries (i8: all cnt survivors, re-ranked
+        // below). With tombstones, beam slots they occupied are skipped;
+        // if live results run short while the beam was FULL (cnt == ef —
+        // more reachable nodes existed past the ef horizon), the walk
+        // retries at 2× ef until satisfied, the beam exhausts the
+        // component, or ef reaches the whole graph.
+        val cap = if (i8) cnt else math.min(k, cnt)
+        val out = new Array[(Long, Double)](cap)
         var j = 0
         var w = 0
-        while (j < cnt && w < k) {
+        while (j < cnt && w < cap) {
           val x = s.ri(j)
-          if (!isDel(x)) { out(w) = (ids(x), score(s.rd(j))); w += 1 }
+          if (!isDel(x)) {
+            out(w) = (ids(x), score(if (i8) dist(q, x) else s.rd(j)))
+            w += 1
+          }
           j += 1
         }
-        if (nDel == 0 || w == k || cnt < ef || ef >= n)
-          return if (w == out.length) out
-                 else java.util.Arrays.copyOf(out, w)
+        if (nDel == 0 || w >= k || cnt < ef || ef >= n) {
+          val live = if (w == out.length) out else java.util.Arrays.copyOf(out, w)
+          return if (!i8) live
+                 else live.sortBy { case (id, sc) =>
+                   (if (metric.larger) -sc else sc, id)
+                 }.take(k)
+        }
         ef = math.min(ef * 2, n)
       }
       throw new IllegalStateException("unreachable")
@@ -1768,8 +1649,8 @@ object Hnsw {
     graphCache.synchronized { graphCache.remove(cacheKey); () }
 
   /** Build the i8 serve sidecar on every warmed shard under `cacheKey`
-    * (see [[ShardGraph.quantizeStore]]) — call once before serving with
-    * `quantized = true`. Returns the number of shards quantized.
+    * (see [[ShardGraph.quantizeStore]]) — call once before serving
+    * `Flavor.I8`. Returns the number of shards quantized.
     */
   def quantizeWarmed(cacheKey: String): Int = {
     val group = shardGroupIfPresent(cacheKey).getOrElse(
@@ -1788,7 +1669,7 @@ object Hnsw {
 
   /** Measure the serve-flavor crossover on every warmed shard under
     * `cacheKey` that has the i8 sidecar (see
-    * [[ShardGraph.calibrateFlavor]]) — after this, `autoFlavor = true`
+    * [[ShardGraph.calibrateFlavor]]) — after this, `Flavor.Auto`
     * serving picks per (graph, ef) by MEASUREMENT instead of the
     * geometry-only byte heuristic. Call after [[quantizeWarmed]] (or a
     * v2+ store warm); graphs without the sidecar are skipped. Returns
@@ -1869,8 +1750,8 @@ object Hnsw {
     * graph BIT-IDENTICAL to a from-scratch rebuild on the union
     * (HnswSpec gates it; out-of-order ids yield a valid but
     * non-canonical graph, recall-gated, canonicalizable via
-    * [[compactWarmed]]). A quantized group stays servable: inserts extend
-    * the i8 sidecar row-wise. Mapped groups refuse (read-only payload) —
+    * [[compactDispatched]]). A quantized group stays servable: inserts
+    * extend the i8 sidecar row-wise. Mapped groups refuse (read-only payload) —
     * restore `mapped = false`, maintain, [[saveWarmed]], re-map.
     *
     * Serving and maintenance are PHASE-SEPARATED by the caller (the
@@ -1979,7 +1860,7 @@ object Hnsw {
     * map miss per non-owner shard is cheaper than routing vectors
     * around). Deleted nodes stay in the graph as connectivity (hnswlib's
     * markDelete) and stop being emitted; [[saveWarmed]] persists the
-    * tombstones (store v4) and [[compactWarmed]] reclaims them. Returns
+    * tombstones (store v4) and [[compactDispatched]] reclaims them. Returns
     * the number of ids that were found live and tombstoned.
     */
   def deleteWarmed(spark: SparkSession, cacheKey: String,
@@ -2014,52 +1895,17 @@ object Hnsw {
       .collect()
   }
 
-  /** Compact every warmed shard under `cacheKey` whose tombstone
-    * fraction is at least `minDeletedFraction` (and non-zero): each
-    * rebuilds from its live rows through the canonical id-sorted build
-    * — bit-identical to a from-scratch graph on the live set — and
-    * replaces the old graph in the cache. Re-run [[quantizeWarmed]]
-    * afterwards if the group serves the i8 flavor (dead rows' codes
-    * don't carry over). Returns the number of shards compacted.
-    *
-    * This is the IN-PROCESS tier's flavor: it iterates THIS JVM's cache,
-    * which is the whole group only for a single-JVM serving deployment
-    * (or `local[*]`). A distributed group — warmed in executor JVMs by
-    * [[upsertWarmed]]/[[deleteWarmed]]'s dispatch — compacts through
-    * [[compactDispatched]], which runs where those siblings run.
-    */
-  def compactWarmed(cacheKey: String,
-                    minDeletedFraction: Double = 0.0): Int = {
-    val group = shardGroupIfPresent(cacheKey).getOrElse(
-      throw new IllegalStateException(
-        s"no warmed hnsw graphs under '$cacheKey' to compact"))
-    val picked = {
-      val b = Vector.newBuilder[(String, ShardGraph)]
-      group.forEach((k, g) =>
-        if (g.deletedCount > 0 &&
-            g.deletedCount >= minDeletedFraction * g.size) b += ((k, g)))
-      b.result()
-    }
-    // independent rebuilds — parallel across shards, like saveWarmed
-    java.util.stream.IntStream.range(0, picked.length).parallel()
-      .forEach { (i: Int) =>
-        group.put(picked(i)._1, picked(i)._2.compacted())
-        ()
-      }
-    picked.length
-  }
-
-  /** [[compactWarmed]]'s CLUSTER shape (r17, closing the r16 verdict
-    * finding that compaction ran driver-local while its siblings
-    * dispatched): one task per shard through the SAME [[dispatchShards]]
-    * lane as [[upsertWarmed]]/[[deleteWarmed]], so the maintenance
-    * story's third leg runs where the first two do. Each task rebuilds
-    * ITS JVM's qualifying shard graphs from their live rows (canonical
-    * id-sorted build — bit-identical to a from-scratch graph on the live
-    * set, like the driver-local flavor) and, for graphs carrying the i8
-    * serve sidecar, re-runs [[ShardGraph.quantizeStore]] IN-TASK
-    * (`requantize`, default on — dead rows' codes must not carry over,
-    * and a separate driver-side [[quantizeWarmed]] pass would again only
+  /** Compact every warmed shard graph under `cacheKey` that carries at
+    * least one tombstone (r17, closing the r16 verdict finding that
+    * compaction ran driver-local while its siblings dispatched): one task
+    * per shard through the SAME [[dispatchShards]] lane as
+    * [[upsertWarmed]]/[[deleteWarmed]], so the maintenance story's third
+    * leg runs where the first two do. Each task rebuilds ITS JVM's
+    * qualifying shard graphs from their live rows (canonical id-sorted
+    * build — bit-identical to a from-scratch graph on the live set) and,
+    * for graphs carrying the i8 serve sidecar, always re-runs
+    * [[ShardGraph.quantizeStore]] IN-TASK (dead rows' codes must not
+    * carry over, and a driver-side [[quantizeWarmed]] pass would only
     * reach the calling JVM).
     *
     * Mapped (read-only) qualifying graphs refuse, as in [[upsertWarmed]]:
@@ -2068,7 +1914,7 @@ object Hnsw {
     * serving posture behind the caller's back — restore `mapped = false`,
     * maintain, [[saveWarmed]], re-map. Per-graph calibration
     * ([[calibrateWarmed]]) does not carry over a rebuild; re-run it where
-    * the group serves `autoFlavor`.
+    * the group serves `Flavor.Auto`.
     *
     * EAGER (maintenance DDL, not a query): returns one already-computed
     * row per dispatched shard — (shard, task_part, n_compacted,
@@ -2078,9 +1924,8 @@ object Hnsw {
     * silent no-op compaction would leave tombstones accumulating behind
     * a "done" return, the same loud-miss contract as delete.
     */
-  def compactDispatched(spark: SparkSession, cacheKey: String, nShards: Int,
-                        minDeletedFraction: Double = 0.0,
-                        requantize: Boolean = true): DataFrame = {
+  def compactDispatched(spark: SparkSession, cacheKey: String,
+                        nShards: Int): DataFrame = {
     require(cacheKey.nonEmpty,
       "compactDispatched needs the cacheKey the graphs were built under")
     import spark.implicits._
@@ -2103,14 +1948,13 @@ object Hnsw {
             }
             picked.foreach { case (key, g) =>
               found += 1
-              if (g.deletedCount > 0 &&
-                  g.deletedCount >= minDeletedFraction * g.size) {
+              if (g.deletedCount > 0) {
                 require(!g.isMapped,
                   s"warmed graph '$key' is mapped (read-only payload) — " +
                     "restore with mapped = false to compact, saveWarmed, " +
                     "then re-map for serving")
                 val ng = g.compacted()
-                if (requantize && g.i8Available) ng.quantizeStore()
+                if (g.i8Available) ng.quantizeStore()
                 group.put(key, ng)
                 reclaimed += g.deletedCount
                 nComp += 1
@@ -2204,20 +2048,6 @@ object Hnsw {
       .as[(Long, Array[Float])].collect().sortBy(_._1)
   }
 
-  /** Warm-path search: drive one task per shard against the
-    * already-built executor-cached graphs — the base table is NOT
-    * re-read. [[search]]/[[searchRouted]] stream the base to locate (and
-    * on a cold cache, build) the shard graphs; once warm, serving only
-    * needs the graphs themselves, so the per-query cost is nShards
-    * in-memory beam searches plus scheduler overhead — the latency number
-    * `Eval.hnswSweep` and the 1M bench record. On a cluster this is the
-    * executor-affinity serving pattern (each executor holds its shards'
-    * graphs); a miss fails loudly rather than silently rebuilding.
-    *
-    * `centroids`+`routeProbe` turn on routed pruning: only the
-    * routeProbe nearest shards search each query (shard ids ==
-    * centroid indices, matching [[searchRouted]]'s router).
-    */
   /** Collision-free shard→task dispatch for [[searchWarm]]: exactly one
     * probed shard per task, by POSITION (`parallelize`'s equal slicing),
     * not by hash — a hash `repartition(n, col("shard"))` can land two
@@ -2233,6 +2063,24 @@ object Hnsw {
       spark.sparkContext.parallelize(shards, math.max(shards.size, 1)))
   }
 
+  /** Warm-path search: drive one task per shard against the
+    * already-built executor-cached graphs — the base table is NOT
+    * re-read. [[search]]/[[searchRouted]] stream the base to locate (and
+    * on a cold cache, build) the shard graphs; once warm, serving only
+    * needs the graphs themselves, so the per-query cost is nShards
+    * in-memory beam searches plus scheduler overhead — the latency number
+    * `Eval.hnswSweep` and the 1M bench record. On a cluster this is the
+    * executor-affinity serving pattern (each executor holds its shards'
+    * graphs); a miss fails loudly rather than silently rebuilding.
+    *
+    * `centroids`+`routeProbe` turn on routed pruning: only the
+    * routeProbe nearest shards search each query (shard ids ==
+    * centroid indices, matching [[searchRouted]]'s router).
+    *
+    * `flavor` picks every shard walk's distance source ([[Flavor]]):
+    * `I8` needs the sidecar on every served graph ([[quantizeWarmed]], or
+    * a v2+ store) and fails loudly without it; `Auto` picks per graph.
+    */
   def searchWarm(queries: DataFrame, cacheKey: String, nShards: Int, k: Int,
                  metric: Metric = Metric.Dot, m: Int = 16,
                  efConstruction: Int = 100, efSearch: Int = 64,
@@ -2240,8 +2088,7 @@ object Hnsw {
                  centroids: Array[Array[Float]] = null, routeProbe: Int = 0,
                  evalCounter: Option[LongAccumulator] = None,
                  allowMissing: Boolean = false,
-                 quantized: Boolean = false,
-                 autoFlavor: Boolean = false): DataFrame = {
+                 flavor: Flavor = Flavor.Contract): DataFrame = {
     require(cacheKey.nonEmpty, "searchWarm needs the cacheKey the graphs were built under")
     val spark = queries.sparkSession
     import spark.implicits._
@@ -2286,19 +2133,11 @@ object Hnsw {
               "run Hnsw.search(base, ..., cacheKey) once to build")
           if (g != null) {
             val before = g.evals
-            // serve-flavor pick, mirroring searchLocal's: explicit i8
-            // (loud if the sidecar is absent — quantizeWarmed first, or
-            // a v2 store), or the per-graph auto crossover
-            val useI8 =
-              if (autoFlavor) g.i8Available && g.autoI8(efSearch)
-              else quantized
             qBc.value.foreach { case (qid, qvec) =>
-              if (probeBc.value.forall(_(qid).contains(shard))) {
-                val hits =
-                  if (useI8) g.searchI8(qvec, k, efSearch)
-                  else g.search(qvec, k, efSearch)
-                hits.foreach { case (id, s) => out += ((qid, id, s)) }
-              }
+              if (probeBc.value.forall(_(qid).contains(shard)))
+                g.search(qvec, k, efSearch, flavor).foreach { case (id, s) =>
+                  out += ((qid, id, s))
+                }
             }
             searched += g.evals - before
           }
@@ -2322,18 +2161,16 @@ object Hnsw {
     * routeProbe=0 [[searchWarm]] over the same graphs: same beam search,
     * same [[TopKAggregator]] tie-break on the merge (HnswSpec gates it).
     *
-    * `floatAcc = true` switches the beam DISTANCES (search only — never
-    * builds) to the float-accumulation kernels: ~2× FMA width against the
-    * double-lane contract the 3.3×-vs-hnswlib kernel margin was
-    * attributed to. Results may differ on true near-ties, so the flavor
-    * is recall-gated (HnswSpec), not hash-gated, and no oracle path
-    * enables it.
-    *
-    * `quantized = true` walks the beam over the i8 sidecar
-    * ([[quantizeWarmed]] first) and exact-re-ranks the ef survivors —
-    * 4× fewer bytes per gathered row against a DRAM-bound walk; also
-    * recall-gated, with exact returned scores (see
-    * [[ShardGraph.searchI8]]).
+    * `flavor` picks the walk's distance source ([[Flavor]], search only
+    * — never builds). `FloatAcc` runs the float-accumulation kernels:
+    * ~2× FMA width against the double-lane contract the
+    * 3.3×-vs-hnswlib kernel margin was attributed to; results may
+    * differ on true near-ties, so it is recall-gated (HnswSpec), not
+    * hash-gated, and no oracle path enables it. `I8` walks the beam over
+    * the i8 sidecar ([[quantizeWarmed]] first) and exact-re-ranks the
+    * live survivors — 4× fewer bytes per gathered row against a
+    * DRAM-bound walk; also recall-gated, with exact returned scores.
+    * `Auto` picks `I8` or `Contract` per graph ([[ShardGraph.autoI8]]).
     *
     * Returns (id, score) rows, best-first, ≤ k.
     */
@@ -2343,10 +2180,8 @@ object Hnsw {
                   seed: Long = 42L,
                   centroids: Array[Array[Float]] = null,
                   routeProbe: Int = 0,
-                  floatAcc: Boolean = false,
-                  quantized: Boolean = false,
                   allowMissing: Boolean = false,
-                  autoFlavor: Boolean = false): Array[(Long, Double)] = {
+                  flavor: Flavor = Flavor.Contract): Array[(Long, Double)] = {
     val dim = qvec.length
     val group = shardGroupIfPresent(cacheKey).getOrElse(
       throw new IllegalStateException(
@@ -2372,15 +2207,10 @@ object Hnsw {
       // default stays the loud-miss contract
       require(g != null || allowMissing,
         s"no warmed hnsw graph for shard $shard under '$cacheKey'")
-      if (g != null) {
-        val useI8 =
-          if (autoFlavor) g.i8Available && g.autoI8(efSearch)
-          else quantized
-        val hits =
-          if (useI8) g.searchI8(qvec, k, efSearch)
-          else g.search(qvec, k, efSearch, floatAcc)
-        hits.foreach { case (id, s) => agg.consider(buf, id, s) }
-      }
+      if (g != null)
+        g.search(qvec, k, efSearch, flavor).foreach { case (id, s) =>
+          agg.consider(buf, id, s)
+        }
     }
     (0 until buf.n).map(i => (buf.ids(i), buf.scores(i))).toArray
       .sortBy { case (id, s) => (if (metric.larger) -s else s, id) }

@@ -60,8 +60,9 @@ object IndexStream {
     * delivery into a non-transactional sink, and an upsert replay is
     * SEMANTICALLY idempotent — the replayed ids tombstone their live
     * twins and re-insert, so the live (id → vector) map is unchanged —
-    * but each replay leaves tombstones ([[graft.ops.Hnsw.compactWarmed]]
-    * reclaims them, restoring the canonical graph). Persist with
+    * but each replay leaves tombstones
+    * ([[graft.ops.Hnsw.compactDispatched]] reclaims them, restoring the
+    * canonical graph). Persist with
     * [[graft.ops.Hnsw.saveWarmed]] on the caller's checkpoint cadence.
     *
     * TOMBSTONE HYGIENE (r17): sustained churn — every replaced id is a

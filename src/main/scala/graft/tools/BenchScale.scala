@@ -1193,13 +1193,13 @@ object BenchScale {
           val ef = 64
           serveQs.take(32).foreach { qv =>
             Hnsw.searchLocal(qv, sgKey, 1, k, Metric.Dot, hM, hEfc, ef,
-              floatAcc = true)
+              flavor = Hnsw.Flavor.FloatAcc)
           }
           var overlap = 0L
           val lat = serveQs.map { qv =>
             val t0 = System.nanoTime()
             val got = Hnsw.searchLocal(qv, sgKey, 1, k, Metric.Dot, hM, hEfc,
-              ef, floatAcc = true)
+              ef, flavor = Hnsw.Flavor.FloatAcc)
             val dt = (System.nanoTime() - t0) / 1e3
             val contract = Hnsw.searchLocal(qv, sgKey, 1, k, Metric.Dot, hM,
               hEfc, ef)
@@ -1228,13 +1228,13 @@ object BenchScale {
           val quantSec = (System.nanoTime() - tQ) / 1e9
           serveQs.take(32).foreach { qv =>
             Hnsw.searchLocal(qv, sgKey, 1, k, Metric.Dot, hM, hEfc, ef,
-              quantized = true)
+              flavor = Hnsw.Flavor.I8)
           }
           var overlap = 0L
           val lat = serveQs.map { qv =>
             val t0 = System.nanoTime()
             val got = Hnsw.searchLocal(qv, sgKey, 1, k, Metric.Dot, hM,
-              hEfc, ef, quantized = true)
+              hEfc, ef, flavor = Hnsw.Flavor.I8)
             val dt = (System.nanoTime() - t0) / 1e3
             val contract = Hnsw.searchLocal(qv, sgKey, 1, k, Metric.Dot,
               hM, hEfc, ef)
@@ -1246,7 +1246,7 @@ object BenchScale {
           val pct = pctOf(lat) _
           val rec8 = sgRecall(qv =>
             Hnsw.searchLocal(qv, sgKey, 1, k, Metric.Dot, hM, hEfc, ef,
-              quantized = true))
+              flavor = Hnsw.Flavor.I8))
           annResults("ann_hnsw_single_graph_ef64_i8") = Map(
             "p50_us" -> pct(0.50), "p95_us" -> pct(0.95),
             "p99_us" -> pct(0.99), "avg_us" -> lat.sum / nServe,
@@ -1263,19 +1263,19 @@ object BenchScale {
           val efq = 128
           serveQs.take(32).foreach { qv =>
             Hnsw.searchLocal(qv, sgKey, 1, k, Metric.Dot, hM, hEfc, efq,
-              quantized = true)
+              flavor = Hnsw.Flavor.I8)
           }
           val lat = serveQs.map { qv =>
             val t0 = System.nanoTime()
             Hnsw.searchLocal(qv, sgKey, 1, k, Metric.Dot, hM, hEfc, efq,
-              quantized = true)
+              flavor = Hnsw.Flavor.I8)
             (System.nanoTime() - t0) / 1e3
           }
           java.util.Arrays.sort(lat)
           val pct = pctOf(lat) _
           val rec = sgRecall(qv =>
             Hnsw.searchLocal(qv, sgKey, 1, k, Metric.Dot, hM, hEfc, efq,
-              quantized = true))
+              flavor = Hnsw.Flavor.I8))
           annResults("ann_hnsw_single_graph_i8_ef128") = Map(
             "p50_us" -> pct(0.50), "p95_us" -> pct(0.95),
             "p99_us" -> pct(0.99), "avg_us" -> lat.sum / nServe,
@@ -1302,17 +1302,17 @@ object BenchScale {
           val tR = System.nanoTime()
           Hnsw.warmFromDisk(sgKey, storeDir, mapped = true, prefault = true)
           val warmSec = (System.nanoTime() - tR) / 1e9
-          for ((quant, name) <- Seq(
-              (false, "ann_hnsw_store_serve"),
-              (true, "ann_hnsw_store_serve_i8"))) {
+          for ((fl, name) <- Seq(
+              (Hnsw.Flavor.Contract, "ann_hnsw_store_serve"),
+              (Hnsw.Flavor.I8, "ann_hnsw_store_serve_i8"))) {
             serveQs.take(32).foreach { qv =>
               Hnsw.searchLocal(qv, sgKey, 1, k, Metric.Dot, hM, hEfc, 64,
-                quantized = quant)
+                flavor = fl)
             }
             val lat = serveQs.map { qv =>
               val t0 = System.nanoTime()
               Hnsw.searchLocal(qv, sgKey, 1, k, Metric.Dot, hM, hEfc, 64,
-                quantized = quant)
+                flavor = fl)
               (System.nanoTime() - t0) / 1e3
             }
             java.util.Arrays.sort(lat)
@@ -1815,14 +1815,14 @@ object BenchScale {
         serveQs3.take(32).foreach { qv =>
           Hnsw.searchLocal(qv, routed3Key, nlist, k, Metric.Dot, hM, hEfc,
             efSearch = 64, centroids = idx3.centroids, routeProbe = 32,
-            quantized = true)
+            flavor = Hnsw.Flavor.I8)
         }
         var ovl3 = 0L
         val latQ3 = serveQs3.map { qv =>
           val t0 = System.nanoTime()
           val got = Hnsw.searchLocal(qv, routed3Key, nlist, k, Metric.Dot,
             hM, hEfc, efSearch = 64, centroids = idx3.centroids,
-            routeProbe = 32, quantized = true)
+            routeProbe = 32, flavor = Hnsw.Flavor.I8)
           val dt = (System.nanoTime() - t0) / 1e3
           val contract = Hnsw.searchLocal(qv, routed3Key, nlist, k,
             Metric.Dot, hM, hEfc, efSearch = 64,

@@ -69,7 +69,7 @@ class HnswSpec extends AnyFunSuite {
     // the candidates: gate the id SET (recall), not scores/hashes —
     // near-tie order may legitimately differ
     val faccIds = Hnsw.searchLocal(qv, key, nShards = 4, k = 10, Metric.Dot,
-      m = 8, efConstruction = 64, efSearch = 32, floatAcc = true)
+      m = 8, efConstruction = 64, efSearch = 32, flavor = Hnsw.Flavor.FloatAcc)
       .map(_._1).toSet
     val hits = faccIds.intersect(warm.map(_._1).toSet).size
     assert(hits >= 9, s"floatAcc serve recall $hits/10 vs contract path")
@@ -296,8 +296,18 @@ class HnswSpec extends AnyFunSuite {
     val mapped = Hnsw.readStore(s"$tmp/g.graph", mapped = true)
     assert(qs.map(mapped.search(_, 10, 64).toSeq).sameElements(want),
       "mapped graph diverged from the original")
-    // facc on a mapped graph degrades to the contract path, never errors
-    assert(mapped.search(qs.head, 10, 64, facc = true).toSeq == want.head)
+    // FloatAcc on a mapped graph degrades to the contract path, never
+    // errors (no float-acc BB kernels)
+    assert(qs.map(mapped.search(_, 10, 64, Hnsw.Flavor.FloatAcc).toSeq)
+      .sameElements(want), "mapped FloatAcc diverged from Contract")
+    // I8 on a mapped graph reads a v2+ store's sidecar in place through
+    // the bitwise BB twins: equal to I8 on the heap original
+    g.quantizeStore()
+    g.writeStore(s"$tmp/g8.graph")
+    val mapped8 = Hnsw.readStore(s"$tmp/g8.graph", mapped = true)
+    assert(qs.map(mapped8.search(_, 10, 64, Hnsw.Flavor.I8).toSeq)
+      .sameElements(qs.map(g.search(_, 10, 64, Hnsw.Flavor.I8).toSeq)),
+      "mapped I8 diverged from the heap original's I8")
     // mapped graphs are read-only
     intercept[IllegalArgumentException] {
       mapped.insert(99999L, rows.head._2)
@@ -321,13 +331,13 @@ class HnswSpec extends AnyFunSuite {
   }
 
   test("serve expansion: CSR walk == ragged-links walk, before and after re-freeze") {
-    // freeze()'s layer-0 CSR routes the serve walk through the gather +
-    // 4-row tile + touch pipeline; without it the walk takes the ragged
-    // interleaved path. On the contract kernels both must admit the same
-    // values in the same order. (Under facc they may not: the serve walk
-    // scores a 3-row remainder as a padded tile, the ragged walk per pair,
-    // and the float tile and per-pair kernels sum in different orders.)
-    // dim 32 keeps the tiled kernels live; queries are non-members.
+    // freeze()'s layer-0 CSR only changes where the walk reads a node's
+    // layer-0 neighbors (the flat CSR instead of the ragged links; the
+    // contract flavor adds its value-neutral touch pipeline there). Both
+    // feed the one expansion the same neighbors in the same order, so on
+    // EVERY flavor the two walks admit the same values in the same order:
+    // identical results and an identical evals delta. dim 32 keeps the
+    // tiled kernels live; queries are non-members.
     val rows = SyntheticVectors.lowRankFast(spark, 3000, 32, intrinsic = 16)
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1)
@@ -335,12 +345,19 @@ class HnswSpec extends AnyFunSuite {
       .collect().map(_.getSeq[Float](1).toArray)
     for (metric <- Seq(Metric.L2, Metric.Dot)) {
       val g = Hnsw.probeBuild(rows, m = 8, efC = 64, seed = 42L, metric)
-      def serve() = qs.map(g.search(_, 10, 64).toSeq)
-      val csr = serve()
-      g.dropCsr()
-      assert(serve().sameElements(csr), s"$metric: ragged walk diverged from the CSR walk")
-      g.freeze()
-      assert(serve().sameElements(csr), s"$metric: re-frozen CSR walk diverged")
+      g.quantizeStore()
+      for (fl <- Seq(Hnsw.Flavor.Contract, Hnsw.Flavor.FloatAcc, Hnsw.Flavor.I8)) {
+        def serve() = {
+          val before = g.evals
+          val res = qs.map(g.search(_, 10, 64, fl).toSeq).toSeq
+          (res, g.evals - before)
+        }
+        val csr = serve()
+        g.dropCsr()
+        assert(serve() == csr, s"$metric/$fl: ragged walk diverged from the CSR walk")
+        g.freeze()
+        assert(serve() == csr, s"$metric/$fl: re-frozen CSR walk diverged")
+      }
     }
   }
 
@@ -373,12 +390,12 @@ class HnswSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1)
     val g = Hnsw.probeBuild(rows, m = 8, efC = 64, seed = 42L, Metric.Dot)
-    intercept[IllegalArgumentException](g.searchI8(rows.head._2, 5, 32))
+    intercept[IllegalArgumentException](g.search(rows.head._2, 5, 32, Hnsw.Flavor.I8))
     g.quantizeStore()
     val qs = rows.take(32).map(_._2)
     var overlap = 0
     qs.foreach { q =>
-      val got = g.searchI8(q, 10, 64)
+      val got = g.search(q, 10, 64, Hnsw.Flavor.I8)
       val want = g.search(q, 10, 64)
       overlap += got.map(_._1).toSet.intersect(want.map(_._1).toSet).size
       // re-rank contract: scores of common ids are EXACT (the contract
@@ -399,20 +416,21 @@ class HnswSpec extends AnyFunSuite {
     // three walks must agree exactly)
     val tmp = java.nio.file.Files.createTempDirectory("hnsw_i8").toString
     g.writeStore(s"$tmp/g.graph")
-    val want8 = g.searchI8(qs.head, 10, 64).toSeq
+    val want8 = g.search(qs.head, 10, 64, Hnsw.Flavor.I8).toSeq
     val heap = Hnsw.readStore(s"$tmp/g.graph")
-    assert(heap.searchI8(qs.head, 10, 64).toSeq == want8,
+    assert(heap.search(qs.head, 10, 64, Hnsw.Flavor.I8).toSeq == want8,
       "heap-restored i8 sidecar diverged from the original walk")
     val mapped = Hnsw.readStore(s"$tmp/g.graph", mapped = true)
-    assert(mapped.searchI8(qs.head, 10, 64).toSeq == want8,
+    assert(mapped.search(qs.head, 10, 64, Hnsw.Flavor.I8).toSeq == want8,
       "mapped i8 walk diverged from heap i8 walk")
     // and a store written WITHOUT the sidecar still quantizes on demand
     val bare = Hnsw.probeBuild(rows, m = 8, efC = 64, seed = 42L, Metric.Dot)
     bare.writeStore(s"$tmp/bare.graph")
     val bareMapped = Hnsw.readStore(s"$tmp/bare.graph", mapped = true)
-    intercept[IllegalArgumentException](bareMapped.searchI8(qs.head, 10, 64))
+    intercept[IllegalArgumentException](
+      bareMapped.search(qs.head, 10, 64, Hnsw.Flavor.I8))
     bareMapped.quantizeStore()
-    assert(bareMapped.searchI8(qs.head, 10, 64).toSeq == want8,
+    assert(bareMapped.search(qs.head, 10, 64, Hnsw.Flavor.I8).toSeq == want8,
       "on-demand quantization over a mapped bare store diverged")
   }
 
@@ -497,8 +515,8 @@ class HnswSpec extends AnyFunSuite {
     val g2 = Hnsw.readStore(s"$tmp/v2.graph")
     assert(g2.search(rows.head._2, 10, 64).toSeq == want,
       "v2-format store diverged from the v3 original")
-    assert(g2.searchI8(rows.head._2, 10, 64).toSeq ==
-      g.searchI8(rows.head._2, 10, 64).toSeq)
+    assert(g2.search(rows.head._2, 10, 64, Hnsw.Flavor.I8).toSeq ==
+      g.search(rows.head._2, 10, 64, Hnsw.Flavor.I8).toSeq)
   }
 
   test("generation-unique shard files: crash-safe re-save, old gen swept (r16)") {
@@ -554,6 +572,12 @@ class HnswSpec extends AnyFunSuite {
     assert(g.measuredCrossover == -1)
     intercept[IllegalArgumentException](g.calibrateFlavor()) // needs sidecar
     g.quantizeStore()
+    // nothing to measure → nothing recorded: no timed rep, no sample
+    // query, or no rung must fail loudly, not store Int.MaxValue
+    intercept[IllegalArgumentException](g.calibrateFlavor(reps = 0))
+    intercept[IllegalArgumentException](g.calibrateFlavor(sampleQ = 0))
+    intercept[IllegalArgumentException](g.calibrateFlavor(Array.empty[Int]))
+    assert(g.measuredCrossover == -1)
     val cross = g.calibrateFlavor(Array(8, 32, 128), sampleQ = 8, reps = 1)
     assert(cross == g.measuredCrossover)
     // the measured crossover REPLACES the byte heuristic: autoI8 is now
@@ -574,11 +598,11 @@ class HnswSpec extends AnyFunSuite {
     assert(Hnsw.calibrateWarmed(key, Array(16, 64), sampleQ = 4) == 2)
     val q = queries.select("qvec").head().getSeq[Float](0).toArray
     val auto = Hnsw.searchLocal(q, key, nShards = 2, k = 5, Metric.Dot,
-      m = 8, efConstruction = 64, autoFlavor = true).toSeq
+      m = 8, efConstruction = 64, flavor = Hnsw.Flavor.Auto).toSeq
     val contract = Hnsw.searchLocal(q, key, nShards = 2, k = 5, Metric.Dot,
       m = 8, efConstruction = 64).toSeq
     val i8 = Hnsw.searchLocal(q, key, nShards = 2, k = 5, Metric.Dot,
-      m = 8, efConstruction = 64, quantized = true).toSeq
+      m = 8, efConstruction = 64, flavor = Hnsw.Flavor.I8).toSeq
     assert(auto == contract || auto == i8,
       "auto pick served neither measured flavor")
     Hnsw.invalidate(key)
@@ -629,19 +653,17 @@ class HnswSpec extends AnyFunSuite {
       efConstruction = 64, nShards = 2, cacheKey = key).count()
     Hnsw.quantizeWarmed(key)
     val q = queries.select("qvec").head().getSeq[Float](0).toArray
-    def serve(auto: Boolean, quantized: Boolean) =
+    def serve(flavor: Hnsw.Flavor) =
       Hnsw.searchLocal(q, key, nShards = 2, k = 5, Metric.Dot, m = 8,
-        efConstruction = 64, quantized = quantized, autoFlavor = auto).toSeq
+        efConstruction = 64, flavor = flavor).toSeq
     val saved = Hnsw.autoI8Bytes
     try {
       // tiny fixture graphs sit far below any sane threshold → contract
       Hnsw.autoI8Bytes = Long.MaxValue
-      assert(serve(auto = true, quantized = false) ==
-        serve(auto = false, quantized = false))
+      assert(serve(Hnsw.Flavor.Auto) == serve(Hnsw.Flavor.Contract))
       // force the crossover to zero → the auto pick serves the i8 walk
       Hnsw.autoI8Bytes = 0L
-      assert(serve(auto = true, quantized = false) ==
-        serve(auto = false, quantized = true))
+      assert(serve(Hnsw.Flavor.Auto) == serve(Hnsw.Flavor.I8))
     } finally Hnsw.autoI8Bytes = saved
     Hnsw.invalidate(key)
   }

@@ -97,10 +97,10 @@ class HnswUpsertSpec extends AnyFunSuite {
     val overlap = after.map(_._1).count(want.contains)
     assert(overlap >= 8, s"live recall after delete: $overlap/10")
     // the i8 flavor obeys the same tombstone contract
-    val after8 = g.searchI8(q, 10, 64)
+    val after8 = g.search(q, 10, 64, Hnsw.Flavor.I8)
     assert(after8.length == 10)
     assert(after8.map(_._1).toSet.intersect(top.toSet).isEmpty,
-      "searchI8 emitted a tombstoned id")
+      "the i8 flavor emitted a tombstoned id")
   }
 
   test("upsert-replace: tombstone old twin, newest write wins") {
@@ -126,7 +126,7 @@ class HnswUpsertSpec extends AnyFunSuite {
     val dead = g.search(q, 5, 64).map(_._1)
     dead.foreach(g.delete)
     val want = g.search(q, 10, 64).toSeq
-    val want8 = g.searchI8(q, 10, 64).toSeq
+    val want8 = g.search(q, 10, 64, Hnsw.Flavor.I8).toSeq
     val tmp = java.nio.file.Files.createTempDirectory("hnsw_v4").toString
     g.writeStore(s"$tmp/g.graph")
     for (mapped <- Seq(false, true)) {
@@ -134,7 +134,7 @@ class HnswUpsertSpec extends AnyFunSuite {
       assert(r.deletedCount == dead.length, s"mapped=$mapped lost tombstones")
       assert(r.liveSize == all.length - dead.length)
       assert(r.search(q, 10, 64).toSeq == want, s"mapped=$mapped diverged")
-      assert(r.searchI8(q, 10, 64).toSeq == want8,
+      assert(r.search(q, 10, 64, Hnsw.Flavor.I8).toSeq == want8,
         s"mapped=$mapped i8 flavor diverged")
       assert(r.search(q, 10, 64).map(_._1).toSet
         .intersect(dead.toSet).isEmpty)
@@ -183,7 +183,7 @@ class HnswUpsertSpec extends AnyFunSuite {
     // bit-identical to the cold build's, so a cold hash-sharded search
     // over (union minus deletes) must match only UP TO the deletes'
     // effect on the walk; the exact-equality anchor is compaction:
-    Hnsw.compactWarmed(key)
+    Hnsw.compactDispatched(spark, key, nShards = 4)
     assert(Hnsw.liveCountWarmed(key) == all.length - delIds.length)
     val compacted = Hnsw.searchWarm(qs, key, nShards = 4, k = 10, Metric.Dot,
       m = 8, efConstruction = 64, efSearch = 64)
@@ -261,7 +261,7 @@ class HnswUpsertSpec extends AnyFunSuite {
     // a quantized group must stay servable across upserts without an
     // n·dim re-quantize: insert writes the new row's codes through the
     // same F7 kernels quantizeStore uses, so an append-only insert into
-    // a quantized graph must serve searchI8 IDENTICALLY to quantizing
+    // a quantized graph must serve the i8 flavor IDENTICALLY to quantizing
     // the union graph from scratch (the graphs themselves are
     // bit-identical by the append-only gate above)
     val all = rows(400)
@@ -274,7 +274,8 @@ class HnswUpsertSpec extends AnyFunSuite {
     full.quantizeStore()
     for (qi <- Seq(3, 11, 390)) {
       val q = all(qi)._2
-      assert(inc.searchI8(q, 10, 64).toSeq == full.searchI8(q, 10, 64).toSeq,
+      assert(inc.search(q, 10, 64, Hnsw.Flavor.I8).toSeq ==
+        full.search(q, 10, 64, Hnsw.Flavor.I8).toSeq,
         s"extended i8 sidecar diverged from a fresh quantize at query $qi")
     }
   }
@@ -348,9 +349,9 @@ class HnswUpsertSpec extends AnyFunSuite {
     // canonical anchor, both serve flavors: the compacted group (with its
     // IN-TASK rebuilt i8 sidecars) serves bit-for-bit like a cold
     // build + quantize on the live corpus
-    def results(k2: String, quantized: Boolean) =
+    def results(k2: String, flavor: Hnsw.Flavor) =
       Hnsw.searchWarm(qs, k2, nShards = 4, k = 10, Metric.Dot, m = 8,
-        efConstruction = 64, efSearch = 64, quantized = quantized)
+        efConstruction = 64, efSearch = 64, flavor = flavor)
         .select("qid", "id", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
     val coldKey = "upsertspec_cdisp_cold"
@@ -359,10 +360,10 @@ class HnswUpsertSpec extends AnyFunSuite {
       Metric.Dot, m = 8, efConstruction = 64, efSearch = 64, nShards = 4,
       cacheKey = coldKey).count()
     Hnsw.quantizeWarmed(coldKey)
-    assert(results(key, quantized = false) == results(coldKey, quantized = false),
+    assert(results(key, Hnsw.Flavor.Contract) == results(coldKey, Hnsw.Flavor.Contract),
       "dispatched compaction diverged from the cold build on the live set")
-    assert(results(key, quantized = true) == results(coldKey, quantized = true),
-      "in-task i8 requantize diverged from a fresh cold-build quantize")
+    assert(results(key, Hnsw.Flavor.I8) == results(coldKey, Hnsw.Flavor.I8),
+      "in-task i8 re-quantize diverged from a fresh cold-build quantize")
     // loud-miss contract, like delete's
     val exN = intercept[Exception](
       Hnsw.compactDispatched(spark, "upsertspec_cdisp_none", nShards = 4))

@@ -90,7 +90,7 @@ class IndexStreamSpec extends AnyFunSuite {
 
     // compaction canonicalizes any micro-batch split, then the warm
     // group must equal a cold build on the full union bit-for-bit
-    Hnsw.compactWarmed(key)
+    Hnsw.compactDispatched(spark, key, nShards = 4)
     assert(Hnsw.liveCountWarmed(key) == all.count())
     def results(df: org.apache.spark.sql.DataFrame) =
       df.select("qid", "id", "rank").collect()

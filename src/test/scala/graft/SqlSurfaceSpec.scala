@@ -235,15 +235,14 @@ class SqlSurfaceSpec extends AnyFunSuite {
       s"SELECT * FROM graft_ann_search_hnsw('emb_hnsw_fl', 'hnsw_flavor_queries', 10, 64, '$flavor')")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    def warm(quantized: Boolean, auto: Boolean) =
+    def warm(flavor: Hnsw.Flavor) =
       Hnsw.searchWarm(qs, key, nShards = 4, k = 10, Metric.Dot, m = 8,
         efConstruction = 64, efSearch = 64, centroids = router.centroids,
-        routeProbe = 2, allowMissing = true, quantized = quantized,
-        autoFlavor = auto).collect()
+        routeProbe = 2, allowMissing = true, flavor = flavor).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    assert(tvf("i8") == warm(quantized = true, auto = false),
-      "TVF i8 flavor diverged from searchWarm(quantized)")
-    assert(tvf("contract") == warm(quantized = false, auto = false),
+    assert(tvf("i8") == warm(Hnsw.Flavor.I8),
+      "TVF i8 flavor diverged from searchWarm(Flavor.I8)")
+    assert(tvf("contract") == warm(Hnsw.Flavor.Contract),
       "TVF contract flavor diverged from the contract walk")
     // this group is MAPPED: the auto pick serves i8 regardless of the
     // heap crossover threshold (the mapped contract walk prices BB
@@ -251,9 +250,9 @@ class SqlSurfaceSpec extends AnyFunSuite {
     val saved = Hnsw.autoI8Bytes
     try {
       Hnsw.autoI8Bytes = 0L
-      assert(tvf("auto") == warm(quantized = true, auto = false))
+      assert(tvf("auto") == warm(Hnsw.Flavor.I8))
       Hnsw.autoI8Bytes = Long.MaxValue
-      assert(tvf("auto") == warm(quantized = true, auto = false),
+      assert(tvf("auto") == warm(Hnsw.Flavor.I8),
         "auto on a mapped group must serve the i8 walk")
     } finally Hnsw.autoI8Bytes = saved
     // malformed flavor and cold-cache serving both fail loudly
@@ -448,7 +447,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
       val twin = Hnsw.searchWarm(qs, key, nShards = 4, k = 10, Metric.Dot,
         m = 8, efConstruction = 64, efSearch = 64,
         centroids = router.centroids, routeProbe = 2, allowMissing = true,
-        quantized = flavor == "i8")
+        flavor = if (flavor == "i8") Hnsw.Flavor.I8 else Hnsw.Flavor.Contract)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       assert(after.toSet == twin.toSet, s"$flavor: TVF != searchWarm twin")
     }
