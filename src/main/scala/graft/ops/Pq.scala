@@ -89,8 +89,7 @@ object Pq {
                     k: Int, l2: Boolean = true, idCol: String = "id"): DataFrame = {
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     import graft.functions.expressions.{BatchAdcScores, PqOps}
-    val q = queries.select(col("qid"), col("qvec")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
+    val q = collectQueryVecs(queries)
     val qids = q.map(_._1)
     val luts = q.map { case (_, qv) =>
       PqOps.lut(new GenericArrayData(qv), books, l2).toFloatArray()
@@ -118,8 +117,7 @@ object Pq {
     import graft.functions.expressions.PqOps
     val spark = blocked.sparkSession
     import spark.implicits._
-    val q = queries.select(col("qid"), col("qvec")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
+    val q = collectQueryVecs(queries)
     val qids = q.map(_._1)
     val luts = q.map { case (_, qv) =>
       PqOps.lut(new GenericArrayData(qv), books, l2).toFloatArray()
@@ -213,18 +211,11 @@ object Pq {
   def searchFastScan(blocked4: DataFrame, queries: DataFrame, books: Codebooks,
                      k: Int, l2: Boolean = true, cand: Int = 0): DataFrame = {
     import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import graft.functions.expressions.{PqOps, Simd}
-    import graft.functions.expressions.VectorKernels
-    val m4 = books.length
-    require(books.forall(_.length == 16), "pq4 codebooks must have ksub=16")
-    require(m4 % 2 == 0, s"pq4 m4 must be even, got $m4")
-    require(m4 <= 256, // u16 lane-sum bound; see PqOps.quantizeLuts
-      s"pq4 supports m4 <= 256 (u16 lane-sum bound), got $m4")
-    val spMax = m4 / 2
+    import graft.functions.expressions.PqOps
+    val m4 = requirePq4(books)
     val spark = blocked4.sparkSession
     import spark.implicits._
-    val q = queries.select(col("qid"), col("qvec")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
+    val q = collectQueryVecs(queries)
     val qids = q.map(_._1)
     val lutsF = q.map { case (_, qv) =>
       PqOps.lut(new GenericArrayData(qv), books, l2).toFloatArray()
@@ -232,91 +223,136 @@ object Pq {
     val larger = !l2
     val tables = lutsF.map(PqOps.quantizeLuts(_, m4, larger)._1)
     val nq = qids.length
-    val c = if (cand > 0) cand else math.max(2 * k, 64)
-    val simd = VectorKernels.simdEnabled && Simd.pq4Available
+    val c = candidateBound(cand, k)
     val partials = blocked4.select(col("ids"), col("codes"))
       .as[(Array[Long], Array[Byte])]
       .mapPartitions { it =>
-        // per-query bounded candidate reservoirs (quantized score,
-        // id-tie-broken — the TopKAggregator.consider policy on ints)
-        val rIds = Array.ofDim[Long](nq, c)
-        val rQs = Array.ofDim[Int](nq, c)
-        val rStash = Array.ofDim[Byte](nq, c * spMax)
-        val rN = new Array[Int](nq)
-        val rWorst = new Array[Int](nq)
-        def worseThan(q1: Int, id1: Long, q2: Int, id2: Long): Boolean =
-          q1 > q2 || (q1 == q2 && id1 > id2)
-        def recomputeWorst(qi: Int): Unit = {
-          val qs = rQs(qi); val ids = rIds(qi)
-          var w = 0
-          var i = 1
-          while (i < rN(qi)) {
-            if (worseThan(qs(i), ids(i), qs(w), ids(w))) w = i
-            i += 1
-          }
-          rWorst(qi) = w
-        }
-        val out = new Array[Short](64)
+        val res = Array.fill(nq)(new Pq4Reservoir(c, m4))
         while (it.hasNext) {
           val (ids, blob) = it.next()
-          val vpr = ids.length
-          val groups = (vpr + 63) / 64
-          require(blob.length == groups * spMax * 64,
-            s"pq4 blob ${blob.length} != $groups groups × $spMax × 64")
-          var g = 0
-          while (g < groups) {
-            val gOff = g * spMax * 64
-            val len = math.min(64, vpr - g * 64)
-            var qi = 0
-            while (qi < nq) {
-              if (simd) Simd.pq4Group(blob, gOff, m4, tables(qi), out)
-              else PqOps.pq4GroupRef(blob, gOff, m4, tables(qi), out)
-              val qs = rQs(qi); val cid = rIds(qi)
-              var r = 0
-              while (r < len) {
-                val sc = out(r) & 0xffff
-                val id = ids(g * 64 + r)
-                if (rN(qi) < c) {
-                  val n = rN(qi)
-                  cid(n) = id; qs(n) = sc
-                  var sp = 0
-                  val sOff = n * spMax
-                  while (sp < spMax) {
-                    rStash(qi)(sOff + sp) = blob(gOff + sp * 64 + r); sp += 1
-                  }
-                  rN(qi) = n + 1
-                  if (rN(qi) == c) recomputeWorst(qi)
-                } else {
-                  val w = rWorst(qi)
-                  if (worseThan(qs(w), cid(w), sc, id)) {
-                    cid(w) = id; qs(w) = sc
-                    var sp = 0
-                    val sOff = w * spMax
-                    while (sp < spMax) {
-                      rStash(qi)(sOff + sp) = blob(gOff + sp * 64 + r); sp += 1
-                    }
-                    recomputeWorst(qi)
-                  }
-                }
-                r += 1
-              }
-              qi += 1
-            }
-            g += 1
-          }
+          var qi = 0
+          while (qi < nq) { res(qi).scan(ids, blob, tables(qi)); qi += 1 }
         }
-        // exact float-ADC re-rank of every survivor (same lookups as the
-        // 8-bit adc kernels — quantization never touches emitted scores)
         (0 until nq).iterator.flatMap { qi =>
-          val lf = lutsF(qi)
-          (0 until rN(qi)).iterator.map { i =>
-            (qids(qi), rIds(qi)(i),
-              PqOps.adcNibbles(rStash(qi), i * spMax, spMax, lf))
-          }
+          val r = res(qi)
+          (0 until r.n).iterator.map(i => (qids(qi), r.ids(i), r.adc(i, lutsF(qi))))
         }
       }
     TopK.perGroup(partials.toDF("qid", "gid", "score"),
       "qid", "gid", "score", k, larger)
+  }
+
+  /** The pq4 codebook shape every fastscan entry point needs: ksub = 16
+    * per book (one 4-bit code), m4 even (two codes per packed byte) and
+    * m4 <= 256 (the group kernels' u16 lane-sum bound; see
+    * [[graft.functions.expressions.PqOps.quantizeLuts]]). Returns m4.
+    */
+  private def requirePq4(books: Codebooks): Int = {
+    val m4 = books.length
+    require(books.forall(_.length == 16), "pq4 codebooks must have ksub=16")
+    require(m4 % 2 == 0, s"pq4 m4 must be even, got $m4")
+    require(m4 <= 256, s"pq4 supports m4 <= 256 (u16 lane-sum bound), got $m4")
+    m4
+  }
+
+  /** Fastscan reservoir bound: `cand` when given, else 2k (at least 64). */
+  private def candidateBound(cand: Int, k: Int): Int =
+    if (cand > 0) cand else math.max(2 * k, 64)
+
+  /** Residual float LUT of `qvec − centroid` and its u8 register tables
+    * — the per-(query, cell) scoring state of the IVF fastscan paths.
+    */
+  private def residualTables(qvec: Array[Float], centroid: Array[Float],
+                             books: Codebooks): (Array[Float], Array[Byte]) = {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import graft.functions.expressions.PqOps
+    val res = new Array[Float](qvec.length)
+    var d = 0
+    while (d < qvec.length) { res(d) = qvec(d) - centroid(d); d += 1 }
+    val lutF = PqOps.lut(new GenericArrayData(res), books, l2 = true).toFloatArray()
+    (lutF, PqOps.quantizeLuts(lutF, books.length, larger = false)._1)
+  }
+
+  private lazy val pq4Simd = {
+    import graft.functions.expressions.{Simd, VectorKernels}
+    VectorKernels.simdEnabled && Simd.pq4Available
+  }
+
+  /** Bounded fastscan candidate reservoir shared by every pq4 path: keeps
+    * the `c` best rows by (quantized score, id) — a total order, so the
+    * kept set never depends on arrival order (segments, partitions,
+    * file splits) — with each survivor's nibble-packed code slice stashed
+    * for the exact float-ADC re-rank. Quantized scores compare only
+    * under ONE register table, so each reservoir serves one LUT: one per
+    * query on the flat path, one per (query, cell) on the IVF paths.
+    */
+  private final class Pq4Reservoir(c: Int, m4: Int) {
+    import graft.functions.expressions.{PqOps, Simd}
+    private val spMax = m4 / 2
+    val ids = new Array[Long](c)
+    private val qs = new Array[Int](c)
+    private val stash = new Array[Byte](c * spMax)
+    private val out = new Array[Short](64)
+    var n = 0
+    private var worst = 0
+
+    /** Offer every row of one blocked segment (ids, nibble blob) scored
+      * with the u8 register `tab`. The blob must hold exactly the
+      * segment's 64-row groups at this reservoir's m4: a longer or
+      * shorter one means codes of another shape, never a partial answer.
+      */
+    def scan(segIds: Array[Long], blob: Array[Byte], tab: Array[Byte]): Unit = {
+      val vpr = segIds.length
+      val groups = (vpr + 63) / 64
+      require(blob.length == groups * spMax * 64,
+        s"pq4 blob ${blob.length} != $groups groups × $spMax × 64")
+      var g = 0
+      while (g < groups) {
+        val gOff = g * spMax * 64
+        if (pq4Simd) Simd.pq4Group(blob, gOff, m4, tab, out)
+        else PqOps.pq4GroupRef(blob, gOff, m4, tab, out)
+        val len = math.min(64, vpr - g * 64)
+        var r = 0
+        while (r < len) {
+          offer(segIds(g * 64 + r), out(r) & 0xffff, blob, gOff + r)
+          r += 1
+        }
+        g += 1
+      }
+    }
+
+    private def offer(id: Long, sc: Int, blob: Array[Byte], at: Int): Unit =
+      if (n < c) {
+        put(n, id, sc, blob, at)
+        n += 1
+        if (n == c) recomputeWorst()
+      } else if (qs(worst) > sc || (qs(worst) == sc && ids(worst) > id)) {
+        put(worst, id, sc, blob, at)
+        recomputeWorst()
+      }
+
+    private def put(i: Int, id: Long, sc: Int, blob: Array[Byte], at: Int): Unit = {
+      ids(i) = id; qs(i) = sc
+      var sp = 0
+      while (sp < spMax) { stash(i * spMax + sp) = blob(at + sp * 64); sp += 1 }
+    }
+
+    private def recomputeWorst(): Unit = {
+      var w = 0
+      var i = 1
+      while (i < n) {
+        if (qs(i) > qs(w) || (qs(i) == qs(w) && ids(i) > ids(w))) w = i
+        i += 1
+      }
+      worst = w
+    }
+
+    /** Exact float-ADC score of survivor `i` under `lutF` (the same
+      * lookups as the 8-bit adc kernels — quantization never touches an
+      * emitted score).
+      */
+    def adc(i: Int, lutF: Array[Float]): Double =
+      PqOps.adcNibbles(stash, i * spMax, spMax, lutF)
   }
 
   /** IVF-pruned 4-bit fastscan probe — FAISS `IndexIVFPQFastScan`'s shape
@@ -333,7 +369,8 @@ object Pq {
     * re-ranked with its own cell's EXACT float LUT before the global
     * top-k merge — emitted scores are exact residual-ADC sums, identical
     * to [[ivfpqSearch]]'s (Pq4Spec gates full-probe/full-candidate
-    * equality).
+    * equality). It shares the reservoir with [[searchFastScan]] and
+    * [[searchLocalIvf4]].
     *
     * Scale shape: LUT tables are query-batch × nprobe bounded and ship in
     * the task closure like [[searchFastScan]]'s; shuffle carries
@@ -359,62 +396,25 @@ object Pq {
                                          qArr: Array[(Long, Array[Float])],
                                          nprobe: Int, k: Int,
                                          cand: Int = 0): DataFrame = {
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import graft.functions.expressions.{CentroidOps, PqOps, Simd}
-    import graft.functions.expressions.VectorKernels
+    import graft.functions.expressions.CentroidOps
     import spark.implicits._
     val books = idx.books
-    val m4 = books.length
-    require(books.forall(_.length == 16), "pq4 codebooks must have ksub=16")
-    require(m4 % 2 == 0, s"pq4 m4 must be even, got $m4")
-    require(m4 <= 256, // u16 lane-sum bound; see PqOps.quantizeLuts
-      s"pq4 supports m4 <= 256 (u16 lane-sum bound), got $m4")
-    val spMax = m4 / 2
+    val m4 = requirePq4(books)
     val coarse = idx.coarse
-    val q = qArr
-    val qids = q.map(_._1)
-    val nq = q.length
+    val qids = qArr.map(_._1)
+    val nq = qArr.length
     val np = math.min(nprobe, coarse.length)
-    val c = if (cand > 0) cand else math.max(2 * k, 64)
+    val c = candidateBound(cand, k)
     // per (query, probe slot): probed cell, residual float LUT, u8 tables
-    val probes = q.map(x => CentroidOps.topNprobeF(x._2, coarse, np))
-    val lutsF = Array.ofDim[Array[Float]](nq, np)
-    val tables = Array.ofDim[Array[Byte]](nq, np)
-    var qi0 = 0
-    while (qi0 < nq) {
-      val qv = q(qi0)._2
-      var p = 0
-      while (p < np) {
-        val cen = coarse(probes(qi0)(p))
-        val res = new Array[Float](qv.length)
-        var d = 0
-        while (d < qv.length) { res(d) = qv(d) - cen(d); d += 1 }
-        val lf = PqOps.lut(new GenericArrayData(res), books, l2 = true)
-          .toFloatArray()
-        lutsF(qi0)(p) = lf
-        tables(qi0)(p) = PqOps.quantizeLuts(lf, m4, larger = false)._1
-        p += 1
-      }
-      qi0 += 1
-    }
+    val probes = qArr.map(x => CentroidOps.topNprobeF(x._2, coarse, np))
+    val luts = Array.tabulate(nq, np)((qi, p) =>
+      residualTables(qArr(qi)._2, coarse(probes(qi)(p)), books))
+    val lutsF = luts.map(_.map(_._1))
+    val tables = luts.map(_.map(_._2))
     // cell -> packed (qi * np + p) slots that probe it
-    val byCell: Map[Int, Array[Int]] = {
-      val mb = scala.collection.mutable.HashMap
-        .empty[Int, scala.collection.mutable.ArrayBuffer[Int]]
-      var qi = 0
-      while (qi < nq) {
-        var p = 0
-        while (p < np) {
-          mb.getOrElseUpdate(probes(qi)(p),
-            scala.collection.mutable.ArrayBuffer.empty[Int]) += (qi * np + p)
-          p += 1
-        }
-        qi += 1
-      }
-      mb.map { case (cid, b) => cid -> b.toArray }.toMap
-    }
+    val byCell: Map[Int, Array[Int]] =
+      Array.range(0, nq * np).groupBy(slot => probes(slot / np)(slot % np))
     val probedCells = byCell.keys.toArray.sorted
-    val simd = VectorKernels.simdEnabled && Simd.pq4Available
     // LUT state rides a broadcast, not the task closure: at Q=512 ×
     // nprobe=8 the tables + float LUTs are ~50 MB, which a closure would
     // re-deserialize PER TASK while a broadcast unpacks once per executor.
@@ -430,76 +430,18 @@ object Pq {
       .as[(Int, Array[Long], Array[Byte])]
       .mapPartitions { it =>
         val (tables, lutsF, byCell) = bc.value
-        // per-(query, cell) bounded reservoirs, lazily created for the
-        // cells this partition actually holds; final content is the top-c
-        // by (quantized score, id) — a total order, so arrival order
-        // (and file-split planning) never changes the kept set
-        final class Res {
-          val ids = new Array[Long](c); val qs = new Array[Int](c)
-          val stash = new Array[Byte](c * spMax)
-          var n = 0; var worst = 0
-          def recomputeWorst(): Unit = {
-            var w = 0
-            var i = 1
-            while (i < n) {
-              if (qs(i) > qs(w) || (qs(i) == qs(w) && ids(i) > ids(w))) w = i
-              i += 1
-            }
-            worst = w
-          }
-        }
-        val res = new java.util.HashMap[Int, Res]()
-        val out = new Array[Short](64)
+        // per-(query, cell) reservoirs, lazily created for the cells this
+        // partition actually holds
+        val res = new java.util.HashMap[Int, Pq4Reservoir]()
         while (it.hasNext) {
           val (cell, ids, blob) = it.next()
           val slots = byCell.getOrElse(cell, Array.emptyIntArray)
-          val vpr = ids.length
-          val groups = (vpr + 63) / 64
-          require(blob.length == groups * spMax * 64,
-            s"pq4 blob ${blob.length} != $groups groups × $spMax × 64")
           var si = 0
           while (si < slots.length) {
             val slot = slots(si)
-            val tab = tables(slot / np)(slot % np)
             var r0 = res.get(slot)
-            if (r0 == null) { r0 = new Res; res.put(slot, r0) }
-            val qs = r0.qs; val cid = r0.ids
-            var g = 0
-            while (g < groups) {
-              val gOff = g * spMax * 64
-              val len = math.min(64, vpr - g * 64)
-              if (simd) Simd.pq4Group(blob, gOff, m4, tab, out)
-              else PqOps.pq4GroupRef(blob, gOff, m4, tab, out)
-              var r = 0
-              while (r < len) {
-                val sc = out(r) & 0xffff
-                val id = ids(g * 64 + r)
-                if (r0.n < c) {
-                  val n = r0.n
-                  cid(n) = id; qs(n) = sc
-                  var sp = 0
-                  val sOff = n * spMax
-                  while (sp < spMax) {
-                    r0.stash(sOff + sp) = blob(gOff + sp * 64 + r); sp += 1
-                  }
-                  r0.n = n + 1
-                  if (r0.n == c) r0.recomputeWorst()
-                } else {
-                  val w = r0.worst
-                  if (qs(w) > sc || (qs(w) == sc && cid(w) > id)) {
-                    cid(w) = id; qs(w) = sc
-                    var sp = 0
-                    val sOff = w * spMax
-                    while (sp < spMax) {
-                      r0.stash(sOff + sp) = blob(gOff + sp * 64 + r); sp += 1
-                    }
-                    r0.recomputeWorst()
-                  }
-                }
-                r += 1
-              }
-              g += 1
-            }
+            if (r0 == null) { r0 = new Pq4Reservoir(c, m4); res.put(slot, r0) }
+            r0.scan(ids, blob, tables(slot / np)(slot % np))
             si += 1
           }
         }
@@ -508,10 +450,7 @@ object Pq {
         res.entrySet().iterator().asScala.flatMap { e =>
           val slot = e.getKey; val r0 = e.getValue
           val lf = lutsF(slot / np)(slot % np)
-          (0 until r0.n).iterator.map { i =>
-            (qids(slot / np), r0.ids(i),
-              PqOps.adcNibbles(r0.stash, i * spMax, spMax, lf))
-          }
+          (0 until r0.n).iterator.map(i => (qids(slot / np), r0.ids(i), r0.adc(i, lf)))
         }
       }
     TopK.perGroup(partials.toDF("qid", "gid", "score"),
@@ -1001,7 +940,7 @@ object Pq {
     * route, the per-cell residual register LUTs, the nibble-group scan
     * with per-cell quantized reservoirs, the float-ADC re-rank, and the
     * exact-L2 refine all run on the calling thread. Candidate selection
-    * replicates [[searchFastScanIvf]]'s exactly (same reservoir bound and
+    * shares the reservoir with [[searchFastScanIvf]] (same bound and
     * (quantized score, id) policy, same float re-rank, same global
     * (score, id) top-refineK), and the refine replays [[Search.refine]]'s
     * l2Sq ranking — results are IDENTICAL to
@@ -1018,102 +957,42 @@ object Pq {
   def searchLocalIvf4(qvec: Array[Float], idx: Index, cacheKey: String,
                       nprobe: Int, k: Int, refineK: Int = 100,
                       exclude: Long => Boolean = null): Array[(Long, Double)] = {
-    import graft.functions.expressions.{CentroidOps, PqOps, Simd, VectorKernels}
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import graft.functions.expressions.{CentroidOps, VectorKernels}
+    val m4 = requirePq4(idx.books)
     val img = localCache.get(cacheKey)
     require(img != null,
       s"no warmed ivf4 serving image under '$cacheKey' — call warmLocalIvf4 first")
     require(refineK > k, // the Spark twin skips the refine at refineK <= k
       s"searchLocalIvf4 always refines: need refineK ($refineK) > k ($k)")
-    val books = idx.books
-    val m4 = books.length
-    val spMax = m4 / 2
     val coarse = idx.coarse
     val np = math.min(nprobe, coarse.length)
     val kSearch = math.max(refineK, k)
-    val c = math.max(2 * kSearch, 64)
-    val simd = VectorKernels.simdEnabled && Simd.pq4Available
+    val c = candidateBound(0, kSearch)
     // global candidate pool (score asc, id tie): collected per cell after
     // the float re-rank, exactly the rows the Spark path's top-k merge sees
     val candIds = new Array[Long](np * c)
     val candScores = new Array[Double](np * c)
     var nCand = 0
     val probes = CentroidOps.topNprobeF(qvec, coarse, np)
-    val out = new Array[Short](64)
     var p = 0
     while (p < np) {
       val cell = probes(p)
       val cellSegs = img.cellSegs.get(Integer.valueOf(cell))
       if (cellSegs != null) {
-        val cen = coarse(cell)
-        val res = new Array[Float](qvec.length)
-        var d0 = 0
-        while (d0 < qvec.length) { res(d0) = qvec(d0) - cen(d0); d0 += 1 }
-        val lutF = PqOps.lut(new GenericArrayData(res), books, l2 = true)
-          .toFloatArray()
-        val tab = PqOps.quantizeLuts(lutF, m4, larger = false)._1
-        // per-cell reservoir — same policy as searchFastScanIvf's Res
-        val rIds = new Array[Long](c)
-        val rQs = new Array[Int](c)
-        val rStash = new Array[Byte](c * spMax)
-        var rN = 0
-        var rWorst = 0
-        def recomputeWorst(): Unit = {
-          var w = 0
-          var i = 1
-          while (i < rN) {
-            if (rQs(i) > rQs(w) || (rQs(i) == rQs(w) && rIds(i) > rIds(w))) w = i
-            i += 1
-          }
-          rWorst = w
-        }
-        // every blocked SEGMENT of this cell streams through the shared
-        // per-cell reservoir — the group offsets are segment-local (each
-        // blob's ragged tail group still occupies a full spMax·64 slot,
-        // so offsets cannot carry across segment boundaries)
+        val (lutF, tab) = residualTables(qvec, coarse(cell), idx.books)
+        // every blocked SEGMENT of this cell streams through the one
+        // per-cell reservoir
+        val res = new Pq4Reservoir(c, m4)
         var si = 0
         while (si < cellSegs.length) {
-        val (ids, blob) = cellSegs(si)
-        val vpr = ids.length
-        val groups = (vpr + 63) / 64
-        var g = 0
-        while (g < groups) {
-          val gOff = g * spMax * 64
-          val len = math.min(64, vpr - g * 64)
-          if (simd) Simd.pq4Group(blob, gOff, m4, tab, out)
-          else PqOps.pq4GroupRef(blob, gOff, m4, tab, out)
-          var r = 0
-          while (r < len) {
-            val sc = out(r) & 0xffff
-            val id = ids(g * 64 + r)
-            if (rN < c) {
-              rIds(rN) = id; rQs(rN) = sc
-              var sp = 0
-              val sOff = rN * spMax
-              while (sp < spMax) { rStash(sOff + sp) = blob(gOff + sp * 64 + r); sp += 1 }
-              rN += 1
-              if (rN == c) recomputeWorst()
-            } else {
-              val w = rWorst
-              if (rQs(w) > sc || (rQs(w) == sc && rIds(w) > id)) {
-                rIds(w) = id; rQs(w) = sc
-                var sp = 0
-                val sOff = w * spMax
-                while (sp < spMax) { rStash(sOff + sp) = blob(gOff + sp * 64 + r); sp += 1 }
-                recomputeWorst()
-              }
-            }
-            r += 1
-          }
-          g += 1
-        }
-        si += 1
+          res.scan(cellSegs(si)._1, cellSegs(si)._2, tab)
+          si += 1
         }
         // float-ADC re-rank with this cell's exact LUT into the pool
         var i = 0
-        while (i < rN) {
-          candIds(nCand) = rIds(i)
-          candScores(nCand) = PqOps.adcNibbles(rStash, i * spMax, spMax, lutF)
+        while (i < res.n) {
+          candIds(nCand) = res.ids(i)
+          candScores(nCand) = res.adc(i, lutF)
           nCand += 1
           i += 1
         }

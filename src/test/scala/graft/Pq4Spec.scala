@@ -86,7 +86,7 @@ class Pq4Spec extends AnyFunSuite {
   test("m4 > 256 is rejected (u16 lane-sum bound), 256 is accepted") {
     // m4·255 must fit u16: past 256 the group sums would wrap SILENTLY
     // (wrong survivors, collapsed recall) — the contract is a loud error
-    // at the LUT chokepoint and both search entry points.
+    // at the LUT chokepoint and all three search entry points.
     val lut384 = new Array[Float](384 * 16)
     intercept[IllegalArgumentException] {
       PqOps.quantizeLuts(lut384, 384, larger = false)
@@ -95,8 +95,15 @@ class Pq4Spec extends AnyFunSuite {
     val (t, _, _) = PqOps.quantizeLuts(lut256, 256, larger = false)
     assert(t.length == 256 * 64)
     val books384 = Array.fill(384)(Array.fill(16)(new Array[Float](4)))
-    intercept[IllegalArgumentException] {
-      Pq.searchFastScan(spark.emptyDataFrame, queries, books384, k = 10)
+    val idx384 = Pq.Index(Array(new Array[Float](384 * 4)), books384, "unused")
+    Seq[() => Any](
+      () => Pq.searchFastScan(spark.emptyDataFrame, queries, books384, k = 10),
+      () => Pq.searchFastScanIvf(idx384, spark, queries, nprobe = 1, k = 10),
+      () => Pq.searchLocalIvf4(new Array[Float](384 * 4), idx384, "unused",
+        nprobe = 1, k = 10)
+    ).foreach { call =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("m4"), e.getMessage)
     }
   }
 
@@ -393,6 +400,86 @@ class Pq4Spec extends AnyFunSuite {
     Pq.warmLocalIvf4(spark, idx, lk, grown)
     localEqualsSpark(grown)
     Pq.invalidateLocal(lk)
+  }
+
+  test("local tier rejects a segment packed at another m4 than the books") {
+    // books of m4/2 over a table packed at m4: every blob is twice what
+    // the books score, and serving its prefix would be a silent partial
+    // answer — the shared segment scan must fail loudly instead
+    val half = Pq.Index(ivf4.coarse, ivf4.books.take(m4 / 2), ivf4.path)
+    val lk = "pq4spec_misshaped"
+    val qvec = base.filter(col("id") === 0L).select(col("vec")).head()
+      .getSeq[Float](0).toArray
+    Pq.warmLocalIvf4(spark, half, lk, base)
+    try {
+      val e = intercept[IllegalArgumentException] {
+        Pq.searchLocalIvf4(qvec, half, lk, nprobe = 8, k = 10, refineK = 20)
+      }
+      assert(e.getMessage.contains("pq4 blob"), e.getMessage)
+    } finally Pq.invalidateLocal(lk)
+  }
+
+  test("exact score ties: flat, IVF and local fastscan cut a tie group " +
+    "at its lowest ids") {
+    // 80 copies of one fixture row under fresh ids, queried with that
+    // row's vector: every copy has the same code, hence one quantized and
+    // one exact score, and the group outnumbers the reservoir bound — the
+    // reservoir itself must cut the ties by id. Flat: cand = 16 against
+    // the copies' share of each id-range partition; IVF: c = 64
+    // (2·refineK = 40 → 64) against all 81 in the one probed cell, which
+    // keeps the tie group the strict best on every path.
+    val tieId = 7L
+    val row = base.filter(col("id") === tieId)
+    val copies = row.crossJoin(spark.range(80).toDF("j"))
+      .select((col("j") + 1000L).as("id"), col("vec"))
+    val grown = base.union(copies)
+    val qvec = row.select(col("vec")).head().getSeq[Float](0).toArray
+    val q = row.select(lit(0L).as("qid"), col("vec").as("qvec"))
+    // the 10 lowest ids sharing the tie row's (id-less) code key
+    def lowestTies(keyed: org.apache.spark.sql.DataFrame): Seq[Long] = {
+      val all = keyed.collect().map(r => r.getLong(0) -> r.toSeq.tail)
+      val want = all.find(_._1 == tieId).get._2
+      all.filter(_._2 == want).map(_._1).sorted.take(10).toSeq
+    }
+    def idsAndScores(df: org.apache.spark.sql.DataFrame) = {
+      val rows = df.orderBy("rank").collect()
+      (rows.map(_.getAs[Long]("id")).toSeq, rows.map(_.getAs[Double]("score")))
+    }
+    val tmp = java.nio.file.Files.createTempDirectory("pq4_ties").toString
+    // flat fastscan
+    QuantizedTables.writePq4Blocked(Pq.encode(grown, books), s"$tmp/flat")
+    val (flatIds, flatScores) = idsAndScores(Pq.searchFastScan(
+      spark.read.parquet(s"$tmp/flat"), q, books, k = 10, cand = 16))
+    val flatWant = lowestTies(Pq.encode(grown, books))
+    assert(flatWant.length == 10 && flatWant.head == tieId)
+    assert(flatIds == flatWant, s"flat fastscan cut the ties at $flatIds")
+    assert(flatScores.distinct.length == 1, "tied rows scored differently")
+    // IVF fastscan over the grown table under ivf4's quantizer and books
+    val resid = Ivf.assign(grown, ivf4.coarse)
+      .withColumn("residual",
+        Pq.centroidResidual(col("vec"), col("cluster_id"), ivf4.coarse))
+      .select(col("id"), col("cluster_id"),
+        Pq.pqEncode(col("residual"), ivf4.books).as("codes"))
+    QuantizedTables.writePq4BlockedClustered(resid, s"$tmp/ivf")
+    val idx = Pq.Index(ivf4.coarse, ivf4.books, s"$tmp/ivf")
+    val (ivfIds, ivfScores) =
+      idsAndScores(Pq.searchFastScanIvf(idx, spark, q, nprobe = 1, k = 10))
+    val ivfWant = lowestTies(resid)
+    assert(ivfIds == ivfWant, s"IVF fastscan cut the ties at $ivfIds")
+    assert(ivfScores.distinct.length == 1, "tied rows scored differently")
+    // the local tier equals the Spark refined plan row for row
+    val lk = "pq4spec_ties"
+    Pq.warmLocalIvf4(spark, idx, lk, grown)
+    try {
+      val sparkSide = Pq.searchFastScanIvfRefined(grown, idx, q, nprobe = 1,
+        k = 10, refineK = 20).orderBy("rank").collect()
+        .map(r => (r.getAs[Long]("id"), r.getAs[Double]("score"))).toSeq
+      val local = Pq.searchLocalIvf4(qvec, idx, lk, nprobe = 1, k = 10,
+        refineK = 20).toSeq
+      assert(local == sparkSide, s"local $local != spark $sparkSide")
+      assert(local.map(_._1) == ivfWant && local.forall(_._2 == 0.0),
+        s"refined ties not cut at the lowest ids: $local")
+    } finally Pq.invalidateLocal(lk)
   }
 
   test("serve-time exclusions: takedowns suppressed identically across " +
