@@ -148,19 +148,19 @@ object SparkEntry {
     pred
   }
 
-  /** J1+K1+A1 via J2: exact flat-scan top-k (dot), batched-scan plan —
-    * the base streams once and scores all queries per row
-    * (`apps/nvdb_bench.cpp:47-159`); bit-identical to the broadcast-NLJ
-    * path (ScaleSpec gates equality).
+  /** J1+K1+A1 via J2: exact flat-scan top-k (dot) — the base streams once,
+    * each row scores all queries into per-partition top-k buffers
+    * (`apps/nvdb_bench.cpp:47-159`, `Search.exactTopKFused`); bit-identical
+    * to the broadcast-NLJ path (ScaleSpec gates equality).
     */
   private def knnDot(spark: SparkSession, dir: String): DataFrame =
-    Search.exactTopKBatched(embBase(spark, dir), embQueries(spark, dir), k = 10, Metric.Dot)
+    Search.exactTopKFused(embBase(spark, dir), embQueries(spark, dir), k = 10, Metric.Dot)
       .select(col("qid"), col("id"), round(col("score"), 4).as("score"))
       .orderBy(col("qid"), col("score").desc, col("id"))
 
-  /** K3/K4: exact k-nearest under squared L2 (batched scan). */
+  /** K3/K4: exact k-nearest under squared L2 (the same flat scan). */
   private def knnL2(spark: SparkSession, dir: String): DataFrame =
-    Search.exactTopKBatched(embBase(spark, dir), embQueries(spark, dir), k = 10, Metric.L2)
+    Search.exactTopKFused(embBase(spark, dir), embQueries(spark, dir), k = 10, Metric.L2)
       .select(col("qid"), col("id"), round(col("score"), 4).as("dist"))
       .orderBy(col("qid"), col("dist"), col("id"))
 
@@ -329,7 +329,7 @@ object SparkEntry {
     }),
     // C5+J4+A3: GT build with both metrics must agree on normalized vectors.
     // r18 (guide §2.4): ONE base scan builds BOTH metrics' ground truth
-    // (Search.groundTruthBoth — batched kernels, negated-L2 shared top-k,
+    // (Search.groundTruthBoth — flat-scan kernels, negated-L2 shared top-k,
     // spec-gated element-equal to the two-groundTruth shape); the former
     // plan scanned and scored the base twice and joined the results.
     "v6_dot_l2_recall" -> ((s, dir) => {
@@ -346,7 +346,7 @@ object SparkEntry {
     "v7_knn_half" -> ((s, dir) => {
       val hbase = Tables.embeddings(s, dir).select(col("vec_id").as("id"),
         VectorFunctions.halfEncode(col("embedding")).as("hbits"))
-      Search.exactTopKBatchedHalf(hbase, embQueries(s, dir), k = 10)
+      Search.exactTopKFusedHalf(hbase, embQueries(s, dir), k = 10)
         .select(col("qid"), col("id"), round(col("score"), 4).as("score"))
         .orderBy(col("qid"), col("score").desc, col("id"))
     }),
@@ -356,13 +356,13 @@ object SparkEntry {
       val qbase = Tables.embeddings(s, dir).select(col("vec_id").as("id"),
         VectorFunctions.quantizeI8(col("embedding")).as("q"))
         .select(col("id"), col("q.codes").as("codes"), col("q.scale").as("scale"))
-      Search.exactTopKBatchedI8(qbase, embQueries(s, dir), k = 10)
+      Search.exactTopKFusedI8(qbase, embQueries(s, dir), k = 10)
         .select(col("qid"), col("id"), round(col("score"), 4).as("score"))
         .orderBy(col("qid"), col("score").desc, col("id"))
     }),
-    // Cosine top-k (same batched flat-scan plan, cosine kernel).
+    // Cosine top-k (the same exact flat-scan plan, cosine kernel).
     "v9_knn_cosine" -> ((s, dir) => {
-      Search.exactTopKBatched(embBase(s, dir), embQueries(s, dir), k = 10, Metric.Cosine)
+      Search.exactTopKFused(embBase(s, dir), embQueries(s, dir), k = 10, Metric.Cosine)
         .select(col("qid"), col("id"), round(col("score"), 4).as("score"))
         .orderBy(col("qid"), col("score").desc, col("id"))
     }),
@@ -662,13 +662,13 @@ object SparkEntry {
       val idx = Pq.buildOrGetIvf4(s, base, s"$dir|pq4ivf", nlist = 16,
         m4 = m4, ntrain = 100000)
       // refineK=100 is the r12 operating point: the refine budget — not
-      // the 4-bit codebook — bound the r11 recall plateau (RefineTune at
-      // 1M: rk50 0.950 → rk100 0.975, matching the reference's PQ+Refine
-      // 0.9758 @ R=100, Performance.md:708-711). r13: the refine FETCH is
-      // partition-pruned to the probed cells via the same-quantizer
-      // clustered table (the flat flavor's corpus scan was the 3M probe
-      // wall) — results identical, and this oracle hash-gates the pruned
-      // path end to end.
+      // the 4-bit codebook — bound the r11 recall plateau (the r12 sweep
+      // at 1M, COVERAGE.md row C3: rk50 0.950 → rk100 0.975, matching the
+      // reference's PQ+Refine 0.9758 @ R=100, Performance.md:708-711). r13:
+      // the refine FETCH is partition-pruned to the probed cells via the
+      // same-quantizer clustered table (the flat flavor's corpus scan was
+      // the 3M probe wall) — results identical, and this oracle hash-gates
+      // the pruned path end to end.
       val refIdx = Ivf.buildOrGet(s, base, s"$dir|pq4ivf", nlist = 16,
         ntrain = 100000)
       val pred = predSidecar("a13_pq4_ivf",
@@ -821,7 +821,7 @@ object SparkEntry {
     "a5_refine_exact" -> ((s, dir) => {
       val base = embBase(s, dir)
       val qs = embQueries(s, dir)
-      val cands = Search.exactTopKBatched(base, qs, k = 40, Metric.Dot)
+      val cands = Search.exactTopKFused(base, qs, k = 40, Metric.Dot)
         .groupBy("qid").agg(collect_list(col("id")).as("cand_ids"))
         .join(qs, Seq("qid"))
         .select(col("qid"), col("qvec"), col("cand_ids"))

@@ -11,12 +11,11 @@ import org.apache.spark.sql.types._
   *
   * The broadcast-NLJ plan materializes one joined row per (base, query)
   * pair — at Q queries that is Q UnsafeRow copies and 2Q array
-  * conversions per base row. Here the query matrix rides into codegen as
-  * a reference object, the base row converts once, and the inner loop is
-  * pure float math. End-to-end gain is bounded by the Q×N exploded rows
-  * both plans feed the top-k aggregate (measured 1.3× at 200k×64d/20q,
-  * ScaleSpec); the win grows with dim and query count, where the removed
-  * per-pair copies dominate.
+  * conversions per base row. Here the base row converts once, the inner
+  * loop is pure float math over the query matrix (a codegen reference
+  * object in the f16/i8 expressions below), and the per-query scores go
+  * straight into per-partition top-k buffers (`Search.scanTopK`), so no
+  * Q×N (row, query) stream materializes either.
   */
 object BatchScore {
 
@@ -92,11 +91,10 @@ object BatchScore {
   }
 
   /** One row against the whole query matrix for any metric, tiled —
-    * shared by the codegen expression path and `Search.exactTopKFused`'s
-    * partition loop (both must produce bitwise-identical scores to the
-    * per-pair kernels; the fused/batched/BNLJ 3-path equality in
-    * ScaleSpec rides on it). `out` is caller-allocated so the fused loop
-    * can reuse one buffer across rows.
+    * `Search.exactTopKFused`'s and `groundTruthBoth`'s scoring loop. Each
+    * score is bitwise the per-pair kernel's (the scan-vs-BNLJ equality in
+    * ScaleSpec and ExactScanSpec rides on it). `out` is caller-allocated
+    * so the scan can reuse one buffer across rows.
     */
   def scoreAll(x: Array[Float], queries: Array[Array[Float]], metric: Int,
                out: Array[Double]): Unit = metric match {
@@ -116,12 +114,6 @@ object BatchScore {
         out(q) = if (nx == 0.0 || nqs(q) == 0.0) 0.0 else out(q) / (nx * nqs(q))
         q += 1
       }
-  }
-
-  def scores(v: ArrayData, queries: Array[Array[Float]], metric: Int): ArrayData = {
-    val out = new Array[Double](queries.length)
-    scoreAll(v.toFloatArray(), queries, metric, out)
-    new GenericArrayData(out)
   }
 
   /** Per-batch query norms, keyed by the broadcast query matrix's identity.
@@ -301,22 +293,6 @@ object BatchScore {
     scoreAllI8(codes.toByteArray(), scale, queries, out)
     new GenericArrayData(out)
   }
-}
-
-/** `batch_scores(vec)` → array<double>, one score per broadcast query. */
-case class BatchScores(child: Expression, queries: Array[Array[Float]], metric: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    BatchScore.scores(v.asInstanceOf[ArrayData], queries, metric)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("queries", queries, "float[][]")
-    defineCodeGen(ctx, ev, v =>
-      s"graft.functions.expressions.BatchScore.scores($v, $ref, $metric)")
-  }
-  override def prettyName: String = "batch_scores"
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** `batch_scores_half(bits)` → per-query dot against an fp16-bits row

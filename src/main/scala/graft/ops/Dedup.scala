@@ -340,9 +340,9 @@ object Dedup {
   }
 
   /** [[connectedComponentsStats]] result: the (node, component) labels
-    * plus the convergence evidence the scale gates assert on.
+    * plus the iteration count the scale gates assert on.
     */
-  final case class CcResult(labels: DataFrame, iterations: Int, converged: Boolean)
+  final case class CcResult(labels: DataFrame, iterations: Int)
 
   /** Connected components over a near-dup pair graph (a, b) by iterative
     * min-label propagation: each node adopts the smallest component id
@@ -350,6 +350,9 @@ object Dedup {
     * clusters are usually tiny and shallow, so convergence is fast
     * (diameter-bounded); every iteration is one shuffle on node id.
     * Returns (node, component) — component = smallest node id reachable.
+    * Throws `IllegalStateException` when no fixed point is reached within
+    * `maxIter` iterations (a dup chain deeper than that), rather than
+    * return split components.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
                           aCol: String = "a", bCol: String = "b"): DataFrame =
@@ -411,14 +414,14 @@ object Dedup {
     }
     edges.unpersist()
     if (!converged) {
-      // a dup chain with diameter > maxIter would silently split clusters
-      // (keepers() would then keep several "canonical" copies of one
-      // cluster) — surface it instead of returning quietly
-      System.err.println(
-        s"[graft] connectedComponents did NOT converge in $maxIter iterations; " +
-          "components may be split. Raise maxIter for deep duplicate chains.")
+      // a dup chain with diameter > maxIter would split clusters (keepers()
+      // would then keep several "canonical" copies of one cluster)
+      labels.unpersist()
+      throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxIter iterations; " +
+          "components would be split. Raise maxIter for deep duplicate chains.")
     }
-    CcResult(labels, it, converged)
+    CcResult(labels, it)
   }
 
   /** Keeper selection: one row per document, with its duplicate-cluster

@@ -40,7 +40,7 @@ object FilteredSearch {
   def exact(base: DataFrame, pred: Column, queries: DataFrame, k: Int,
             metric: Metric = Metric.Dot,
             idCol: String = "id", vecCol: String = "vec"): DataFrame =
-    Search.exactTopKBatched(base.filter(pred), queries, k, metric,
+    Search.exactTopKFused(base.filter(pred), queries, k, metric,
       idCol = idCol, vecCol = vecCol)
 
   /** Filtered IVF probe: predicate ∧ cluster-IN both land in the clustered

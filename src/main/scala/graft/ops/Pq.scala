@@ -79,7 +79,7 @@ object Pq {
 
   /** Batched flat ADC search: the query batch's LUTs ride as ONE codegen
     * reference object, the code table streams once, and per-partition
-    * top-k buffers absorb the scores (`Search.fusedScoredTopK`) — no Q×N
+    * top-k buffers absorb the scores (`Search.scoredTopK`) — no Q×N
     * joined rows. Per-pair lookup-sums are [[PqOps.adc]]'s exactly
     * (driver builds LUTs with the same [[PqOps.lut]] the broadcast side
     * runs), so ranks match [[search]] (PqSpec gates it). This is the
@@ -94,11 +94,11 @@ object Pq {
     val luts = q.map { case (_, qv) =>
       PqOps.lut(new GenericArrayData(qv), books, l2).toFloatArray()
     }
-    Search.fusedScoredTopK(
+    Search.scoredTopK(
       encoded.select(col(idCol).cast("long"),
         Bridge.column(BatchAdcScores(Bridge.expression(col("codes")), luts))
           .as("scores")),
-      qids, k, "qid", larger = !l2)
+      qids, k, larger = !l2, "qid")
   }
 
   /** Batched ADC scan over a BLOCK-PACKED code table
@@ -115,75 +115,62 @@ object Pq {
                            l2: Boolean = true): DataFrame = {
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     import graft.functions.expressions.PqOps
-    val spark = blocked.sparkSession
-    import spark.implicits._
     val q = collectQueryVecs(queries)
     val qids = q.map(_._1)
     val luts = q.map { case (_, qv) =>
       PqOps.lut(new GenericArrayData(qv), books, l2).toFloatArray()
     }
     val nq = qids.length
-    val larger = !l2
-    val partials = blocked.select(col("ids"), col("codes"))
-      .as[(Array[Long], Array[Byte])]
-      .mapPartitions { it =>
-        val agg = new TopKAggregator(k, larger)
-        val bufs = Array.fill(nq)(agg.zero)
-        // QUERY-TILED scan (r11): the flat row×query loop streams every
-        // query's m×ksub LUT (49 KB at m=48 — Q=512 ⇒ 25 MB) through
-        // 48 random lookups per row, so at batch Q every lookup misses
-        // to L3 (~55 cycles/op measured via ann_pq_adc_blocked_q512's
-        // first cut). Tiling queries keeps a ≤1.6 MB LUT tile
-        // L2-resident across the whole 128-row block. Per-(row, query)
-        // lookup-sum order is unchanged — scores are bitwise identical
-        // (PqSpec rank gates) — only the cache residency moves.
-        val tile = 32
-        val r4 = new Array[Double](4)
-        while (it.hasNext) {
-          val (ids, blob) = it.next()
-          val stride = blob.length / ids.length
-          var q0 = 0
-          while (q0 < nq) {
-            val q1 = math.min(q0 + tile, nq)
-            var r = 0
-            // 4-row interleave (PqOps.adcSlice4): the lookup chains are
-            // latency-bound; four independent rows overlap their loads.
-            // Per-query consider order stays row-ascending — identical
-            // buffers, bitwise-identical sums.
-            while (r + 4 <= ids.length) {
-              val off = r * stride
-              var qi = q0
-              while (qi < q1) {
-                PqOps.adcSlice4(blob, off, off + stride, off + 2 * stride,
-                  off + 3 * stride, stride, luts(qi), r4)
-                val buf = bufs(qi)
-                agg.consider(buf, ids(r), r4(0))
-                agg.consider(buf, ids(r + 1), r4(1))
-                agg.consider(buf, ids(r + 2), r4(2))
-                agg.consider(buf, ids(r + 3), r4(3))
-                qi += 1
-              }
-              r += 4
+    Search.scanTopK[(Array[Long], Array[Byte])](blocked.select(col("ids"), col("codes")),
+        qids, k, larger = !l2) { (it, top) =>
+      // QUERY-TILED scan (r11): the flat row×query loop streams every
+      // query's m×ksub LUT (49 KB at m=48 — Q=512 ⇒ 25 MB) through
+      // 48 random lookups per row, so at batch Q every lookup misses
+      // to L3 (~55 cycles/op measured via ann_pq_adc_blocked_q512's
+      // first cut). Tiling queries keeps a ≤1.6 MB LUT tile
+      // L2-resident across the whole 128-row block. Per-(row, query)
+      // lookup-sum order is unchanged — scores are bitwise identical
+      // (PqSpec rank gates) — only the cache residency moves.
+      val tile = 32
+      val r4 = new Array[Double](4)
+      while (it.hasNext) {
+        val (ids, blob) = it.next()
+        val stride = blob.length / ids.length
+        var q0 = 0
+        while (q0 < nq) {
+          val q1 = math.min(q0 + tile, nq)
+          var r = 0
+          // 4-row interleave (PqOps.adcSlice4): the lookup chains are
+          // latency-bound; four independent rows overlap their loads.
+          // Per-query offer order stays row-ascending — identical
+          // buffers, bitwise-identical sums.
+          while (r + 4 <= ids.length) {
+            val off = r * stride
+            var qi = q0
+            while (qi < q1) {
+              PqOps.adcSlice4(blob, off, off + stride, off + 2 * stride,
+                off + 3 * stride, stride, luts(qi), r4)
+              top.offer(qi, ids(r), r4(0))
+              top.offer(qi, ids(r + 1), r4(1))
+              top.offer(qi, ids(r + 2), r4(2))
+              top.offer(qi, ids(r + 3), r4(3))
+              qi += 1
             }
-            while (r < ids.length) { // ragged tail
-              val off = r * stride
-              var qi = q0
-              while (qi < q1) {
-                agg.consider(bufs(qi), ids(r),
-                  PqOps.adcSlice(blob, off, stride, luts(qi)))
-                qi += 1
-              }
-              r += 1
-            }
-            q0 = q1
+            r += 4
           }
-        }
-        bufs.iterator.zipWithIndex.flatMap { case (b, qi) =>
-          (0 until b.n).iterator.map(i => (qids(qi), b.ids(i), b.scores(i)))
+          while (r < ids.length) { // ragged tail
+            val off = r * stride
+            var qi = q0
+            while (qi < q1) {
+              top.offer(qi, ids(r), PqOps.adcSlice(blob, off, stride, luts(qi)))
+              qi += 1
+            }
+            r += 1
+          }
+          q0 = q1
         }
       }
-    TopK.perGroup(partials.toDF("qid", "gid", "score"),
-      "qid", "gid", "score", k, larger)
+    }
   }
 
   /** 4-bit fastscan search over a [[graft.io.QuantizedTables.writePq4Blocked]]

@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
@@ -14,6 +16,29 @@ object Metric {
   case object Dot extends Metric { val larger = true }
   case object Cosine extends Metric { val larger = true }
   case object L2 extends Metric { val larger = false }
+}
+
+/** One partition's top-k state for a multi-query scan: one
+  * [[TopKAggregator]] buffer per query slot, the reference's thread-local
+  * `TopKBuffer`s (`src/flat_index_omp.cpp:36-75`). Slot `s` emits its
+  * kept (id, score) pairs labelled `labels(s)`.
+  */
+private[ops] final class TopKSlots(labels: Array[Long], k: Int, larger: Boolean) {
+  private val agg = new TopKAggregator(k, larger)
+  private val bufs = Array.fill(labels.length)(agg.zero)
+
+  def offer(slot: Int, id: Long, score: Double): Unit = agg.consider(bufs(slot), id, score)
+
+  /** `scores(s)` into slot `s`, for every slot. */
+  def offerAll(id: Long, scores: Array[Double]): Unit = {
+    var s = 0
+    while (s < bufs.length) { agg.consider(bufs(s), id, scores(s)); s += 1 }
+  }
+
+  def partials: Iterator[(Long, Long, Double)] =
+    bufs.iterator.zipWithIndex.flatMap { case (b, s) =>
+      (0 until b.n).iterator.map(i => (labels(s), b.ids(i), b.scores(i)))
+    }
 }
 
 /** Exact and candidate-based vector search — the reference's flagship
@@ -51,89 +76,33 @@ object Search {
       .withColumnRenamed("qid", qidCol)
   }
 
-  /** Batched exact top-k (`apps/nvdb_bench.cpp:47-159` — J2): the query
-    * set (always small: it is broadcast in every plan of this engine)
-    * collects to a codegen reference object, the base streams ONCE, and
-    * each row scores all queries in a tight loop — no per-pair join-row
-    * materialization. Identical results to [[exactTopK]] (same kernels,
-    * same accumulation order); ~10× fewer allocations per scored pair.
-    */
-  def exactTopKBatched(base: DataFrame, queries: DataFrame, k: Int,
-                       metric: Metric = Metric.Dot,
-                       idCol: String = "id", vecCol: String = "vec",
-                       qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    import graft.functions.expressions.{BatchScore, BatchScores}
-    val q = queries.select(col(qidCol), col(qvecCol)).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val qids = q.map(_._1)
-    val qvecs = q.map(_._2)
-    val m = metric match {
-      case Metric.Dot => BatchScore.MDot
-      case Metric.L2 => BatchScore.ML2
-      case Metric.Cosine => BatchScore.MCos
-    }
-    val scoresCol = Bridge.column(BatchScores(Bridge.expression(col(vecCol)), qvecs, m))
-    val scored = base
-      .select(col(idCol).as("gid"), posexplode(scoresCol).as(Seq("qpos", "score")))
-      .select(element_at(typedLit(qids), col("qpos") + 1).as("qid"),
-        col("gid"), col("score"))
-    TopK.perGroup(scored, "qid", "gid", "score", k, metric.larger)
-      .withColumnRenamed("qid", qidCol)
-  }
-
-  /** Fused batched scan + per-partition top-k: K2's O(k) buffers live
-    * INSIDE the scan loop — each partition keeps one buffer per query and
-    * emits only Q×k rows, so the Q×N exploded (row, query) stream that
-    * [[exactTopKBatched]] feeds through the aggregate never materializes.
-    * This is the reference's thread design verbatim: thread-local
-    * `TopKBuffer` over a shared scan, merge at the end
-    * (`apps/nvdb_bench.cpp:124-129`, `src/flat_index_omp.cpp:36-75`).
-    * Same kernels, same buffer policy (shared `TopKAggregator.consider`),
-    * same tie-break → identical results (ScaleSpec gates equality).
-    *
-    * The declared `mapPartitions` exception: per-partition imperative
-    * state across rows, which no Expression/Aggregate composition can
-    * express without materializing the Q×N stream.
+  /** Exact flat-scan top-k (J2 + K2, `apps/nvdb_bench.cpp:47-159`): the
+    * query batch is collected once, the base streams ONCE, and each
+    * row scores all queries in a tight loop (`BatchScore.scoreAll`,
+    * register-tiled 4 queries per row pass) straight into per-partition
+    * top-k buffers — see [[scanTopK]]. Scores are bitwise the per-pair
+    * kernels', so rows equal [[exactTopK]]'s (ScaleSpec, ExactScanSpec).
+    * A row whose vector is null is skipped.
     */
   def exactTopKFused(base: DataFrame, queries: DataFrame, k: Int,
                      metric: Metric = Metric.Dot,
                      idCol: String = "id", vecCol: String = "vec",
                      qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
+    import graft.functions.expressions.BatchScore
     val (qids, qvecs) = collectQueries(queries, qidCol, qvecCol)
-    val larger = metric.larger
     val mcode = metric match {
-      case Metric.Dot => 0
-      case Metric.L2 => 1
-      case Metric.Cosine => 2
+      case Metric.Dot => BatchScore.MDot
+      case Metric.L2 => BatchScore.ML2
+      case Metric.Cosine => BatchScore.MCos
     }
-    val spark = base.sparkSession
-    import spark.implicits._
-    val partials = base.select(col(idCol), col(vecCol))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val agg = new TopKAggregator(k, larger)
-        val bufs = Array.fill(qids.length)(agg.zero)
-        // one reused score buffer per partition; scoreAll register-tiles
-        // 4 queries per row pass and stays bitwise-equal to the per-pair
-        // kernels, so the 3-path equality gate (ScaleSpec) is unaffected
-        val row = new Array[Double](qvecs.length)
-        while (it.hasNext) {
-          val (id, v) = it.next()
-          graft.functions.expressions.BatchScore.scoreAll(v, qvecs, mcode, row)
-          var q = 0
-          while (q < qvecs.length) {
-            agg.consider(bufs(q), id, row(q))
-            q += 1
-          }
-        }
-        bufs.iterator.zipWithIndex.flatMap { case (b, qi) =>
-          (0 until b.n).iterator.map(i => (qids(qi), b.ids(i), b.scores(i)))
-        }
+    scanTopK[(Long, Array[Float])](base.select(col(idCol), col(vecCol)),
+        qids, k, metric.larger, qidCol) { (it, top) =>
+      val row = new Array[Double](qvecs.length)
+      while (it.hasNext) {
+        val (id, v) = it.next()
+        if (v != null) { BatchScore.scoreAll(v, qvecs, mcode, row); top.offerAll(id, row) }
       }
-    TopK.perGroup(partials.toDF("qid", "gid", "score"),
-      "qid", "gid", "score", k, larger)
-      .withColumnRenamed("qid", qidCol)
+    }
   }
 
   private def collectQueries(queries: DataFrame, qidCol: String,
@@ -143,52 +112,53 @@ object Search {
     (q.map(_._1), q.map(_._2))
   }
 
-  private def batchTopK(scored: DataFrame, qids: Array[Long], k: Int,
-                        larger: Boolean, qidCol: String): DataFrame =
-    TopK.perGroup(
-      scored.select(element_at(typedLit(qids), col("qpos") + 1).as("qid"),
-        col("gid"), col("score")),
+  /** The one exact-scan plan, the reference's thread design
+    * (`apps/nvdb_bench.cpp:124-129`, `src/flat_index_omp.cpp:36-75`):
+    * each partition keeps one O(k) buffer per query slot ([[TopKSlots]],
+    * the `TopKAggregator.consider` policy), `scan` feeds it every
+    * (row, slot) score, the partition emits only slots×k rows, and
+    * `TopK.perGroup` merges them — the Q×N (row, query) stream never
+    * materializes. Slot `s` is labelled `qids(s)`. Returns
+    * (qidCol, id, score, rank). Callers own only the scoring loop.
+    *
+    * The declared `mapPartitions` exception: per-partition imperative
+    * state across rows, which no Expression/Aggregate composition can
+    * express without materializing the Q×N stream.
+    */
+  private[ops] def scanTopK[T <: Product : TypeTag](rows: DataFrame, qids: Array[Long],
+                                                    k: Int, larger: Boolean,
+                                                    qidCol: String = "qid")(
+      scan: (Iterator[T], TopKSlots) => Unit): DataFrame = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val partials = rows.as(Encoders.product[T]).mapPartitions { it =>
+      val top = new TopKSlots(qids, k, larger)
+      scan(it, top)
+      top.partials
+    }
+    TopK.perGroup(partials.toDF("qid", "gid", "score"),
       "qid", "gid", "score", k, larger)
       .withColumnRenamed("qid", qidCol)
+  }
 
-  /** Batched scan over an fp16-bits base (each row decodes once, scores
-    * all queries) — J2 over the F2 kernel.
+  /** [[scanTopK]] over (id, scores-per-query) rows whose scores a
+    * codegen batch expression already computed; a null scores array (a
+    * null input vector) is skipped.
     */
-  def exactTopKBatchedHalf(hbase: DataFrame, queries: DataFrame, k: Int,
-                           idCol: String = "id", bitsCol: String = "hbits",
-                           qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    import graft.functions.expressions.BatchScoresHalf
-    val (qids, qvecs) = collectQueries(queries, qidCol, qvecCol)
-    val scores = Bridge.column(BatchScoresHalf(Bridge.expression(col(bitsCol)), qvecs))
-    batchTopK(hbase.select(col(idCol).as("gid"),
-      posexplode(scores).as(Seq("qpos", "score"))), qids, k, larger = true, qidCol)
-  }
+  private[ops] def scoredTopK(scored: DataFrame, qids: Array[Long], k: Int,
+                              larger: Boolean, qidCol: String): DataFrame =
+    scanTopK[(Long, Array[Double])](scored, qids, k, larger, qidCol) { (it, top) =>
+      while (it.hasNext) {
+        val (id, s) = it.next()
+        if (s != null) top.offerAll(id, s)
+      }
+    }
 
-  /** Batched scan over an int8+scale base — J2 over the F3 kernel. */
-  def exactTopKBatchedI8(qbase: DataFrame, queries: DataFrame, k: Int,
-                         idCol: String = "id", codesCol: String = "codes",
-                         scaleCol: String = "scale",
-                         qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    import graft.functions.expressions.BatchScoresI8
-    val (qids, qvecs) = collectQueries(queries, qidCol, qvecCol)
-    val scores = Bridge.column(BatchScoresI8(
-      Bridge.expression(col(codesCol)), Bridge.expression(col(scaleCol)), qvecs))
-    batchTopK(qbase.select(col(idCol).as("gid"),
-      posexplode(scores).as(Seq("qpos", "score"))), qids, k, larger = true, qidCol)
-  }
-
-  /** Fused flavors of the quantized scans — [[exactTopKFused]]'s shape
-    * (per-partition K2 top-k buffers inside the scan loop, no Q×N
-    * exploded stream through an aggregate) over the F2/F3 kernels. The
-    * scoring is the SAME `BatchScore.scoreAllHalf`/`scoreAllI8` row hoist
-    * the codegen expressions call, so scores are bitwise-identical to the
-    * batched flavors (QuantScanSpec gates equality); what changes is only
-    * the plan shape around them. This is the operating point where the
-    * reference's storage-ladder economics actually emerge: once the
-    * per-pair row materialization is gone, wall time tracks stored
-    * bytes/vector (f32 > f16 > i8, `Performance.md:242-255`).
+  /** Exact top-k over an fp16-bits base — [[exactTopKFused]]'s plan over
+    * the F2 kernel: each row decodes ONCE inside whole-stage codegen
+    * (`BatchScore.scoreAllHalf`, bitwise the per-pair `dotHalf`) and the
+    * per-query scores feed [[scoredTopK]]. Dot metric. Wall time tracks
+    * stored bytes/vector (f32 > f16 > i8, `Performance.md:242-255`).
     */
   def exactTopKFusedHalf(hbase: DataFrame, queries: DataFrame, k: Int,
                          idCol: String = "id", bitsCol: String = "hbits",
@@ -203,11 +173,13 @@ object Search {
       if (hbase.schema(bitsCol).dataType == BinaryType)
         Bridge.column(BatchScoresHalfBin(Bridge.expression(col(bitsCol)), qvecs))
       else Bridge.column(BatchScoresHalf(Bridge.expression(col(bitsCol)), qvecs))
-    fusedScoredTopK(hbase.select(col(idCol).cast("long"), scores.as("scores")),
-      qids, k, qidCol)
+    scoredTopK(hbase.select(col(idCol).cast("long"), scores.as("scores")),
+      qids, k, larger = true, qidCol)
   }
 
-  /** Fused int8+scale scan — see [[exactTopKFusedHalf]]. */
+  /** Exact top-k over an int8+scale base (F3 kernel) — see
+    * [[exactTopKFusedHalf]].
+    */
   def exactTopKFusedI8(qbase: DataFrame, queries: DataFrame, k: Int,
                        idCol: String = "id", codesCol: String = "codes",
                        scaleCol: String = "scale",
@@ -222,8 +194,8 @@ object Search {
           Bridge.expression(col(codesCol)), Bridge.expression(col(scaleCol)), qvecs))
       else Bridge.column(BatchScoresI8(
         Bridge.expression(col(codesCol)), Bridge.expression(col(scaleCol)), qvecs))
-    fusedScoredTopK(qbase.select(col(idCol).cast("long"), scores.as("scores")),
-      qids, k, qidCol)
+    scoredTopK(qbase.select(col(idCol).cast("long"), scores.as("scores")),
+      qids, k, larger = true, qidCol)
   }
 
   /** Fused scan over a BLOCK-PACKED table (`QuantizedTables.write*Blocked`
@@ -253,93 +225,42 @@ object Search {
                             floatAcc: Boolean = false): DataFrame = {
     import graft.functions.expressions.BatchScore
     val (qids, qvecs) = collectQueries(queries, qidCol, qvecCol)
-    val nq = qvecs.length
-    val spark = blocked.sparkSession
-    import spark.implicits._
     val fields = blocked.schema.fieldNames.toSet
-    def partialsOf[T](ds: org.apache.spark.sql.Dataset[T])(
-        score: (T, Int, Array[Double]) => Unit,
-        idsOf: T => Array[Long]): org.apache.spark.sql.Dataset[(Long, Long, Double)] =
-      ds.mapPartitions { it =>
-        val agg = new TopKAggregator(k, larger = true)
-        val bufs = Array.fill(nq)(agg.zero)
-        val row = new Array[Double](nq)
+    // one block walk for every layout: `score(block, r, out)` scores the
+    // block's r-th vector against all queries
+    def blocks[T <: Product : TypeTag](cols: String*)(idsOf: T => Array[Long])(
+        score: (T, Int, Array[Double]) => Unit): DataFrame =
+      scanTopK[T](blocked.select(cols.map(col): _*), qids, k, larger = true,
+          qidCol) { (it, top) =>
+        val row = new Array[Double](qvecs.length)
         while (it.hasNext) {
-          val blockRow = it.next()
-          val ids = idsOf(blockRow)
+          val block = it.next()
+          val ids = idsOf(block)
           var r = 0
-          while (r < ids.length) {
-            score(blockRow, r, row)
-            var q = 0
-            while (q < nq) { agg.consider(bufs(q), ids(r), row(q)); q += 1 }
-            r += 1
-          }
-        }
-        bufs.iterator.zipWithIndex.flatMap { case (b, qi) =>
-          (0 until b.n).iterator.map(i => (qids(qi), b.ids(i), b.scores(i)))
+          while (r < ids.length) { score(block, r, row); top.offerAll(ids(r), row); r += 1 }
         }
       }
-    val partials =
-      if (fields("scales")) {
-        partialsOf(blocked.select(col("ids"), col("codes"), col("scales"))
-          .as[(Array[Long], Array[Byte], Array[Float])]) (
-          { case ((ids, blob, scales), r, out) =>
-            val stride = blob.length / ids.length
-            BatchScore.scoreAllI8Slice(blob, r * stride, stride, scales(r), qvecs,
-              out, floatAcc)
-          }, _._1)
-      } else if (fields("bits")) {
-        partialsOf(blocked.select(col("ids"), col("bits"))
-          .as[(Array[Long], Array[Byte])]) (
-          { case ((ids, blob), r, out) =>
-            val stride = blob.length / ids.length
-            BatchScore.scoreAllHalfSlice(blob, r * stride, stride / 2, qvecs,
-              out, floatAcc)
-          }, _._1)
-      } else {
-        partialsOf(blocked.select(col("ids"), col("vecs"))
-          .as[(Array[Long], Array[Byte])]) (
-          { case ((ids, blob), r, out) =>
-            val stride = blob.length / ids.length
-            BatchScore.scoreAllF32Slice(blob, r * stride, stride / 4, qvecs,
-              out, floatAcc)
-          }, _._1)
+    if (fields("scales"))
+      blocks[(Array[Long], Array[Byte], Array[Float])]("ids", "codes", "scales")(_._1) {
+        case ((ids, blob, scales), r, out) =>
+          val stride = blob.length / ids.length
+          BatchScore.scoreAllI8Slice(blob, r * stride, stride, scales(r), qvecs,
+            out, floatAcc)
       }
-    TopK.perGroup(partials.toDF("qid", "gid", "score"),
-      "qid", "gid", "score", k, larger = true)
-      .withColumnRenamed("qid", qidCol)
-  }
-
-  /** Per-partition top-k over (id, scores-per-query) rows: the decode +
-    * multi-query scoring stays in whole-stage codegen (the batch
-    * expressions above), and only the K2 buffers live in this imperative
-    * tail — each partition emits Q×k rows instead of the Q×N posexplode
-    * stream the batched flavors feed through the aggregate. Also drives
-    * `Pq.searchBatched`'s ADC scan (`larger = false` ranks ascending L2).
-    */
-  private[ops] def fusedScoredTopK(scored: DataFrame, qids: Array[Long], k: Int,
-                                   qidCol: String,
-                                   larger: Boolean = true): DataFrame = {
-    val spark = scored.sparkSession
-    import spark.implicits._
-    val nq = qids.length
-    val partials = scored
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val agg = new TopKAggregator(k, larger)
-        val bufs = Array.fill(nq)(agg.zero)
-        while (it.hasNext) {
-          val (id, row) = it.next()
-          var q = 0
-          while (q < nq) { agg.consider(bufs(q), id, row(q)); q += 1 }
-        }
-        bufs.iterator.zipWithIndex.flatMap { case (b, qi) =>
-          (0 until b.n).iterator.map(i => (qids(qi), b.ids(i), b.scores(i)))
-        }
+    else if (fields("bits"))
+      blocks[(Array[Long], Array[Byte])]("ids", "bits")(_._1) {
+        case ((ids, blob), r, out) =>
+          val stride = blob.length / ids.length
+          BatchScore.scoreAllHalfSlice(blob, r * stride, stride / 2, qvecs,
+            out, floatAcc)
       }
-    TopK.perGroup(partials.toDF("qid", "gid", "score"),
-      "qid", "gid", "score", k, larger)
-      .withColumnRenamed("qid", qidCol)
+    else
+      blocks[(Array[Long], Array[Byte])]("ids", "vecs")(_._1) {
+        case ((ids, blob), r, out) =>
+          val stride = blob.length / ids.length
+          BatchScore.scoreAllF32Slice(blob, r * stride, stride / 4, qvecs,
+            out, floatAcc)
+      }
   }
 
   /** Radius (range) search — every base row within `radius` of each query
@@ -390,8 +311,8 @@ object Search {
     *
     * Identity with two [[groundTruth]] calls (SearchSpec gates it
     * element-exactly): scores come from the same batched kernels the
-    * flat-scan family uses (`BatchScores` — bitwise-equal to the per-pair
-    * kernels, ScaleSpec), and the L2 stream rides NEGATED through one
+    * flat scan uses (`BatchScore.scoreAll` — bitwise-equal to the per-pair
+    * kernels, ScaleSpec) through the same [[scanTopK]], and the L2 stream rides NEGATED through one
     * shared larger=true top-k — IEEE negation is exact and
     * [[TopKAggregator]]'s (score, id) tie-break is symmetric under it
     * (`-a > -b ⟺ a < b`; equal scores, incl. ±0.0, fall through to the
@@ -401,23 +322,29 @@ object Search {
   def groundTruthBoth(base: DataFrame, queries: DataFrame, k: Int,
                       idCol: String = "id", vecCol: String = "vec",
                       qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    import graft.functions.expressions.{BatchScore, BatchScores}
+    import graft.functions.expressions.BatchScore
     val (qids, qvecs) = collectQueries(queries, qidCol, qvecCol)
     val nq = qids.length
     require(nq > 0, "groundTruthBoth needs a non-empty query batch")
-    val dotS = Bridge.column(
-      BatchScores(Bridge.expression(col(vecCol)), qvecs, BatchScore.MDot))
-    val l2S = Bridge.column(
-      BatchScores(Bridge.expression(col(vecCol)), qvecs, BatchScore.ML2))
     // slot qpos ∈ [0, 2·nq): dot scores first, negated L2 after — one
-    // top-k aggregate ranks all 2·nq (query, metric) slots in one pass
-    val scored = base.select(col(idCol).as("gid"),
-      posexplode(concat(dotS, transform(l2S, x => -x))).as(Seq("qpos", "score")))
-    val top = TopK.perGroup(scored, "qpos", "gid", "score", k, larger = true)
+    // top-k scan ranks all 2·nq (query, metric) slots in one pass
+    val top = scanTopK[(Long, Array[Float])](base.select(col(idCol), col(vecCol)),
+        Array.tabulate(2 * nq)(_.toLong), k, larger = true, "qpos") { (it, top) =>
+      val dot = new Array[Double](nq)
+      val l2 = new Array[Double](nq)
+      while (it.hasNext) {
+        val (id, v) = it.next()
+        if (v != null) {
+          BatchScore.scoreAll(v, qvecs, BatchScore.MDot, dot)
+          BatchScore.scoreAll(v, qvecs, BatchScore.ML2, l2)
+          var q = 0
+          while (q < nq) { top.offer(q, id, dot(q)); top.offer(nq + q, id, -l2(q)); q += 1 }
+        }
+      }
+    }
     top
       .select(
-        element_at(typedLit(qids), pmod(col("qpos"), lit(nq)) + 1).as(qidCol),
+        element_at(typedLit(qids), pmod(col("qpos"), lit(nq)).cast("int") + 1).as(qidCol),
         (col("qpos") < nq).as("is_dot"), col("rank"), col("id"))
       .groupBy(qidCol)
       .agg(

@@ -47,8 +47,8 @@ class TopKAggregator(k: Int, larger: Boolean)
     b.worstIdx = worst
   }
 
-  // also driven directly (tuple-free) by Search.exactTopKFused's
-  // per-partition loop — one shared implementation keeps the fused path
+  // also driven directly (tuple-free) by the per-partition scan buffers
+  // (`TopKSlots`, Search.scala) — one shared implementation keeps the scan path
   // bit-identical to the aggregate path
   private[ops] def consider(b: TopKBuf, id: Long, score: Double): Unit = {
     if (b.n < k) {
@@ -83,11 +83,14 @@ object TopK {
     *
     * Input: rows with (groupCol, idCol, scoreCol). Output: one row per
     * (group, rank) with columns (groupCol, id, score, rank), rank 1-based.
+    * A row with a null score (e.g. scored from a null vector) is dropped:
+    * the aggregate's `(Long, Double)` input would read it as 0.0 and rank it.
     */
   def perGroup(scored: DataFrame, groupCol: String, idCol: String, scoreCol: String,
                k: Int, larger: Boolean = true): DataFrame = {
     val agg = udaf(new TopKAggregator(k, larger))
     scored
+      .filter(col(scoreCol).isNotNull)
       .groupBy(col(groupCol))
       .agg(agg(col(idCol), col(scoreCol).cast("double")).as("topk"))
       .select(col(groupCol), posexplode(col("topk")).as(Seq("rank0", "pair")))

@@ -187,7 +187,6 @@ object BenchScale {
       val nComp = cc.labels.select("component").distinct().count()
       cc.labels.unpersist()
       Map("iterations" -> cc.iterations.toDouble,
-        "converged" -> (if (cc.converged) 1.0 else 0.0),
         "n_nodes" -> nNodes.toDouble, "n_components" -> nComp.toDouble)
     }
 
@@ -555,8 +554,8 @@ object BenchScale {
       // REFINE-BUDGET frontier (r12, verdict task #1): the rows above all
       // run refineK=50 and plateau at recall 0.95 from nprobe=8 on — the
       // binding constraint was the refine budget, NOT the 4-bit codebook
-      // ceiling (RefineTune swept refineK × nprobe and the OPQ question
-      // died unasked: rk=100 already clears the reference's PQ+Refine
+      // ceiling (the r12 refineK × nprobe sweep, COVERAGE.md row C3; the
+      // OPQ question died unasked: rk=100 already clears the reference's PQ+Refine
       // headline, 0.9743 @ R=50 / 0.9758 @ R=100,
       // `Performance.md:623,708-711`). rk100 @ np8 is the new operating
       // point: recall 0.975 sub-second at 1M; np16 × rk200 reads 1.0.
@@ -737,7 +736,7 @@ object BenchScale {
       // efSearch frontier on the HARD corpus: the lowRank manifold reads
       // recall 1.0 at every efSearch (the frontier above — honest, but it
       // shows no trade), and measured harder variants of it stay ≥ 0.96
-      // (KneeTune at 200k: lr32 0.9625@16, off-manifold query noise does
+      // (knee sweep at 200k: lr32 0.9625@16, off-manifold query noise does
       // not bite because orthogonal noise shifts all similarities nearly
       // uniformly). The corpus that actually bends the curve is full-
       // intrinsic iid-unit data — distance concentration makes neighbor

@@ -196,8 +196,8 @@ class HnswSpec extends AnyFunSuite {
     // iid-unit data (full intrinsic dimension) concentrates distances, so
     // beam search must separate near-ties — the corpus class where the
     // recall-vs-efSearch trade is visible (the lowRank manifold reads 1.0
-    // at every efSearch; measured in KneeTune and recorded in
-    // BENCH_SCALE's hnsw_frontier_hard at 1M: 0.37@16 → 0.97@256)
+    // at every efSearch; recorded in BENCH_SCALE's hnsw_frontier_hard
+    // at 1M: 0.37@16 → 0.97@256)
     val hard = SyntheticVectors.iidUnit(spark, 30000L, 384).cache()
     assert(hard.count() == 30000L)
     val qs = hard.filter(col("id") < 8)
@@ -244,7 +244,7 @@ class HnswSpec extends AnyFunSuite {
     assert(rFull >= rPruned - 1e-9, s"full fan-out below pruned: $rFull < $rPruned")
     // threshold = measured-minus-margin under the r9 trainer (restart
     // selection by retrieval-recall proxy for the coarse quantizer — see
-    // Kmeans.localFit; GateTune prints the measured values; training is
+    // Kmeans.localFit; the measured value is in the message; training is
     // seeded-deterministic, so the margin covers only future code drift)
     assert(rPruned >= 0.74, s"a11-config routed recall $rPruned (measured 0.7550)")
     assert(accP.value * 3 < accF.value * 2, // probing 4/8 shards: evals ≤ ~2/3 of full

@@ -94,7 +94,7 @@ class IngestSpec extends AnyFunSuite {
     // queries = a handful of chunk embeddings; exact search must self-match
     val queries = vecs.orderBy("id").limit(8)
       .select(col("id").as("qid"), col("vec").as("qvec"))
-    val top1 = Search.exactTopKBatched(vecs, queries, k = 1, Metric.L2).collect()
+    val top1 = Search.exactTopKFused(vecs, queries, k = 1, Metric.L2).collect()
     top1.foreach(r => assert(r.getAs[Long]("qid") == r.getAs[Long]("id")))
     // and the IVF path over the same embeddings keeps recall
     val cents = Ivf.train(vecs, nlist = 8, ntrain = 500)

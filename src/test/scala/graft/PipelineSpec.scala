@@ -223,6 +223,16 @@ class PipelineSpec extends AnyFunSuite {
       s"chain split into ${comp.values.toSet.size} components")
   }
 
+  test("connected components: a chain deeper than maxIter throws, never splits") {
+    val s = spark
+    import s.implicits._
+    // a 60-doc path needs ~59 label hops; the default maxIter (20) stops
+    // short, which used to return the chain split into many components
+    val pairs = (0L until 59L).map(i => (i, i + 1)).toDF("a", "b")
+    val e = intercept[IllegalStateException](Dedup.connectedComponentsStats(pairs))
+    assert(e.getMessage.contains("20 iterations"), e.getMessage)
+  }
+
   test("embedding near-dups: injected near-identicals collide, no crossJoin") {
     val s = spark
     import s.implicits._

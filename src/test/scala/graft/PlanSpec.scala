@@ -171,11 +171,13 @@ class PlanSpec extends AnyFunSuite {
 
   test("whole-stage codegen covers the scan+score hot path") {
     // AQE renders codegen spans only in the FINAL plan — execute first
-    val df = SparkEntry.queries("v1_knn_dot")(spark, dir)
+    // (v7: the f16 scan scores through a codegen batch expression; the
+    // f32 scan scores inside its per-partition top-k loop instead)
+    val df = SparkEntry.queries("v7_knn_half")(spark, dir)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
-    // codegen spans render as "*(n)" stage markers; the batched-scan
-    // scoring stage (scan -> batch_scores -> posexplode) must carry one
+    // codegen spans render as "*(n)" stage markers; the scoring stage
+    // (scan -> batch_scores_half -> deserialize) must carry one
     val starredScore = plan.linesIterator
       .exists(l => l.contains("batch_scores") && l.trim.matches(""".*\*\(\d+\) .*"""))
     assert(starredScore, s"scan+score path not codegen'd:\n$plan")

@@ -333,8 +333,8 @@ class Pq4Spec extends AnyFunSuite {
     assert(rRef >= REFINED_GATE, s"refined full-probe recall too low: $rRef")
     // r12 operating point: the refine BUDGET (not the 4-bit codebook)
     // bound the r11 plateau — rk=100 must not lose to rk=50, and holds
-    // the gate the 1M frontier operates at (RefineTune at 1M:
-    // 0.950 → 0.975; fixture measured 0.99375)
+    // the gate the 1M frontier operates at (the r12 refine-budget sweep
+    // at 1M, COVERAGE.md row C3: 0.950 → 0.975; fixture measured 0.99375)
     val rRef100 = refinedRecall(100)
     assert(rRef100 >= rRef,
       s"wider refine budget lost recall: rk100=$rRef100 < rk50=$rRef")

@@ -126,7 +126,7 @@ class PqSpec extends AnyFunSuite {
     val r = Ivf.meanRecall(pred, gt, 10).collect()(0).getDouble(0)
     // threshold = measured-minus-margin under the r9 trainer (restart
     // selection by retrieval-recall proxy for the coarse quantizer — see
-    // Kmeans.localFit; GateTune prints the measured values; training is
+    // Kmeans.localFit; the measured value is in the message; training is
     // seeded-deterministic, so the margin covers only future code drift)
     assert(r >= 0.58, s"full-probe IVF-PQ ADC recall too low: $r (measured 0.6000)")
     // widened candidates + exact refine recovers near-exact results

@@ -48,13 +48,10 @@ class ScaleSpec extends AnyFunSuite {
       (rows, (System.nanoTime() - t0) / 1e9)
     }
     val (a, ta) = run(Search.exactTopK(base, queries, 10, Metric.L2))
-    val (b, tb) = run(Search.exactTopKBatched(base, queries, 10, Metric.L2))
-    assert(a == b, "batched scan diverged from BNLJ")
-    info(f"BNLJ $ta%.2f s vs batched $tb%.2f s (${ta / tb}%.1fx)")
-    // fused per-partition buffers (J2+K2 in one pass): identical rows again
+    // the flat scan (J2+K2 in one pass, per-partition buffers): identical rows
     val (c, tc) = run(Search.exactTopKFused(base, queries, 10, Metric.L2))
     assert(a == c, "fused scan diverged from BNLJ")
-    info(f"fused $tc%.2f s (${ta / tc}%.1fx over BNLJ, ${tb / tc}%.1fx over batched)")
+    info(f"BNLJ $ta%.2f s vs fused $tc%.2f s (${ta / tc}%.1fx)")
   }
 
   test("batching gain at 1M rows: fused beats BNLJ, matches its rows") {
@@ -79,12 +76,10 @@ class ScaleSpec extends AnyFunSuite {
       (rows, (System.nanoTime() - t0) / 1e9)
     }
     val (a, ta) = run(Search.exactTopK(big, queries, 10, Metric.L2))
-    val (b, tb) = run(Search.exactTopKBatched(big, queries, 10, Metric.L2))
     val (c, tc) = run(Search.exactTopKFused(big, queries, 10, Metric.L2))
-    assert(a == b, "batched diverged from BNLJ at 1M")
     assert(a == c, "fused diverged from BNLJ at 1M")
-    info(f"1M×64-d, 20 queries: BNLJ $ta%.2f s, batched $tb%.2f s " +
-      f"(${ta / tb}%.2fx), fused $tc%.2f s (${ta / tc}%.2fx over BNLJ)")
+    info(f"1M×64-d, 20 queries: BNLJ $ta%.2f s, fused $tc%.2f s " +
+      f"(${ta / tc}%.2fx over BNLJ)")
     assert(ta / tc >= 1.5, f"fused gain ${ta / tc}%.2fx < 1.5x at 1M rows")
     big.unpersist()
   }

@@ -88,6 +88,27 @@ class SearchSpec extends AnyFunSuite {
     }
   }
 
+  test("a null-vector row is never ranked: groundTruth agrees with groundTruthBoth") {
+    // the oracle's null score used to reach the top-k aggregate as 0.0 —
+    // under L2 that is the nearest possible hit
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("vec", ArrayType(FloatType))))
+    val b = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(1L, Seq(1f, 0f, 0f, 0f)), Row(2L, null), Row(3L, Seq(.5f, .5f, 0f, 0f)))), schema)
+    val s = spark
+    import s.implicits._
+    val q = Seq((0L, Array(1f, 0f, 0f, 0f))).toDF("qid", "qvec")
+    def ids(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.collect().map(_.getAs[scala.collection.Seq[Long]](c).toList).toList
+    assert(ids(Search.groundTruth(b, q, k = 2, Metric.L2), "gt_ids") == List(List(1L, 3L)))
+    assert(ids(Search.groundTruth(b, q, k = 2, Metric.Dot), "gt_ids") == List(List(1L, 3L)))
+    val both = Search.groundTruthBoth(b, q, k = 2)
+    assert(ids(both, "dot_ids") == List(List(1L, 3L)))
+    assert(ids(both, "l2_ids") == List(List(1L, 3L)))
+  }
+
   test("quantization ladder: fp16 search recall 1.0, int8 recall >= 0.9 @ k=10") {
     val gt = Search.groundTruth(base, queries, k = 10, Metric.Dot)
 
@@ -122,10 +143,9 @@ class SearchSpec extends AnyFunSuite {
         .select(col("qid"), col("id").as("gid"),
           VectorFunctions.dotHalf(col("qvec"), col("hbits")).as("score")),
       "qid", "gid", "score", 10, larger = true)
-    assert(asSet(Search.exactTopKBatchedHalf(hbase, queries, 10)) == asSet(bnljH))
-    // fused flavor (per-partition top-k buffers inside the scan) — same
-    // scoreAllHalf hoist as the batched expression, so ranks must agree
-    // exactly with the per-pair BNLJ
+    // the flat scan (per-partition top-k buffers inside the scan) — the
+    // scoreAllHalf hoist is bitwise the per-pair kernel, so ranks must
+    // agree exactly with the per-pair BNLJ
     assert(asSet(Search.exactTopKFusedHalf(hbase, queries, 10)) == asSet(bnljH))
 
     val qbase = base.select(col("id"), VectorFunctions.quantizeI8(col("vec")).as("q"))
@@ -135,7 +155,6 @@ class SearchSpec extends AnyFunSuite {
         .select(col("qid"), col("id").as("gid"),
           VectorFunctions.dotI8(col("qvec"), col("codes"), col("scale")).as("score")),
       "qid", "gid", "score", 10, larger = true)
-    assert(asSet(Search.exactTopKBatchedI8(qbase, queries, 10)) == asSet(bnljI))
     assert(asSet(Search.exactTopKFusedI8(qbase, queries, 10)) == asSet(bnljI))
 
     // PACKED (BINARY blob) storage layout: write through the packed sinks

@@ -304,10 +304,10 @@ class SimdSpec extends AnyFunSuite {
     val dim = 100
     val x = Array.fill(dim)(rng.nextFloat() * 2 - 1)
     val qs = Array.fill(7)(Array.fill(dim)(rng.nextFloat() * 2 - 1))
-    val got = BatchScore.scores(
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(x), qs, BatchScore.MCos)
+    val got = new Array[Double](7)
+    BatchScore.scoreAll(x, qs, BatchScore.MCos, got)
     (0 until 7).foreach { j =>
-      assert(java.lang.Double.doubleToRawLongBits(got.getDouble(j)) ==
+      assert(java.lang.Double.doubleToRawLongBits(got(j)) ==
         java.lang.Double.doubleToRawLongBits(VectorKernels.cosine(x, qs(j))),
         s"cosine pair $j diverged")
     }

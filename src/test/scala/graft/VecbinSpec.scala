@@ -132,9 +132,9 @@ class VecbinSpec extends AnyFunSuite {
     // exact search over the V2-read base matches the parquet-read base
     val queries = Tables.embeddings(spark, dir).filter(col("vec_id") < 4)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val a = Search.exactTopKBatched(base, queries, 5, Metric.Dot)
+    val a = Search.exactTopKFused(base, queries, 5, Metric.Dot)
       .select("qid", "id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = Search.exactTopKBatched(v2, queries, 5, Metric.Dot)
+    val b = Search.exactTopKFused(v2, queries, 5, Metric.Dot)
       .select("qid", "id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(a == b)
   }
