@@ -340,30 +340,198 @@ object Dedup {
   }
 
   /** [[connectedComponentsStats]] result: the (node, component) labels
-    * plus the iteration count the scale gates assert on.
+    * plus the number of label-propagation rounds the graph needs.
     */
   final case class CcResult(labels: DataFrame, iterations: Int)
 
-  /** Connected components over a near-dup pair graph (a, b) by iterative
-    * min-label propagation: each node adopts the smallest component id
-    * among itself and its neighbors until a fixed point. Duplicate
-    * clusters are usually tiny and shallow, so convergence is fast
-    * (diameter-bounded); every iteration is one shuffle on node id.
-    * Returns (node, component) — component = smallest node id reachable.
-    * Throws `IllegalStateException` when no fixed point is reached within
-    * `maxIter` iterations (a dup chain deeper than that), rather than
-    * return split components.
+  /** Edge count up to which connected components run on the driver:
+    * 2^22 pairs are 64 MB of long ids. Measured at the bound with a 4 GB
+    * heap on 4 local cores, 4M disjoint pairs (8M labels): the driver path
+    * peaked at 0.4 GB of heap above its input, and the labels hold 0.2 GB
+    * (two long arrays and their broadcast) while they are in use.
+    */
+  private val DriverEdgeBound = 1 << 22
+
+  /** Connected components over a near-dup pair graph (a, b). Returns
+    * (node, component), one row per node that has a pair, where component
+    * is the smallest node id reachable from the node. A pair with a null
+    * end adds nothing.
+    *
+    * Up to 2^22 pairs with integral ids, one Spark job collects the edges
+    * and a breadth-first search on the driver labels them; `labels` then
+    * reads the driver's label arrays through a broadcast. Larger edge
+    * sets, or other id types, run min-label propagation in Spark, one
+    * join and group-by round at a time; `maxIter` bounds those rounds
+    * only, and not converging within it throws `IllegalStateException`
+    * rather than return split components.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
                           aCol: String = "a", bCol: String = "b"): DataFrame =
     connectedComponentsStats(pairs, maxIter, aCol, bCol).labels
 
-  /** [[connectedComponents]] with its convergence stats exposed — the
-    * iteration count bounds the shuffle count (one label shuffle per
-    * iteration), which is what the 100k-corpus scale gate asserts.
+  /** [[connectedComponents]] with its round count exposed. `iterations`
+    * is the number of rounds label propagation needs on this graph: one
+    * plus the largest hop distance from a component's smallest id to any
+    * of its nodes, or 1 when there are no pairs. Both paths report the
+    * same number; only the propagation path spends one Spark round on
+    * each.
     */
   def connectedComponentsStats(pairs: DataFrame, maxIter: Int = 20,
-                               aCol: String = "a", bCol: String = "b"): CcResult = {
+                               aCol: String = "a", bCol: String = "b"): CcResult =
+    componentsWithin(pairs, maxIter, aCol, bCol, DriverEdgeBound)
+
+  /** [[connectedComponentsStats]] with the driver path's edge bound as a
+    * parameter. Integral ids are read from the pair lineage once: the
+    * packed edges stay persisted while either path runs on them.
+    */
+  private[graft] def componentsWithin(pairs: DataFrame, maxIter: Int, aCol: String,
+                                      bCol: String, bound: Int): CcResult = {
+    import org.apache.spark.sql.types._
+    val ab = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull)
+    // the id type and nullability the propagation plan's union gives
+    val id = ab.select(col("a").as("x")).union(ab.select(col("b").as("x"))).schema.head
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    id.dataType match {
+      case LongType | IntegerType | ShortType | ByteType =>
+        val packed = packEdges(ab)
+        try collectEdges(packed, bound) match {
+          case Some(edges) =>
+            val (nodes, roots, iterations) = componentsOf(edges)
+            // row i of a range reads label i from a broadcast of the two
+            // arrays: no driver object per label, and the range keeps the
+            // plan's size estimate true, so a large label set is not
+            // broadcast into a join
+            val table = spark.sparkContext.broadcast((nodes, roots))
+            val nodeAt = udf((i: Long) => table.value._1(i.toInt))
+            // boxed, so `component` is nullable like propagation's min
+            val rootAt = udf((i: Long) => Long.box(table.value._2(i.toInt)))
+            val labels = spark.range(nodes.length).select(
+              nodeAt(col("id")).cast(id.dataType).as("node"),
+              rootAt(col("id")).cast(id.dataType).as("component"))
+            CcResult(labels, iterations)
+          case None =>
+            val unpacked = packed
+              .flatMap(e => Iterator.tabulate(e.length / 2)(i => (e(2 * i), e(2 * i + 1))))
+              .toDF("a", "b")
+              .select(col("a").cast(id.dataType).as("a"), col("b").cast(id.dataType).as("b"))
+            propagateComponents(unpacked, maxIter)
+        } finally packed.unpersist()
+      case _ => propagateComponents(ab, maxIter)
+    }
+  }
+
+  /** The (a, b) pairs of `ab` as one interleaved long array per
+    * partition, persisted, so reading the edges again skips the pair
+    * lineage. The caller unpersists it.
+    */
+  private[graft] def packEdges(ab: DataFrame): org.apache.spark.rdd.RDD[Array[Long]] = {
+    val spark = ab.sparkSession
+    import spark.implicits._
+    ab.select(col("a").cast("long"), col("b").cast("long")).as[(Long, Long)].rdd
+      .mapPartitions { it =>
+        val out = new scala.collection.mutable.ArrayBuilder.ofLong
+        it.foreach { case (a, b) => out += a; out += b }
+        Iterator.single(out.result())
+      }
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** The packed edges as one array, or None when there are more than
+    * `bound`. One job returns each partition's edge count and, up to its
+    * share of the bound, its edges, so the driver never receives much
+    * more than the bound; only a partition over its share while the total
+    * fits costs a second job, which reads the persisted arrays.
+    */
+  private[graft] def collectEdges(packed: org.apache.spark.rdd.RDD[Array[Long]],
+                                  bound: Int): Option[Array[Long]] = {
+    val share = 2 * (bound / math.max(1, packed.getNumPartitions) + 1)
+    val first = packed
+      .map(e => (e.length / 2, if (e.length <= share) e else java.util.Arrays.copyOf(e, share)))
+      .collect()
+    if (first.map(_._1.toLong).sum > bound) None
+    else if (first.forall(p => p._2.length == 2 * p._1)) Some(Array.concat(first.map(_._2): _*))
+    else Some(Array.concat(packed.collect(): _*))
+  }
+
+  /** Components of an interleaved edge array: (nodes ascending, each
+    * node's component id, propagation rounds). A breadth-first search
+    * from every not yet reached node in ascending order starts at its
+    * component's smallest id, so one O(V + E) pass yields both the
+    * labels and the largest hop distance from a component's smallest id.
+    */
+  private def componentsOf(edges: Array[Long]): (Array[Long], Array[Long], Int) = {
+    val sorted = edges.clone()
+    java.util.Arrays.sort(sorted)
+    var nv = 0
+    var i = 0
+    while (i < sorted.length) {
+      if (nv == 0 || sorted(i) != sorted(nv - 1)) { sorted(nv) = sorted(i); nv += 1 }
+      i += 1
+    }
+    val ids = java.util.Arrays.copyOf(sorted, nv)
+    val ends = edges.map(java.util.Arrays.binarySearch(ids, _))
+    // adjacency in CSR form, both directions, self-loops dropped
+    val start = new Array[Int](nv + 1)
+    i = 0
+    while (i < ends.length) {
+      if (ends(i) != ends(i + 1)) { start(ends(i) + 1) += 1; start(ends(i + 1) + 1) += 1 }
+      i += 2
+    }
+    i = 0
+    while (i < nv) { start(i + 1) += start(i); i += 1 }
+    val adj = new Array[Int](start(nv))
+    val fill = java.util.Arrays.copyOf(start, nv)
+    i = 0
+    while (i < ends.length) {
+      val u = ends(i)
+      val v = ends(i + 1)
+      if (u != v) {
+        adj(fill(u)) = v; fill(u) += 1
+        adj(fill(v)) = u; fill(v) += 1
+      }
+      i += 2
+    }
+    val root = Array.fill(nv)(-1)
+    val hops = new Array[Int](nv)
+    val queue = new Array[Int](nv)
+    var deepest = 0
+    var s = 0
+    while (s < nv) {
+      if (root(s) < 0) {
+        root(s) = s
+        queue(0) = s
+        var head = 0
+        var tail = 1
+        while (head < tail) {
+          val u = queue(head)
+          head += 1
+          deepest = math.max(deepest, hops(u))
+          var j = start(u)
+          while (j < start(u + 1)) {
+            val v = adj(j)
+            if (root(v) < 0) {
+              root(v) = s; hops(v) = hops(u) + 1
+              queue(tail) = v; tail += 1
+            }
+            j += 1
+          }
+        }
+      }
+      s += 1
+    }
+    (ids, root.map(ids(_)), deepest + 1)
+  }
+
+  /** Min-label propagation in Spark over (a, b) pairs: each round every
+    * node adopts the smallest component id among itself and its
+    * neighbors, until a round changes nothing. One join, one group-by
+    * and one sum per round, and as many rounds as the graph's diameter
+    * needs; the path for edge sets too large for the driver. Throws
+    * `IllegalStateException` when `maxIter` rounds do not converge.
+    */
+  private[graft] def propagateComponents(pairs: DataFrame, maxIter: Int): CcResult = {
     // NOT pre-partitioned on the join key, by measurement (r18): caching
     // the edge table y-repartitioned (guide §2.4, so each iteration's
     // `edges ⋈ labels ON y` skips the edge-side shuffle) read ~2× SLOWER
@@ -372,8 +540,8 @@ object Dedup {
     // cost more than the saved per-iteration shuffle on small dup graphs.
     // Revisit only with evidence from a corpus whose edge table dwarfs
     // the label frame (where the per-iteration edge shuffle dominates).
-    val edges = pairs.select(col(aCol).as("x"), col(bCol).as("y"))
-      .union(pairs.select(col(bCol).as("x"), col(aCol).as("y")))
+    val edges = pairs.select(col("a").as("x"), col("b").as("y"))
+      .union(pairs.select(col("b").as("x"), col("a").as("y")))
       .distinct().cache()
     var labels = edges.select(col("x").as("node"))
       .distinct().withColumn("component", col("node")).cache()

@@ -2,19 +2,22 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, Eval, Hnsw, Ivf, Metric, Packing, Pq, Sampling, Search, TextAnalysis}
 
-/** Cumulative shuffle-byte tally across all tasks — the measurement
-  * behind the "shuffle ∝ candidates, not corpus²" scale gates. Listener
-  * delivery is async: read the counters only after a short drain pause.
+/** Cumulative shuffle-byte and job tally across all tasks — the
+  * measurement behind the "shuffle ∝ candidates, not corpus²" scale
+  * gates. Listener delivery is async: read the counters only after a
+  * short drain pause.
   */
 class ShuffleTally extends SparkListener {
   val write = new AtomicLong
   val read = new AtomicLong
+  val jobs = new AtomicLong
+  override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
   override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
     val m = t.taskMetrics
     if (m != null) {
@@ -177,8 +180,9 @@ object BenchScale {
       TextAnalysis.textStats(docs).write.format("noop").mode("overwrite").save()
       Map("rows" -> n.toDouble)
     }
-    // transitive dedup over the real d9 candidate pairs — the one dedup op
-    // whose cost is iterations × one-label-shuffle; convergence depth and
+    // transitive dedup over the real d9 candidate pairs: below the driver
+    // edge bound one collect job plus a driver-side search, above it one
+    // label-propagation round per iteration; convergence depth and
     // component structure are the scale story
     run("cc_components") {
       val pairs = Dedup.minhashLshPairs64(docs)

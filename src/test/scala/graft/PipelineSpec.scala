@@ -217,20 +217,56 @@ class PipelineSpec extends AnyFunSuite {
     // iterations, and the periodic localCheckpoint must keep the lineage
     // (and per-iteration planning time) bounded across all of them
     val pairs = (0L until 50L).map(i => (i, i + 1)).toDF("a", "b")
-    val comp = Dedup.connectedComponents(pairs, maxIter = 60).collect()
+    val comp = Dedup.propagateComponents(pairs, maxIter = 60).labels.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comp.size == 51 && comp.values.forall(_ == 0L),
       s"chain split into ${comp.values.toSet.size} components")
   }
 
+  test("connected components: a 60-doc chain at default args is one component in 60 rounds") {
+    val s = spark
+    import s.implicits._
+    // a 60-doc path is 59 label hops from its smallest id: deeper than the
+    // propagation path's default maxIter (20), well inside the driver bound
+    val pairs = (0L until 59L).map(i => (i, i + 1)).toDF("a", "b")
+    val cc = Dedup.connectedComponentsStats(pairs)
+    val comp = cc.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(comp.size == 60 && comp.values.forall(_ == 0L),
+      s"chain split into ${comp.values.toSet.size} components")
+    assert(cc.iterations == 60, s"iterations ${cc.iterations}")
+  }
+
   test("connected components: a chain deeper than maxIter throws, never splits") {
     val s = spark
     import s.implicits._
-    // a 60-doc path needs ~59 label hops; the default maxIter (20) stops
-    // short, which used to return the chain split into many components
+    // the above-bound path stops after maxIter rounds; a split answer
+    // must never come back from it
     val pairs = (0L until 59L).map(i => (i, i + 1)).toDF("a", "b")
-    val e = intercept[IllegalStateException](Dedup.connectedComponentsStats(pairs))
+    val e = intercept[IllegalStateException](Dedup.propagateComponents(pairs, maxIter = 20))
     assert(e.getMessage.contains("20 iterations"), e.getMessage)
+  }
+
+  test("connected components: a 10K-node chain is one component in 10,000 rounds") {
+    val s = spark
+    import s.implicits._
+    val pairs = (0L until 9999L).map(i => (i + 1, i)).toDF("a", "b")
+    val cc = Dedup.connectedComponentsStats(pairs)
+    val comps = cc.labels.collect().map(_.getLong(1))
+    assert(comps.length == 10000 && comps.forall(_ == 0L),
+      s"chain split into ${comps.toSet.size} components")
+    assert(cc.iterations == 10000, s"iterations ${cc.iterations}")
+  }
+
+  test("connected components: a 1K-node star centred on its largest id needs 3 rounds") {
+    val s = spark
+    import s.implicits._
+    // leaves 0..998 reach their smallest id 0 through the centre 999
+    val pairs = (0L until 999L).map(i => (999L, i)).toDF("a", "b")
+    val cc = Dedup.connectedComponentsStats(pairs)
+    val comps = cc.labels.collect().map(_.getLong(1))
+    assert(comps.length == 1000 && comps.forall(_ == 0L),
+      s"star split into ${comps.toSet.size} components")
+    assert(cc.iterations == 3, s"iterations ${cc.iterations}")
   }
 
   test("embedding near-dups: injected near-identicals collide, no crossJoin") {

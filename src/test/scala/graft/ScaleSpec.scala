@@ -69,16 +69,23 @@ class ScaleSpec extends AnyFunSuite {
     val queries = big.filter(col("id") % 50000 === 0)
       .select(col("id").as("qid"), col("vec").as("qvec"))
     def run(f: => org.apache.spark.sql.DataFrame): (Set[(Long, Long, Int)], Double) = {
-      f.count() // warmup (codegen + JIT)
       val t0 = System.nanoTime()
       val rows = f.collect().map(r =>
         (r.getAs[Long]("qid"), r.getAs[Long]("id"), r.getAs[Int]("rank"))).toSet
       (rows, (System.nanoTime() - t0) / 1e9)
     }
-    val (a, ta) = run(Search.exactTopK(big, queries, 10, Metric.L2))
-    val (c, tc) = run(Search.exactTopKFused(big, queries, 10, Metric.L2))
-    assert(a == c, "fused diverged from BNLJ at 1M")
-    info(f"1M×64-d, 20 queries: BNLJ $ta%.2f s, fused $tc%.2f s " +
+    def bnlj = Search.exactTopK(big, queries, 10, Metric.L2)
+    def fused = Search.exactTopKFused(big, queries, 10, Metric.L2)
+    bnlj.count(); fused.count() // warmup (codegen + JIT)
+    // three interleaved timed runs per path, gated on the ratio of the
+    // medians: one run per path read 1.26x and 7.91x on the same code in
+    // the shared test JVM, so one pair is not a measurement
+    val runs = (0 until 3).map(_ => (run(bnlj), run(fused)))
+    runs.foreach { case ((a, _), (c, _)) => assert(a == c, "fused diverged from BNLJ at 1M") }
+    def median(xs: Seq[Double]) = xs.sorted.apply(xs.length / 2)
+    val ta = median(runs.map(_._1._2))
+    val tc = median(runs.map(_._2._2))
+    info(f"1M×64-d, 20 queries, median of 3: BNLJ $ta%.2f s, fused $tc%.2f s " +
       f"(${ta / tc}%.2fx over BNLJ)")
     assert(ta / tc >= 1.5, f"fused gain ${ta / tc}%.2fx < 1.5x at 1M rows")
     big.unpersist()
