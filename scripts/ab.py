@@ -3,6 +3,7 @@
 
     python3 scripts/ab.py --workloads dedup_curate --pairs 10
     python3 scripts/ab.py --aa --pairs 10          # harness bias
+    python3 scripts/ab.py --workloads ann_lifecycle --pairs 3 --trace
 
 The parent (HEAD) is exported with `git archive` into a scratch
 directory; the change is the working tree. `--aa` runs the parent against
@@ -20,7 +21,11 @@ the failed operations summed over each side's runs. A metric is marked
 GAIN when the change won at least nine tenths of the pairs, the medians
 differ by more than the parent's interquartile range and the change
 failed no more operations than the parent; it is marked WORSE THAN BOUND
-when its median ratio is worse than its BENCHMARK.json bound. Raw runs
+when its median ratio is worse than its BENCHMARK.json bound. `--trace`
+runs perfbench traced (`--trace 1`): each pair then carries the per-layer
+metrics (build phases, Spark jobs, maintenance, probes) in place of the
+end-to-end ones, so the layer that moved gets its own ratio and interval.
+Raw runs
 are written to <scratch>/ab-runs.json. Exits 1 if any run was incorrect
 or failed, or if the change failed more operations than the parent.
 """
@@ -79,10 +84,11 @@ def build(tree):
     mod.build()
 
 
-def run(tree, workload, seed, seconds):
+def run(tree, workload, seed, seconds, trace):
     """One perfbench run in `tree`: its result object, or None on failure."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(seconds),
+           "--trace", "1" if trace else "0"]
     t0 = time.time()
     proc = subprocess.run(cmd, cwd=tree, stdout=subprocess.PIPE,
                           stderr=subprocess.PIPE, text=True)
@@ -160,6 +166,8 @@ def main():
                     help="comma-separated (default: all in BENCHMARK.json)")
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=1001, help="seed of the first pair")
+    ap.add_argument("--trace", action="store_true",
+                    help="traced runs: report the per-layer metrics too")
     ap.add_argument("--scratch", default=os.path.join(tempfile.gettempdir(), "graft-ab"),
                     help="where the exported trees and raw runs go")
     a = ap.parse_args()
@@ -188,7 +196,7 @@ def main():
                 order.reverse()
             got = {}
             for label, tree in order:
-                got[label] = run(tree, w, seed, seconds)
+                got[label] = run(tree, w, seed, seconds, a.trace)
             ok = all(r is not None and r["correct"] for r in got.values())
             if not ok:
                 bad += 1

@@ -273,6 +273,15 @@ object QuantizedTables {
     * a pure function of (ids, cell assignment, block): window rank within
     * cell, blocks of `block` rows, rows id-sorted inside each block —
     * deterministic like every other blocked sink.
+    *
+    * The rows hash-repartition on cluster_id to `defaultParallelism`
+    * partitions before the window. A repartition to a fixed count is never
+    * coalesced by AQE; without it, AQE merges the small post-shuffle stage
+    * into ONE task that writes every cell directory alone (measured on a
+    * 4-core box at 50K × 32d, nlist = 256: one 2.1 s task for a < 1 MB
+    * shuffle). Each cell still lands whole in one task, so the blocks are
+    * the same and each cell directory still holds exactly one file — the
+    * layout `Pq.searchLocalIvf4` and the fastscan probes contract on.
     */
   def writePq4BlockedClustered(rows: DataFrame, path: String,
                                idCol: String = "id",
@@ -293,6 +302,7 @@ object QuantizedTables {
     val w = Window.partitionBy(col("cluster_id")).orderBy(col("id"))
     rows.select(col(clusterCol).cast("int").as("cluster_id"),
         col(idCol).cast("long").as("id"), asBin.as("b"))
+      .repartition(spark.sparkContext.defaultParallelism, col("cluster_id"))
       .withColumn("rk", row_number().over(w))
       // integral `div` (same boundary-exactness argument as idRangeLayout)
       .withColumn("blk", expr(s"(rk - 1) div $block"))

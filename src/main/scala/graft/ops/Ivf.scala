@@ -141,10 +141,15 @@ object Ivf {
     // repartition on the partition column like writeClustered — a raw
     // partitionBy append writes one file per (input split x touched
     // cluster), and a continuously maintained table accumulates that
-    // small-file explosion per batch
+    // small-file explosion per batch. The count is fixed at
+    // defaultParallelism (AQE never coalesces it), as in the pq4 writer:
+    // AQE used to merge a batch's small shuffle into ONE task that wrote
+    // every touched cell alone. Each cell still goes to one task, so the
+    // batch still adds one file per touched cell.
     def writeTo(path: String, mode: String): Unit =
       assign(batch, idx.centroids)
-        .repartition(col("cluster_id"))
+        .repartition(batch.sparkSession.sparkContext.defaultParallelism,
+          col("cluster_id"))
         .write.mode(mode).partitionBy("cluster_id")
         .parquet(path)
     val n =
@@ -286,20 +291,59 @@ object Ivf {
       Array.fill(rows)(Array.fill(cols)(in.readFloat()))
     }
 
+  /** The coarse quantizer every IVF-family builder ([[buildOrGet]],
+    * `Pq.buildOrGet`, `Pq.buildOrGetIvf4`) partitions by: trained at most
+    * once per (cacheKey, nlist, ntrain, seed, vecCol, idCol, trainer tag),
+    * whichever builder asks first, and reused from its sidecar after that
+    * — in this JVM and across JVMs. The sidecar is [[buildOrGet]]'s own
+    * centroid file, so an IVF index and a pq4 index built from the same
+    * key share one quantizer and pay one train (15 Spark jobs at nlist 256
+    * over a 16K-row sample). The trainer is deterministic, so the shared
+    * quantizer is bitwise the one a fresh [[train]] returns.
+    * `searchFastScanIvfRefinedClustered` still checks equality at runtime.
+    */
+  private[graft] def coarse(base: => DataFrame, cacheKey: String, nlist: Int,
+                            ntrain: Int, seed: Long, vecCol: String = "vec",
+                            idCol: String = "id"): Array[Array[Float]] = {
+    val file = s"target/ivf_cache/${cacheDigest(coarseKey(cacheKey, nlist, ntrain, seed,
+      vecCol, idCol))}.centroids.bin"
+    loadMatrix(file).getOrElse {
+      val cents = train(base, nlist, ntrain, seed, vecCol, idCol)
+      coarseTrains.incrementAndGet()
+      new java.io.File(file).getParentFile.mkdirs()
+      saveMatrix(file, cents)
+      cents
+    }
+  }
+
+  /** [[buildOrGet]]'s cache key: its artifact names stay valid, and the
+    * column names enter the key only when they differ from its defaults.
+    * "t6" versions the trainer (the graft fused-SIMD Lloyd, hash-draw /
+    * nredo init): cached artifacts from an older trainer must MISS, not
+    * serve silently — bump this tag whenever trainer semantics change.
+    */
+  private def coarseKey(cacheKey: String, nlist: Int, ntrain: Int, seed: Long,
+                        vecCol: String, idCol: String): String = {
+    val cols = if (vecCol == "vec" && idCol == "id") "" else s"|$vecCol|$idCol"
+    s"$cacheKey|$nlist|$ntrain|$seed$cols|t6"
+  }
+
+  /** Test probe: how many times [[coarse]] has trained in this JVM. */
+  private[graft] val coarseTrains = new java.util.concurrent.atomic.AtomicInteger()
+
   /** Build (or fetch the already-built) IVF index for `base`: train
     * centroids, assign every row, write partitioned by cluster_id. Keyed by
     * (cacheKey, nlist, ntrain, seed) so repeated query executions — e.g.
     * the bench loop — pay the build exactly once; the on-disk artifact
-    * (clustered table + centroid matrix) is reused across JVMs too.
+    * (clustered table + centroid matrix) is reused across JVMs too. The
+    * centroids come from [[coarse]], so a pq4 index built first under the
+    * same key leaves nothing to train.
     */
   def buildOrGet(spark: org.apache.spark.sql.SparkSession, base: => DataFrame,
                  cacheKey: String, nlist: Int, ntrain: Int,
                  seed: Long = 42L,
                  onPhase: (String, Double) => Unit = (_, _) => ()): Index = {
-    // "t6" versions the trainer (the graft fused-SIMD Lloyd, hash-draw /
-    // nredo init): cached artifacts from an older trainer must MISS, not
-    // serve silently — bump this tag whenever trainer semantics change
-    val key = s"$cacheKey|$nlist|$ntrain|$seed|t6"
+    val key = coarseKey(cacheKey, nlist, ntrain, seed, "vec", "id")
     indexCache.computeIfAbsent(key, _ => {
       val path = s"target/ivf_cache/${cacheDigest(key)}"
       val centFile = s"$path.centroids.bin"
@@ -310,12 +354,11 @@ object Ivf {
           // phase split: train cost is corpus-independent (bounded sample),
           // assign+write is the full-corpus pass — the axis that scales
           val t0 = System.nanoTime()
-          val cents = train(base, nlist, ntrain, seed)
+          val cents = coarse(base, cacheKey, nlist, ntrain, seed)
           val t1 = System.nanoTime()
           onPhase("train", (t1 - t0) / 1e9)
           writeClustered(assign(base, cents), path)
           onPhase("assign_write", (System.nanoTime() - t1) / 1e9)
-          saveMatrix(centFile, cents)
           Index(cents, path)
       }
     })

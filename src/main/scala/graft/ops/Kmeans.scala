@@ -140,13 +140,13 @@ object Kmeans {
       // lowest-quantization-error run. A single shot is one local optimum
       // whose quality swings ±0.05 probe recall with the init draw on a
       // 500-row fixture; best-of-4 restarts removes that luck for the
-      // price of milliseconds at this size.
-      if (k < 256 && n <= 16384) {
-        // content-hash sort: the collected order (and with it the ++ draw)
-        // must not depend on the partition layout either
+      // price of milliseconds at this size. `Pq.train` tests the same
+      // predicate and, for its m sub-codebooks, collects the sample once
+      // and calls fitLocal per driver-side slice instead of paying this
+      // shuffle + collect m times.
+      if (localEligible(k, n)) {
         lastRunIters.set(-1)
-        return localFit(rdd.collect().sortBy(contentHash64),
-          k, dim, seed, maxIter, tol, nredo = localNredo, selectByRecall)
+        return fitLocal(rdd.collect(), k, seed, maxIter, tol, selectByRecall)
       }
 
       var cents: Array[Array[Float]] =
@@ -451,6 +451,37 @@ object Kmeans {
       lastRunIters.set(iter)
       cents
     } finally rdd.unpersist(blocking = false)
+  }
+
+  /** Whether [[fit]] trains `k` centroids on an `n`-row sample entirely on
+    * the driver ([[fitLocal]]) instead of running distributed Lloyd. Callers
+    * that already hold the sample on the driver (`Pq.train`'s sub-codebooks)
+    * test the same predicate and call [[fitLocal]] directly, skipping the
+    * per-fit shuffle and collect.
+    */
+  private[graft] def localEligible(k: Int, n: Long): Boolean = k < 256 && n <= 16384
+
+  /** [[fit]]'s driver-local path on points already on the driver. The
+    * points are sorted by content (FNV-1a hash of the float bits, then the
+    * values) before the restarts, so the result is a pure function of the
+    * point multiset: any collection order of the same sample — a shuffled
+    * partition layout, or a driver-side slice of a plain collect — gives
+    * bitwise the same centroids.
+    */
+  private[graft] def fitLocal(pts: Array[Array[Float]], k: Int, seed: Long,
+                              maxIter: Int = 25, tol: Double = 1e-4,
+                              selectByRecall: Boolean = false): Array[Array[Float]] = {
+    val sorted = pts.map(v => (contentHash64(v), v)).sorted(contentOrder).map(_._2)
+    localFit(sorted, k, sorted.head.length, seed, maxIter, tol,
+      nredo = localNredo, selectByRecall)
+  }
+
+  /** Hash first; equal hashes fall back to the values, so distinct points
+    * that collide still sort the same whatever order they arrive in.
+    */
+  private val contentOrder: Ordering[(Long, Array[Float])] = (a, b) => {
+    val c = java.lang.Long.compare(a._1, b._1)
+    if (c != 0) c else java.util.Arrays.compare(a._2, b._2)
   }
 
   /** Iterations the last DISTRIBUTED fit on this JVM ran (−1 after a

@@ -24,10 +24,26 @@ object Pq {
 
   /** Train per-subspace k-means codebooks on the deterministic id-prefix.
     * `dim % m == 0` required (FAISS requires the same).
+    *
+    * The m sub-codebooks are independent k-means problems (Jégou et al.,
+    * TPAMI 2011), so they train CONCURRENTLY on a pool of
+    * min(m, availableProcessors) threads created per call. Threads created
+    * inside the call inherit Spark's local properties (job group,
+    * scheduler pool, tracing tags), so their jobs stay attributed to the
+    * caller. When a sub-fit would take [[Kmeans.fit]]'s driver-local path
+    * ([[Kmeans.localEligible]]), the sample is collected ONCE and each
+    * subspace runs [[Kmeans.fitLocal]] on its driver-side slice; otherwise
+    * each subspace runs the unchanged [[Kmeans.fit]]. Either way codebook s
+    * is bitwise the one a sequential `Kmeans.fit(slice s, ksub, seed + s,
+    * maxIter = 15)` loop gives (BuildPathSpec gates it): fitLocal's content
+    * sort makes the local result independent of collection order, and
+    * concurrent distributed fits share no state.
     */
   def train(base: DataFrame, m: Int, ksub: Int, ntrain: Int = 200000,
             seed: Long = 42L, vecCol: String = "vec",
             idCol: String = "id"): Codebooks = {
+    val spark = base.sparkSession
+    import spark.implicits._
     // id-prefix via range predicate (ids are dense positional, SURVEY §1.1):
     // pushes to the scan instead of a global TakeOrdered over every partition
     val sample = Ivf.trainSample(base, ntrain, idCol).select(col(vecCol)).cache()
@@ -37,18 +53,47 @@ object Pq {
         s"training sample has $got rows < ksub=$ksub: trainers contract on " +
           s"dense positional '$idCol' (SURVEY §1.1) — mint ids with " +
           "Ingest.withPositionalIds before indexing derived tables")
-      val dim = sample.select(size(col(vecCol))).head().getInt(0)
-      require(dim % m == 0, s"dim $dim not divisible by m=$m")
-      val dsub = dim / m
       // per-subspace codebooks through the same fused-SIMD Lloyd trainer
       // as the coarse quantizer ([[Kmeans]]) — FAISS's 25-iter default
       // was overkill for ksub=256 sub-codebooks; 15 matches the r7 MLlib
       // setting this replaced
-      (0 until m).map { s =>
-        val sub = sample.select(slice(col(vecCol), s * dsub + 1, dsub).as("vec"))
-        Kmeans.fit(sub, ksub, seed + s, maxIter = 15)
-      }.toArray
+      val maxIter = 15
+      if (Kmeans.localEligible(ksub, got)) {
+        val rows = sample.as[Array[Float]].collect()
+        val dsub = subDim(rows.head.length, m)
+        perSubspace(m) { s =>
+          val from = s * dsub
+          Kmeans.fitLocal(rows.map(java.util.Arrays.copyOfRange(_, from, from + dsub)),
+            ksub, seed + s, maxIter)
+        }
+      } else {
+        val dsub = subDim(sample.select(size(col(vecCol))).head().getInt(0), m)
+        perSubspace(m) { s =>
+          val sub = sample.select(slice(col(vecCol), s * dsub + 1, dsub).as("vec"))
+          Kmeans.fit(sub, ksub, seed + s, maxIter)
+        }
+      }
     } finally sample.unpersist()
+  }
+
+  private def subDim(dim: Int, m: Int): Int = {
+    require(dim % m == 0, s"dim $dim not divisible by m=$m")
+    dim / m
+  }
+
+  /** `fit(s)` for s in 0 until m on a per-call pool of min(m, cores)
+    * threads; a failed fit rethrows its own exception.
+    */
+  private def perSubspace(m: Int)(fit: Int => Array[Array[Float]]): Codebooks = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(m, Runtime.getRuntime.availableProcessors))
+    try {
+      val fits = (0 until m).map(s => pool.submit(() => fit(s)))
+      fits.map { f =>
+        try f.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }.toArray
+    } finally pool.shutdownNow()
   }
 
   def pqEncode(vec: Column, books: Codebooks): Column =
@@ -585,7 +630,9 @@ object Pq {
     * reference's build pipeline (`nvdb_ivfpq_build.cpp:98-129`), with
     * partition pruning standing in for inverted-list skipping. On-disk
     * artifacts (encoded table + coarse centroids + codebooks) are reused
-    * across JVMs, like the reference's saved `.faiss` files.
+    * across JVMs, like the reference's saved `.faiss` files. The coarse
+    * quantizer is [[Ivf.coarse]]'s: shared with every other IVF-family
+    * build of the same (cacheKey, nlist, ntrain, seed, columns).
     */
   def buildOrGet(spark: SparkSession, base: => DataFrame, cacheKey: String,
                  nlist: Int, m: Int, ksub: Int, ntrain: Int,
@@ -599,7 +646,7 @@ object Pq {
         case (Some(coarse), Some(books)) if new java.io.File(s"$path/_SUCCESS").isFile =>
           Index(coarse, books, path)
         case _ =>
-          val coarse = Ivf.train(base, nlist, ntrain, seed, vecCol, idCol)
+          val coarse = Ivf.coarse(base, cacheKey, nlist, ntrain, seed, vecCol, idCol)
           val assigned = Ivf.assign(base, coarse, vecCol)
             .withColumn("residual", centroidResidual(col(vecCol), col("cluster_id"), coarse))
           val books = train(
@@ -743,8 +790,8 @@ object Pq {
   /** Build (or fetch) the IVF-fastscan index: coarse KMeans → residual
     * 4-bit codebooks (ksub=16) → encode → cluster-partitioned blocked
     * nibble table ([[graft.io.QuantizedTables.writePq4BlockedClustered]]).
-    * Same artifact discipline as [[buildOrGet]]; serves
-    * [[searchFastScanIvf]].
+    * Same artifact discipline and shared [[Ivf.coarse]] quantizer as
+    * [[buildOrGet]]; serves [[searchFastScanIvf]].
     */
   def buildOrGetIvf4(spark: SparkSession, base: => DataFrame, cacheKey: String,
                      nlist: Int, m4: Int, ntrain: Int, seed: Long = 42L,
@@ -756,7 +803,7 @@ object Pq {
         case (Some(coarse), Some(books)) if new java.io.File(s"$path/_SUCCESS").isFile =>
           Index(coarse, books, path)
         case _ =>
-          val coarse = Ivf.train(base, nlist, ntrain, seed, vecCol, idCol)
+          val coarse = Ivf.coarse(base, cacheKey, nlist, ntrain, seed, vecCol, idCol)
           val assigned = Ivf.assign(base, coarse, vecCol)
             .withColumn("residual",
               centroidResidual(col(vecCol), col("cluster_id"), coarse))
