@@ -2187,18 +2187,19 @@ object Hnsw {
       throw new IllegalStateException(
         s"no warmed hnsw graphs under '$cacheKey' in this JVM — " +
           "searchLocal serves a colocated cache only"))
-    val probed: Set[Int] =
-      if (centroids == null || routeProbe <= 0) (0 until nShards).toSet
+    // visited in ascending shard order
+    val probed: Array[Int] =
+      if (centroids == null || routeProbe <= 0) Array.range(0, nShards)
       else {
-        // same selection kernel as the distributed router
-        val picked = graft.functions.expressions.CentroidOps.topNprobe(
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(qvec),
-          centroids, routeProbe)
-        (0 until picked.numElements()).map(picked.getInt).toSet
+        // same selection kernel as the distributed router (distinct ids)
+        val picked = graft.functions.expressions.CentroidOps.topNprobeF(
+          qvec, centroids, routeProbe)
+        java.util.Arrays.sort(picked)
+        picked
       }
     val agg = new TopKAggregator(k, metric.larger)
     val buf = agg.zero
-    probed.toArray.sorted.foreach { shard =>
+    probed.foreach { shard =>
       val key = s"$cacheKey|$shard|$dim|$m|$efConstruction|$seed|$metric"
       val g = group.get(key)
       // allowMissing mirrors searchWarm's empty-router-cell semantics:
@@ -2212,8 +2213,13 @@ object Hnsw {
           agg.consider(buf, id, s)
         }
     }
-    (0 until buf.n).map(i => (buf.ids(i), buf.scores(i))).toArray
-      .sortBy { case (id, s) => (if (metric.larger) -s else s, id) }
+    // best-first by (Double.compare on the oriented score, id); a
+    // comparator rather than tuple keys boxes nothing per comparison
+    def oriented(s: Double) = if (metric.larger) -s else s
+    Array.tabulate(buf.n)(i => (buf.ids(i), buf.scores(i))).sortWith { (x, y) =>
+      val o = java.lang.Double.compare(oriented(x._2), oriented(y._2))
+      o < 0 || (o == 0 && x._1 < y._1)
+    }
   }
 
   /** Shared core: repartition to co-locate shards, build-or-fetch each

@@ -891,7 +891,7 @@ object Pq {
         }
     // the grown table must re-list its files in every session (also on a
     // replayed commit: the moves may have completed just now)
-    relationCache.keySet().removeIf(_.endsWith(s"|${idx.path}"))
+    Ivf.relist(relationCache, idx.path)
     n
   }
 
@@ -986,6 +986,19 @@ object Pq {
     * Spark side — [[blockedRelation]]'s layout contract (one blob row
     * per cell); a cell split across partitions would widen the Spark
     * side's candidate pool to a superset of the local reservoir's.
+    *
+    * Order contract: both cuts — the float-ADC pool of max(refineK, k)
+    * and the exact-L2 top-k — rank by `java.lang.Double.compare` on the
+    * score, then id ascending (`LocalTopK`): -0.0 before 0.0, NaN
+    * last with NaN ties by id, so a NaN or all-+Inf query still returns
+    * k ids in ascending order. There is no sort over the pool: each
+    * reservoir survivor is scored as it enters a bounded heap, and
+    * sorting the ~nprobe × 2·refineK survivors with boxed tuple keys
+    * cost ~2 MB of garbage and most of the CPU per query at the perfbench
+    * shape (nprobe 8, refineK 100). Serve-time exclusions (the Spark
+    * flavors' excludeIds twin) drop AFTER the pool cut — the distributed
+    * anti-join filters the candidate stage's top-kSearch output, so the
+    * local tier must too for the a15-style equality to hold.
     * Returns ≤ k (id, l2sq) pairs, best-first.
     */
   def searchLocalIvf4(qvec: Array[Float], idx: Index, cacheKey: String,
@@ -999,17 +1012,13 @@ object Pq {
     require(refineK > k, // the Spark twin skips the refine at refineK <= k
       s"searchLocalIvf4 always refines: need refineK ($refineK) > k ($k)")
     val coarse = idx.coarse
-    val np = math.min(nprobe, coarse.length)
     val kSearch = math.max(refineK, k)
     val c = candidateBound(0, kSearch)
-    // global candidate pool (score asc, id tie): collected per cell after
-    // the float re-rank, exactly the rows the Spark path's top-k merge sees
-    val candIds = new Array[Long](np * c)
-    val candScores = new Array[Double](np * c)
-    var nCand = 0
-    val probes = CentroidOps.topNprobeF(qvec, coarse, np)
+    // global candidate pool: the rows the Spark path's top-k merge sees
+    val pool = new LocalTopK(kSearch)
+    val probes = CentroidOps.topNprobeF(qvec, coarse, nprobe)
     var p = 0
-    while (p < np) {
+    while (p < probes.length) {
       val cell = probes(p)
       val cellSegs = img.cellSegs.get(Integer.valueOf(cell))
       if (cellSegs != null) {
@@ -1025,40 +1034,85 @@ object Pq {
         // float-ADC re-rank with this cell's exact LUT into the pool
         var i = 0
         while (i < res.n) {
-          candIds(nCand) = res.ids(i)
-          candScores(nCand) = res.adc(i, lutF)
-          nCand += 1
+          pool.offer(res.ids(i), res.adc(i, lutF))
           i += 1
         }
       }
       p += 1
     }
-    // global top-kSearch by (ADC score asc, id asc) — TopK.perGroup's
-    // order. Serve-time exclusions (the Spark flavors' excludeIds twin)
-    // drop AFTER the kSearch cut — the distributed anti-join filters the
-    // candidate stage's top-kSearch output, so the local tier must too
-    // for the a15-style equality to hold under exclusions
-    val order1 = Array.range(0, nCand)
-      .sortBy(i => (candScores(i), candIds(i)))
-      .take(math.min(kSearch, nCand))
-    val order = if (exclude == null) order1
-                else order1.filterNot(i => exclude(candIds(i)))
-    val take = order.length
-    // exact-L2 refine over the full-precision store, top-k by (l2, id)
-    val refIds = new Array[Long](take)
-    val refD = new Array[Double](take)
+    // exact-L2 refine of the pool's non-excluded ids over the
+    // full-precision store
+    val top = new LocalTopK(k)
     var j = 0
-    while (j < take) {
-      val id = candIds(order(j))
-      val vi = java.util.Arrays.binarySearch(img.vecIds, id)
-      require(vi >= 0, s"candidate id $id missing from the vector store")
-      refIds(j) = id
-      val v = img.vecs(vi)
-      refD(j) = VectorKernels.l2Sq(qvec, v)
+    while (j < pool.n) {
+      val id = pool.ids(j)
+      if (exclude == null || !exclude(id)) {
+        val vi = java.util.Arrays.binarySearch(img.vecIds, id)
+        require(vi >= 0, s"candidate id $id missing from the vector store")
+        top.offer(id, VectorKernels.l2Sq(qvec, img.vecs(vi)))
+      }
       j += 1
     }
-    Array.range(0, take).sortBy(i => (refD(i), refIds(i))).take(k)
-      .map(i => (refIds(i), refD(i)))
+    top.bestFirst()
+  }
+
+  /** Bounded best-`cap` selection of (id, score) pairs, smallest first,
+    * in the order Scala's default `(Double, Long)` tuple sort gives:
+    * `java.lang.Double.compare` on the score, then id ascending. Not
+    * [[TopKAggregator]]'s IEEE compare, which orders NaN differently. A
+    * primitive max-heap keeps the worst survivor at the root, so a
+    * losing candidate costs one compare and a replacement log(cap).
+    */
+  private final class LocalTopK(cap: Int) {
+    val ids = new Array[Long](cap)
+    private val scores = new Array[Double](cap)
+    var n = 0
+
+    // (s1, id1) ranks after (s2, id2)
+    private def after(s1: Double, id1: Long, s2: Double, id2: Long): Boolean = {
+      val o = java.lang.Double.compare(s1, s2)
+      o > 0 || (o == 0 && id1 > id2)
+    }
+
+    def offer(id: Long, s: Double): Unit =
+      if (n < cap) {
+        var i = n
+        n += 1
+        while (i > 0 && after(s, id, scores((i - 1) >> 1), ids((i - 1) >> 1))) {
+          val up = (i - 1) >> 1
+          ids(i) = ids(up); scores(i) = scores(up)
+          i = up
+        }
+        ids(i) = id; scores(i) = s
+      } else if (n > 0 && after(scores(0), ids(0), s, id)) sink(id, s, n)
+
+    // fill the root's hole with (id, s), sifting down within [0, len)
+    private def sink(id: Long, s: Double, len: Int): Unit = {
+      var i = 0
+      var c = 1
+      while (c < len) {
+        if (c + 1 < len && after(scores(c + 1), ids(c + 1), scores(c), ids(c)))
+          c += 1
+        if (after(scores(c), ids(c), s, id)) {
+          ids(i) = ids(c); scores(i) = scores(c)
+          i = c
+          c = 2 * i + 1
+        } else c = len
+      }
+      ids(i) = id; scores(i) = s
+    }
+
+    /** The survivors best-first (heap sort; the selector is spent). */
+    def bestFirst(): Array[(Long, Double)] = {
+      var end = n - 1
+      while (end > 0) {
+        val id = ids(end); val s = scores(end)
+        ids(end) = ids(0); scores(end) = scores(0)
+        sink(id, s, end)
+        end -= 1
+      }
+      Array.tabulate(n)(i => (ids(i), scores(i)))
+    }
   }
 
   /** IVF-PQ probe: per query, nprobe nearest coarse cells; per (query,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{GraftSession, Tables}
-import graft.functions.expressions.{PqOps, Simd, VectorKernels}
+import graft.functions.expressions.{CentroidOps, PqOps, Simd, VectorKernels}
 import graft.io.QuantizedTables
 import graft.ops.{Ivf, Metric, Pq, Search}
 
@@ -482,6 +482,153 @@ class Pq4Spec extends AnyFunSuite {
     } finally Pq.invalidateLocal(lk)
   }
 
+  test("local tier order contract: cross-cell ties at the pool cut, a " +
+    "short pool, an empty probed cell, every candidate excluded") {
+    import spark.implicits._
+    // ivf4's 8 cells plus: cell 8, a copy of the query's nearest cell x
+    // holding x's rows under ids + 10000 (same residuals, codes and LUT,
+    // so each row ties its twin exactly across the two cells); cell 9, a
+    // far centroid with 3 rows; cell 10, a far centroid with no rows
+    val qvec = base.filter(col("id") === 3L).select(col("vec")).head()
+      .getSeq[Float](0).toArray
+    val x = CentroidOps.topNprobeF(qvec, ivf4.coarse, 1)(0)
+    def moved(v: Array[Float], d: Int, by: Float) = {
+      val w = v.clone(); w(d) += by; w
+    }
+    val far = Array.fill(dim)(3.0f)
+    val coarse = ivf4.coarse ++ Array(ivf4.coarse(x).clone(), far, moved(far, 0, 1f))
+    val assigned = Ivf.assign(base, ivf4.coarse)
+      .select(col("id"), col("vec"), col("cluster_id"))
+    val twins = assigned.filter(col("cluster_id") === x)
+      .select((col("id") + 10000L).as("id"), col("vec"), lit(8).as("cluster_id"))
+    val farRows = (1 to 3).map(j => (20000L + j, moved(far, 1, 0.1f * j), 9))
+      .toDF("id", "vec", "cluster_id")
+    val rows = assigned.union(twins).union(farRows)
+    val tmp = java.nio.file.Files.createTempDirectory("pq4_order").toString
+    QuantizedTables.writePq4BlockedClustered(rows.select(col("id"), col("cluster_id"),
+      Pq.pqEncode(Pq.centroidResidual(col("vec"), col("cluster_id"), coarse),
+        ivf4.books).as("codes")), s"$tmp/codes")
+    val idx = Pq.Index(coarse, ivf4.books, s"$tmp/codes")
+    val serveBase = rows.select(col("id"), col("vec"))
+    def sparkSide(q: Array[Float], nprobe: Int, k: Int, refineK: Int,
+                  excl: Array[Long] = Array.empty) =
+      Pq.searchFastScanIvfRefined(serveBase, idx, Seq((0L, q)).toDF("qid", "qvec"),
+        nprobe, k, refineK, excludeIds = excl).orderBy("rank").collect()
+        .map(r => (r.getAs[Long]("id"), r.getAs[Double]("score"))).toSeq
+    val lk = "pq4spec_order"
+    def local(q: Array[Float], nprobe: Int, k: Int, refineK: Int,
+              exclude: Long => Boolean = null) =
+      Pq.searchLocalIvf4(q, idx, lk, nprobe, k, refineK, exclude).toSeq
+    Pq.warmLocalIvf4(spark, idx, lk, serveBase)
+    try {
+      // (1) nprobe 2 probes x and its copy; refineK 21 is odd, so the
+      // pool cut splits a tie pair. The exclusion hook sees exactly the
+      // pool (exclusions drop after the cut).
+      val pool = collection.mutable.ArrayBuffer.empty[Long]
+      val got = local(qvec, 2, 20, 21, id => { pool += id; false })
+      assert(got == sparkSide(qvec, 2, 20, 21), s"local $got")
+      val candidates = Pq.searchFastScanIvf(idx, spark,
+        Seq((0L, qvec)).toDF("qid", "qvec"), nprobe = 2, k = 21)
+        .select("id").collect().map(_.getLong(0)).toSet
+      assert(pool.length == 21 && pool.toSet == candidates,
+        s"pool $pool != the Spark candidate stage $candidates")
+      assert(pool.exists(i => i < 10000L && !pool.contains(i + 10000L)),
+        "the pool cut split no tie pair (weak fixture)")
+      assert(pool.filter(_ >= 10000L).forall(t => pool.contains(t - 10000L)),
+        s"a tie at the pool cut went to the higher id: $pool")
+      // best-first by (Double.compare on l2, id): a twin follows its row
+      got.sliding(2).foreach { case Seq((i1, d1), (i2, d2)) =>
+        val o = java.lang.Double.compare(d1, d2)
+        assert(o < 0 || (o == 0 && i1 < i2), s"out of order: $got")
+      }
+      assert(got.exists(_._1 >= 10000L), "no cross-cell tie reached the answer")
+      // (2) fewer candidates than k: nprobe 1 near the far cell
+      val qFar = moved(far, 0, -0.5f)
+      val short = local(qFar, 1, 10, 20)
+      assert(short.map(_._1) == Seq(20001L, 20002L, 20003L), s"short pool $short")
+      assert(short == sparkSide(qFar, 1, 10, 20))
+      // (3) a probed cell with no segments: nprobe 2 adds cell 10
+      assert(local(qFar, 2, 10, 20) == short)
+      assert(sparkSide(qFar, 2, 10, 20) == short)
+      // ... and alone it answers nothing
+      assert(local(coarse(10), 1, 10, 20).isEmpty)
+      assert(sparkSide(coarse(10), 1, 10, 20).isEmpty)
+      // (4) exclusions that remove every candidate
+      assert(local(qvec, 2, 10, 21, _ => true).isEmpty)
+      val everyId = serveBase.select("id").collect().map(_.getLong(0))
+      assert(sparkSide(qvec, 2, 10, 21, everyId).isEmpty)
+    } finally Pq.invalidateLocal(lk)
+  }
+
+  test("local tier on a NaN and an all-+Inf query: k ids, ascending") {
+    // non-finite scores rank by Double.compare (NaN last, ties by id), so
+    // every candidate ties and the answer is the k lowest pooled ids
+    val lk = "pq4spec_nonfinite"
+    Pq.warmLocalIvf4(spark, ivf4, lk, base)
+    try {
+      val nan = base.filter(col("id") === 5L).select(col("vec")).head()
+        .getSeq[Float](0).toArray
+      nan(3) = Float.NaN
+      val inf = Array.fill(dim)(Float.PositiveInfinity)
+      for ((name, q) <- Seq("NaN" -> nan, "+Inf" -> inf)) {
+        val ids = Pq.searchLocalIvf4(q, ivf4, lk, nprobe = 8, k = 10,
+          refineK = 100).map(_._1).toSeq
+        assert(ids.length == 10 && ids.sliding(2).forall(p => p(0) < p(1)),
+          s"$name query answered $ids")
+      }
+    } finally Pq.invalidateLocal(lk)
+  }
+
+  test("local tier allocates < 1 MB per query at ~1,600 candidates") {
+    // 20K rows over 32 cells: each of the 8 probed cells fills its
+    // 2·refineK = 200-row reservoir. Sorting those ~1,600 candidates by
+    // boxed (score, id) tuples allocates ~2 MB per query; a bounded
+    // selection needs the reservoirs and LUTs only. Thread-allocated
+    // bytes, unlike wall time, do not move with the box's load.
+    import spark.implicits._
+    val d = 32
+    val rng = new scala.util.Random(91)
+    val rows = (0 until 20000)
+      .map(i => (i.toLong, Array.fill(d)(rng.nextGaussian().toFloat)))
+      .toDF("id", "vec").cache()
+    val coarse = Ivf.train(rows, nlist = 32, ntrain = 5000)
+    val assigned = Ivf.assign(rows, coarse).withColumn("residual",
+      Pq.centroidResidual(col("vec"), col("cluster_id"), coarse))
+    val bks = Pq.train(assigned.select(col("id"), col("residual").as("vec")),
+      m = d / 4, ksub = 16, ntrain = 5000)
+    val smallest = assigned.groupBy("cluster_id").count()
+      .agg(min("count")).head().getLong(0)
+    assert(smallest > 200, s"a cell of $smallest rows cannot fill a reservoir")
+    val tmp = java.nio.file.Files.createTempDirectory("pq4_alloc").toString
+    QuantizedTables.writePq4BlockedClustered(assigned.select(col("id"),
+      col("cluster_id"), Pq.pqEncode(col("residual"), bks).as("codes")),
+      s"$tmp/codes")
+    val idx = Pq.Index(coarse, bks, s"$tmp/codes")
+    val lk = "pq4spec_alloc"
+    Pq.warmLocalIvf4(spark, idx, lk, rows)
+    try {
+      val mx = java.lang.management.ManagementFactory.getThreadMXBean
+        .asInstanceOf[com.sun.management.ThreadMXBean]
+      val qs = Array.fill(500)(Array.fill(d)(rng.nextGaussian().toFloat))
+      def serve(q: Array[Float]) =
+        Pq.searchLocalIvf4(q, idx, lk, nprobe = 8, k = 10, refineK = 100)
+      qs.foreach(serve)
+      val perCall = qs.map { q =>
+        val a0 = mx.getCurrentThreadAllocatedBytes
+        serve(q)
+        mx.getCurrentThreadAllocatedBytes - a0
+      }.sorted
+      val median = perCall(perCall.length / 2)
+      // measured: ~80 KB in a JVM of its own and 364 KB, steady, in some
+      // full-suite JVMs, where the scan kernel itself allocates; sorting
+      // the pool read 2.1 MB
+      assert(median < 1024L * 1024, s"median allocation per query $median B")
+    } finally {
+      Pq.invalidateLocal(lk)
+      rows.unpersist()
+    }
+  }
+
   test("serve-time exclusions: takedowns suppressed identically across " +
     "all three serving flavors") {
     // the maintenance story's suppression half: a takedown must stop
@@ -684,6 +831,41 @@ class Pq4Spec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
     assert(grownRes == rebuiltRes,
       "staged-appended pair diverged from the from-scratch rebuild")
+  }
+
+  test("after an append, the next clustered probe runs no schema-inference job") {
+    // both appends re-read each cached relation under its own schema; a
+    // bare spark.read.parquet would re-infer it with a one-task footer job
+    // in the next probe
+    val old = base.filter(col("id") < 350)
+    val fresh = base.filter(col("id") >= 350)
+    val tmp = java.nio.file.Files.createTempDirectory("pq4_relist").toString
+    QuantizedTables.writePq4BlockedClustered(
+      Ivf.assign(old, ivf4.coarse).select(col("id"), col("cluster_id"),
+        Pq.pqEncode(Pq.centroidResidual(col("vec"), col("cluster_id"),
+          ivf4.coarse), ivf4.books).as("codes")), s"$tmp/codes")
+    val idx = Pq.Index(ivf4.coarse, ivf4.books, s"$tmp/codes")
+    Ivf.writeClustered(Ivf.assign(old, ivf4.coarse), s"$tmp/flat")
+    val refIdx = Ivf.Index(ivf4.coarse, s"$tmp/flat")
+    def probe() =
+      Pq.searchFastScanIvfRefinedClustered(refIdx, idx, queries,
+        nprobe = 8, k = 10, refineK = 100)
+        .select("qid", "id", "rank").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+    val stale = probe() // caches both relations
+    val steadyJobs = SparkJobs.of(spark)(probe())
+    assert(SparkJobs.of(spark)(probe()).length == steadyJobs.length,
+      "steady probes differ in job count (weak fixture)")
+    assert(Pq.appendIvf4(idx, fresh, token = "t1") == fresh.count())
+    assert(Ivf.appendClustered(refIdx, fresh, token = "t1") == fresh.count())
+    var grown = Seq.empty[(Long, Long, Int)]
+    val firstJobs = SparkJobs.of(spark) { grown = probe() }
+    assert(firstJobs.length == steadyJobs.length,
+      s"first probe after the append ran jobs $firstJobs, a steady one $steadyJobs")
+    assert(grown != stale, "appended rows not visible to the re-read relations")
+    val reread = refIdx.clustered(spark)
+    val cold = spark.read.parquet(s"$tmp/flat")
+    assert(reread.schema == cold.schema && reread.count() == base.count())
   }
 
   test("staged append: a crash mid-APPLY replays to completion from the " +
