@@ -31,18 +31,7 @@ object BatchScore {
     * (the tail and any ragged/short input fall back to it).
     */
   private def dotsInto(x: Array[Float], queries: Array[Array[Float]],
-                       scale: Double, out: Array[Double]): Unit =
-    dotsIntoAcc(x, queries, scale, out, floatAcc = false)
-
-  /** `floatAcc = true` routes the 4-query tiles through [[Simd.dot4F]]
-    * (float-lane accumulation, ~2× FMA throughput) — the opt-in SERVING
-    * flavor for the blocked scans. Never reachable from the codegen
-    * expressions or any oracle path: those call the `floatAcc = false`
-    * double-lane contract above.
-    */
-  private def dotsIntoAcc(x: Array[Float], queries: Array[Array[Float]],
-                          scale: Double, out: Array[Double],
-                          floatAcc: Boolean): Unit = {
+                       scale: Double, out: Array[Double]): Unit = {
     val nq = queries.length
     var q = 0
     if (VectorKernels.simdEnabled && nq >= 4) {
@@ -55,8 +44,7 @@ object BatchScore {
         while (q + 4 <= nq) {
           val q0 = queries(q); val q1 = queries(q + 1)
           val q2 = queries(q + 2); val q3 = queries(q + 3)
-          if (floatAcc) Simd.dot4F(x, q0, 0, q1, 0, q2, 0, q3, 0, n, out, q)
-          else Simd.dot4(x, q0, 0, q1, 0, q2, 0, q3, 0, n, out, q)
+          Simd.dot4(x, q0, 0, q1, 0, q2, 0, q3, 0, n, out, q)
           q += 4
         }
       }
@@ -203,13 +191,9 @@ object BatchScore {
   // element, so every score is bitwise-identical to the unpacked paths —
   // the blob is only an amortization of per-row plan overhead.
 
-  /** fp16 slice: `dim` LE shorts starting at byte `off`. `floatAcc` is
-    * the serving-only accumulation flavor (see [[dotsIntoAcc]]); the
-    * default keeps the double-lane oracle contract.
-    */
+  /** fp16 slice: `dim` LE shorts starting at byte `off`. */
   def scoreAllHalfSlice(b: Array[Byte], off: Int, dim: Int,
-                        queries: Array[Array[Float]], out: Array[Double],
-                        floatAcc: Boolean = false): Unit = {
+                        queries: Array[Array[Float]], out: Array[Double]): Unit = {
     val x = bufOf(dim)
     var i = 0
     while (i < dim) {
@@ -217,30 +201,28 @@ object BatchScore {
       x(i) = VectorKernels.halfToFloat(s)
       i += 1
     }
-    dotsIntoAcc(x, queries, 1.0, out, floatAcc)
+    dotsInto(x, queries, 1.0, out)
   }
 
   /** int8 slice: `dim` code bytes starting at `off`, dequant by `scale`.
     * SIMD widen, bitwise the scalar loop (see [[scoreAllI8]]).
     */
   def scoreAllI8Slice(b: Array[Byte], off: Int, dim: Int, scale: Float,
-                      queries: Array[Array[Float]], out: Array[Double],
-                      floatAcc: Boolean = false): Unit = {
+                      queries: Array[Array[Float]], out: Array[Double]): Unit = {
     val x = bufOf(dim)
     if (VectorKernels.simdEnabled) Simd.i8ToFloat(b, off, dim, x)
     else {
       var i = 0
       while (i < dim) { x(i) = b(off + i).toFloat; i += 1 }
     }
-    dotsIntoAcc(x, queries, scale.toDouble, out, floatAcc)
+    dotsInto(x, queries, scale.toDouble, out)
   }
 
   /** f32 slice: `dim` LE floats starting at byte `off` (raw bit patterns
     * — intBitsToFloat reproduces the stored floats exactly).
     */
   def scoreAllF32Slice(b: Array[Byte], off: Int, dim: Int,
-                       queries: Array[Array[Float]], out: Array[Double],
-                       floatAcc: Boolean = false): Unit = {
+                       queries: Array[Array[Float]], out: Array[Double]): Unit = {
     val x = bufOf(dim)
     var i = 0
     while (i < dim) {
@@ -250,7 +232,7 @@ object BatchScore {
       x(i) = java.lang.Float.intBitsToFloat(bits)
       i += 1
     }
-    dotsIntoAcc(x, queries, 1.0, out, floatAcc)
+    dotsInto(x, queries, 1.0, out)
   }
 
   /** fp16 flavor: decode the row's half bits ONCE, then score all

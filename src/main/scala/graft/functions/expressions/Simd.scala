@@ -236,82 +236,15 @@ object Simd {
     out(ooff) = s0; out(ooff + 1) = s1; out(ooff + 2) = s2; out(ooff + 3) = s3
   }
 
-  // ---- FLOAT-lane accumulation: the opt-in SERVING flavor and the
-  // k-means screen. Float FMA runs 2× the lane width of the double-lane
-  // contract (no F2D widening, twice the elements per vector op), which
-  // matters exactly where the scans are compute-bound (the r9 INT8-ladder
-  // finding: double-lane FMA throughput caps 384-d scans at
-  // ~0.6 s/1M×16q, compressing stored-byte ratios). NOT
-  // bitwise-comparable to the oracle kernels: all-float accumulation of n
-  // nonnegative-magnitude products carries ≲ n·ε_f32 ≈ 2.3e-5 relative
-  // error at n=384 — far above the 1e-9 oracle rounding, fine for
-  // approximate serving (it can flip only true near-ties; SearchSpec
-  // gates top-k SET equality on the fixture). Every oracle/default path
-  // keeps the double-lane contract above untouched.
+  // ---- FLOAT-lane accumulation: the k-means screen. Float FMA runs 2×
+  // the lane width of the double-lane contract (no F2D widening, twice
+  // the elements per vector op). NOT bitwise-comparable to the oracle
+  // kernels: all-float accumulation of n nonnegative-magnitude products
+  // carries ≲ n·ε_f32 ≈ 2.3e-5 relative error at n=384, so its callers
+  // bound that error and re-evaluate the shortlist exactly.
 
-  /** dot(a, row) with FLOAT-lane accumulation, row read at
-    * `flat(boff + i)`. Two independent accumulator chains cover FMA
-    * latency. Serve-only, never an oracle path.
-    */
-  def dotFOff(a: Array[Float], flat: Array[Float], boff: Int, n: Int): Double = {
-    var acc0 = FloatVector.zero(FS)
-    var acc1 = FloatVector.zero(FS)
-    val step = FS.length()
-    val upper2 = FS.loopBound(n - step)
-    var i = 0
-    while (i < upper2) {
-      acc0 = FloatVector.fromArray(FS, a, i)
-        .fma(FloatVector.fromArray(FS, flat, boff + i), acc0)
-      acc1 = FloatVector.fromArray(FS, a, i + step)
-        .fma(FloatVector.fromArray(FS, flat, boff + i + step), acc1)
-      i += 2 * step
-    }
-    val upper = FS.loopBound(n)
-    while (i < upper) {
-      acc0 = FloatVector.fromArray(FS, a, i)
-        .fma(FloatVector.fromArray(FS, flat, boff + i), acc0)
-      i += step
-    }
-    var s = acc0.add(acc1).reduceLanes(VectorOperators.ADD).toDouble
-    while (i < n) { s += a(i).toDouble * flat(boff + i).toDouble; i += 1 }
-    s
-  }
-
-  /** Squared L2 with FLOAT-lane accumulation — [[dotFOff]]'s L2 sibling
-    * (sub and fma both in float). Serve-only.
-    */
-  def l2SqFOff(a: Array[Float], flat: Array[Float], boff: Int, n: Int): Double = {
-    var acc0 = FloatVector.zero(FS)
-    var acc1 = FloatVector.zero(FS)
-    val step = FS.length()
-    val upper2 = FS.loopBound(n - step)
-    var i = 0
-    while (i < upper2) {
-      val d0 = FloatVector.fromArray(FS, a, i)
-        .sub(FloatVector.fromArray(FS, flat, boff + i))
-      val d1 = FloatVector.fromArray(FS, a, i + step)
-        .sub(FloatVector.fromArray(FS, flat, boff + i + step))
-      acc0 = d0.fma(d0, acc0)
-      acc1 = d1.fma(d1, acc1)
-      i += 2 * step
-    }
-    val upper = FS.loopBound(n)
-    while (i < upper) {
-      val d = FloatVector.fromArray(FS, a, i)
-        .sub(FloatVector.fromArray(FS, flat, boff + i))
-      acc0 = d.fma(d, acc0)
-      i += step
-    }
-    var s = acc0.add(acc1).reduceLanes(VectorOperators.ADD).toDouble
-    while (i < n) {
-      val d = a(i).toDouble - flat(boff + i).toDouble; s += d * d; i += 1
-    }
-    s
-  }
-
-  /** Four float-accumulated dots: a · r_j → out(ooff + j) — the serving
-    * flavor of [[dot4]] (blocked scans, the HNSW beam expansion under
-    * float-acc) and the SCREENING kernel of the GEMM-shaped argmin
+  /** Four float-accumulated dots: a · r_j → out(ooff + j) — the
+    * SCREENING kernel of the GEMM-shaped argmin
     * ([[CentroidOps.argminScreened]]). Dot is 1 FMA/element where l2Sq
     * pays sub+FMA, and float lanes run 2× the width of the double-lane
     * contract, so a screening pass over all k centroids costs ~4× less
@@ -346,46 +279,6 @@ object Simd {
       val ad = a(i).toDouble
       s0 += ad * r0(o0 + i).toDouble; s1 += ad * r1(o1 + i).toDouble
       s2 += ad * r2(o2 + i).toDouble; s3 += ad * r3(o3 + i).toDouble
-      i += 1
-    }
-    out(ooff) = s0; out(ooff + 1) = s1; out(ooff + 2) = s2; out(ooff + 3) = s3
-  }
-
-  /** Four float-accumulated squared-L2s: ‖a − r_j‖² → out(ooff + j) —
-    * [[l2Sq4]]'s serving flavor (the HNSW beam-expansion tile under
-    * float-acc). Serve-only.
-    */
-  def l2Sq4F(a: Array[Float],
-             r0: Array[Float], o0: Int, r1: Array[Float], o1: Int,
-             r2: Array[Float], o2: Int, r3: Array[Float], o3: Int,
-             n: Int, out: Array[Double], ooff: Int): Unit = {
-    var a0 = FloatVector.zero(FS)
-    var a1 = FloatVector.zero(FS)
-    var a2 = FloatVector.zero(FS)
-    var a3 = FloatVector.zero(FS)
-    val step = FS.length()
-    val upper = FS.loopBound(n)
-    var i = 0
-    while (i < upper) {
-      val va = FloatVector.fromArray(FS, a, i)
-      val d0 = va.sub(FloatVector.fromArray(FS, r0, o0 + i))
-      val d1 = va.sub(FloatVector.fromArray(FS, r1, o1 + i))
-      val d2 = va.sub(FloatVector.fromArray(FS, r2, o2 + i))
-      val d3 = va.sub(FloatVector.fromArray(FS, r3, o3 + i))
-      a0 = d0.fma(d0, a0); a1 = d1.fma(d1, a1)
-      a2 = d2.fma(d2, a2); a3 = d3.fma(d3, a3)
-      i += step
-    }
-    var s0 = a0.reduceLanes(VectorOperators.ADD).toDouble
-    var s1 = a1.reduceLanes(VectorOperators.ADD).toDouble
-    var s2 = a2.reduceLanes(VectorOperators.ADD).toDouble
-    var s3 = a3.reduceLanes(VectorOperators.ADD).toDouble
-    while (i < n) {
-      val ad = a(i).toDouble
-      val e0 = ad - r0(o0 + i).toDouble; s0 += e0 * e0
-      val e1 = ad - r1(o1 + i).toDouble; s1 += e1 * e1
-      val e2 = ad - r2(o2 + i).toDouble; s2 += e2 * e2
-      val e3 = ad - r3(o3 + i).toDouble; s3 += e3 * e3
       i += 1
     }
     out(ooff) = s0; out(ooff + 1) = s1; out(ooff + 2) = s2; out(ooff + 3) = s3
@@ -450,7 +343,7 @@ object Simd {
     * offset/length).
     *
     * Measured honestly (r10, two same-boot BENCH_SCALE runs): this moved
-    * the 1M i8 scan NOTHING — the i8/f16 facc ratio read 0.85 both
+    * the 1M i8 scan NOTHING — the blocked i8/f16 float-acc ratio read 0.85 both
     * before and after, i.e. C2 was already auto-vectorizing the trivial
     * scalar widen. Kept because the explicit form is JIT-independent
     * (auto-vectorization of the scalar loop is a heuristic, not a
@@ -570,7 +463,7 @@ object Simd {
     * caller multiplies by the row's quantization scale). No widening
     * copy ([[i8ToFloat]] + dot would stream the row twice); the byte
     * vector expands straight into float lanes per part. Float
-    * accumulation is the facc-class contract: ~n·ε_f32 relative drift,
+    * accumulation carries the ~n·ε_f32 relative drift,
     * recall-gated at the flavor level, never an oracle path.
     */
   def dotI8F(a: Array[Float], codes: Array[Byte], off: Int, n: Int): Float = {

@@ -699,10 +699,9 @@ object Dedup {
   /** Default within-cluster all-pairs cap for the semantic-dedup skew
     * guard: 8192² / 2 ≈ 33 M cosine pairs per join block — seconds of
     * kernel work per reducer, the same order as the MinHash path's gated
-    * bucket tail cost. `-Dgraft.semantic.maxCell=N` overrides.
+    * bucket tail cost. Callers with other corpora pass `maxCellSize`.
     */
-  private[graft] def defaultMaxCellSize: Int =
-    java.lang.Integer.getInteger("graft.semantic.maxCell", 8192)
+  private[graft] final val defaultMaxCellSize = 8192
 
   /** Default sign-LSH table count for the guard's oversized-cell arm
     * (r16, raised from 2 per the r15 ADVICE recall analysis): inside an
@@ -715,12 +714,10 @@ object Dedup {
     * mix + [[connectedComponents]]), so the probability only bounds
     * standalone near-dup pairs in skewed cells; T=3 puts those above
     * 0.8 for ~1.5× table 2's candidate cost, paid inside oversized
-    * cells only. `-Dgraft.semantic.blockTables=N` overrides per corpus
-    * (use 4 when τ is lower or isolated-pair recall matters more than
-    * guard cost).
+    * cells only. Callers pass `nBlockTables` per corpus (4 when τ is
+    * lower or isolated-pair recall matters more than guard cost).
     */
-  private[graft] def defaultBlockTables: Int =
-    java.lang.Integer.getInteger("graft.semantic.blockTables", 3)
+  private[graft] final val defaultBlockTables = 3
 
   /** The oversized-cell arm of [[semanticCandidatesAssigned]]: sign-LSH
     * blocks ([[LshAnn.signBuckets]] — similarity-preserving, so genuine

@@ -52,26 +52,20 @@ object Hnsw {
   /** Walk-working-set crossover for [[ShardGraph.autoI8]] in bytes:
     * above it the auto flavor serves the i8 walk, below it the contract
     * walk. Set from the r15 ef-ladder on the 500K store graph
-    * (COVERAGE.md §"Serving posture"); override with
-    * `-Dgraft.hnsw.i8.autoBytes=N`.
+    * (COVERAGE.md §"Serving posture"); a var only so specs can move it.
+    *
+    * 3 MB: below the ef=128 walk estimate at the reference geometry
+    * (128·16·384·4 ≈ 3.1 MB) — the first rung where every r15
+    * measurement (COVERAGE.md §"Serving posture", both regimes; the
+    * artifact's i8_ef128 row) agrees the i8 walk wins; at ef ≤ 64 the
+    * two walks measured parity-to-contract-ahead across rounds, so the
+    * conservative side of the crossover keeps the contract kernel.
     */
-  @volatile private[graft] var autoI8Bytes: Long = {
-    val v = java.lang.Long.getLong("graft.hnsw.i8.autoBytes")
-    // 3 MB: below the ef=128 walk estimate at the reference geometry
-    // (128·16·384·4 ≈ 3.1 MB) — the first rung where every r15
-    // measurement (COVERAGE.md §"Serving posture", both regimes; the
-    // artifact's i8_ef128 row) agrees the i8 walk wins; at ef ≤ 64 the
-    // two walks measured parity-to-contract-ahead across rounds, so the
-    // conservative side of the crossover keeps the contract kernel
-    if (v == null) 3000000L else v.longValue()
-  }
+  @volatile private[graft] var autoI8Bytes: Long = 3000000L
 
   /** Serve flavor: the distance source of a query walk. Every flavor runs
     * the same descent, beam and emit; builds always run `Contract`.
     *  - `Contract`: the double-lane kernels every oracle path uses.
-    *  - `FloatAcc`: the float-accumulation kernels — ~2× FMA lane width,
-    *    ~n·ε_f32 drift that can flip true near-ties, so recall-gated. A
-    *    no-op (contract) on a mapped graph, for cosine, or without SIMD.
     *  - `I8`: the quantized sidecar ([[ShardGraph.quantizeStore]]), then an
     *    exact contract re-rank of the live survivors; returned scores are
     *    exact, recall is gated. Fails loudly without the sidecar.
@@ -80,7 +74,6 @@ object Hnsw {
   sealed trait Flavor
   object Flavor {
     case object Contract extends Flavor
-    case object FloatAcc extends Flavor
     case object I8 extends Flavor
     case object Auto extends Flavor
   }
@@ -118,7 +111,7 @@ object Hnsw {
     // packed vector store (r13): ONE float array + per-node offsets, not
     // Array[Array[Float]] rows — a row dereference was a pointer chase to
     // a scattered heap object per distance eval, the dominant share of
-    // the serve margin left after the facc study. All kernels read
+    // the serve margin left after the float-accumulation study. All kernels read
     // flat(offs(x) + i) through the same (array, offset) kernels a
     // row-array caller runs at offset 0, so graphs and results are
     // identical to the row-array storage (SimdSpec gates the kernels,
@@ -146,11 +139,8 @@ object Hnsw {
       *
       * `fl` picks the serve flavor's kernels ([[Flavor]]; builds and every
       * oracle path keep `Contract`, so graphs stay bit-identical).
-      * `FloatAcc` runs [[Simd.dotFOff]]/[[Simd.l2SqFOff]]; without SIMD,
-      * for cosine (no float-acc kernel) and on a mapped graph (no
-      * float-acc BB kernels) it is a no-op, never an error. `I8` scores
-      * the sidecar codes through [[d8Of]], with `qn2` = |q|² hoisted per
-      * search.
+      * `I8` scores the sidecar codes through [[d8Of]], with `qn2` = |q|²
+      * hoisted per search.
       */
     private def dist(q: Array[Float], x: Int, fl: Flavor = Flavor.Contract,
                      qn2: Double = 0.0): Double = {
@@ -167,10 +157,6 @@ object Hnsw {
         case Metric.L2     => VectorKernels.l2SqOffBB(q, flatBB, o, nn)
         case Metric.Dot    => -VectorKernels.dotOffBB(q, flatBB, o, nn)
         case Metric.Cosine => -VectorKernels.cosineOffBB(q, flatBB, o, lens(x))
-      } else if ((fl eq Flavor.FloatAcc) && VectorKernels.simdEnabled &&
-                 metric != Metric.Cosine) {
-        if (metric == Metric.L2) Simd.l2SqFOff(q, flat, o, nn)
-        else -Simd.dotFOff(q, flat, o, nn)
       } else metric match {
         case Metric.L2     => VectorKernels.l2SqOff(q, flat, o, nn)
         case Metric.Dot    => -VectorKernels.dotOff(q, flat, o, nn)
@@ -195,9 +181,7 @@ object Hnsw {
       * per-pair equal to [[dist]] on the contract kernels
       * ([[Simd.l2Sq4]]/[[Simd.dot4]] lane contracts), so tiling the beam
       * expansion changes kernel-call batching only, never a value or the
-      * traversal order. `FloatAcc` selects the float-acc tiles
-      * ([[Simd.l2Sq4F]]/[[Simd.dot4F]]), a no-op on a mapped graph; `I8`
-      * streams four code rows per call ([[Simd.dotI8F4At]]) — the
+      * traversal order. `I8` streams four code rows per call ([[Simd.dotI8F4At]]) — the
       * memory-level parallelism where its 4×-fewer-bytes win lives. Only
       * reachable when the flavor's tile gate holds ([[searchLayer]]).
       */
@@ -219,9 +203,6 @@ object Hnsw {
         if (flatBB != null) {
           if (l2) Simd.l2Sq4BB(q, flatBB, o0, o1, o2, o3, tn, out)
           else Simd.dot4BB(q, flatBB, o0, o1, o2, o3, tn, out)
-        } else if (fl eq Flavor.FloatAcc) {
-          if (l2) Simd.l2Sq4F(q, flat, o0, flat, o1, flat, o2, flat, o3, tn, out, 0)
-          else Simd.dot4F(q, flat, o0, flat, o1, flat, o2, flat, o3, tn, out, 0)
         } else {
           if (l2) Simd.l2Sq4(q, flat, o0, flat, o1, flat, o2, flat, o3, tn, out, 0)
           else Simd.dot4(q, flat, o0, flat, o1, flat, o2, flat, o3, tn, out, 0)
@@ -282,7 +263,7 @@ object Hnsw {
     // two dependent pointer-chases (outer-array element load → per-node
     // layer array → per-layer neighbor object) whose cache misses, not
     // the distance kernels, dominated the serve walk (r13 attribution:
-    // facc bought ~20 %, layout ~0 — the residual vs hnswlib's 208 µs is
+    // float accumulation bought ~20 %, layout ~0 — the residual vs hnswlib's 208 µs is
     // bookkeeping). Values and iteration order are IDENTICAL to the
     // ragged path, so on every flavor the traversal — and every result
     // — is bit-identical (HnswSpec's CSR == ragged gate).
@@ -354,9 +335,9 @@ object Hnsw {
     // (VectorKernels.i8Scale/i8Codes — the F7 kernels, v4-pinned
     // semantics) + scale + Σcode² , built once per graph on demand. The
     // serve walk's wall is DRAM on the gathered f32 rows (94 % of walk
-    // time in the kernels, facc −20 %, prefetch −13 % — the r14
+    // time in the kernels, float accumulation −20 %, prefetch −13 % — the r14
     // profile); i8 rows are 4× fewer bytes, attacking the wall itself.
-    // A recall-gated FLAVOR like facc: the beam walks quantized
+    // A recall-gated FLAVOR: the beam walks quantized
     // distances, then the ef survivors re-rank under the CONTRACT
     // kernel, so returned scores are exact and only true-neighbor beam
     // misses cost recall.
@@ -1062,10 +1043,10 @@ object Hnsw {
       // it): the NEXT tile's leading cache lines are touched while the
       // current tile computes — a software prefetch stand-in (the JVM has
       // no prefetch intrinsic; a live blackhole load is the closest legal
-      // form). facc's float lanes halve the kernel's compute leg, leaving
-      // no stall window for the touches to hide in — measured, they only
-      // contend for load ports there (COVERAGE.md §"Serving posture", r14:
-      // facc+t8 620-656 µs vs facc+t0 441-533).
+      // form). The touches load f32 payload rows, which the i8 walk does
+      // not read; float-lane kernels left no stall window for them either
+      // (COVERAGE.md §"Serving posture", r14: facc+t8 620-656 µs vs
+      // facc+t0 441-533).
       val tl = if (useTile && csr && (fl eq Flavor.Contract)) touchLines else 0
       def touch(from: Int, gn: Int): Float = {
         var t = 0f
@@ -1454,24 +1435,19 @@ object Hnsw {
           s"$file: graph store header CRC mismatch — the file is corrupt")
         // payload verification is ONE sequential streaming pass over
         // [payloadOff, EOF) — cheap at restore (and for a mapped warm it
-        // doubles as the prefault). `-Dgraft.hnsw.store.verify=false`
-        // skips it when the fault-time cost matters more than the check
-        // (the header CRC above always verifies).
-        if (!"false".equalsIgnoreCase(
-            System.getProperty("graft.hnsw.store.verify", "true"))) {
-          val c2 = new java.util.zip.CRC32C
-          ch.position(prefixLen + hdrLen)
-          val buf = java.nio.ByteBuffer.allocateDirect(1 << 20)
-          var r = ch.read(buf)
-          while (r >= 0) {
-            buf.flip()
-            c2.update(buf)
-            buf.clear()
-            r = ch.read(buf)
-          }
-          require(c2.getValue.toInt == payCrcStored,
-            s"$file: graph store payload CRC mismatch — the file is corrupt")
+        // doubles as the prefault)
+        val c2 = new java.util.zip.CRC32C
+        ch.position(prefixLen + hdrLen)
+        val buf = java.nio.ByteBuffer.allocateDirect(1 << 20)
+        var r = ch.read(buf)
+        while (r >= 0) {
+          buf.flip()
+          c2.update(buf)
+          buf.clear()
+          r = ch.read(buf)
         }
+        require(c2.getValue.toInt == payCrcStored,
+          s"$file: graph store payload CRC mismatch — the file is corrupt")
       }
       val in = new java.io.DataInputStream(
         new java.io.ByteArrayInputStream(hdrBuf.array()))
@@ -1606,15 +1582,13 @@ object Hnsw {
     * standard per-executor ANN-serving pattern; on-disk durability comes
     * from the parquet base table the build replays deterministically.
     *
-    * BOUNDED: the outer map is an LRU over cacheKeys (default 4 keys,
-    * `-Dgraft.hnsw.cache.maxKeys=N`), each holding its shards in an inner
+    * BOUNDED: the outer map is an LRU over 4 cacheKeys, each holding its shards in an inner
     * concurrent map (shards of one key build in parallel tasks). A
     * long-lived serving executor cycling cacheKeys evicts whole
     * least-recently-used graph groups instead of leaking them, and
     * [[invalidate]] drops a key's shards explicitly (HnswSpec gates both).
     */
-  private val maxCachedKeys: Int =
-    math.max(1, java.lang.Integer.getInteger("graft.hnsw.cache.maxKeys", 4))
+  private val maxCachedKeys = 4
   private val graphCache = new java.util.LinkedHashMap[
     String, java.util.concurrent.ConcurrentHashMap[String, ShardGraph]](
     16, 0.75f, /*accessOrder=*/ true)
@@ -2162,11 +2136,7 @@ object Hnsw {
     * same [[TopKAggregator]] tie-break on the merge (HnswSpec gates it).
     *
     * `flavor` picks the walk's distance source ([[Flavor]], search only
-    * — never builds). `FloatAcc` runs the float-accumulation kernels:
-    * ~2× FMA width against the double-lane contract the
-    * 3.3×-vs-hnswlib kernel margin was attributed to; results may
-    * differ on true near-ties, so it is recall-gated (HnswSpec), not
-    * hash-gated, and no oracle path enables it. `I8` walks the beam over
+    * — never builds). `I8` walks the beam over
     * the i8 sidecar ([[quantizeWarmed]] first) and exact-re-ranks the
     * live survivors — 4× fewer bytes per gathered row against a
     * DRAM-bound walk; also recall-gated, with exact returned scores.

@@ -102,7 +102,7 @@ object Ivf {
   def writeClustered(assigned: DataFrame, path: String): Unit = {
     assigned.repartition(col("cluster_id"))
       .write.mode("overwrite").partitionBy("cluster_id").parquet(path)
-    invalidateClustered(path)
+    invalidateRelation(path)
   }
 
   /** Append a batch to an index's clustered table under the FROZEN
@@ -161,7 +161,7 @@ object Ivf {
         graft.io.StagedAppend.run(idx.clusteredPath, token, batch.count()) {
           stage => writeTo(stage, "overwrite")
         }
-    relist(clusteredCache, idx.clusteredPath)
+    relist(idx.clusteredPath)
     n
   }
 
@@ -219,38 +219,45 @@ object Ivf {
     * (the reference separates `nvdb_ivf_build` from `nvdb_ivf_eval`).
     */
   final case class Index(centroids: Array[Array[Float]], clusteredPath: String) {
-    /** The clustered table, through a session-keyed relation cache: a raw
-      * `spark.read.parquet` re-runs partition discovery over every
-      * cluster_id directory on EVERY call (the same per-call tax the pq4
-      * blockedRelation cache retired — measured 1.66 s vs 0.14 s at 1024
-      * dirs), which a repeated consumer (the bench loop, a serving
-      * session, the clustered-refine fetch) pays for nothing.
-      */
-    def clustered(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-      purgeStoppedClustered()
-      clusteredCache.computeIfAbsent(
-        s"${graft.core.GraftSession.uuid(spark)}|$clusteredPath",
-        _ => spark.read.parquet(clusteredPath))
-    }
+    /** The clustered table, through the session-keyed [[relation]] memo. */
+    def clustered(spark: org.apache.spark.sql.SparkSession): DataFrame =
+      relation(spark, clusteredPath)
   }
 
-  private val clusteredCache =
+  /** One resolved relation per (session, index path), shared by the IVF
+    * clustered table and the pq4 blocked-code table: a fresh
+    * `spark.read.parquet` re-runs partition discovery over every
+    * cluster_id directory on EVERY call — measured 1.66 s vs a 0.14 s
+    * pruned scan at 1024 dirs — which a repeated consumer (the bench
+    * loop, a serving session, the clustered-refine fetch) pays for
+    * nothing. Keyed on `sessionUUID`, unique per session for the JVM's
+    * life, so a new session can never collide onto a DataFrame bound to
+    * a stopped one (identityHashCode could).
+    */
+  private val relations =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
-  /** Drop cached relations bound to stopped sessions (each DataFrame pins
-    * its SparkSession — without eviction the map leaks sessions for the
-    * JVM's life) — the AnnSql.purgeStopped discipline.
+  private[ops] def relation(spark: org.apache.spark.sql.SparkSession,
+                            path: String): DataFrame = {
+    purgeStopped(relations)
+    relations.computeIfAbsent(s"${graft.core.GraftSession.uuid(spark)}|$path",
+      _ => spark.read.parquet(path))
+  }
+
+  /** Drop entries bound to stopped sessions (each DataFrame pins its
+    * SparkSession — without eviction a session-keyed map leaks sessions
+    * for the JVM's life) — the AnnSql.purgeStopped discipline.
     */
-  private def purgeStoppedClustered(): Unit =
-    clusteredCache.entrySet().removeIf(
-      e => e.getValue.sparkSession.sparkContext.isStopped)
+  private def purgeStopped(
+      cache: java.util.concurrent.ConcurrentHashMap[String, DataFrame]): Unit =
+    cache.entrySet().removeIf(e => e.getValue.sparkSession.sparkContext.isStopped)
 
   /** Invalidate cached relations for `path` across all sessions — called
-    * after a (re)write so a rebuilt clustered table never serves the old
-    * file listing.
+    * after a (re)write so a rebuilt table never serves the old file
+    * listing.
     */
-  private[ops] def invalidateClustered(path: String): Unit =
-    clusteredCache.keySet().removeIf(_.endsWith(s"|$path"))
+  private def invalidateRelation(path: String): Unit =
+    relations.keySet().removeIf(_.endsWith(s"|$path"))
 
   /** Re-read an appended table in every session that caches it, under
     * the cached relation's own schema. The writer fixed that schema, and
@@ -260,12 +267,10 @@ object Ivf {
     * plans against a ready relation. Relations of stopped sessions are
     * dropped.
     */
-  private[ops] def relist(
-      cache: java.util.concurrent.ConcurrentHashMap[String, DataFrame],
-      path: String): Unit =
-    cache.keySet().forEach { key =>
+  private[ops] def relist(path: String): Unit =
+    relations.keySet().forEach { key =>
       if (key.endsWith(s"|$path"))
-        cache.computeIfPresent(key, (_, df) => {
+        relations.computeIfPresent(key, (_, df) => {
           val spark = df.sparkSession
           if (spark.sparkContext.isStopped) null
           else spark.read.schema(df.schema).parquet(path)
@@ -273,11 +278,11 @@ object Ivf {
     }
 
   /** Test probe (r18): whether any session holds a cached relation for
-    * `path` — pins [[appendClustered]]'s committed-token fast path (no
-    * cache invalidation on a no-op replay).
+    * `path` — pins the committed-token fast paths of [[appendClustered]]
+    * and [[Pq.appendIvf4]] (no cache invalidation on a no-op replay).
     */
-  private[graft] def clusteredCached(path: String): Boolean =
-    clusteredCache.keySet().stream().anyMatch(_.endsWith(s"|$path"))
+  private[graft] def relationCached(path: String): Boolean =
+    relations.keySet().stream().anyMatch(_.endsWith(s"|$path"))
 
   private val indexCache =
     new java.util.concurrent.ConcurrentHashMap[String, Index]()
@@ -391,16 +396,18 @@ object Ivf {
 
   def cachedGroundTruth(cacheKey: String, base: => DataFrame,
                         queries: => DataFrame, k: Int,
-                        metric: Metric = Metric.Dot): DataFrame =
+                        metric: Metric = Metric.Dot): DataFrame = {
     // cached DataFrames are session-bound: key on sessionUUID (unique for
     // the JVM's life — identityHashCode could collide a new session onto
     // a DataFrame bound to a stopped, GC'd one)
+    purgeStopped(gtCache)
     gtCache.computeIfAbsent(
       s"${graft.core.GraftSession.uuid(base.sparkSession)}|$cacheKey|$k|$metric", _ => {
       val gt = Search.groundTruth(base, queries, k, metric).cache()
       gt.count() // materialize once
       gt
     })
+  }
 
   /** Composite probe→refine pipeline (`apps/nvdb_ivf_eval.cpp:310-782`):
     * IVF probe for `k_search = max(refine_k, k)` candidates, then exact-L2

@@ -48,8 +48,8 @@ import graft.functions.expressions.VectorKernels
   * ascending order) — so the centroids are BITWISE IDENTICAL to the
   * distributed combine's, gated by KmeansSpec. Assignment — the actual
   * compute, ~630 GFLOP/iter at the 4096 point — stays distributed.
-  * Samples past `graft.kmeans.mirrorMaxBytes` (default 2 GiB ≈ 1.4M×384d;
-  * huge-nlist regimes) keep the two-level distributed combine: fixed
+  * Samples past `mirrorMaxBytes` (2 GiB ≈ 1.4M×384d; huge-nlist
+  * regimes) keep the two-level distributed combine: fixed
   * groups of consecutive partitions left-fold on executors (one partial
   * shuffle), the driver folds only the per-group results. A treeAggregate
   * would cut the same traffic but its combine order is
@@ -183,7 +183,6 @@ object Kmeans {
       var prevAssigns: Array[Array[Int]] = null
       var stableStop = false
       while (iter < maxIter && moved > tol && !stableStop) {
-        val tIter = System.nanoTime()
         val bc = spark.sparkContext.broadcast(cents)
         val bcHam = if (hamerly && hamState != null)
           spark.sparkContext.broadcast((hamDeltas, hamMaxDelta, hamState)) else null
@@ -221,7 +220,6 @@ object Kmeans {
           // layout fix made iterations kernel-bound.
           val hamOn = hamerly
           val assignsRdd = rdd.mapPartitionsWithIndex { (pid, it) =>
-            val tTask = System.nanoTime()
             val cs = bc.value
             import graft.functions.expressions.CentroidOps
             val rows = it.toArray
@@ -229,12 +227,10 @@ object Kmeans {
             val newA = new Array[Int](nr)
             val newU = if (hamOn) new Array[Double](nr) else null
             val newL = if (hamOn) new Array[Double](nr) else null
-            var nSkip = 0; var nTighten = 0; var nFull = 0
             val prev = if (bcHam != null) bcHam.value else null
             if (prev == null || prev._3(pid) == null) {
               if (hamOn) CentroidOps.assignBatchBounded(rows, nr, cs, newA, newU, newL)
               else CentroidOps.assignBatch(rows, nr, cs, newA)
-              nFull = nr
             } else {
               val (deltas, maxD, stArr) = prev
               val (pa, pu, pl) = stArr(pid)
@@ -247,14 +243,12 @@ object Kmeans {
                 val l1 = (pl(i) - maxD) * CentroidOps.BoundDeflate
                 if (u1 < l1) {
                   newA(i) = a; newU(i) = u1; newL(i) = l1
-                  nSkip += 1
                 } else {
                   val ut = math.sqrt(
                     graft.functions.expressions.VectorKernels.l2Sq(rows(i), cs(a))) *
                     CentroidOps.BoundInflate
                   if (ut < l1) {
                     newA(i) = a; newU(i) = ut; newL(i) = l1
-                    nTighten += 1
                   } else {
                     survIdx(ns) = i; ns += 1
                   }
@@ -276,26 +270,16 @@ object Kmeans {
                   j += 1
                 }
               }
-              nFull = ns
             }
-            Iterator.single((pid, newA, newU, newL,
-              (nSkip.toLong << 42) | (nTighten.toLong << 21) | nFull.toLong,
-              (System.nanoTime() - tTask) / 1e9))
+            Iterator.single((pid, newA, newU, newL))
           }
           val assigns = new Array[Array[Int]](numParts)
           val nextState =
             if (hamOn) new Array[(Array[Int], Array[Double], Array[Double])](numParts)
             else null
-          var bodySecMax = 0.0; var bodySecSum = 0.0
-          var tSkip = 0L; var tTighten = 0L; var tFull = 0L
-          assignsRdd.collect().foreach { case (pid, a, u, l, packed, bs) =>
+          assignsRdd.collect().foreach { case (pid, a, u, l) =>
             assigns(pid) = a
             if (hamOn) nextState(pid) = (a, u, l)
-            tSkip += packed >>> 42
-            tTighten += (packed >>> 21) & 0x1fffffL
-            tFull += packed & 0x1fffffL
-            if (bs > bodySecMax) bodySecMax = bs
-            bodySecSum += bs
           }
           hamState = nextState
           if (stableFrac > 0) {
@@ -318,18 +302,10 @@ object Kmeans {
               // the update below still runs (that IS this iteration);
               // the loop condition ends the walk after it
               if (tot > 0 && changed <= stableFrac * tot) stableStop = true
-              if (verbose) println(
-                f"[kmeans]   changed=$changed/$tot (stableStop=$stableStop)")
             }
             prevAssigns = assigns
           }
-          if (verbose) println(
-            f"[kmeans]   skip=$tSkip tighten=$tTighten full=$tFull  body_max=$bodySecMax%5.2f body_sum=$bodySecSum%6.2f")
-          val tFold = System.nanoTime()
-          val r = foldMirrored(mirror, assigns, k, dim, numParts)
-          if (verbose) println(
-            f"[kmeans]   assign_job ${(tFold - tIter) / 1e9}%6.2f s  driver_fold ${(System.nanoTime() - tFold) / 1e9}%6.2f s")
-          r
+          foldMirrored(mirror, assigns, k, dim, numParts)
         } else {
         val partialsRdd = rdd
           .mapPartitionsWithIndex { (pid, it) =>
@@ -445,8 +421,6 @@ object Kmeans {
         }
         cents = next
         iter += 1
-        if (verbose) println(
-          f"[kmeans] iter $iter%2d  ${(System.nanoTime() - tIter) / 1e9}%6.2f s  max_move=$moved%.6f")
       }
       lastRunIters.set(iter)
       cents
@@ -490,8 +464,6 @@ object Kmeans {
     */
   private[graft] val lastRunIters = new java.util.concurrent.atomic.AtomicInteger(-1)
 
-  private val verbose = java.lang.Boolean.getBoolean("graft.kmeans.log")
-
   /** Restart budget for the small-sample driver-local path (FAISS nredo
     * semantics).
     */
@@ -518,12 +490,11 @@ object Kmeans {
     !"false".equals(System.getProperty("graft.kmeans.hamerly"))
 
   /** Driver-memory budget for the sample mirror (float payload bytes).
-    * Default 2 GiB covers the FAISS cap nlist × 256 up to nlist ≈ 5,500 at
-    * 384d; bigger-nlist regimes fall back to the two-level distributed
-    * combine automatically.
+    * 2 GiB covers the FAISS cap nlist × 256 up to nlist ≈ 5,500 at 384d;
+    * bigger-nlist regimes fall back to the two-level distributed combine
+    * automatically.
     */
-  private def mirrorMaxBytes: Long =
-    java.lang.Long.getLong("graft.kmeans.mirrorMaxBytes", 2L << 30)
+  private final val mirrorMaxBytes = 2L << 30
 
   /** Driver-side rebuild of the per-partition partials from the sample
     * mirror + collected assignments, folded through the EXACT association
@@ -744,7 +715,6 @@ object Kmeans {
         ei += 1
       }
       val rec = if (selectByRecall) proxyRecall(cents) else 0.0
-      if (verbose) println(f"[kmeans] local redo $r err=$err%.4f proxy_recall=$rec%.4f")
       val wins =
         if (selectByRecall) rec > bestRecall || (rec == bestRecall && err < bestErr)
         else err < bestErr

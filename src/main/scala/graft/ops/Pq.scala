@@ -456,7 +456,7 @@ object Pq {
     // full-GC-stall hazard the bench settle discipline exists for.
     val bc = spark.sparkContext.broadcast((tables, lutsF, byCell))
     pendingBroadcasts.add(bc)
-    val partials = blockedRelation(spark, idx.path)
+    val partials = Ivf.relation(spark, idx.path)
       .filter(col("cluster_id").isInCollection(probedCells.toSeq))
       .select(col("cluster_id"), col("ids"), col("codes"))
       .as[(Int, Array[Long], Array[Byte])]
@@ -575,30 +575,6 @@ object Pq {
     }
     n
   }
-
-  /** One resolved relation per (session, index path): a fresh
-    * `spark.read.parquet` re-builds the partitioned file index — at
-    * nlist=1024 that is a per-CALL driver discovery pass over 1024
-    * partition dirs, measured ~1.5 s of pure planning against a 0.14 s
-    * pruned scan. The artifact is cached DDL (immutable once `_SUCCESS`
-    * exists), so the relation is safely reusable for the session's life.
-    * Keyed on `sessionUUID` — unique per session for the JVM's life, so a
-    * stopped-then-GC'd session can never collide a new session onto a
-    * DataFrame bound to the dead one (identityHashCode could).
-    */
-  private val relationCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private def blockedRelation(spark: SparkSession, path: String): DataFrame =
-    relationCache.computeIfAbsent(
-      s"${graft.core.GraftSession.uuid(spark)}|$path",
-      _ => spark.read.parquet(path))
-
-  /** Test probe (r18): whether any session holds a cached relation for
-    * `path` — pins [[appendIvf4]]'s committed-token fast path, which must
-    * NOT invalidate serving caches for a no-op replay.
-    */
-  private[graft] def relationCached(path: String): Boolean =
-    relationCache.keySet().stream().anyMatch(_.endsWith(s"|$path"))
 
   /** Codebook sidecar, CRC32C-framed since r17 ([[graft.io.CheckedBlob]]:
     * a flipped float here skews every ADC score with no oracle in the
@@ -891,7 +867,7 @@ object Pq {
         }
     // the grown table must re-list its files in every session (also on a
     // replayed commit: the moves may have completed just now)
-    Ivf.relist(relationCache, idx.path)
+    Ivf.relist(idx.path)
     n
   }
 
@@ -928,7 +904,7 @@ object Pq {
     localCache.computeIfAbsent(cacheKey, _ => {
       val segs = new java.util.HashMap[Integer,
         collection.mutable.ArrayBuffer[(Array[Long], Array[Byte])]]()
-      blockedRelation(spark, idx.path)
+      Ivf.relation(spark, idx.path)
         .select(col("cluster_id"), col("ids"), col("codes"))
         .collect().foreach { r =>
           val cell = Integer.valueOf(r.getInt(0))
@@ -983,7 +959,7 @@ object Pq {
     * refineK == k the Spark twin skips its refine and returns ADC
     * scores, while this path always refines). The identity also assumes
     * each cluster's blocked rows land in ONE input partition on the
-    * Spark side — [[blockedRelation]]'s layout contract (one blob row
+    * Spark side — [[Ivf.relation]]'s layout contract (one blob row
     * per cell); a cell split across partitions would widen the Spark
     * side's candidate pool to a superset of the local reservoir's.
     *

@@ -211,18 +211,10 @@ object Search {
     *
     * Layout dispatch by schema: (ids, vecs) f32 / (ids, bits) f16 /
     * (ids, codes, scales) i8.
-    *
-    * `floatAcc = true` is the opt-in SERVING accumulation flavor
-    * (`Simd.dot4F`, float lanes — 2× FMA throughput where the 384-d scan
-    * is compute-bound): approximate at ~2e-5 relative, so it can flip
-    * only true near-ties; top-k SET equality vs the exact flavor is
-    * SearchSpec-gated on the fixture. The default (and every oracle
-    * path) keeps the double-lane contract.
     */
   def exactTopKFusedBlocked(blocked: DataFrame, queries: DataFrame, k: Int,
                             qidCol: String = "qid",
-                            qvecCol: String = "qvec",
-                            floatAcc: Boolean = false): DataFrame = {
+                            qvecCol: String = "qvec"): DataFrame = {
     import graft.functions.expressions.BatchScore
     val (qids, qvecs) = collectQueries(queries, qidCol, qvecCol)
     val fields = blocked.schema.fieldNames.toSet
@@ -244,22 +236,19 @@ object Search {
       blocks[(Array[Long], Array[Byte], Array[Float])]("ids", "codes", "scales")(_._1) {
         case ((ids, blob, scales), r, out) =>
           val stride = blob.length / ids.length
-          BatchScore.scoreAllI8Slice(blob, r * stride, stride, scales(r), qvecs,
-            out, floatAcc)
+          BatchScore.scoreAllI8Slice(blob, r * stride, stride, scales(r), qvecs, out)
       }
     else if (fields("bits"))
       blocks[(Array[Long], Array[Byte])]("ids", "bits")(_._1) {
         case ((ids, blob), r, out) =>
           val stride = blob.length / ids.length
-          BatchScore.scoreAllHalfSlice(blob, r * stride, stride / 2, qvecs,
-            out, floatAcc)
+          BatchScore.scoreAllHalfSlice(blob, r * stride, stride / 2, qvecs, out)
       }
     else
       blocks[(Array[Long], Array[Byte])]("ids", "vecs")(_._1) {
         case ((ids, blob), r, out) =>
           val stride = blob.length / ids.length
-          BatchScore.scoreAllF32Slice(blob, r * stride, stride / 4, qvecs,
-            out, floatAcc)
+          BatchScore.scoreAllF32Slice(blob, r * stride, stride / 4, qvecs, out)
       }
   }
 

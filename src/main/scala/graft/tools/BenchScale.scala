@@ -3,10 +3,10 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Dedup, Eval, Hnsw, Ivf, Metric, Packing, Pq, Sampling, Search, TextAnalysis}
+import graft.ops.{Dedup, Eval, Hnsw, Ivf, Metric, Pq, Search}
 
 /** Cumulative shuffle-byte and job tally across all tasks — the
   * measurement behind the "shuffle ∝ candidates, not corpus²" scale
@@ -28,20 +28,26 @@ class ShuffleTally extends SparkListener {
 }
 
 /** Scale evidence above the oracle gate's toy sizes, recorded into
-  * `BENCH_SCALE.json`:
+  * `BENCH_SCALE.json`. Every row is one that README.md, COVERAGE.md,
+  * ROADMAP.md, BASELINE.md or a spec cites, or the set-up a cited row
+  * needs:
   *
-  *  - curation/dedup/packing family on a ≥100k-doc [[SyntheticCorpus]]:
-  *    per-op wall time, cardinalities, bucket tails, per-op shuffle
-  *    bytes, connected-components convergence;
-  *  - ANN family on a ≥1M-vector [[SyntheticVectors]] corpus: IVF
-  *    build/probe frontier (recall + latency + scanned rows per nprobe —
-  *    probe cost must track nprobe/nlist, not the corpus), sign-LSH
-  *    frontier points, PQ compression ratio vs the flat table, refine
-  *    shuffle bytes against a plain vs bucketed base, and the
-  *    staged|interleaved pipeline flavors.
+  *  - the MinHash-LSH pair and bucket-tail rows (`d9_*`) on a ≥100k-doc
+  *    [[SyntheticCorpus]];
+  *  - ANN family on a ≥1M-vector [[SyntheticVectors]] corpus: the exact
+  *    and blocked storage-format scans, the IVF build and probe frontier
+  *    (recall + latency + scanned rows per nprobe — probe cost must track
+  *    nprobe/nlist, not the corpus), sign-LSH frontier points, the
+  *    PQ/pq4 probe operating points, the nlist=4096 train, sharded,
+  *    routed and single-graph HNSW serving, the hard-corpus efSearch
+  *    frontier, filtered pq4, SemDeDup cost shapes, index maintenance,
+  *    and a gated 3M section (`ann3m_*`).
   *
   * The pass/fail versions of these invariants live in `CurationScaleSpec`
-  * and `AnnScaleSpec`; this artifact is the recorded-numbers side.
+  * and `AnnScaleSpec`; this artifact is the recorded-numbers side. The
+  * checked-in `BENCH_SCALE.json` also holds rows this tool no longer
+  * produces (COVERAGE.md's "Recorded numbers at 2×" row lists them); a full
+  * run rewrites it without them.
   *
   * Env: SPARK_GRAFT_SCALE_N (docs, default 200000), SPARK_GRAFT_ANN_N
   * (vectors, default 1000000), SPARK_GRAFT_ANN_DIM (default 384),
@@ -127,72 +133,6 @@ object BenchScale {
       val top = Dedup.lsh64BucketSizes(docs).limit(1).collect()(0).getLong(2)
       Map("max_bucket" -> top.toDouble)
     }
-    run("d10_simhash_dups") {
-      Map("n_pairs" -> Dedup.simhashNearDups(docs, maxHamming = 8).count().toDouble)
-    }
-    run("d11_decontaminate") {
-      val hits = Dedup.decontaminate(
-        corpus = docs.filter(col("doc_id") % 97 =!= 0),
-        benchmark = docs.filter(col("doc_id") % 97 === 0), gramTokens = 4)
-      Map("rows" -> hits.count().toDouble,
-        "n_contaminated" -> hits.filter(!col("keep")).count().toDouble)
-    }
-    // noop WRITE, not count(): count over this left join lets Catalyst
-    // eliminate the join entirely (unique right keys), timing nothing
-    // shuffle-floor accounting (r8 verdict task #7), computed OUTSIDE the
-    // timed block: exact per-gram document frequency cannot move less
-    // than one partial-combined (gram64, count) record per UNIQUE gram —
-    // floor_mb records that ~16 B/record bound so the measured shuffle
-    // grades against it. At 200k docs the corpus has ~3.42M unique grams
-    // → ~54.7 MB floor vs 82.7 MB measured (1.5×); the gap is high-df
-    // grams emitting one partial per map partition they touch, inherent
-    // to partial aggregation (the no-combine alternative shuffles the
-    // full 14.5M-pair exploded table and measured 163.6 MB, see
-    // Dedup.boilerplateRatio's window-shape note).
-    // exact countDistinct (it runs OUTSIDE the timed block, so exactness
-    // is free): the recorded floor_mb and the ~1.5× measured-vs-floor gap
-    // are quoted as exact bounds, which an rsd=0.01 sketch would silently
-    // blur by ±1–2%
-    val d12UniqGrams =
-      if (only.forall(_.contains("d12_boilerplate")))
-        docs.select(explode(
-          graft.functions.TextFunctions.tokenGrams64(col("text"), 3)).as("g"))
-          .agg(countDistinct(col("g"))).head().getLong(0)
-      else 0L
-    run("d12_boilerplate") {
-      Dedup.boilerplateRatio(docs, gramTokens = 3, minDocs = 5)
-        .write.format("noop").mode("overwrite").save()
-      Map("rows" -> n.toDouble, "uniq_grams" -> d12UniqGrams.toDouble,
-        "floor_mb" -> d12UniqGrams * 16.0 / 1e6)
-    }
-    run("p4_stratified_sample") {
-      Map("rows" -> Sampling.stratifiedSample(docs, col("lang"), 1000, "doc_id")
-        .count().toDouble)
-    }
-    run("s9_pack") {
-      val packed = Packing.pack(docs, budget = 2048, shards = 64, stratum = "source")
-      val maxGroup = packed.groupBy(col("source"), col("shard"))
-        .agg(count(lit(1)).as("c")).agg(max(col("c"))).collect()(0).getLong(0)
-      Map("rows" -> packed.count().toDouble, "max_window_group" -> maxGroup.toDouble)
-    }
-    // noop write again: count() of a pure projection prunes the kernel
-    run("t1_text_stats") {
-      TextAnalysis.textStats(docs).write.format("noop").mode("overwrite").save()
-      Map("rows" -> n.toDouble)
-    }
-    // transitive dedup over the real d9 candidate pairs: below the driver
-    // edge bound one collect job plus a driver-side search, above it one
-    // label-propagation round per iteration; convergence depth and
-    // component structure are the scale story
-    run("cc_components") {
-      val pairs = Dedup.minhashLshPairs64(docs)
-      val cc = Dedup.connectedComponentsStats(pairs)
-      val nNodes = cc.labels.count()
-      val nComp = cc.labels.select("component").distinct().count()
-      cc.labels.unpersist()
-      Map("iterations" -> cc.iterations.toDouble,
-        "n_nodes" -> nNodes.toDouble, "n_components" -> nComp.toDouble)
-    }
 
     // ---------------- ANN family (annN vectors) ----------------
     val annResults = scala.collection.mutable.LinkedHashMap.empty[String, Map[String, Double]]
@@ -200,8 +140,6 @@ object BenchScale {
       measure(annResults, name, () => op)
     var ivfFrontier: Array[org.apache.spark.sql.Row] = Array.empty
     var lshFrontier: Array[org.apache.spark.sql.Row] = Array.empty
-    var hnswFrontier: Array[org.apache.spark.sql.Row] = Array.empty
-    var hnswMidFrontier: Array[org.apache.spark.sql.Row] = Array.empty
     var hnswHardFrontier: Array[org.apache.spark.sql.Row] = Array.empty
     val annOn = only.forall(_.exists(_.startsWith("ann_")))
     if (annOn) {
@@ -229,40 +167,14 @@ object BenchScale {
       queries.count()
 
       // exact-scan anchor: the latency a pruned probe must beat, and the GT.
-      // FUSED flavor (r9): all three ladder points run the same fused
-      // partition-scan plan (per-partition top-k buffers inside the scan,
-      // no Q×N exploded stream), so the ladder isolates the STORAGE
-      // FORMAT axis — the batched-expression flavors stay oracle-gated at
-      // fixture scale (QuantScanSpec bitwise equality).
+      // FUSED flavor (r9): per-partition top-k buffers inside the scan, no
+      // Q×N exploded stream.
       runAnn("ann_exact_scan") {
         Map("rows" -> Search.exactTopKFused(base, queries, k, Metric.Dot)
           .count().toDouble, "stored_mb" -> flatBytes / 1e6)
       }
 
-      // storage-format ladder (`Performance.md:191,242-255`: FP16 rides
-      // the bandwidth ceiling, INT8 1.8-1.9x over it): same fused scan,
-      // scoring against the stored representation — the wall-clock
-      // trend should track bytes-per-vector, and the recorded stored_mb
-      // pins the 2x / 4x storage cut alongside
-      val f16Path = s"target/scale_f16_${annN}_$annDim"
-      if (!new java.io.File(s"$f16Path/_SUCCESS").isFile)
-        graft.io.QuantizedTables.writeF16(base, f16Path)
-      val i8Path = s"target/scale_i8_${annN}_$annDim"
-      if (!new java.io.File(s"$i8Path/_SUCCESS").isFile)
-        graft.io.QuantizedTables.writeI8(base, i8Path)
-      val f16base = graft.io.QuantizedTables.readF16(spark, f16Path)
-      val i8base = graft.io.QuantizedTables.readI8(spark, i8Path)
-      runAnn("ann_scan_f16") {
-        Map("rows" -> Search.exactTopKFusedHalf(f16base, queries, k,
-          bitsCol = "bits").count().toDouble,
-          "stored_mb" -> dirBytes(f16Path) / 1e6)
-      }
-      runAnn("ann_scan_i8") {
-        Map("rows" -> Search.exactTopKFusedI8(i8base, queries, k)
-          .count().toDouble, "stored_mb" -> dirBytes(i8Path) / 1e6)
-      }
-
-      // BLOCKED ladder (r9): the row-wise scans above pay ~16 µs/row of
+      // BLOCKED storage-format ladder (r9): row-wise scans pay ~16 µs/row of
       // fixed pipeline cost — 10× the kernel time — so their wall time
       // cannot track stored bytes however the payload is encoded
       // (measured: BINARY-per-row packing moved nothing). Packing 128
@@ -287,41 +199,6 @@ object BenchScale {
             .count().toDouble, "stored_mb" -> dirBytes(path) / 1e6)
         }
       }
-      // deeper batch (Q=64): at Q=16 a ~0.3 s fixed job cost (scheduler +
-      // plan + collect — see ann_hnsw_single_breakdown's noop_job_sec)
-      // drowns the per-byte deltas and the format ratios wander run to
-      // run; 64 queries amortize it the way the reference's Q=1000
-      // batches do (`Performance.md:242-255` measures INT8's 1.82–1.90×
-      // at Q=1000), so THIS trio is the stored-bytes-economics reading.
-      val queries64 = base.filter(col("id") < 64)
-        .select(col("id").as("qid"), col("vec").as("qvec")).cache()
-      queries64.count()
-      for ((tag, path) <- Seq(("f32", f32bPath), ("f16", f16bPath), ("i8", i8bPath))) {
-        val t = graft.io.QuantizedTables.readBlocked(spark, path)
-        runAnn(s"ann_scan_${tag}_blocked_q64") {
-          Map("rows" -> Search.exactTopKFusedBlocked(t, queries64, k)
-            .count().toDouble, "stored_mb" -> dirBytes(path) / 1e6)
-        }
-      }
-      // FLOAT-ACCUMULATION serving flavor (r10, verdict task #2): the
-      // double-lane precision contract halves FMA throughput, making the
-      // 384-d scans compute-bound (~0.6 s floor at 1M×16q) so the
-      // stored-byte ladder compresses to i8/f16 ≈ 0.87× where the
-      // reference reads 0.53-0.55× (`Performance.md:242-255`). dot4F's
-      // float lanes double the arithmetic rate; if the compute-bound
-      // diagnosis is right, these points should re-open the ladder —
-      // either way the measurement settles the INT8-margin item.
-      // Approximate serving only (top-k ID-set gate in SearchSpec);
-      // oracle paths never touch this flavor.
-      for ((tag, path) <- Seq(("f32", f32bPath), ("f16", f16bPath), ("i8", i8bPath))) {
-        val t = graft.io.QuantizedTables.readBlocked(spark, path)
-        runAnn(s"ann_scan_${tag}_blocked_q64_facc") {
-          Map("rows" -> Search.exactTopKFusedBlocked(t, queries64, k,
-            floatAcc = true).count().toDouble,
-            "stored_mb" -> dirBytes(path) / 1e6)
-        }
-      }
-      queries64.unpersist()
       val gt = Ivf.cachedGroundTruth(annKey, base, queries, k, Metric.Dot)
 
       // index build is DDL (cached on disk across JVMs) — measured once,
@@ -361,47 +238,13 @@ object BenchScale {
       lshFrontier = Eval.lshSweep(spark, base, queries, gt, k,
         points = Seq((12, 4, 0), (12, 4, 8), (12, 8, 8)), runs = runsPer)
         .collect()
-      runAnn("ann_lsh_cands") {
-        val m = graft.ops.LshAnn.candidateCounts(base, queries,
-          nPlanes = 12, nTables = 4, probes = 8)
-          .agg(avg("n_cand")).collect()(0).getDouble(0)
-        Map("mean_cand" -> m, "frac_of_corpus" -> m / annN)
-      }
-
-      // online (single-query) probe latency — the serving-path number the
-      // reference's eval reports per query. Batch amortization is gone:
-      // what's left is nprobe/nlist × corpus scan + fixed plan overhead,
-      // so the np4 → np32 delta isolates the scan cost per probed list.
-      val oneQ = base.filter(col("id") === 7L)
-        .select(col("id").as("qid"), col("vec").as("qvec")).cache()
-      oneQ.count()
-      runAnn("ann_single_query_np4") {
-        Map("rows" -> Ivf.search(clustered, oneQ, idx.centroids,
-          nprobe = 4, k = k).count().toDouble)
-      }
-      runAnn("ann_single_query_np32") {
-        Map("rows" -> Ivf.search(clustered, oneQ, idx.centroids,
-          nprobe = 32, k = k).count().toDouble)
-      }
-      oneQ.unpersist()
-
-      // PQ compression: the index-bytes-≪-flat invariant
-      // (`Performance.md:553-568,621-623`)
-      val books = Pq.train(base, m = 8, ksub = 256, ntrain = 65536)
-      val pqPath = s"target/scale_pq_${annN}_$annDim"
-      Pq.encode(base, books).write.mode("overwrite").parquet(pqPath)
-      val pqBytes = dirBytes(pqPath)
-      annResults("ann_pq_bytes") = Map(
-        "flat_mb" -> flatBytes / 1e6, "pq_mb" -> pqBytes / 1e6,
-        "ratio" -> flatBytes.toDouble / math.max(pqBytes, 1L))
 
       // PQ PROBE operating point (r9): ADC-scored scan over the code
       // table + exact-L2 refine of the top-R — the reference's PQ
       // headline shape (OPQ-PQ + Refine R=50: recall 0.9743 at TOTAL p99
       // 0.857 ms from a 42 MB index, `Performance.md:621-623`). The probe
       // books are m=48 (48 B/vector ≈ the reference's m=64/42 MB class;
-      // the m=8 books above are the extreme-compression footprint story —
-      // their ADC is too coarse for refine to recover: measured 0.525
+      // an m=8 ADC is too coarse for refine to recover: measured 0.525
       // recall at R=50). Batched fused ADC: one code-table pass scores
       // the whole query batch. Recall vs the exact-scan GT; on the
       // unit-normalized corpus L2 ranking ≡ Dot ranking.
@@ -411,19 +254,8 @@ object BenchScale {
         Pq.saveBooks(pq48BooksFile, b)
         b
       }
-      val pq48Path = s"target/scale_pq48_${annN}_$annDim"
-      if (!new java.io.File(s"$pq48Path/_SUCCESS").isFile)
-        Pq.encode(base, books48).write.mode("overwrite").parquet(pq48Path)
-      val pq48Encoded = spark.read.parquet(pq48Path)
       val pqRefineK = 50
-      runAnn("ann_pq_probe") {
-        val pred = Pq.searchRefined(base, pq48Encoded, queries, books48, k,
-          refineK = pqRefineK, batched = true)
-        val rec = Ivf.meanRecall(pred, gt, k).collect()(0).getDouble(0)
-        Map("recall" -> rec, "refine_k" -> pqRefineK.toDouble, "m" -> 48.0,
-          "stored_mb" -> dirBytes(pq48Path) / 1e6)
-      }
-      // BLOCKED code table (r10, verdict task #7): the row-wise ADC scan
+      // BLOCKED code table (r10, verdict task #7): a row-wise ADC scan
       // reads 48 B of codes per parquet row, so per-row plan overhead —
       // not the 768 L2-resident lookups — is the scan's cost; 128 code
       // rows per stored row amortizes it exactly like the vector scans'
@@ -432,7 +264,7 @@ object BenchScale {
       val pq48bPath = s"target/scale_pq48b_${annN}_$annDim"
       if (!new java.io.File(s"$pq48bPath/_SUCCESS").isFile)
         graft.io.QuantizedTables.writeBytesBlocked(
-          pq48Encoded.select(col("id"), col("codes")), pq48bPath,
+          Pq.encode(base, books48).select(col("id"), col("codes")), pq48bPath,
           bytesCol = "codes")
       val pq48Blocked = graft.io.QuantizedTables.readBlocked(spark, pq48bPath)
       // the ADC candidate-generation stage ALONE (top-R over the 52 MB
@@ -584,52 +416,6 @@ object BenchScale {
       }
       queries512.unpersist()
 
-      // refine join against plain vs bucketed base, measured in the
-      // BIG-BATCH regime (autoBroadcast off — the 100 TB case where the
-      // candidate set exceeds the broadcast budget): the plain join must
-      // shuffle the full base, while the bucketed base reads its buckets
-      // in place and ONLY the candidate side shuffles — the co-located
-      // join writeBucketedBase sells. (With broadcastable candidates the
-      // two are identical: the base never shuffles either way.)
-      val refQs = base.filter(col("id") < 2048)
-        .select(col("id").as("qid"), col("vec").as("qvec"))
-      val cands = Ivf.search(clustered, refQs, idx.centroids, nprobe = 16, k = 100)
-        .groupBy("qid").agg(collect_list(col("id")).as("cand_ids"))
-        .join(refQs, Seq("qid"))
-        .select(col("qid"), col("qvec"), col("cand_ids")).cache()
-      cands.count()
-      spark.sql("DROP TABLE IF EXISTS graft_scale_bucketed")
-      val orphan = new java.io.File("spark-warehouse/graft_scale_bucketed")
-      if (orphan.isDirectory) {
-        java.nio.file.Files.walk(orphan.toPath)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => java.nio.file.Files.delete(p))
-      }
-      Search.writeBucketedBase(base, "graft_scale_bucketed", buckets = cpus.toInt)
-      val bucketed = spark.table("graft_scale_bucketed")
-      val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        runAnn("ann_refine_plain") {
-          Map("rows" -> Search.refine(base, cands, k).count().toDouble)
-        }
-        runAnn("ann_refine_bucketed") {
-          Map("rows" -> Search.refine(bucketed, cands, k).count().toDouble)
-        }
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      cands.unpersist()
-
-      // PIPELINE=staged|interleaved (`ivf_eval.cpp:465-466`): same rows,
-      // different composition — record which wins at this scale
-      runAnn("ann_pipeline_staged") {
-        Map("rows" -> Ivf.searchRefined(clustered, queries, idx.centroids,
-          nprobe = 32, k = k, refineK = 100, pipeline = "staged").count().toDouble)
-      }
-      runAnn("ann_pipeline_interleaved") {
-        Map("rows" -> Ivf.searchRefined(clustered, queries, idx.centroids,
-          nprobe = 32, k = k, refineK = 100, pipeline = "interleaved").count().toDouble)
-      }
-
       // nlist=4096 train point (the reference's own build setting —
       // `Performance.md:578` trains 4096 in 13.9 s via FAISS): train-only
       // (the assign+write pass is nlist-independent, measured above), one
@@ -680,7 +466,7 @@ object BenchScale {
       }
 
       // ---- sharded HNSW (C4 proper): build cost, warm serving latency,
-      // distance-eval sub-linearity, efSearch frontier, routed pruning ----
+      // distance-eval sub-linearity, routed pruning ----
       val hnswKey = s"$annKey|hnsw"
       val hM = 16; val hEfc = 100; val hShards = cpus.toInt
       val tH = System.nanoTime()
@@ -733,59 +519,11 @@ object BenchScale {
           "rows" -> got.toDouble)
         println(f"[scale] ann_hnsw_single_breakdown  noop_job=${noopSec}%6.3f s  local_serve=${localUs}%8.1f us")
       }
-      hnswFrontier = Eval.hnswSweep(spark, base, queries, gt, k,
-        efSearches = Seq(16, 64, 128), m = hM, efConstruction = hEfc,
-        nShards = hShards, runs = runsPer, cacheKey = hnswKey).collect()
-
       // efSearch frontier on the HARD corpus: the lowRank manifold reads
-      // recall 1.0 at every efSearch (the frontier above — honest, but it
-      // shows no trade), and measured harder variants of it stay ≥ 0.96
-      // (knee sweep at 200k: lr32 0.9625@16, off-manifold query noise does
-      // not bite because orthogonal noise shifts all similarities nearly
-      // uniformly). The corpus that actually bends the curve is full-
-      // intrinsic iid-unit data — distance concentration makes neighbor
-      // margins near-ties, the classic hard case — giving the
-      // recall-vs-efSearch trade the reference's curve shows (0.8773@16 →
-      // 0.9982@256, `Performance.md:452-456`; measured 0.3688@16 →
-      // 0.9688@256 at 200k). k-means collapses on iid data, so ONLY the
-      // graph family sweeps here — the IVF cost axes stay on lowRank.
-      // MID-hardness corpus (r9, verdict task #1): the lowRank manifold
-      // above saturates at recall 1.0 (honest, but showing no trade) and
-      // the iid corpus below never reaches a servable point — real
-      // embedding tables sit between (low-but-not-tiny intrinsic dim).
-      // intrinsic=48 at 1M gives the frontier the reference's SHAPE
-      // (knee below 1.0 at small efSearch, ≥0.95 at the top —
-      // `Performance.md:457-461`: 0.8961@16 → 0.9975@256 at 1M), built at
-      // the reference's baseline construction point efC=200/m=16
-      // (`Performance.md:490`, Table 15 baseline).
-      val midIntr = sys.env.getOrElse("SPARK_GRAFT_HNSW_MID_INTR", "48").toInt
-      val midPath = s"target/scale_vectors_${annN}_${annDim}_lr$midIntr"
-      if (!new java.io.File(s"$midPath/_SUCCESS").isFile)
-        SyntheticVectors.lowRankFast(spark, annN, annDim, intrinsic = midIntr)
-          .write.mode("overwrite").parquet(midPath)
-      val midBase = spark.read.parquet(midPath)
-      val midQueries = midBase.filter(col("id") < 16)
-        .select(col("id").as("qid"), col("vec").as("qvec")).cache()
-      midQueries.count()
-      val midGt = Search.groundTruth(midBase, midQueries, k, Metric.Dot).cache()
-      midGt.count()
-      val midKey = s"annscale_${annN}_lr$midIntr|hnsw|efc200"
-      val tMid = System.nanoTime()
-      Hnsw.search(midBase, midQueries, k, Metric.Dot, m = hM,
-        efConstruction = 200, efSearch = 64, nShards = hShards,
-        cacheKey = midKey).count()
-      annResults("ann_hnsw_mid_build") = Map(
-        "sec" -> (System.nanoTime() - tMid) / 1e9, "intrinsic" -> midIntr.toDouble,
-        "m" -> hM.toDouble, "efc" -> 200.0, "shards" -> hShards.toDouble)
-      hnswMidFrontier = Eval.hnswSweep(spark, midBase, midQueries, midGt,
-        k, efSearches = Seq(16, 32, 64, 128, 256), m = hM,
-        efConstruction = 200, nShards = hShards, runs = runsPer,
-        cacheKey = midKey).collect()
-      Hnsw.invalidate(midKey)
-      midGt.unpersist(); midQueries.unpersist()
-
-      // HARD corpus: full-intrinsic iid-unit data (distance concentration,
-      // near-tie margins) — the stress end of the spectrum. r9 builds it
+      // recall 1.0 at every efSearch, so the recall-vs-efSearch trade is
+      // read on full-intrinsic iid-unit data (distance concentration,
+      // near-tie margins) — the stress end of the spectrum. k-means
+      // collapses on iid data, so only the graph family runs here. r9 builds it
       // at the reference's best-quality construction point (efC=200, m=24
       // — `Performance.md:490` Table 15: 0.9892 at efSearch=64 on its
       // corpus) so the curve reflects construction quality, not an
@@ -821,43 +559,21 @@ object BenchScale {
       Hnsw.invalidate(hardKey)
       hardGt.unpersist(); hardQueries.unpersist()
 
-      // ---- predicate-constrained search at corpus scale: the widened
-      // IVF probe and the HNSW over-fetch + post-filter, at two
-      // selectivities, vs the filtered-exact anchor (FilteredSearch's
-      // pre/post-filter strategy split measured where it matters) ----
+      // ---- predicate-constrained search at corpus scale, two
+      // selectivities: the pq4 arm (r12) — widened-probe cluster pruning
+      // + candidate over-fetch + predicate pushed into the exact refine
+      // (the auto chooser's preferred arm when the nibble index exists),
+      // recall against the filtered exact top-k ----
       for ((sTag, cut) <- Seq(("s50", 500L), ("s05", 50L))) {
         val pred = pmod(col("id"), lit(1000L)) < cut
         val sel = cut / 1000.0
         val fGt = Search.groundTruth(base.filter(pred), queries, k, Metric.Dot).cache()
         fGt.count()
-        def recallVs(pred0: DataFrame): Double =
-          Ivf.meanRecall(pred0, fGt, k).collect()(0).getDouble(0)
-        runAnn(s"ann_filtered_exact_$sTag") {
-          Map("rows" -> graft.ops.FilteredSearch.exact(base, pred, queries, k)
-            .count().toDouble, "selectivity" -> sel)
-        }
-        runAnn(s"ann_filtered_ivf_$sTag") {
-          val p = graft.ops.FilteredSearch.ivf(clustered, pred, queries,
-            idx.centroids, nprobe = 8, k = k, selectivity = sel)
-          Map("recall" -> recallVs(p), "selectivity" -> sel,
-            "widened_nprobe" -> graft.ops.FilteredSearch
-              .widenedProbe(8, sel, nlist).toDouble)
-        }
-        runAnn(s"ann_filtered_hnsw_$sTag") {
-          val oversample = math.max(2, math.ceil(1.0 / sel).toInt)
-          val p = graft.ops.FilteredSearch.hnswPostFilter(base, pred, queries,
-            k, oversample, Metric.Dot, m = hM, efConstruction = hEfc,
-            efSearch = 64, nShards = hShards, cacheKey = hnswKey, warm = true)
-          Map("recall" -> recallVs(p), "selectivity" -> sel,
-            "oversample" -> oversample.toDouble)
-        }
-        // r12: the pq4 flavor beside them — widened-probe cluster pruning
-        // + candidate over-fetch + predicate pushed into the exact refine
-        // (the auto chooser's preferred arm when the nibble index exists)
         runAnn(s"ann_filtered_pq4_$sTag") {
           val p = graft.ops.FilteredSearch.pq4(base, pred, queries, ivf4,
             nprobe = 8, k = k, refineK = 100, selectivity = sel)
-          Map("recall" -> recallVs(p), "selectivity" -> sel,
+          Map("recall" -> Ivf.meanRecall(p, fGt, k).collect()(0).getDouble(0),
+            "selectivity" -> sel,
             "widened_nprobe" -> graft.ops.FilteredSearch
               .widenedProbe(8, sel, nlist).toDouble)
         }
@@ -903,7 +619,7 @@ object BenchScale {
       // The semantic-dedup family below localCheckpoints its assigned
       // frame INSIDE each measured op (by design — the checkpoint is the
       // single-assignment trade), and measure() invokes every op twice
-      // (timed + shuffle-delta): four rows × two invocations ≈ 2.5 GB of
+      // (timed + shuffle-delta): three rows × two invocations ≈ 2.5 GB of
       // MEMORY_AND_DISK checkpoint blocks that pin the protected half of
       // Spark's storage pool until GC + ContextCleaner get around to
       // them. The 500K GT scan two sections later then OOMs its 32-task
@@ -926,29 +642,6 @@ object BenchScale {
         val assigned = Ivf.assign(sub, idx.centroids, "embedding")
           .localCheckpoint()
         val out = Dedup.semanticDedupAssigned(assigned, tau = 0.99)
-        val dropped = out.filter(!col("keep")).count().toDouble
-        val nCand = assigned
-          .groupBy("cluster_id").count()
-          .agg(sum(col("count") * (col("count") - 1) / 2).cast("long"))
-          .head().getLong(0)
-        Map("n" -> 200000.0, "n_dropped" -> dropped,
-          "pairs_checked" -> nCand.toDouble,
-          "all_pairs_ratio" -> nCand / (200000.0 * 199999 / 2),
-          "nlist" -> nlist.toDouble)
-      }
-      // the PAPER's keep rule at the same scale point (r14, verdict task
-      // #4): keep the component member farthest from its cluster centroid
-      // (d14-oracle-gated at fixture scale) — the delta vs the min-id row
-      // is one cdist enrichment pass plus a per-component window over
-      // PAIRED rows only, so the cost shape should track the min-id twin
-      runAnn("ann_semantic_dedup_far") {
-        val sub = base.filter(col("id") < 200000)
-          .select(col("id").as("vec_id"), col("vec").as("embedding"))
-        val assigned = Dedup.withCentroidDist(
-          Ivf.assign(sub, idx.centroids, "embedding"), idx.centroids,
-          "embedding").localCheckpoint()
-        val out = Dedup.semanticDedupAssigned(assigned, tau = 0.99,
-          keepRule = "far_from_centroid")
         val dropped = out.filter(!col("keep")).count().toDouble
         val nCand = assigned
           .groupBy("cluster_id").count()
@@ -1111,7 +804,7 @@ object BenchScale {
       // settle BEFORE this non-runAnn section: it runs without measure()'s
       // pre-op double-GC, and the semantic-dedup rows just above leave
       // ~0.3 GB of localCheckpoint blocks PER op invocation (two passes ×
-      // four rows ≈ 2-3 GB) that only free via GC + ContextCleaner — the
+      // three rows ≈ 2 GB) that only free via GC + ContextCleaner — the
       // r16 full run OOMed the 500K GT scan here ([UNABLE_TO_ACQUIRE_MEMORY]
       // in a 32-task sort) with exactly those blocks still resident
       System.gc(); Thread.sleep(700); System.gc()
@@ -1186,43 +879,10 @@ object BenchScale {
             "recall" -> rec, "build_sec" -> sgBuild, "cached" -> sgCached)
           println(f"[scale] ann_hnsw_single_graph_ef$ef%-4d p50=${pct(0.5)}%8.1f us  p99=${pct(0.99)}%8.1f us  recall=$rec%.4f  (build ${sgBuild}%6.1f s)")
         }
-        // FLOAT-ACC serving flavor at the hnswlib comparison point (r13,
-        // verdict task #3): the 3.3× kernel margin vs hnswlib's 0.208 ms
-        // was attributed to the double-lane precision contract — the facc
-        // twin measures how much of the margin that contract actually is.
-        // Same graph, same queries; id-overlap vs the contract path rides
-        // beside the latency (ties may flip — recall-gated, never hashed).
-        {
-          val ef = 64
-          serveQs.take(32).foreach { qv =>
-            Hnsw.searchLocal(qv, sgKey, 1, k, Metric.Dot, hM, hEfc, ef,
-              flavor = Hnsw.Flavor.FloatAcc)
-          }
-          var overlap = 0L
-          val lat = serveQs.map { qv =>
-            val t0 = System.nanoTime()
-            val got = Hnsw.searchLocal(qv, sgKey, 1, k, Metric.Dot, hM, hEfc,
-              ef, flavor = Hnsw.Flavor.FloatAcc)
-            val dt = (System.nanoTime() - t0) / 1e3
-            val contract = Hnsw.searchLocal(qv, sgKey, 1, k, Metric.Dot, hM,
-              hEfc, ef)
-            overlap += got.map(_._1).toSet
-              .intersect(contract.map(_._1).toSet).size
-            dt
-          }
-          java.util.Arrays.sort(lat)
-          val pct = pctOf(lat) _
-          annResults("ann_hnsw_single_graph_ef64_facc") = Map(
-            "p50_us" -> pct(0.50), "p95_us" -> pct(0.95),
-            "p99_us" -> pct(0.99), "avg_us" -> lat.sum / nServe,
-            "ef_search" -> ef.toDouble, "n_vec" -> sgN.toDouble,
-            "overlap_vs_contract" -> overlap.toDouble / (nServe * k))
-          println(f"[scale] ann_hnsw_single_graph_ef64_facc p50=${pct(0.5)}%8.1f us  p99=${pct(0.99)}%8.1f us  overlap=${overlap.toDouble / (nServe * k)}%.4f")
-        }
         // i8-QUANTIZED serving flavor (r14): beam over the int8 sidecar
         // (4× fewer bytes per gathered row against the DRAM-bound walk —
         // the r14 profile's one remaining lever), exact contract-kernel
-        // re-rank of the ef survivors. Recall-gated like facc; overlap
+        // re-rank of the ef survivors. Recall-gated; overlap
         // vs the contract path rides beside the latency.
         {
           val ef = 64
@@ -1422,117 +1082,6 @@ object BenchScale {
         Hnsw.invalidate(mKey)
       }
 
-      // ---- 1M-group maintenance row (r17, verdict task #3): the 200K
-      // row proves the mechanism; this one measures it where the known
-      // O(batch × shards) costs first bite — the upsert/delete pre-pass
-      // broadcasts the batch's id set to EVERY routed shard task (~110K
-      // ids × 1024 graphs of hash probes), and compaction rebuilds every
-      // touched graph. Routed group over 900K of the corpus on the IVF
-      // centroids (the production router), store-cached across runs;
-      // the maintenance itself — a 100K append-only routed upsert + ~9K
-      // replaces, a 5 % tombstone delete, serve-through, dispatched
-      // compaction, serve again — re-runs every time. Serve-through
-      // recall is gated against exact GT on the LIVE set (the a16
-      // leaked-tombstone invariant at 1M: a leaked dead id or a
-      // lost live one drops it). ----
-      if (only.forall(_.contains("ann1m_hnsw_upsert"))) {
-        System.gc(); Thread.sleep(300)
-        val m1N = 900000L
-        val m1Key = s"$annKey|hnsw|maint1m"
-        val m1Store = s"target/scale_hnsw_maint1m_store_${m1N}_${hM}_${hEfc}_42_g1"
-        Hnsw.invalidate(m1Key)
-        val tB1 = System.nanoTime()
-        val m1Cached = new java.io.File(s"$m1Store/MANIFEST").isFile
-        if (m1Cached) Hnsw.warmFromDisk(m1Key, m1Store) // heap: inserts mutate
-        else {
-          Hnsw.searchRouted(base.filter(col("id") < m1N), queries,
-            idx.centroids, routeProbe = 32, k, Metric.Dot, hM, hEfc,
-            efSearch = 64, cacheKey = m1Key).count()
-          Hnsw.saveWarmed(m1Key, m1Store)
-        }
-        val m1WarmSec = (System.nanoTime() - tB1) / 1e9
-        // 100K fresh rows (append-only: ids at/above the group ceiling)
-        // + ~9K replaces routed by their vectors, like production churn
-        val up1 = base.filter(col("id") >= m1N ||
-          (col("id") < m1N && col("id") % 100 === 7))
-        val nUp1 = up1.count()
-        val tU1 = System.nanoTime()
-        val upStats1 = Hnsw.upsertWarmed(up1, m1Key, nShards = nlist,
-          Metric.Dot, m = hM, efConstruction = hEfc,
-          centroids = idx.centroids, createMissing = true).collect()
-        val upSec1 = (System.nanoTime() - tU1) / 1e9
-        require(upStats1.map(_.getLong(1)).sum == nUp1, "1M upsert count off")
-        val del1 = (0L until annN).filter(_ % 20 == 3).toArray
-        val tD1 = System.nanoTime()
-        val nDel1 = Hnsw.deleteWarmed(spark, m1Key, del1, nlist)
-        val delSec1 = (System.nanoTime() - tD1) / 1e9
-        require(Hnsw.liveCountWarmed(m1Key) == annN - nDel1,
-          "1M live count drifted")
-        val nServe1 = 128
-        val serveQs1 = base.filter(col("id") >= 100000L && col("id") < 100000L + nServe1)
-          .orderBy("id").select(col("id"), col("vec")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-        def p50Of1(tag: String): Double = {
-          serveQs1.take(32).foreach { case (_, qv) =>
-            Hnsw.searchLocal(qv, m1Key, nlist, k, Metric.Dot, hM, hEfc,
-              efSearch = 64, centroids = idx.centroids, routeProbe = 32,
-              allowMissing = true)
-          }
-          val lat = serveQs1.map { case (_, qv) =>
-            val t0 = System.nanoTime()
-            val got = Hnsw.searchLocal(qv, m1Key, nlist, k, Metric.Dot,
-              hM, hEfc, efSearch = 64, centroids = idx.centroids,
-              routeProbe = 32, allowMissing = true)
-            require(got.length == k && !got.exists(_._1 % 20 == 3),
-              s"$tag: short or tombstone-leaking 1M serve")
-            (System.nanoTime() - t0) / 1e3
-          }
-          java.util.Arrays.sort(lat)
-          lat(lat.length / 2)
-        }
-        // exact GT on the LIVE set for the serve queries — the recall
-        // axis for both serve points (one batched 1M scan, cached)
-        val serveQdf1 = base.filter(col("id") >= 100000L && col("id") < 100000L + nServe1)
-          .select(col("id").as("qid"), col("vec").as("qvec"))
-        val gtLive1 = Search.groundTruth(
-          base.filter(col("id") % 20 =!= 3), serveQdf1, k, Metric.Dot).cache()
-        gtLive1.count()
-        def recall1(): Double = {
-          val pred = Hnsw.searchWarm(serveQdf1, m1Key, nShards = nlist, k,
-            Metric.Dot, hM, hEfc, efSearch = 64, centroids = idx.centroids,
-            routeProbe = 32, allowMissing = true)
-          require(pred.filter(col("id") % 20 === 3).count() == 0,
-            "1M warm serve leaked a tombstoned id")
-          Ivf.meanRecall(pred, gtLive1, k).collect()(0).getDouble(0)
-        }
-        val p50Maint1 = p50Of1("maintained")
-        val recMaint1 = recall1()
-        val tC1 = System.nanoTime()
-        val compacted1 = Hnsw.compactDispatched(spark, m1Key, nlist)
-          .filter(col("n_compacted") > 0).count()
-        val compactSec1 = (System.nanoTime() - tC1) / 1e9
-        require(Hnsw.deletedCountWarmed(m1Key) == 0, "1M compaction left tombstones")
-        val p50Compact1 = p50Of1("compacted")
-        val recCompact1 = recall1()
-        gtLive1.unpersist()
-        annResults("ann1m_hnsw_upsert") = Map(
-          "n_vec" -> annN.toDouble, "n_shards" -> nlist.toDouble,
-          "warm_sec" -> m1WarmSec,
-          "cached" -> (if (m1Cached) 1.0 else 0.0),
-          "upsert_rows" -> nUp1.toDouble, "upsert_sec" -> upSec1,
-          "upsert_rows_per_sec" -> nUp1 / upSec1,
-          "n_deleted" -> nDel1.toDouble, "delete_sec" -> delSec1,
-          "n_live" -> (annN - nDel1).toDouble,
-          "p50_us_maintained" -> p50Maint1,
-          "recall_maintained" -> recMaint1,
-          "compact_sec" -> compactSec1,
-          "shards_compacted" -> compacted1.toDouble,
-          "p50_us_compacted" -> p50Compact1,
-          "recall_compacted" -> recCompact1)
-        println(f"[scale] ann1m_hnsw_upsert     ${nUp1 / upSec1}%8.0f rows/s upsert ($upSec1%.1f s)  del=$delSec1%.2f s  compact=$compactSec1%.1f s ($compacted1 shards)  p50 maint=$p50Maint1%.0f/comp=$p50Compact1%.0f us  recall ${recMaint1}%.4f/${recCompact1}%.4f")
-        Hnsw.invalidate(m1Key)
-      }
-
       // ---- PQ-family MAINTENANCE row (r16, the a17 surface at scale):
       // frozen-quantizer append throughput — assign + residual-encode +
       // blocked-nibble write into the touched cluster partitions, plus
@@ -1683,41 +1232,10 @@ object BenchScale {
             "nprobe" -> 8.0, "refine_k" -> 100.0, "n_vec" -> n3.toDouble,
             "stored_mb" -> dirBytes(ivf43.path) / 1e6)
         }
-        // (a') the nlist-SCALING recipe made concrete (r13, verdict task
-        // #7): ann3m_pq4_ivf_probe pays 3× rows/cell at nlist=1024; the
-        // documented fix for constant probe cost is nlist ∝ corpus. With
-        // nlist=4096 the cells are back at ~1M/1024 geometry (732 vs 977
-        // rows/cell) — and the stable-stop trainer (the r13 default)
-        // makes the 4096-cell coarse train affordable. np=8 holds the
-        // byte budget at the 1M level; np=16 is the recall-insurance
-        // point (2× cells probed still scans ~1.5× the 1M bytes).
-        val ivf43bKey = s"$key3|ivf4|4096|${annDim / 4}|16|200000|42|t6"
-        val ivf43bCached = new java.io.File(
-          s"target/pq4_cache/${Ivf.cacheDigest(ivf43bKey)}/_SUCCESS").isFile
-        val tIvf43b = System.nanoTime()
-        val ivf43b = Pq.buildOrGetIvf4(spark, base3, key3, nlist = 4096,
-          m4 = annDim / 4, ntrain = 200000)
-        annResults("ann3m_pq4_ivf_build_nlist4096") = Map(
-          "sec" -> (System.nanoTime() - tIvf43b) / 1e9,
-          "nlist" -> 4096.0, "n_vec" -> n3.toDouble,
-          "cached" -> (if (ivf43bCached) 1.0 else 0.0))
-        println(f"[scale] ann3m_pq4_ivf_build_nlist4096 ${annResults("ann3m_pq4_ivf_build_nlist4096")("sec")}%8.2f s")
-        for (np <- Seq(8, 16)) {
-          runAnn(s"ann3m_pq4_ivf_probe_nlist4096_np$np") {
-            val pred = Pq.searchFastScanIvfRefined(base3, ivf43b, q3,
-              nprobe = np, k, refineK = 100)
-            Map("recall" -> Ivf.meanRecall(pred, gt3, k).collect()(0).getDouble(0),
-              "nprobe" -> np.toDouble, "refine_k" -> 100.0,
-              "nlist" -> 4096.0, "n_vec" -> n3.toDouble)
-          }
-        }
-        // CLUSTERED-REFINE at 3M (r13): the nlist-4096 rows above proved
-        // the flat refine's corpus scan was the wall — candidate-stage
-        // bytes fell 4x (nlist 1024 -> 4096) and the wall moved nothing.
-        // Pruning the refine fetch to the probed cells is the fix; at
-        // np8/nlist4096 the fetch reads ~0.8% of the corpus instead of
-        // 4.6 GB. nlist=1024 twin first (reuses idx3's clustered table),
-        // then the 4096 point over its own clustered table.
+        // CLUSTERED-REFINE at 3M (r13): the flat refine's corpus scan was
+        // the wall (an nlist=4096 index cut candidate-stage bytes 4× and
+        // moved nothing); pruning the refine fetch to the probed cells of
+        // idx3's clustered table is the fix.
         runAnn("ann3m_pq4_ivf_probe_cref") {
           val pred = Pq.searchFastScanIvfRefinedClustered(idx3, ivf43,
             q3, nprobe = 8, k, refineK = 100)
@@ -1725,26 +1243,7 @@ object BenchScale {
             "nprobe" -> 8.0, "refine_k" -> 100.0, "nlist" -> nlist.toDouble,
             "n_vec" -> n3.toDouble)
         }
-        val b3bCached = new java.io.File(
-          s"target/ivf_cache/${Ivf.cacheDigest(s"$key3|4096|200000|42|t6")}/_SUCCESS").isFile
-        val tB3b = System.nanoTime()
-        val idx3b = Ivf.buildOrGet(spark, base3, key3, nlist = 4096,
-          ntrain = 200000)
-        annResults("ann3m_ivf_build_nlist4096") = Map(
-          "sec" -> (System.nanoTime() - tB3b) / 1e9, "nlist" -> 4096.0,
-          "n_vec" -> n3.toDouble,
-          "cached" -> (if (b3bCached) 1.0 else 0.0))
-        println(f"[scale] ann3m_ivf_build_nlist4096 ${annResults("ann3m_ivf_build_nlist4096")("sec")}%8.2f s")
-        for (np <- Seq(8, 16)) {
-          runAnn(s"ann3m_pq4_ivf_probe_nlist4096_np${np}_cref") {
-            val pred = Pq.searchFastScanIvfRefinedClustered(idx3b,
-              ivf43b, q3, nprobe = np, k, refineK = 100)
-            Map("recall" -> Ivf.meanRecall(pred, gt3, k).collect()(0).getDouble(0),
-              "nprobe" -> np.toDouble, "refine_k" -> 100.0,
-              "nlist" -> 4096.0, "n_vec" -> n3.toDouble)
-          }
-        }
-        // (b) routed HNSW serve at 3M: 1024 cluster-shard graphs, probed
+        // routed HNSW serve at 3M: 1024 cluster-shard graphs, probed
         // 32/nlist per query — per-query cost tracks routeProbe × shard
         // size (3× the 1M point's shard rows), not the shard count
         val routed3Key = s"$key3|hnsw|routed"
@@ -1771,11 +1270,12 @@ object BenchScale {
           Map("recall" -> Ivf.meanRecall(pred, gt3, k).collect()(0).getDouble(0),
             "route_probe" -> 32.0, "n_vec" -> n3.toDouble)
         }
-        // 3M IN-PROCESS serving points (r14, verdict task #5): both tiers
-        // are pinned at 1M (pq4 ~1.0 ms, routed HNSW ~5.7 ms p50); these
-        // rows close the 1M→3M SERVING slope the way r12/r13 closed the
-        // batch slopes. 256 distinct queries, one timed call each after a
-        // warm pass, reference-interpolated percentiles.
+        // the graph STORE at the 3M/1024-shard point (r14): persist the
+        // routed group, drop it, restore MAPPED — executor warm-up priced
+        // as I/O at the multi-GB scale point — and measure the routed
+        // in-process serve from the mapped store: 256 distinct queries,
+        // one timed call each after a warm pass, reference-interpolated
+        // percentiles
         val nServe3 = 256
         val serveQs3 = base3
           .filter(col("id") >= 100000L && col("id") < 100000L + nServe3)
@@ -1788,63 +1288,6 @@ object BenchScale {
           if (lo + 1 < lat.length) lat(lo) * (1 - frac) + lat(lo + 1) * frac
           else lat(lo)
         }
-        // (a) routed HNSW in-process: the graphs routed3Key just built,
-        // probed 32/nlist per query — results == the batch ann3m_hnsw
-        // _routed flavor (HnswSpec local==warm), whose recall rides above
-        serveQs3.take(32).foreach { qv =>
-          Hnsw.searchLocal(qv, routed3Key, nlist, k, Metric.Dot, hM, hEfc,
-            efSearch = 64, centroids = idx3.centroids, routeProbe = 32)
-        }
-        val latR3 = serveQs3.map { qv =>
-          val t0 = System.nanoTime()
-          Hnsw.searchLocal(qv, routed3Key, nlist, k, Metric.Dot, hM, hEfc,
-            efSearch = 64, centroids = idx3.centroids, routeProbe = 32)
-          (System.nanoTime() - t0) / 1e3
-        }
-        java.util.Arrays.sort(latR3)
-        annResults("ann3m_hnsw_local_routed") = Map(
-          "p50_us" -> pct3(latR3)(0.50), "p95_us" -> pct3(latR3)(0.95),
-          "p99_us" -> pct3(latR3)(0.99), "avg_us" -> latR3.sum / nServe3,
-          "route_probe" -> 32.0, "n_shards" -> nlist.toDouble,
-          "n_vec" -> n3.toDouble)
-        println(f"[scale] ann3m_hnsw_local_routed p50=${pct3(latR3)(0.5)}%8.1f us  p99=${pct3(latR3)(0.99)}%8.1f us")
-        // (a') routed i8 serve at 3M (r14 late): quantize all shard
-        // graphs once (sidecar = codes + scale + Σcode² per row) and
-        // walk the routed beams over i8 bytes — the 3M point of the
-        // quantized flavor, overlap vs the contract walk beside it
-        val tQ3 = System.nanoTime()
-        Hnsw.quantizeWarmed(routed3Key)
-        val quantSec3 = (System.nanoTime() - tQ3) / 1e9
-        serveQs3.take(32).foreach { qv =>
-          Hnsw.searchLocal(qv, routed3Key, nlist, k, Metric.Dot, hM, hEfc,
-            efSearch = 64, centroids = idx3.centroids, routeProbe = 32,
-            flavor = Hnsw.Flavor.I8)
-        }
-        var ovl3 = 0L
-        val latQ3 = serveQs3.map { qv =>
-          val t0 = System.nanoTime()
-          val got = Hnsw.searchLocal(qv, routed3Key, nlist, k, Metric.Dot,
-            hM, hEfc, efSearch = 64, centroids = idx3.centroids,
-            routeProbe = 32, flavor = Hnsw.Flavor.I8)
-          val dt = (System.nanoTime() - t0) / 1e3
-          val contract = Hnsw.searchLocal(qv, routed3Key, nlist, k,
-            Metric.Dot, hM, hEfc, efSearch = 64,
-            centroids = idx3.centroids, routeProbe = 32)
-          ovl3 += got.map(_._1).toSet.intersect(contract.map(_._1).toSet).size
-          dt
-        }
-        java.util.Arrays.sort(latQ3)
-        annResults("ann3m_hnsw_local_routed_i8") = Map(
-          "p50_us" -> pct3(latQ3)(0.50), "p95_us" -> pct3(latQ3)(0.95),
-          "p99_us" -> pct3(latQ3)(0.99), "avg_us" -> latQ3.sum / nServe3,
-          "route_probe" -> 32.0, "n_shards" -> nlist.toDouble,
-          "n_vec" -> n3.toDouble, "quantize_sec" -> quantSec3,
-          "overlap_vs_contract" -> ovl3.toDouble / (nServe3 * k))
-        println(f"[scale] ann3m_hnsw_local_routed_i8 p50=${pct3(latQ3)(0.5)}%8.1f us  p99=${pct3(latQ3)(0.99)}%8.1f us  overlap=${ovl3.toDouble / (nServe3 * k)}%.4f")
-        // (a'') the graph STORE at the 3M/1024-shard point: persist the
-        // routed group (v2 — i8 sidecars ride along), drop it, restore
-        // MAPPED — executor warm-up priced as I/O at the multi-GB scale
-        // point — and re-measure the routed serve from the mapped store
         val storeDir3 = store3Hit.getOrElse(
           s"target/scale3m_hnsw_store_${nlist}_${hM}_${hEfc}_42_g2")
         val fresh3 = store3Hit.isEmpty
@@ -1876,29 +1319,6 @@ object BenchScale {
           (if (fresh3) Map("write_sec" -> writeSec3) else Map.empty)
         println(f"[scale] ann3m_hnsw_store_serve p50=${pct3(latS3)(0.5)}%8.1f us  p99=${pct3(latS3)(0.99)}%8.1f us  (warm ${warmSec3}%.2f s, ${dirBytes(storeDir3) / 1e9}%.1f GB)")
         Hnsw.invalidate(routed3Key)
-        // (b) pq4 in-process serve on the nlist=4096 index — the r13
-        // recipe (nlist ∝ corpus) carried into the serving tier; the
-        // refine reads the id-sorted full-precision store, so the serve
-        // p50 tracks nprobe × rows/cell, not the corpus
-        Pq.warmLocalIvf4(spark, ivf43b, "bench3m_ivf4", base3)
-        serveQs3.take(32).foreach { qv =>
-          Pq.searchLocalIvf4(qv, ivf43b, "bench3m_ivf4", nprobe = 8, k = 10,
-            refineK = 100)
-        }
-        val latP3 = serveQs3.map { qv =>
-          val t0 = System.nanoTime()
-          Pq.searchLocalIvf4(qv, ivf43b, "bench3m_ivf4", nprobe = 8, k = 10,
-            refineK = 100)
-          (System.nanoTime() - t0) / 1e3
-        }
-        java.util.Arrays.sort(latP3)
-        annResults("ann3m_pq4_local_serve") = Map(
-          "p50_us" -> pct3(latP3)(0.50), "p95_us" -> pct3(latP3)(0.95),
-          "p99_us" -> pct3(latP3)(0.99), "avg_us" -> latP3.sum / nServe3,
-          "nprobe" -> 8.0, "refine_k" -> 100.0, "nlist" -> 4096.0,
-          "n_vec" -> n3.toDouble)
-        println(f"[scale] ann3m_pq4_local_serve p50=${pct3(latP3)(0.5)}%8.1f us  p99=${pct3(latP3)(0.99)}%8.1f us")
-        Pq.invalidateLocal("bench3m_ivf4")
         gt3.unpersist()
         q3.unpersist()
       }
@@ -1915,17 +1335,13 @@ object BenchScale {
     val lshJson = lshFrontier.map { r =>
       s"""{"nplanes":${r.getInt(0)},"ntables":${r.getInt(1)},"probes":${r.getInt(2)},"recall":${j(r.getDouble(3))},"avg_s":${j(r.getDouble(4))}}"""
     }.mkString("[", ",", "]")
-    def hnswJsonOf(rows: Array[org.apache.spark.sql.Row]) = rows.map { r =>
+    val hnswHardJson = hnswHardFrontier.map { r =>
       s"""{"ef_search":${r.getInt(0)},"recall":${j(r.getDouble(1))},"avg_s":${j(r.getDouble(2))}}"""
     }.mkString("[", ",", "]")
-    val hnswJson = hnswJsonOf(hnswFrontier)
-    val hnswMidJson = hnswJsonOf(hnswMidFrontier)
-    val hnswHardJson = hnswJsonOf(hnswHardFrontier)
     val line =
       s"""{"n_docs":$n,"cpus":$cpus,"corpus_mb":${j(corpusBytes / 1e6)},"ops":{${section(results)}},""" +
         s""""ann":{"n_vec":$annN,"dim":$annDim,"ops":{${section(annResults)}},""" +
-        s""""ivf_frontier":$ivfJson,"lsh_frontier":$lshJson,"hnsw_frontier":$hnswJson,""" +
-        s""""hnsw_frontier_mid":$hnswMidJson,"hnsw_frontier_hard":$hnswHardJson}}"""
+        s""""ivf_frontier":$ivfJson,"lsh_frontier":$lshJson,"hnsw_frontier_hard":$hnswHardJson}}"""
     // subset runs (SPARK_GRAFT_SCALE_ONLY) are a dev aid — never let them
     // clobber the full recorded artifact
     if (only.isEmpty)

@@ -65,14 +65,6 @@ class HnswSpec extends AnyFunSuite {
       m = 8, efConstruction = 64, efSearch = 32).toSeq
     assert(local == warm,
       s"in-process serve diverged from the warm Spark path: $local vs $warm")
-    // the float-acc SERVING flavor relaxes the precision contract, never
-    // the candidates: gate the id SET (recall), not scores/hashes —
-    // near-tie order may legitimately differ
-    val faccIds = Hnsw.searchLocal(qv, key, nShards = 4, k = 10, Metric.Dot,
-      m = 8, efConstruction = 64, efSearch = 32, flavor = Hnsw.Flavor.FloatAcc)
-      .map(_._1).toSet
-    val hits = faccIds.intersect(warm.map(_._1).toSet).size
-    assert(hits >= 9, s"floatAcc serve recall $hits/10 vs contract path")
     Hnsw.invalidate(key)
   }
 
@@ -296,10 +288,6 @@ class HnswSpec extends AnyFunSuite {
     val mapped = Hnsw.readStore(s"$tmp/g.graph", mapped = true)
     assert(qs.map(mapped.search(_, 10, 64).toSeq).sameElements(want),
       "mapped graph diverged from the original")
-    // FloatAcc on a mapped graph degrades to the contract path, never
-    // errors (no float-acc BB kernels)
-    assert(qs.map(mapped.search(_, 10, 64, Hnsw.Flavor.FloatAcc).toSeq)
-      .sameElements(want), "mapped FloatAcc diverged from Contract")
     // I8 on a mapped graph reads a v2+ store's sidecar in place through
     // the bitwise BB twins: equal to I8 on the heap original
     g.quantizeStore()
@@ -346,7 +334,7 @@ class HnswSpec extends AnyFunSuite {
     for (metric <- Seq(Metric.L2, Metric.Dot)) {
       val g = Hnsw.probeBuild(rows, m = 8, efC = 64, seed = 42L, metric)
       g.quantizeStore()
-      for (fl <- Seq(Hnsw.Flavor.Contract, Hnsw.Flavor.FloatAcc, Hnsw.Flavor.I8)) {
+      for (fl <- Seq(Hnsw.Flavor.Contract, Hnsw.Flavor.I8)) {
         def serve() = {
           val before = g.evals
           val res = qs.map(g.search(_, 10, 64, fl).toSeq).toSeq
@@ -496,14 +484,17 @@ class HnswSpec extends AnyFunSuite {
     val midHdr = flipped(20 + hdrLen / 2, "hdr")
     val e2 = intercept[IllegalArgumentException](Hnsw.readStore(midHdr))
     assert(e2.getMessage.contains("CRC"), e2.getMessage)
-    // -Dgraft.hnsw.store.verify=false skips the payload pass (the mapped
-    // fault-cost knob); the header CRC still verifies
-    System.setProperty("graft.hnsw.store.verify", "false")
-    try {
-      assert(Hnsw.readStore(s"$tmp/g.graph").search(rows.head._2, 10, 64)
-        .toSeq == want)
-      intercept[IllegalArgumentException](Hnsw.readStore(midHdr))
-    } finally System.clearProperty("graft.hnsw.store.verify")
+    // the payload pass always runs: a flipped byte anywhere in the
+    // payload — its first and its last byte too — fails readStore, heap
+    // and mapped, while the intact file still serves
+    for ((at, name) <- Seq((20 + hdrLen, "payFirst"), (bytes.length - 1, "payLast"))) {
+      val f = flipped(at, name)
+      val e = intercept[IllegalArgumentException](Hnsw.readStore(f))
+      assert(e.getMessage.contains("payload CRC"), e.getMessage)
+      intercept[IllegalArgumentException](Hnsw.readStore(f, mapped = true))
+    }
+    assert(Hnsw.readStore(s"$tmp/g.graph").search(rows.head._2, 10, 64)
+      .toSeq == want)
     // v2 compatibility: a v2 file is the same header+payload behind a
     // 12-byte prefix with no CRCs — synthesize one from the v3 bytes and
     // require identical serving (old stores keep working, unchecked)

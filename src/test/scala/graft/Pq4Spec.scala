@@ -805,11 +805,11 @@ class Pq4Spec extends AnyFunSuite {
     // caches intact (it moved no files) — the res() above cached both
     // relations, and invalidating them per replayed call forced a full
     // partition re-list (~1.66 s at nlist=1024) for nothing
-    assert(Pq.relationCached(idx.path),
+    assert(Ivf.relationCached(idx.path),
       "committed replay invalidated the blocked-relation cache")
     assert(Ivf.appendClustered(refIdx, fresh, token = "crash1")
       == fresh.count())
-    assert(Ivf.clusteredCached(refIdx.clusteredPath),
+    assert(Ivf.relationCached(refIdx.clusteredPath),
       "committed replay invalidated the clustered-relation cache")
     assert(res() == grownRes)
     // the grown pair serves exactly like a from-scratch encode of the

@@ -190,20 +190,6 @@ class SearchSpec extends AnyFunSuite {
     assert(asSet(Search.exactTopKFusedBlocked(
       graft.io.QuantizedTables.readBlocked(spark, s"$tmp/i8b"), queries, 10))
       == asSet(bnljI))
-
-    // float-accumulation SERVING flavor (r10): ~2e-5 relative score error
-    // can flip only true near-ties, so the gate is top-k ID-set equality
-    // per query (rank-free) against the exact flavor — fixture margins at
-    // rank k are orders of magnitude above the error
-    def idSet(df: org.apache.spark.sql.DataFrame) =
-      df.select("qid", "id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    for (layout <- Seq("f32b", "f16b", "i8b")) {
-      val t = graft.io.QuantizedTables.readBlocked(spark, s"$tmp/$layout")
-      assert(idSet(Search.exactTopKFusedBlocked(t, queries, 10, floatAcc = true))
-        == idSet(Search.exactTopKFusedBlocked(t, queries, 10)),
-        s"floatAcc flavor changed the $layout top-k id set")
-    }
   }
 
   test("refine recovers exact top-k from a candidate superset") {

@@ -120,7 +120,7 @@ class SimdSpec extends AnyFunSuite {
     }
   }
 
-  /** The n·eps_f32 band the float-acc kernels' scaladoc promises, as a
+  /** The n·eps_f32 band the float-acc kernel's scaladoc promises, as a
     * multiple of the value's scale (a kernel bug would blow far past it).
     */
   private def faccBudget(n: Int): Double = n * 1.2e-7 * (1.0 + n.toDouble / 64)
@@ -132,7 +132,7 @@ class SimdSpec extends AnyFunSuite {
   // shape: four rows in four separate arrays, each at its own non-zero
   // offset, the outputs written at ooff > 0. The double-lane tiles must
   // match bitwise (graph builds, argmins and scans all ride on it); the
-  // float-acc tiles must stay inside the float-acc budget.
+  // float-acc screening tile must stay inside the float-acc budget.
   private val tiles: Seq[(String, Tile, String, (Array[Float], Array[Float], Int, Int) => Double,
       Boolean)] = Seq(
     ("dot4", (a, rs, os, n, out, oo) =>
@@ -143,10 +143,7 @@ class SimdSpec extends AnyFunSuite {
       "l2SqOff", Simd.l2SqOff, true),
     ("dot4F", (a, rs, os, n, out, oo) =>
       Simd.dot4F(a, rs(0), os(0), rs(1), os(1), rs(2), os(2), rs(3), os(3), n, out, oo),
-      "dotOff", Simd.dotOff, false),
-    ("l2Sq4F", (a, rs, os, n, out, oo) =>
-      Simd.l2Sq4F(a, rs(0), os(0), rs(1), os(1), rs(2), os(2), rs(3), os(3), n, out, oo),
-      "l2SqOff", Simd.l2SqOff, false))
+      "dotOff", Simd.dotOff, false))
 
   tiles.foreach { case (name, tile, singleName, single, exact) =>
     val claim = if (exact) s"== $singleName bitwise" else "within facc budget"
@@ -169,9 +166,8 @@ class SimdSpec extends AnyFunSuite {
           val got = out(ooff + j)
           if (exact) assert(bits(got) == bits(want), s"lane $j diverged at n=$n")
           else {
-            // the float-acc budget test's scales: Σ|a| bounds a dot's
-            // magnitude sum, a squared L2 is its own
-            val scale = if (name.startsWith("dot")) a.map(x => math.abs(x.toDouble)).sum else want
+            // Σ|a| bounds a dot's magnitude sum
+            val scale = a.map(x => math.abs(x.toDouble)).sum
             assert(math.abs(got - want) <= faccBudget(n) * math.max(1.0, scale),
               s"lane $j outside the float-acc budget at n=$n")
           }
@@ -262,42 +258,6 @@ class SimdSpec extends AnyFunSuite {
       VectorKernels.dotI8FOffBB(a, cbb13, 5, 13)) ==
       java.lang.Float.floatToRawIntBits(
         VectorKernels.dotI8FOff(a, codes13, 5, 13)))
-  }
-
-  test("float-acc serving kernels track the double-lane contract within " +
-       "the documented n·eps_f32 budget") {
-    // dotFOff/l2SqFOff/dot4F/l2Sq4F are the OPT-IN serve flavors — never
-    // bitwise-comparable, but they must stay inside the ~n·2^-24 relative
-    // band the scaladoc promises (a kernel bug would blow far past it)
-    forAllPairs { (a, b) =>
-      val n = math.min(a.length, b.length)
-      val budget = faccBudget(n)
-      val sD = Simd.dotOff(a, b, 0, n)
-      assert(math.abs(Simd.dotFOff(a, b, 0, n) - sD) <=
-        budget * math.max(1.0, a.map(x => math.abs(x.toDouble)).sum),
-        s"dotFOff outside the float-acc budget at n=$n")
-      val sL = Simd.l2SqOff(a, b, 0, n)
-      assert(math.abs(Simd.l2SqFOff(a, b, 0, n) - sL) <=
-        budget * math.max(1.0, sL), s"l2SqFOff outside the budget at n=$n")
-    }
-    (1 to 20).foreach { _ =>
-      val n = 16 + rng.nextInt(685)
-      val a = Array.fill(n)(rng.nextFloat() * 2 - 1)
-      val rows = Array.fill(6)(Array.fill(n)(rng.nextFloat() * 2 - 1))
-      val outF = new Array[Double](4)
-      val budget = faccBudget(n)
-      Simd.dot4F(a, rows(1), 0, rows(2), 0, rows(3), 0, rows(4), 0, n, outF, 0)
-      (0 until 4).foreach { j =>
-        val d = Simd.dotOff(a, rows(1 + j), 0, n)
-        assert(math.abs(outF(j) - d) <=
-          budget * math.max(1.0, a.map(x => math.abs(x.toDouble)).sum))
-      }
-      Simd.l2Sq4F(a, rows(1), 0, rows(2), 0, rows(3), 0, rows(4), 0, n, outF, 0)
-      (0 until 4).foreach { j =>
-        val d = Simd.l2SqOff(a, rows(1 + j), 0, n)
-        assert(math.abs(outF(j) - d) <= budget * math.max(1.0, d))
-      }
-    }
   }
 
   test("batched cosine with hoisted norms == per-pair cosine (bitwise)") {
