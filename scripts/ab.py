@@ -13,15 +13,18 @@ digest), then every workload runs `--pairs` pairs in ABBA order (pair i
 runs parent then change when i is even, change then parent when odd),
 both runs of a pair with the same seed and BENCHMARK.json's run_seconds.
 
-Per workload and metric it prints the parent median and interquartile
-range, the change median, the median of the per-pair change/parent
-ratios, a bootstrap 90 % interval of that median, and how many pairs
-moved the better way (`better` from BENCHMARK.json), and per workload
-the failed operations summed over each side's runs. A metric is marked
-GAIN when the change won at least nine tenths of the pairs, the medians
-differ by more than the parent's interquartile range and the change
-failed no more operations than the parent; it is marked WORSE THAN BOUND
-when its median ratio is worse than its BENCHMARK.json bound. `--trace`
+Per workload and metric it prints each side's median and interquartile
+range (IQR), the median of the per-pair change/parent ratios, a bootstrap
+90 % interval of that median, and how many pairs moved the better way
+(`better` from BENCHMARK.json), and per workload the failed operations
+summed over each side's runs. A metric is marked GAIN when the change won
+at least nine tenths of the pairs, the medians differ by more than the
+parent's IQR and the change failed no more operations than the parent; it
+is marked WORSE THAN BOUND when its median ratio is worse than its
+BENCHMARK.json bound, and UNRESOLVED when either side's IQR is wider than
+the bound times that side's median (the runs spread too widely to tell a
+change within the bound from none), unless every change run reads better
+than every parent run. `--trace`
 runs perfbench traced (`--trace 1`): each pair then carries the per-layer
 metrics (build phases, Spark jobs, maintenance, probes) in place of the
 end-to-end ones, so the layer that moved gets its own ratio and interval.
@@ -114,6 +117,15 @@ def bootstrap(ratios, reps=2000, level=0.90):
     return lo, hi
 
 
+def median_iqr(xs):
+    """Median and interquartile range (0 for a single run)."""
+    med = statistics.median(xs)
+    if len(xs) < 2:
+        return med, 0.0
+    q = statistics.quantiles(xs, n=4)
+    return med, q[2] - q[0]
+
+
 def report(workload, pairs, specs):
     """Print the workload's table; True when the change failed more
     operations than the parent."""
@@ -122,9 +134,9 @@ def report(workload, pairs, specs):
     print("== %s: %d pairs, failed operations: parent %d, change %d%s ==" % (
         workload, len(pairs), failed[0], failed[1],
         " (MORE FAILED)" if more_failed else ""))
-    print("%-28s %6s %11s %11s %11s %8s %19s %7s" % (
-        "metric", "better", "parent", "parent IQR", "change", "ratio",
-        "90% interval", "better"))
+    print("%-28s %6s %11s %11s %11s %11s %8s %19s %7s" % (
+        "metric", "better", "parent", "parent IQR", "change", "change IQR",
+        "ratio", "90% interval", "better"))
     names = sorted({m for a, b in pairs for m in a["metrics"]} &
                    {m for a, b in pairs for m in b["metrics"]})
     for name in names:
@@ -138,22 +150,26 @@ def report(workload, pairs, specs):
         higher = spec.get("better", "higher") == "higher"
         ratios = [c / p for p, c in vals if p != 0]
         wins = sum(1 for p, c in vals if (c > p if higher else c < p))
-        pm = statistics.median(p for p, _ in vals)
-        cm = statistics.median(c for _, c in vals)
-        q = statistics.quantiles([p for p, _ in vals], n=4) if len(vals) > 1 else [pm, pm, pm]
-        iqr = q[2] - q[0]
+        parents, changes = [p for p, _ in vals], [c for _, c in vals]
+        pm, iqr = median_iqr(parents)
+        cm, ciqr = median_iqr(changes)
         gain = wins >= 0.9 * len(vals) and abs(cm - pm) > iqr and not more_failed
+        bound = spec.get("bound")
+        separated = (min(changes) > max(parents) if higher
+                     else max(changes) < min(parents))
+        unresolved = (bound is not None and not separated and
+                      (iqr > bound * abs(pm) or ciqr > bound * abs(cm)))
         if ratios:
             med = statistics.median(ratios)
             lo, hi = bootstrap(ratios)
             ratio, interval = "%8.3f" % med, "[%7.3f, %7.3f]" % (lo, hi)
-            bound = spec.get("bound")
             worse = bound is not None and (med < 1 - bound if higher else med > 1 + bound)
         else:
             ratio, interval, worse = "%8s" % "-", "%19s" % "-", False
-        flags = ("  GAIN" if gain else "") + ("  WORSE THAN BOUND" if worse else "")
-        print("%-28s %6s %11.5g %11.5g %11.5g %s %s %3d/%-3d%s" % (
-            name, "up" if higher else "down", pm, iqr, cm, ratio, interval,
+        flags = (("  GAIN" if gain else "") + ("  WORSE THAN BOUND" if worse else "") +
+                 ("  UNRESOLVED" if unresolved else ""))
+        print("%-28s %6s %11.5g %11.5g %11.5g %11.5g %s %s %3d/%-3d%s" % (
+            name, "up" if higher else "down", pm, iqr, cm, ciqr, ratio, interval,
             wins, len(vals), flags))
     return more_failed
 

@@ -1648,7 +1648,7 @@ object SparkEntry {
          |FROM t ORDER BY doc_id""".stripMargin
     },
     // Same generated mix constants as d7; band keys are '|'-joined decimal
-    // components, the bucket self-join mirrors Dedup.bandedPairs.
+    // components, the bucket self-join mirrors Dedup.minhashLshPairs64.
     "d9_lsh64_pairs" -> {
       val bands = 4
       val rows = 4

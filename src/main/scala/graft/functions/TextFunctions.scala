@@ -50,15 +50,6 @@ object TextFunctions {
   def minhashSignature(text: Column, shingleSize: Int, numHashes: Int): Column =
     minhashSignatureSalted(text, shingleSize, (0 until numHashes).map(_.toString))
 
-  /** LSH band keys from a signature column: band b = minhashes
-    * `[b*rows, (b+1)*rows)` joined with '|'. Docs sharing any band key are
-    * near-dup candidates (bucket join).
-    */
-  def bandKeys(sig: Column, bands: Int, rows: Int): Column =
-    array((0 until bands).map { b =>
-      concat_ws("|", (0 until rows).map(r => element_at(sig, b * rows + r + 1)): _*)
-    }: _*)
-
   /** LSH band key computed directly from text (single fused pass). */
   def minhashBand(text: Column, shingleSize: Int, bandStart: Int, rows: Int): Column = {
     val sig = minhashSignatureSalted(text, shingleSize,

@@ -28,25 +28,20 @@ object BatchScore {
     * float→double widening are reused from registers instead of
     * re-streamed per query — the scan's memory traffic is ~Q× the corpus
     * without it. Bitwise-identical per pair to [[VectorKernels.dot]]
-    * (the tail and any ragged/short input fall back to it).
+    * (the tail falls back to it). The query matrix has one dim
+    * (checked where it is built, `Search.collectQueries`); the row must
+    * have it too.
     */
   private def dotsInto(x: Array[Float], queries: Array[Array[Float]],
                        scale: Double, out: Array[Double]): Unit = {
     val nq = queries.length
+    if (nq > 0) VectorKernels.requireDim("exact scan", queries(0).length, x.length)
     var q = 0
-    if (VectorKernels.simdEnabled && nq >= 4) {
-      val qdim = queries(0).length // uniform by construction (one query matrix)
-      val n = math.min(x.length, qdim)
-      var uniform = n >= 16
-      var i = 1
-      while (uniform && i < nq) { uniform = queries(i).length == qdim; i += 1 }
-      if (uniform) {
-        while (q + 4 <= nq) {
-          val q0 = queries(q); val q1 = queries(q + 1)
-          val q2 = queries(q + 2); val q3 = queries(q + 3)
-          Simd.dot4(x, q0, 0, q1, 0, q2, 0, q3, 0, n, out, q)
-          q += 4
-        }
+    if (VectorKernels.simdEnabled && x.length >= 16) {
+      while (q + 4 <= nq) {
+        Simd.dot4(x, queries(q), 0, queries(q + 1), 0, queries(q + 2), 0,
+          queries(q + 3), 0, x.length, out, q)
+        q += 4
       }
     }
     while (q < nq) { out(q) = VectorKernels.dot(x, queries(q)); q += 1 }
@@ -60,19 +55,13 @@ object BatchScore {
   private def l2Into(x: Array[Float], queries: Array[Array[Float]],
                      out: Array[Double]): Unit = {
     val nq = queries.length
+    if (nq > 0) VectorKernels.requireDim("exact scan", queries(0).length, x.length)
     var q = 0
-    if (VectorKernels.simdEnabled && nq >= 4) {
-      val qdim = queries(0).length
-      val n = math.min(x.length, qdim)
-      var uniform = n >= 16
-      var i = 1
-      while (uniform && i < nq) { uniform = queries(i).length == qdim; i += 1 }
-      if (uniform) {
-        while (q + 4 <= nq) {
-          Simd.l2Sq4(x, queries(q), 0, queries(q + 1), 0, queries(q + 2), 0,
-            queries(q + 3), 0, n, out, q)
-          q += 4
-        }
+    if (VectorKernels.simdEnabled && x.length >= 16) {
+      while (q + 4 <= nq) {
+        Simd.l2Sq4(x, queries(q), 0, queries(q + 1), 0, queries(q + 2), 0,
+          queries(q + 3), 0, x.length, out, q)
+        q += 4
       }
     }
     while (q < nq) { out(q) = VectorKernels.l2Sq(x, queries(q)); q += 1 }

@@ -17,32 +17,31 @@ import org.apache.spark.sql.types._
 object CentroidOps {
 
   /** Per-matrix derived data for the norm-ordered argmin: the per-centroid
-    * norms, the centroid indices sorted ascending by (norm, index), the
-    * norms in that sorted order, and whether every row has the same dim
-    * (the tiled kernel's precondition; a ragged matrix — never produced by
-    * this engine — falls back to the index-order scan).
+    * norms, the centroid indices sorted ascending by (norm, index), and
+    * the norms in that sorted order.
     */
   final class CentroidMeta(val norms: Array[Double], val sumSqs: Array[Double],
-                           val order: Array[Int], val sortedNorms: Array[Double],
-                           val uniformDim: Boolean) {
+                           val order: Array[Int], val sortedNorms: Array[Double]) {
     def maxNorm: Double = if (sortedNorms.isEmpty) 0.0 else sortedNorms.last
   }
 
+  /** Built once per matrix, so this is where a ragged matrix fails: the
+    * tiled kernels read every centroid over the first one's length.
+    */
   private def buildMeta(cs: Array[Array[Float]]): CentroidMeta = {
     val n = cs.length
     val norms = new Array[Double](n)
     val sumSqs = new Array[Double](n)
-    var uniform = true
     var i = 0
     while (i < n) {
+      VectorKernels.requireDim("centroid matrix", cs(i).length, cs(0).length)
       sumSqs(i) = VectorKernels.sumSq(cs(i))
       norms(i) = math.sqrt(sumSqs(i))
-      if (cs(i).length != cs(0).length) uniform = false
       i += 1
     }
     val order = Array.range(0, n).sortBy(c => (norms(c), c))
     val sortedNorms = order.map(norms)
-    new CentroidMeta(norms, sumSqs, order, sortedNorms, uniform)
+    new CentroidMeta(norms, sumSqs, order, sortedNorms)
   }
 
   /** Per-matrix meta, keyed by the broadcast reference object's identity
@@ -122,18 +121,12 @@ object CentroidOps {
     * Dispatch: large centroid sets (k ≥ 128 — the train/assign regime
     * where the reference runs FAISS's blocked GEMM) go through
     * [[argminScreened]]; small sets keep the norm-ordered tile (screening
-    * overhead isn't amortized there). Both are bit-exact.
+    * overhead isn't amortized there). Both are bit-exact, and both check
+    * `x` against the centroids' dim.
     */
   def argminL2F(x: Array[Float], centroids: Array[Array[Float]]): Int = {
     val meta = metaOf(centroids)
-    if (!meta.uniformDim) return argminL2Direct(x, centroids, meta.norms)
-    val dim = if (centroids.isEmpty) 0 else centroids(0).length
-    // screened path requires x.length == dim: the screen identity uses the
-    // FULL ‖x‖²/‖c‖², so a truncating min-length pairing (the legacy
-    // kernels' convention for mismatched dims) would shift screens
-    // per-candidate and break the error bound
-    if (VectorKernels.simdEnabled && centroids.length >= 128 &&
-        x.length == dim && dim >= 16)
+    if (VectorKernels.simdEnabled && centroids.length >= 128 && x.length >= 16)
       argminScreened(x, centroids, meta)
     else
       argminNormOrdered(x, centroids, meta.order, meta.sortedNorms)
@@ -242,11 +235,12 @@ object CentroidOps {
     val meta = metaOf(cs)
     val k = cs.length
     val dim = if (k == 0) 0 else cs(0).length
-    var screenable = VectorKernels.simdEnabled && k >= 128 && dim >= 16 &&
-      meta.uniformDim
     var i = 0
-    while (screenable && i < n) { screenable = points(i).length == dim; i += 1 }
-    if (!screenable) {
+    while (k > 0 && i < n) {
+      VectorKernels.requireDim("centroid assign", points(i).length, dim)
+      i += 1
+    }
+    if (!(VectorKernels.simdEnabled && k >= 128 && dim >= 16)) {
       var p = 0
       while (p < n) {
         val got = argminL2F(points(p), cs)
@@ -380,7 +374,8 @@ object CentroidOps {
   private[graft] def argminScreened(x: Array[Float], cs: Array[Array[Float]],
                                     meta: CentroidMeta): Int = {
     val k = cs.length
-    val dim = math.min(x.length, cs(0).length)
+    VectorKernels.requireDim("nearest centroid", x.length, cs(0).length)
+    val dim = x.length
     val xx = VectorKernels.sumSq(x)
     val (df, out4) = screenBufOf(k)
     // overflow guard (see assignBatch): any non-finite screen value voids
@@ -440,32 +435,13 @@ object CentroidOps {
     allFinite
   }
 
-  /** The legacy index-order bounded scan — kept as the ragged-matrix
-    * fallback and the spec's equality reference.
-    */
-  private[graft] def argminL2Direct(x: Array[Float], cs: Array[Array[Float]],
-                                    norms: Array[Double]): Int = {
-    val xn = VectorKernels.norm2(x)
-    var best = 0
-    var bestDist = Double.MaxValue
-    var c = 0
-    while (c < cs.length) {
-      val gap = xn - norms(c)
-      if (gap * gap * PruneSlack < bestDist) {
-        val d = VectorKernels.l2Sq(x, cs(c))
-        if (d < bestDist) { bestDist = d; best = c }
-      }
-      c += 1
-    }
-    best
-  }
-
   private[graft] def argminNormOrdered(x: Array[Float], cs: Array[Array[Float]],
                                        order: Array[Int],
                                        sortedNorms: Array[Double]): Int = {
     val n = cs.length
     if (n == 0) return 0
-    val dim = math.min(x.length, cs(0).length)
+    VectorKernels.requireDim("nearest centroid", x.length, cs(0).length)
+    val dim = x.length
     val tiled = VectorKernels.simdEnabled && dim >= 16
     val xn = VectorKernels.norm2(x)
     // first sorted position with norm >= ‖x‖ (binary lower bound)
@@ -538,12 +514,11 @@ object CentroidOps {
     */
   def topNprobeF(x: Array[Float], cs: Array[Array[Float]], nprobe: Int): Array[Int] = {
     val k = cs.length
+    if (k > 0) VectorKernels.requireDim("nprobe routing", x.length, cs(0).length)
     val np = math.min(nprobe, k)
     if (np <= 0) return new Array[Int](0)
     val meta = metaOf(cs)
-    val dim = if (k == 0) 0 else cs(0).length
-    if (VectorKernels.simdEnabled && k >= 128 && meta.uniformDim &&
-        x.length == dim && dim >= 16) {
+    if (VectorKernels.simdEnabled && k >= 128 && x.length >= 16) {
       val got = topNprobeScreened(x, cs, meta, np)
       if (got != null) return got
     }

@@ -13,8 +13,7 @@ import org.apache.spark.sql.types._
 object MatOps {
 
   /** y = M x, row-major M (rows × dim). Each row is one [[VectorKernels.dot]]
-    * (SIMD-dispatched; rotation matrices are square, so `min(row, x)` length
-    * matches the original full-row loop).
+    * (SIMD-dispatched; it fails when `x` does not have the rows' dim).
     */
   def matVec(v: ArrayData, m: Array[Array[Float]]): ArrayData = {
     val x = v.toFloatArray()

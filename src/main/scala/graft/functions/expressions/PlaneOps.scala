@@ -24,6 +24,7 @@ object PlaneKernels {
   /** Packed sign bits: bit p set iff dot(vec, planes(p)) >= 0. */
   def signKey(vec: ArrayData, planes: Array[Array[Float]]): Long = {
     val v = vec.toFloatArray()
+    if (planes.nonEmpty) VectorKernels.requireDim("lsh", v.length, planes(0).length)
     var key = 0L
     var p = 0
     while (p < planes.length) {
@@ -38,6 +39,7 @@ object PlaneKernels {
     */
   def projections(vec: ArrayData, planes: Array[Array[Float]]): ArrayData = {
     val v = vec.toFloatArray()
+    if (planes.nonEmpty) VectorKernels.requireDim("lsh", v.length, planes(0).length)
     val out = new Array[Any](planes.length)
     var p = 0
     while (p < planes.length) {

@@ -21,9 +21,18 @@ import org.apache.spark.sql.types._
   */
 object PqOps {
 
+  /** The dim a codebook set encodes: Σ dsub over its m books. */
+  private def booksDim(books: Array[Array[Array[Float]]]): Int = {
+    var d = 0
+    var s = 0
+    while (s < books.length) { d += books(s)(0).length; s += 1 }
+    d
+  }
+
   /** argmin-L2 code per subspace → m bytes. `x` must have m*dsub dims. */
   def encode(v: ArrayData, books: Array[Array[Array[Float]]]): ArrayData = {
     val x = v.toFloatArray()
+    VectorKernels.requireDim("pq encode", x.length, booksDim(books))
     val m = books.length
     val out = new Array[Byte](m)
     var s = 0
@@ -54,6 +63,7 @@ object PqOps {
     */
   def lut(q: ArrayData, books: Array[Array[Array[Float]]], l2: Boolean): ArrayData = {
     val x = q.toFloatArray()
+    VectorKernels.requireDim("pq lut", x.length, booksDim(books))
     val m = books.length
     val ksub = books(0).length
     val out = new Array[Float](m * ksub)
@@ -305,6 +315,7 @@ object PqOps {
   def residual(v: ArrayData, cid: Int, centroids: Array[Array[Float]]): ArrayData = {
     val x = v.toFloatArray()
     val c = centroids(cid)
+    VectorKernels.requireDim("ivf residual", x.length, c.length)
     val out = new Array[Float](x.length)
     var i = 0
     while (i < x.length) { out(i) = x(i) - c(i); i += 1 }

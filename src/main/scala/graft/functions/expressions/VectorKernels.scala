@@ -36,12 +36,31 @@ object VectorKernels {
   /** Below this length the vector loop is all tail; skip the dispatch. */
   private final val SimdMinLen = 16
 
-  def dot(a: Array[Float], b: Array[Float]): Double =
-    dotOff(a, b, 0, math.min(a.length, b.length))
+  /** The dimension contract: an index holds vectors of one dim, and a
+    * query must have it too (the reference stops a run on the first
+    * mismatch, `apps/nvdb_search.cpp:20-24`, `apps/nvdb_ivf_eval.cpp:343-347`).
+    * Called at the points every entry funnels through, once per vector
+    * pair or per query, so a wrong-dim query fails instead of scoring a
+    * prefix.
+    */
+  private[graft] def requireDim(op: String, query: Int, index: Int): Unit =
+    if (query != index)
+      throw new IllegalArgumentException(
+        s"dim mismatch in $op: query $query, index $index")
+
+  /** Dot product. `b` is the query side in the dim check (the SQL
+    * functions take `(vec, qvec)`).
+    */
+  def dot(a: Array[Float], b: Array[Float]): Double = {
+    requireDim("dot", b.length, a.length)
+    dotOff(a, b, 0, a.length)
+  }
 
   /** Squared L2 distance (`apps/nvdb_ivf_eval.cpp:232-240`). */
-  def l2Sq(a: Array[Float], b: Array[Float]): Double =
-    l2SqOff(a, b, 0, math.min(a.length, b.length))
+  def l2Sq(a: Array[Float], b: Array[Float]): Double = {
+    requireDim("l2sq", b.length, a.length)
+    l2SqOff(a, b, 0, a.length)
+  }
 
   /** Sum of squares (double-accumulated) — norm2 is its sqrt; exposed
     * separately because the screened argmin needs the unsquared form
@@ -52,7 +71,10 @@ object VectorKernels {
 
   def norm2(a: Array[Float]): Double = math.sqrt(sumSq(a))
 
-  def cosine(a: Array[Float], b: Array[Float]): Double = cosineOff(a, b, 0, b.length)
+  def cosine(a: Array[Float], b: Array[Float]): Double = {
+    requireDim("cosine", b.length, a.length)
+    cosineOff(a, b, 0, b.length)
+  }
 
   // ---- (array, offset) kernels: the stored row is read at `flat(off + i)`
   // (offset 0 for a plain row array, the node offset in the HNSW packed
@@ -88,15 +110,15 @@ object VectorKernels {
   }
 
   /** Cosine of `a` against `n` floats of `flat` starting at `off`:
-    * dot/(sqrt·sqrt), the row norm over its full `n` stored floats, the
-    * query norm over all of `a`, the dot over `min(a.length, n)` —
-    * [[cosine]] is the offset-0 case over the whole row.
+    * dot/(sqrt·sqrt) — [[cosine]] is the offset-0 case over the whole
+    * row. `a` must have `n` dims.
     */
   def cosineOff(a: Array[Float], flat: Array[Float], off: Int, n: Int): Double = {
+    requireDim("cosine", a.length, n)
     val na = norm2(a)
     val nb = math.sqrt(sumSqOff(flat, off, n))
     if (na == 0.0 || nb == 0.0) 0.0
-    else dotOff(a, flat, off, math.min(a.length, n)) / (na * nb)
+    else dotOff(a, flat, off, n) / (na * nb)
   }
 
   /** Fused f32·i8 dot, float accumulation, unscaled (see [[Simd.dotI8F]]).
@@ -167,10 +189,11 @@ object VectorKernels {
   /** [[cosineOff]] over a ByteBuffer payload — bitwise twin. */
   def cosineOffBB(a: Array[Float], bb: java.nio.ByteBuffer, off: Int,
                   n: Int): Double = {
+    requireDim("cosine", a.length, n)
     val na = norm2(a)
     val nb = math.sqrt(sumSqOffBB(bb, off, n))
     if (na == 0.0 || nb == 0.0) 0.0
-    else dotOffBB(a, bb, off, math.min(a.length, n)) / (na * nb)
+    else dotOffBB(a, bb, off, n) / (na * nb)
   }
 
   /** Dequantized dot: f32 query · (int8 codes × per-row scale)
@@ -181,7 +204,8 @@ object VectorKernels {
     * kernel [[dot]] dispatches to.
     */
   def dotI8(q: Array[Float], codes: Array[Byte], scale: Float): Double = {
-    val n = math.min(q.length, codes.length)
+    requireDim("dot_i8", q.length, codes.length)
+    val n = q.length
     val x = new Array[Float](n)
     if (simdEnabled) Simd.i8ToFloat(codes, 0, n, x)
     else {
@@ -197,7 +221,8 @@ object VectorKernels {
     * bit-identity-by-construction as [[dotI8]].
     */
   def dotHalf(q: Array[Float], halfBits: Array[Short]): Double = {
-    val n = math.min(q.length, halfBits.length)
+    requireDim("dot_half", q.length, halfBits.length)
+    val n = q.length
     val x = new Array[Float](n)
     var i = 0
     while (i < n) { x(i) = halfToFloat(halfBits(i)); i += 1 }

@@ -22,27 +22,29 @@ object Dedup {
       .agg(count(lit(1)).as("n_dups"), min(col(idCol)).as("keep_id"),
         sort_array(collect_list(col(idCol))).as("doc_ids"))
 
-  /** MinHash signatures: (doc_id, sig: array<string>). */
-  def minhashSignatures(docs: DataFrame, shingleSize: Int = 5, numHashes: Int = 8,
-                        idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    docs.select(col(idCol),
-      TextFunctions.minhashSignature(col(textCol), shingleSize, numHashes).as("sig"))
-
-  /** Banded signatures → distinct candidate pairs (a < b), shared by the
-    * hex and sig64 LSH flavors. ONE scan, ONE shuffle: ids aggregate per
-    * (band, key) bucket and pairs expand from the bucket array. The naive
-    * self-join shape reads the corpus (and runs the signature kernel)
-    * TWICE — once per join side — because the HOF-lambda band keys defeat
-    * exchange reuse; at 100 TB the second signature pass is the whole
-    * cost. Within-bucket work is quadratic in either shape; LSH banding
-    * keeps buckets small by construction (a huge bucket means the band
-    * width is misconfigured for the corpus, and it stalls the self-join
-    * exactly the same way).
+  /** MinHash-LSH candidate pairs over the sig64 signature
+    * (`HashKernels.minhashSig64`, ONE md5 per shingle for the whole
+    * signature): band the signature, bucket on band keys, emit distinct
+    * candidate pairs (a < b). Only candidates sharing a band collide — the
+    * scale path for near-dup detection; at 100 TB the signature pass IS
+    * the dedup cost. The hex-signature kernel stays as the
+    * DuckDB-anchored oracle twin (d2/d7 gate both kernels).
+    *
+    * ONE scan, ONE shuffle: ids aggregate per (band, key) bucket and pairs
+    * expand from the bucket array. The naive self-join shape reads the
+    * corpus (and runs the signature kernel) TWICE — once per join side —
+    * because the HOF-lambda band keys defeat exchange reuse; at 100 TB the
+    * second signature pass is the whole cost. Within-bucket work is
+    * quadratic in either shape; LSH banding keeps buckets small by
+    * construction (a huge bucket means the band width is misconfigured for
+    * the corpus, and it stalls the self-join exactly the same way).
     */
-  private def bandedPairs(docs: DataFrame, idCol: String,
-                          bandKeysCol: org.apache.spark.sql.Column): DataFrame = {
+  def minhashLshPairs64(docs: DataFrame, shingleSize: Int = 5, bands: Int = 4,
+                        rowsPerBand: Int = 2, idCol: String = "doc_id",
+                        textCol: String = "text"): DataFrame = {
     val buckets = docs
-      .select(col(idCol), posexplode(bandKeysCol).as(Seq("band", "key")))
+      .select(col(idCol), posexplode(sig64BandKeys(shingleSize, bands,
+        rowsPerBand, textCol)).as(Seq("band", "key")))
       .groupBy(col("band"), col("key"))
       .agg(sort_array(collect_list(col(idCol))).as("ids"))
       .filter(size(col("ids")) > 1)
@@ -53,35 +55,6 @@ object Dedup {
       .select(col("p.a").as("a"), col("p.b").as("b"))
       .distinct()
   }
-
-  /** MinHash-LSH candidate pairs: band the signature, bucket-join on band
-    * keys, emit distinct candidate pairs (a < b). Only candidates sharing a
-    * band collide — the scale path for near-dup detection.
-    */
-  def minhashLshPairs(docs: DataFrame, shingleSize: Int = 5, bands: Int = 4,
-                      rowsPerBand: Int = 2, idCol: String = "doc_id",
-                      textCol: String = "text"): DataFrame = {
-    // ONE fused minhash pass computes all bands*rowsPerBand components;
-    // the signature is lambda-bound so banding can't re-inline the kernel
-    // per component (same fix as the sig64 flavor below)
-    val sig = TextFunctions.minhashSignatureSalted(col(textCol), shingleSize,
-      (0 until bands * rowsPerBand).map(_.toString))
-    val keys = element_at(
-      transform(array(sig), s => TextFunctions.bandKeys(s, bands, rowsPerBand)), 1)
-    bandedPairs(docs, idCol, keys)
-  }
-
-  /** Scale flavor of [[minhashLshPairs]] over the sig64 signature
-    * (`HashKernels.minhashSig64`): ONE md5 per shingle for the whole
-    * signature, where the hex flavor pays bands×rowsPerBand digests per
-    * shingle — at 100 TB the signature pass IS the dedup cost, so this is
-    * the production path; the hex flavor remains the DuckDB-anchored
-    * oracle twin (d2/d7 gate both kernels).
-    */
-  def minhashLshPairs64(docs: DataFrame, shingleSize: Int = 5, bands: Int = 4,
-                        rowsPerBand: Int = 2, idCol: String = "doc_id",
-                        textCol: String = "text"): DataFrame =
-    bandedPairs(docs, idCol, sig64BandKeys(shingleSize, bands, rowsPerBand, textCol))
 
   /** The banded sig64 key array shared by the pair join and the bucket
     * diagnostic. The signature is bound ONCE through a lambda variable: an
@@ -116,36 +89,19 @@ object Dedup {
       .groupBy(col("band"), col("key")).agg(count(lit(1)).as("n_ids"))
       .orderBy(col("n_ids").desc)
 
-  /** Verified near-dup pairs: LSH candidates re-checked with true n-gram
-    * Jaccard >= threshold (explicit candidate-then-verify, like refine).
-    */
-  def minhashNearDups(docs: DataFrame, threshold: Double, shingleSize: Int = 5,
-                      bands: Int = 4, rowsPerBand: Int = 2,
-                      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val pairs = minhashLshPairs(docs, shingleSize, bands, rowsPerBand, idCol, textCol)
-    val sets = docs.select(col(idCol),
-      VectorFunctions.ngramCodes(col(textCol), shingleSize).as("s"))
-    val da = sets.select(col(idCol).as("a"), col("s").as("sa"))
-    val db = sets.select(col(idCol).as("b"), col("s").as("sb"))
-    pairs.join(da, Seq("a")).join(db, Seq("b"))
-      .select(col("a"), col("b"),
-        VectorFunctions.jaccardCodes(col("sa"), col("sb")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
-
   /** SimHash near-dup pairs: band the 64-bit fingerprint into `bands`
     * equal bit slices, bucket-join on (band, slice), verify candidates
     * with true Hamming distance — two docs within Hamming r collide
     * whenever any slice is untouched (guaranteed for r < bands). The md5
     * flavor keeps the whole pass SQL-reproducible (d10's full oracle);
-    * same candidate-then-verify shape as [[minhashNearDups]].
+    * same candidate-then-verify shape as [[minhashLshPairs64]].
     *
     * Returns (a, b, hamming) with hamming <= maxHamming, a < b, distinct.
     */
   def simhashNearDups(docs: DataFrame, maxHamming: Int = 8, bands: Int = 4,
                       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val banded = simhashBanded(docs, bands, idCol, textCol)
-    // same one-scan bucket-expansion shape as bandedPairs, carrying the
+    // same one-scan bucket-expansion shape as minhashLshPairs64, carrying the
     // signature so Hamming verifies inside the bucket (struct ordering
     // sorts by id first, so a < b holds after sort_array)
     val buckets = banded.groupBy(col("band"), col("key"))
@@ -609,7 +565,7 @@ object Dedup {
     * hashes a vector to the sign pattern of `nPlanes` seeded Gaussian
     * hyperplane projections; only vectors sharing a (table, bucket) key are
     * pair-compared, then verified with true cosine — the same
-    * candidate-then-verify shape as [[minhashLshPairs]]. No cross join:
+    * candidate-then-verify shape as [[minhashLshPairs64]]. No cross join:
     * the only shuffle is on bucket keys, within-bucket work is O(bucket²)
     * with ~N/2^nPlanes expected bucket size.
     */

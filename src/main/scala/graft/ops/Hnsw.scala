@@ -108,18 +108,20 @@ object Hnsw {
 
     private var n = 0
     private var cap = 1024
-    // packed vector store (r13): ONE float array + per-node offsets, not
+    // packed vector store (r13): ONE float array, node x at x·dim, not
     // Array[Array[Float]] rows — a row dereference was a pointer chase to
     // a scattered heap object per distance eval, the dominant share of
     // the serve margin left after the float-accumulation study. All kernels read
-    // flat(offs(x) + i) through the same (array, offset) kernels a
+    // flat(x * dim + i) through the same (array, offset) kernels a
     // row-array caller runs at offset 0, so graphs and results are
     // identical to the row-array storage (SimdSpec gates the kernels,
     // HnswSpec the behavior).
     private var flat = new Array[Float](cap * 16)
     private var flatLen = 0
-    private var offs = new Array[Int](cap)
-    private var lens = new Array[Int](cap)
+    /** Every node's dim, set by the first insert (-1 while empty): a
+      * row or query of another dim fails ([[insert]], [[search]]).
+      */
+    private[Hnsw] var dim = -1
     private var ids = new Array[Long](cap)
     private var levels = new Array[Int](cap)
     /** node → layer → neighbor internal indices (ragged, layer 0 first) */
@@ -145,36 +147,29 @@ object Hnsw {
     private def dist(q: Array[Float], x: Int, fl: Flavor = Flavor.Contract,
                      qn2: Double = 0.0): Double = {
       evals += 1
-      val nn = math.min(q.length, lens(x))
-      val o = offs(x)
+      val o = x * dim
       if (fl eq Flavor.I8) d8Of(
-        if (i8codesBB != null) VectorKernels.dotI8FOffBB(q, i8codesBB, o, nn)
-        else VectorKernels.dotI8FOff(q, i8codes, o, nn), x, qn2)
+        if (i8codesBB != null) VectorKernels.dotI8FOffBB(q, i8codesBB, o, dim)
+        else VectorKernels.dotI8FOff(q, i8codes, o, dim), x, qn2)
       else if (flatBB != null) metric match {
         // mmap-backed payload (readStore(mapped = true)): the BB kernel
         // twins are bitwise-equal over the same bytes, so a mapped graph
         // returns IDENTICAL results to its on-heap original
-        case Metric.L2     => VectorKernels.l2SqOffBB(q, flatBB, o, nn)
-        case Metric.Dot    => -VectorKernels.dotOffBB(q, flatBB, o, nn)
-        case Metric.Cosine => -VectorKernels.cosineOffBB(q, flatBB, o, lens(x))
+        case Metric.L2     => VectorKernels.l2SqOffBB(q, flatBB, o, dim)
+        case Metric.Dot    => -VectorKernels.dotOffBB(q, flatBB, o, dim)
+        case Metric.Cosine => -VectorKernels.cosineOffBB(q, flatBB, o, dim)
       } else metric match {
-        case Metric.L2     => VectorKernels.l2SqOff(q, flat, o, nn)
-        case Metric.Dot    => -VectorKernels.dotOff(q, flat, o, nn)
-        // cosineOff truncates the dot to min(q.length, n) itself, so pass
-        // the FULL stored length: the row norm must run over the whole
-        // stored vector (array-sibling semantics), not the query's prefix.
-        case Metric.Cosine => -VectorKernels.cosineOff(q, flat, o, lens(x))
+        case Metric.L2     => VectorKernels.l2SqOff(q, flat, o, dim)
+        case Metric.Dot    => -VectorKernels.dotOff(q, flat, o, dim)
+        case Metric.Cosine => -VectorKernels.cosineOff(q, flat, o, dim)
       }
     }
 
-    /** Whether the 4-wide gather tile applies: uniform-dim rows (engine
-      * contract; tracked defensively across inserts), SIMD linked, and a
-      * tiled kernel for the metric (L2/Dot; cosine stays per-pair).
+    /** Whether the 4-wide gather tile applies: SIMD linked, and a tiled
+      * kernel for the metric (L2/Dot; cosine stays per-pair).
       */
-    private var dimU = -1
-    private var uniform = true
     private def tiledGraph: Boolean =
-      uniform && VectorKernels.simdEnabled && dimU >= 16 &&
+      VectorKernels.simdEnabled && dim >= 16 &&
         (metric == Metric.L2 || metric == Metric.Dot)
 
     /** Four [[dist]] values against gathered rows into `s.tout` — bitwise
@@ -190,8 +185,8 @@ object Hnsw {
                       qn2: Double = 0.0): Unit = {
       evals += 4
       val out = s.tout
-      val tn = math.min(q.length, dimU)
-      val o0 = offs(i0); val o1 = offs(i1); val o2 = offs(i2); val o3 = offs(i3)
+      val tn = dim
+      val o0 = i0 * tn; val o1 = i1 * tn; val o2 = i2 * tn; val o3 = i3 * tn
       val l2 = metric == Metric.L2
       if (fl eq Flavor.I8) {
         val t8 = s.t8out
@@ -236,8 +231,6 @@ object Hnsw {
 
     private def grow(): Unit = if (n == cap) {
       cap *= 2
-      offs = java.util.Arrays.copyOf(offs, cap)
-      lens = java.util.Arrays.copyOf(lens, cap)
       ids = java.util.Arrays.copyOf(ids, cap)
       levels = java.util.Arrays.copyOf(levels, cap)
       links = java.util.Arrays.copyOf(links, cap)
@@ -245,14 +238,10 @@ object Hnsw {
 
     /** Copy node `x`'s stored floats into the scratch's node buffer —
       * the Array-typed view the node-to-node distance calls need (the
-      * occlusion checks and re-select staging). Exact-length, reused
-      * across calls while the length is stable (one allocation per
-      * uniform graph).
+      * occlusion checks and re-select staging).
       */
     private def nodeVec(x: Int, s: Scratch): Array[Float] = {
-      val len = lens(x)
-      if (s.nv.length != len) s.nv = new Array[Float](len)
-      System.arraycopy(flat, offs(x), s.nv, 0, len)
+      System.arraycopy(flat, x * dim, s.nv, 0, dim)
       s.nv
     }
 
@@ -352,6 +341,14 @@ object Hnsw {
     private def rowFloat(i: Int): Float =
       if (flatBB != null) flatBB.getFloat(i * 4) else flat(i)
 
+    /** A copy of node `x`'s vector (heap or mapped payload). */
+    private def row(x: Int): Array[Float] = {
+      val v = new Array[Float](dim)
+      var j = 0
+      while (j < dim) { v(j) = rowFloat(x * dim + j); j += 1 }
+      v
+    }
+
     // Tombstones (r16 incremental maintenance): deleted nodes stay IN
     // the graph — hnswlib's markDelete semantics — because removing a
     // node's edges would sever the paths that route THROUGH it (graph
@@ -430,11 +427,7 @@ object Hnsw {
       var w = 0
       while (i < n) {
         if (!isDel(i)) {
-          val len = lens(i)
-          val v = new Array[Float](len)
-          var j = 0
-          while (j < len) { v(j) = rowFloat(offs(i) + j); j += 1 }
-          out(w) = (ids(i), v)
+          out(w) = (ids(i), row(i))
           w += 1
         }
         i += 1
@@ -493,7 +486,7 @@ object Hnsw {
         if (i8EfCrossover >= 0) efSearch >= i8EfCrossover
         else flatBB != null ||
           math.min(flatLen.toLong * 4,
-            efSearch.toLong * m * dimU * 4) > Hnsw.autoI8Bytes
+            efSearch.toLong * m * dim * 4) > Hnsw.autoI8Bytes
       }
 
     /** Measured serve-flavor crossover (r16, VERDICT r15 #4): the
@@ -541,11 +534,7 @@ object Hnsw {
       val qs = new Array[Array[Float]](nq)
       var i = 0
       while (i < nq) {
-        val x = (i.toLong * n / nq).toInt // evenly-spaced stored rows
-        val v = new Array[Float](lens(x))
-        var j = 0
-        while (j < v.length) { v(j) = rowFloat(offs(x) + j); j += 1 }
-        qs(i) = v
+        qs(i) = row((i.toLong * n / nq).toInt) // evenly-spaced stored rows
         i += 1
       }
       def timeWalk(fl: Flavor, ef: Int): Long = {
@@ -587,19 +576,18 @@ object Hnsw {
       val codes = new Array[Byte](flatLen)
       val scales = new Array[Float](n)
       val cn2 = new Array[Float](n)
-      val row = new Array[Float](if (uniform && dimU > 0) dimU else 0)
+      val r = new Array[Float](math.max(dim, 0))
       var x = 0
       while (x < n) {
-        val o = offs(x); val len = lens(x)
-        val r = if (row.length == len) row else new Array[Float](len)
+        val o = x * dim
         var i = 0
-        while (i < len) { r(i) = rowFloat(o + i); i += 1 }
+        while (i < dim) { r(i) = rowFloat(o + i); i += 1 }
         val s = VectorKernels.i8Scale(r)
         val c = VectorKernels.i8Codes(r, s)
-        System.arraycopy(c, 0, codes, o, len)
-        var c2 = 0f // codes ≤ 127, len ≤ ~1e5: exact in float (< 2^24)
+        System.arraycopy(c, 0, codes, o, dim)
+        var c2 = 0f // codes ≤ 127, dim ≤ ~1e5: exact in float (< 2^24)
         i = 0
-        while (i < len) { val v = c(i).toFloat; c2 += v * v; i += 1 }
+        while (i < dim) { val v = c(i).toFloat; c2 += v * v; i += 1 }
         scales(x) = s
         cn2(x) = c2
         x += 1
@@ -608,7 +596,7 @@ object Hnsw {
     }
 
     /** Serialize this graph to `file`: a header (construction params +
-      * structure: ids/offs/lens/levels/links) followed by the packed
+      * structure: ids/offsets/lengths/levels/links) followed by the packed
       * float payload as raw little-endian bytes at an offset recorded in
       * the prefix — so [[Hnsw.readStore]] can either stream the
       * payload onto the heap or mmap it in place. If the i8 serve
@@ -637,11 +625,14 @@ object Hnsw {
       out.writeInt(m); out.writeInt(efC); out.writeLong(seed)
       out.writeUTF(metric.toString)
       out.writeInt(n); out.writeInt(entry)
-      out.writeInt(dimU); out.writeBoolean(uniform)
+      // the v4 layout still records a uniform flag and a per-node
+      // (offset, length): always true and (i·dim, dim), so stores stay
+      // byte-identical to those of the ragged-capable layout
+      out.writeInt(dim); out.writeBoolean(true)
       var i = 0
       while (i < n) {
-        out.writeLong(ids(i)); out.writeInt(offs(i))
-        out.writeInt(lens(i)); out.writeInt(levels(i))
+        out.writeLong(ids(i)); out.writeInt(i * dim)
+        out.writeInt(dim); out.writeInt(levels(i))
         i += 1
       }
       i = 0
@@ -689,7 +680,7 @@ object Hnsw {
         // magic, loudly unreadable rather than plausibly truncated
         ch.position(20L)
         val hdrBuf = java.nio.ByteBuffer.wrap(hdr)
-        // the header is NOT small — at 500K nodes the ids/offs/lens/levels
+        // the header is NOT small — at 500K nodes the ids/offsets/levels
         // block plus every link list is tens of MB, exactly the size
         // regime where FileChannel.write may return short; a short header
         // write shifts every later byte just like a short payload write
@@ -736,20 +727,26 @@ object Hnsw {
       * construct this instance), then attach the payload: streamed onto
       * the heap, or mapped read-only in place.
       */
-    private[Hnsw] def loadFrom(in: java.io.DataInputStream,
+    private[Hnsw] def loadFrom(file: String, in: java.io.DataInputStream,
                                ch: java.nio.channels.FileChannel,
                                payloadOff: Long, mapped: Boolean,
                                version: Int): Unit = {
       n = in.readInt(); entry = in.readInt()
-      dimU = in.readInt(); uniform = in.readBoolean()
+      dim = in.readInt()
+      require(in.readBoolean(),
+        s"$file: graph store holds rows of several dims — one dim per graph")
       cap = math.max(n, 1)
-      ids = new Array[Long](cap); offs = new Array[Int](cap)
-      lens = new Array[Int](cap); levels = new Array[Int](cap)
+      ids = new Array[Long](cap)
+      levels = new Array[Int](cap)
       links = new Array[Array[Array[Int]]](cap)
       var i = 0
       while (i < n) {
-        ids(i) = in.readLong(); offs(i) = in.readInt()
-        lens(i) = in.readInt(); levels(i) = in.readInt()
+        ids(i) = in.readLong()
+        val off = in.readInt(); val len = in.readInt()
+        require(off.toLong == i.toLong * dim && len == dim,
+          s"$file: graph store node $i at offset $off with $len floats, " +
+            s"not at ${i.toLong * dim} with the graph's dim $dim")
+        levels(i) = in.readInt()
         i += 1
       }
       i = 0
@@ -769,6 +766,8 @@ object Hnsw {
         i += 1
       }
       flatLen = in.readInt()
+      require(flatLen.toLong == n.toLong * math.max(dim, 0),
+        s"$file: graph store payload of $flatLen floats is not $n nodes × dim $dim")
       val hasI8 = version >= 2 && in.readBoolean()
       if (version >= 4) {
         val nd = in.readInt()
@@ -1002,8 +1001,9 @@ object Hnsw {
       }
       // re-select precomputed distances (tiled fill, then insertion-sort)
       var td = new Array[Double](8)
-      // node-to-node distance view buffer (see nodeVec)
-      var nv = new Array[Float](0)
+      // node-to-node distance view buffer (see nodeVec); sized on first
+      // use, after the first insert fixed the graph's dim
+      lazy val nv = new Array[Float](dim)
       // serve expansion: gathered-unvisited buffer + touch blackhole
       var gat = new Array[Int](64)
       var sink = 0.0
@@ -1035,7 +1035,7 @@ object Hnsw {
       s.reset(n)
       // the i8 tile scores every metric, cosine included
       val useTile =
-        if (fl eq Flavor.I8) uniform && VectorKernels.simdEnabled && dimU >= 16
+        if (fl eq Flavor.I8) VectorKernels.simdEnabled && dim >= 16
         else tiledGraph
       val csr = layer == 0 && l0adj != null
       val adj = l0adj; val off = l0off
@@ -1053,12 +1053,12 @@ object Hnsw {
         var u = from
         val un = math.min(from + 4, gn)
         while (u < un) {
-          val o = offs(s.gat(u))
+          val o = s.gat(u) * dim
           var l = 0
           if (flatBB == null)
-            while (l < tl && l * 16 < dimU) { t += flat(o + l * 16); l += 1 }
+            while (l < tl && l * 16 < dim) { t += flat(o + l * 16); l += 1 }
           else
-            while (l < tl && l * 16 < dimU) {
+            while (l < tl && l * 16 < dim) {
               t += flatBB.getFloat((o + l * 16) * 4); l += 1
             }
           u += 1
@@ -1125,9 +1125,9 @@ object Hnsw {
             val ae = math.min(ao + 4, off(nx + 1))
             var z = ao
             if (flatBB == null)
-              while (z < ae) { bh += flat(offs(adj(z))); z += 1 }
+              while (z < ae) { bh += flat(adj(z) * dim); z += 1 }
             else
-              while (z < ae) { bh += flatBB.getFloat(offs(adj(z)) * 4); z += 1 }
+              while (z < ae) { bh += flatBB.getFloat(adj(z) * dim * 4); z += 1 }
           }
         }
       }
@@ -1188,6 +1188,8 @@ object Hnsw {
     def insert(id: Long, vec: Array[Float]): Unit = {
       require(flatBB == null, "mapped graphs are read-only — readStore " +
         "with mapped=false to get an insertable on-heap copy")
+      if (dim < 0) dim = vec.length
+      else VectorKernels.requireDim("hnsw insert", vec.length, dim)
       grow()
       l0off = null; l0adj = null // a post-freeze insert invalidates the CSR
       val idx = n
@@ -1199,11 +1201,8 @@ object Hnsw {
         flat = java.util.Arrays.copyOf(flat,
           math.max(flat.length * 2, flatLen + vec.length))
       System.arraycopy(vec, 0, flat, flatLen, vec.length)
-      offs(idx) = flatLen; lens(idx) = vec.length
       flatLen += vec.length
       ids(idx) = id; levels(idx) = lvl
-      if (dimU < 0) dimU = vec.length
-      else if (vec.length != dimU) uniform = false
       links(idx) = Array.fill(lvl + 1)(Array.emptyIntArray)
       n += 1
       // maintenance bookkeeping (no-ops on the build path): keep the
@@ -1222,7 +1221,7 @@ object Hnsw {
         }
         val sI8 = VectorKernels.i8Scale(vec)
         val cI8 = VectorKernels.i8Codes(vec, sI8)
-        System.arraycopy(cI8, 0, i8codes, offs(idx), vec.length)
+        System.arraycopy(cI8, 0, i8codes, idx * dim, dim)
         var c2 = 0f
         var ci = 0
         while (ci < cI8.length) {
@@ -1328,6 +1327,7 @@ object Hnsw {
         "the i8 flavor needs the i8 sidecar — call quantizeStore() first" +
           " (or load a v2+ store that carries it)")
       if (n == 0) return Array.empty
+      VectorKernels.requireDim("hnsw search", q.length, dim)
       var qn2 = 0.0
       if (i8) { var i = 0; while (i < q.length) { qn2 += q(i).toDouble * q(i); i += 1 } }
       // the upper-layer descent is deterministic in (q, graph) — hoisted
@@ -1460,7 +1460,7 @@ object Hnsw {
           s"$file: unknown metric '$other'")
       }
       val g = new ShardGraph(m, efC, seed, metric)
-      g.loadFrom(in, ch,
+      g.loadFrom(file, in, ch,
         (if (version >= 3) 20L else 12L) + hdrLen, mapped, version)
       g
     } finally ch.close()
@@ -1699,8 +1699,8 @@ object Hnsw {
   }
 
   /** Every warmed graph under `cacheKey` whose key routes to `shard`
-    * (key layout `cacheKey|shard|dim|...` — one graph per (shard, dim)
-    * in practice; uniform-dim corpora have exactly one).
+    * (key layout `cacheKey|shard|dim|...` — one graph per shard, as a
+    * group holds one dim).
     */
   private def shardGraphsByPrefix(cacheKey: String,
                                   shard: Int): Seq[ShardGraph] =
@@ -1710,6 +1710,16 @@ object Hnsw {
       group.forEach((k, g) => if (k.startsWith(p)) b += g)
       b.result()
     }.getOrElse(Vector.empty)
+
+  /** A graph key carries its dim, so a wrong-dim query or batch misses
+    * every key; on such a miss this names the dim mismatch against the
+    * group's graphs instead of reporting a missing shard.
+    */
+  private def requireGroupDim(
+      group: java.util.concurrent.ConcurrentHashMap[String, ShardGraph],
+      qdim: Int, op: String): Unit =
+    group.values().stream().filter(_.dim >= 0).findFirst()
+      .ifPresent(g => VectorKernels.requireDim(op, qdim, g.dim))
 
   /** Incremental UPSERT into a warmed shard group — the index-maintenance
     * half the reference's build-then-serve lifecycle lacks (its corpus is
@@ -1768,9 +1778,16 @@ object Hnsw {
     // see it. Tombstone the batch's ids across every shard first (the
     // deleteWarmed shape: broadcast ids, hash-map miss per non-owner
     // shard), then insert; per-shard n_replaced attributes each
-    // pre-tombstoned id to the shard its NEW vector lands in.
-    val upIds = rows.select(col(idCol).cast("long"))
-      .distinct().collect().map(_.getLong(0))
+    // pre-tombstoned id to the shard its NEW vector lands in. The batch's
+    // dims ride the same collect and are checked BEFORE the pre-pass:
+    // tombstoning first would delete a wrong-dim batch's ids and then
+    // refuse its inserts.
+    val up = rows.select(col(idCol).cast("long"), size(col(vecCol)))
+      .distinct().collect()
+    shardGroupIfPresent(cacheKey).foreach(group =>
+      up.collect { case r if !r.isNullAt(1) && r.getInt(1) >= 0 => r.getInt(1) }
+        .distinct.foreach(requireGroupDim(group, _, "hnsw upsert")))
+    val upIds = up.map(_.getLong(0)).distinct
     val replacedIds = deleteWarmedIds(spark, cacheKey, upIds, nShards).toSet
     val replacedBc = spark.sparkContext.broadcast(replacedIds)
     val shardExpr =
@@ -1795,6 +1812,7 @@ object Hnsw {
               s"no warmed hnsw graphs under '$cacheKey' — build or " +
                 "warmFromDisk the group before upserting into it"))
           val existing = group.get(key)
+          if (existing == null) requireGroupDim(group, batch(0)._2.length, "hnsw upsert")
           val preReplaced = batch.count(t => replacedBc.value.contains(t._1))
           if (existing == null) {
             require(createMissing,
@@ -2095,7 +2113,9 @@ object Hnsw {
         var searched = 0L
         it.foreach { shard =>
           val key = s"$cacheKey|$shard|$dim|$m|$efConstruction|$seed|$metric"
-          val g = shardGroupIfPresent(cacheKey).map(_.get(key)).orNull
+          val group = shardGroupIfPresent(cacheKey)
+          val g = group.map(_.get(key)).orNull
+          if (g == null) group.foreach(requireGroupDim(_, dim, "hnsw search"))
           // allowMissing: an EMPTY router cell legitimately has no graph
           // anywhere (the build only materializes shards with base
           // rows); the store/route compositions opt in so a probed
@@ -2172,6 +2192,7 @@ object Hnsw {
     probed.foreach { shard =>
       val key = s"$cacheKey|$shard|$dim|$m|$efConstruction|$seed|$metric"
       val g = group.get(key)
+      if (g == null) requireGroupDim(group, dim, "hnsw search")
       // allowMissing mirrors searchWarm's empty-router-cell semantics:
       // a probed but legitimately empty cell (the build only
       // materializes shards with base rows) contributes nothing; the

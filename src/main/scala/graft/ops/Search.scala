@@ -105,10 +105,16 @@ object Search {
     }
   }
 
+  /** The query batch as (qids, query matrix). The matrix has one dim —
+    * the batched kernels tile four queries over the first query's length
+    * (`BatchScore`), so a ragged batch fails here.
+    */
   private def collectQueries(queries: DataFrame, qidCol: String,
                              qvecCol: String): (Array[Long], Array[Array[Float]]) = {
+    import graft.functions.expressions.VectorKernels
     val q = queries.select(col(qidCol), col(qvecCol)).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    q.foreach(r => VectorKernels.requireDim("query batch", r._2.length, q(0)._2.length))
     (q.map(_._1), q.map(_._2))
   }
 

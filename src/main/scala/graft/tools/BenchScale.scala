@@ -151,7 +151,7 @@ object BenchScale {
       // collapse — measured: the 8 nearest of 1024 lists held ~80% of
       // 1M vectors). The low-rank manifold gives both axes honestly:
       // near-balanced lists AND a recall curve that climbs with nprobe.
-      val annKey = s"annscale_${annN}_lr8"
+      val annKey = s"annscale_${annN}_${annDim}_lr8"
       val vecPath = s"target/scale_vectors_${annN}_${annDim}_lr8"
       if (!new java.io.File(s"$vecPath/_SUCCESS").isFile)
         SyntheticVectors.lowRank(spark, annN, annDim, intrinsic = 8)
@@ -1176,7 +1176,7 @@ object BenchScale {
       System.gc(); Thread.sleep(700); System.gc()
       if (only.forall(_.exists(_.startsWith("ann3m")))) {
         val n3 = 3000000L
-        val key3 = s"annscale_${n3}_lr8"
+        val key3 = s"annscale_${n3}_${annDim}_lr8"
         val path3 = s"target/scale_vectors_${n3}_${annDim}_lr8"
         if (!new java.io.File(s"$path3/_SUCCESS").isFile)
           SyntheticVectors.lowRankFast(spark, n3, annDim, intrinsic = 8)

@@ -405,8 +405,12 @@ class Pq4Spec extends AnyFunSuite {
   test("local tier rejects a segment packed at another m4 than the books") {
     // books of m4/2 over a table packed at m4: every blob is twice what
     // the books score, and serving its prefix would be a silent partial
-    // answer — the shared segment scan must fail loudly instead
-    val half = Pq.Index(ivf4.coarse, ivf4.books.take(m4 / 2), ivf4.path)
+    // answer — the shared segment scan must fail loudly instead. Adjacent
+    // book pairs merge, so the books keep the index's dim and the query
+    // passes the LUT's dim check to reach the segment scan.
+    val merged = Array.tabulate(m4 / 2)(s =>
+      Array.tabulate(16)(c => ivf4.books(2 * s)(c) ++ ivf4.books(2 * s + 1)(c)))
+    val half = Pq.Index(ivf4.coarse, merged, ivf4.path)
     val lk = "pq4spec_misshaped"
     val qvec = base.filter(col("id") === 0L).select(col("vec")).head()
       .getSeq[Float](0).toArray

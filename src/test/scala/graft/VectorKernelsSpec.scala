@@ -20,10 +20,16 @@ class VectorKernelsSpec extends AnyFunSuite {
     (1 to 200).foreach(_ => f(randVec(), randVec()))
 
   test("dot matches naive oracle") {
-    forAll2 { (a, b) =>
-      val n = math.min(a.length, b.length)
+    forAll2 { (a0, b0) =>
+      val n = math.min(a0.length, b0.length)
+      val a = a0.take(n); val b = b0.take(n)
       val expect = (0 until n).map(i => a(i).toDouble * b(i).toDouble).sum
       assert(math.abs(VectorKernels.dot(a, b) - expect) <= 1e-9 * math.max(1.0, math.abs(expect)))
+      // vectors of two dims throw, naming both, instead of scoring a prefix
+      if (a0.length != b0.length) {
+        val e = intercept[IllegalArgumentException](VectorKernels.dot(a0, b0))
+        assert(e.getMessage.contains(s"query ${b0.length}, index ${a0.length}"), e.getMessage)
+      }
     }
   }
 
