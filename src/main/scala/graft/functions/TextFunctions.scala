@@ -25,9 +25,6 @@ object TextFunctions {
       sequence(lit(1), greatest(length(text) - (n - 1), lit(1))),
       i => text.substr(i, lit(n)))
 
-  /** Distinct character n-grams (the set used for Jaccard similarity). */
-  def charNgrams(text: Column, n: Int): Column = array_distinct(shingles(text, n))
-
   /** One MinHash component: min over shingles of md5(salt ‖ shingle).
     * A hex md5 min is a uniform permutation sample, so
     * P(minhash_a == minhash_b) ≈ Jaccard(shingles_a, shingles_b).
@@ -50,13 +47,6 @@ object TextFunctions {
   def minhashSignature(text: Column, shingleSize: Int, numHashes: Int): Column =
     minhashSignatureSalted(text, shingleSize, (0 until numHashes).map(_.toString))
 
-  /** LSH band key computed directly from text (single fused pass). */
-  def minhashBand(text: Column, shingleSize: Int, bandStart: Int, rows: Int): Column = {
-    val sig = minhashSignatureSalted(text, shingleSize,
-      (bandStart until bandStart + rows).map(_.toString))
-    concat_ws("|", (0 until rows).map(r => element_at(sig, r + 1)): _*)
-  }
-
   /** Distinct 64-bit-keyed token `k`-grams (space-joined windows; docs
     * shorter than `k` contribute their single truncated window — the
     * fingerprint semantics the d11/d12 oracles pin). Fused kernel: one
@@ -71,14 +61,6 @@ object TextFunctions {
     org.apache.spark.sql.graftbridge.Bridge.column(
       graft.functions.expressions.TokenGrams64(
         org.apache.spark.sql.graftbridge.Bridge.expression(text), k))
-
-  /** Jaccard similarity of distinct character n-gram sets. */
-  def ngramJaccard(a: Column, b: Column, n: Int): Column = {
-    val ga = charNgrams(a, n)
-    val gb = charNgrams(b, n)
-    val inter = size(array_intersect(ga, gb)).cast("double")
-    inter / (size(ga) + size(gb) - inter)
-  }
 
   /** Ratio of characters outside [a-zA-Z0-9 ] (punctuation-ish). */
   def punctRatio(text: Column): Column =

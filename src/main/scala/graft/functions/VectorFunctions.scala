@@ -28,8 +28,6 @@ object VectorFunctions {
   def halfEncode(v: Column): Column = col1(HalfEncode(ex(v)))
   def halfDecode(v: Column): Column = col1(HalfDecode(ex(v)))
   def quantizeI8(v: Column): Column = col1(QuantizeI8(ex(v)))
-  /** Single-pass Jaccard over sorted distinct string arrays. */
-  def sortedJaccard(a: Column, b: Column): Column = col1(SortedJaccard(ex(a), ex(b)))
   /** Sorted distinct packed char-n-gram codes (longs). */
   def ngramCodes(text: Column, n: Int): Column = col1(NgramCodes(ex(text), n))
   /** Jaccard over two sorted long-code n-gram sets. */

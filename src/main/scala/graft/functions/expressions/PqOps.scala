@@ -100,33 +100,9 @@ object PqOps {
     acc
   }
 
-  /** All-query ADC scores for one codes row: `luts(q)` is that query's
-    * flattened m×ksub table; per (row, query) the lookup-sum is identical
-    * to [[adc]] (PqSpec gates rank equality), so this is only the batched
-    * plan shape — the code table streams ONCE for the whole query batch
-    * instead of materializing Q×N joined rows.
-    */
-  def adcAll(codes: ArrayData, luts: Array[Array[Float]]): ArrayData = {
-    val cs = codes.toByteArray()
-    val m = cs.length
-    val out = new Array[Double](luts.length)
-    var q = 0
-    while (q < luts.length) {
-      val l = luts(q)
-      val ksub = l.length / m
-      var acc = 0.0
-      var s = 0
-      while (s < m) { acc += l(s * ksub + (cs(s) & 0xff)); s += 1 }
-      out(q) = acc
-      q += 1
-    }
-    new GenericArrayData(out)
-  }
-
   /** One query's ADC lookup-sum over one `m`-byte slice of a block-packed
-    * codes blob — the single-query inner kernel of [[adcAllSlice]], split
-    * out so `Pq.searchBatchedBlocked`'s query-tiled loop can call it per
-    * (row, query) without the all-query output array. Identical lookups
+    * codes blob (`QuantizedTables.writeBytesBlocked`) — the inner kernel
+    * of `Pq.searchBatchedBlocked`'s query-tiled loop. Identical lookups
     * in identical order ⇒ bitwise [[adc]]'s sum.
     */
   def adcSlice(b: Array[Byte], off: Int, m: Int, l: Array[Float]): Double = {
@@ -160,26 +136,6 @@ object PqOps {
       base += ksub
     }
     out(0) = a0; out(1) = a1; out(2) = a2; out(3) = a3
-  }
-
-  /** [[adcAll]] over one `m`-byte slice of a block-packed codes blob
-    * (`QuantizedTables.writeBytesBlocked`): identical lookups in the
-    * identical order, so scores are bitwise [[adcAll]]'s — the blob is
-    * only an amortization of per-row plan overhead, exactly the blocked
-    * vector scans' argument. `out` is caller-owned for reuse across rows.
-    */
-  def adcAllSlice(b: Array[Byte], off: Int, m: Int,
-                  luts: Array[Array[Float]], out: Array[Double]): Unit = {
-    var q = 0
-    while (q < luts.length) {
-      val l = luts(q)
-      val ksub = l.length / m
-      var acc = 0.0
-      var s = 0
-      while (s < m) { acc += l(s * ksub + (b(off + s) & 0xff)); s += 1 }
-      out(q) = acc
-      q += 1
-    }
   }
 
   // ---- 4-bit fastscan (PQ4): quantized-LUT register-shuffle ADC ----
@@ -383,19 +339,3 @@ case class CentroidResidual(left: Expression, right: Expression,
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
-/** `batch_adc_scores(codes)` → array<double>, one ADC score per broadcast
-  * query LUT (the J2 batched-scan shape over the PQ code table).
-  */
-case class BatchAdcScores(child: Expression, luts: Array[Array[Float]])
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(ByteType))
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullSafeEval(codes: Any): Any =
-    PqOps.adcAll(codes.asInstanceOf[ArrayData], luts)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("luts", luts, "float[][]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.expressions.PqOps.adcAll($c, $ref)")
-  }
-  override def prettyName: String = "batch_adc_scores"
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}

@@ -375,9 +375,6 @@ object Hnsw {
 
     private def isDel(i: Int): Boolean = del != null && del.get(i)
 
-    /** Spec/diagnostic view of one node's tombstone bit. */
-    private[graft] def deletedNode(i: Int): Boolean = isDel(i)
-
     private def lookup(): java.util.HashMap[java.lang.Long, Integer] = {
       if (idIdx == null) {
         val m0 = new java.util.HashMap[java.lang.Long, Integer](n * 2)

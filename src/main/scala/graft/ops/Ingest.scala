@@ -47,26 +47,6 @@ object Ingest {
   def fakeEmbed(text: Column, dim: Int): Column =
     Bridge.column(FakeEmbed(Bridge.expression(text), dim))
 
-  /** Engine-agnostic sentence split (SQL-expressible twin of the kernel's
-    * boundary rule): used by the fixed-size chunker so the DuckDB oracle
-    * can replicate it.
-    */
-  def sentences(text: Column): Column =
-    split(regexp_replace(text, "([.!?])\\s+", "$1\u0001"), "\u0001")
-
-  /** Fixed-size sentence chunking: every `perChunk` consecutive sentences
-    * form one chunk. Output: (doc_id, chunk_index, chunk).
-    */
-  def chunkBySentences(docs: DataFrame, perChunk: Int = 3,
-                       idCol: String = "doc_id",
-                       textCol: String = "text"): DataFrame = {
-    val sents = sentences(col(textCol))
-    val nch = ceil(size(sents) / lit(perChunk.toDouble)).cast("int")
-    val chunks = transform(sequence(lit(0), nch - 1),
-      j => array_join(slice(sents, j * perChunk + 1, lit(perChunk)), " "))
-    docs.select(col(idCol), posexplode(chunks).as(Seq("chunk_index", "chunk")))
-  }
-
   /** Fixed token-window chunking: every `perChunk` consecutive whitespace
     * tokens form one chunk (the word-budget fallback of the reference
     * chunker for punctuation-free text). Output: (doc_id, chunk_index,

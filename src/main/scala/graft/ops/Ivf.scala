@@ -49,11 +49,13 @@ object Ivf {
     * (FAISS default 256/centroid; beyond it extra sample rows buy no
     * centroid quality, only iteration cost), and an adaptive init (seeded
     * uniform draw at nlist ≥ 256, driver k-means++ spread below — see
-    * [[Kmeans.fit]]). The Lloyd loop itself is [[Kmeans]] — one fused
-    * SIMD assign+accumulate pass per iteration with a deterministic
-    * partition-ordered reduce — replacing the r7 MLlib trainer whose
-    * boxing/plumbing overhead measured 327–443 s at 200k×384d×nlist=1024
-    * (reference trains nlist=4096 in 13.9 s, `Performance.md:578-579`).
+    * [[Kmeans.fit]]). The Lloyd loop itself is [[Kmeans]]: Spark lays the
+    * sample out and collects it once, and every iteration runs on the
+    * driver — a parallel screened assign pass with Hamerly skips, then a
+    * deterministic partition-ordered fold — replacing the r7 MLlib trainer
+    * whose boxing/plumbing overhead measured 327–443 s at
+    * 200k×384d×nlist=1024 (reference trains nlist=4096 in 13.9 s,
+    * `Performance.md:578-579`).
     */
   def train(base: DataFrame, nlist: Int, ntrain: Int = 200000, seed: Long = 42L,
             vecCol: String = "vec", idCol: String = "id",
@@ -70,13 +72,13 @@ object Ivf {
         s"dense positional '$idCol' (SURVEY §1.1) — mint ids with " +
         "Ingest.withPositionalIds before indexing derived tables")
     // coarse-quantizer restarts select by the retrieval-recall proxy, not
-    // quantization error (see Kmeans.localFit's selection rationale).
-    // SCOPE: restarts exist only on Kmeans.fit's driver-local path
+    // quantization error (see Kmeans.fitLocal's selection rationale).
+    // SCOPE: restarts exist only on Kmeans.fit's small-sample path
     // (k < 256 && sample ≤ 16384 — every sf-fixture index), where the r8
     // MSE-vs-recall measurement was made. At production nlist (e.g. 4096)
-    // the distributed Lloyd path runs a SINGLE seeded-init run, FAISS's
-    // own nredo=1 default at scale, and the flag is ignored — the fixture
-    // rationale is not assumed to transfer.
+    // Kmeans.fit runs a SINGLE seeded-init Lloyd run, FAISS's own nredo=1
+    // default at scale, and the flag is ignored — the fixture rationale is
+    // not assumed to transfer.
     Kmeans.fit(feat, nlist, seed, maxIter, vecCol = vecCol,
       selectByRecall = true, stableFrac = stableFrac)
   }
@@ -322,8 +324,9 @@ object Ivf {
     * whichever builder asks first, and reused from its sidecar after that
     * — in this JVM and across JVMs. The sidecar is [[buildOrGet]]'s own
     * centroid file, so an IVF index and a pq4 index built from the same
-    * key share one quantizer and pay one train (15 Spark jobs at nlist 256
-    * over a 16K-row sample). The trainer is deterministic, so the shared
+    * key share one quantizer and pay one train (a count and one sample
+    * collect at nlist 256 over a 16K-row sample; the Lloyd iterations run
+    * on the driver). The trainer is deterministic, so the shared
     * quantizer is bitwise the one a fresh [[train]] returns.
     * `searchFastScanIvfRefinedClustered` still checks equality at runtime.
     */

@@ -1,60 +1,40 @@
 package graft.ops
 
+import java.util.concurrent.{ExecutionException, ExecutorService, Executors}
+
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.functions.expressions.VectorKernels
+import graft.functions.expressions.{CentroidOps, VectorKernels}
 
-/** Deterministic distributed Lloyd's k-means over float vectors — the
-  * coarse-quantizer trainer behind [[Ivf.train]].
+/** Deterministic Lloyd's k-means over float vectors — the coarse-quantizer
+  * trainer behind [[Ivf.train]] and the sub-codebook trainer behind
+  * [[Pq.train]].
   *
   * Why not MLlib: the r7/r8 builds measured MLlib KMeans at 327–443 s for
   * the BENCH_SCALE operating point (200k × 384d × nlist=1024) against the
   * reference's 13.9 s FAISS train at nlist=4096 (`Performance.md:578-579`).
   * The gap is not the math — one Lloyd iteration here is 200k×1024 SIMD
   * L2 evals ≈ 157 GFLOP — it is MLlib's per-row Vector boxing and
-  * generic-aggregation plumbing. This trainer is the Spark shape the task
-  * actually wants: the bounded sample is cached once, every iteration is
-  * ONE `mapPartitions` pass that fuses assignment with the per-cluster
-  * sum/count accumulation, and the per-partition partials are combined on
-  * the driver in PARTITION ORDER so the float reduction is deterministic
+  * generic-aggregation plumbing.
+  *
+  * Shape: FAISS's own (`Clustering.cpp`). The bounded training sample —
+  * [[Ivf.train]] caps it at nlist × maxPointsPerCentroid, 307 MB at the
+  * largest caller (200k × 384d) — is laid out by Spark once and collected
+  * to the driver in ONE job, and every Lloyd iteration runs there
+  * ([[lloyd]]): per-partition assignment on a shared pool of driver
+  * threads, then the per-partition sums folded in PARTITION ORDER through
+  * a fixed association tree, so the float reduction is deterministic
   * run-to-run — the property every seeded oracle build (a1/a6/a7/a9)
-  * contracts on. Assignment itself is the GEMM-shaped batched screen
+  * contracts on. Assignment is the GEMM-shaped batched screen
   * (`CentroidOps.assignBatch` — float-dot screening over L2-blocked
   * point×centroid tiles, exact double-kernel shortlist re-eval,
-  * bit-identical to the exhaustive scan by its error-bound contract;
-  * r10: 129 s at the reference's nlist=4096 vs 465 s for the per-pair
-  * bounded scan it replaced). FAISS's own clustering policy is kept:
-  * bounded iterations, seeded sample init, empty clusters re-seeded by
-  * splitting the largest (`faiss/Clustering.cpp` semantics, re-expressed).
-  *
-  * Scale shape: cost is sample-bound (corpus-independent — [[Ivf.train]]
-  * caps the sample at nlist × maxPointsPerCentroid like FAISS), and the
-  * sample is coalesced to ≤ `maxParts` partitions.
-  *
-  * Combine: the r10 floor was the PARTIAL traffic — every iteration each
-  * of numParts map tasks emitted a dense k × dim double partial
-  * (64 × 12.6 MB ≈ 800 MB/iter at nlist=4096/384d), and the deterministic
-  * two-level fold moved all of it through the shuffle. r11 replaces the
-  * data movement, not the arithmetic: the bounded sample is MIRRORED on
-  * the driver once (it is ≤ nlist × maxPointsPerCentroid rows by the
-  * FAISS cap — the same array FAISS's trainer holds in RAM), map tasks
-  * ship only the per-partition ASSIGNMENT vectors (4 B/point ≈ 800 KB/iter
-  * at 200k), and the driver rebuilds the per-partition partials from its
-  * mirror and folds them through the IDENTICAL association tree the
-  * distributed combine used (per-partition row-order accumulation, fixed
-  * consecutive-pid groups of `combineGroupSize`, group results folded in
-  * ascending order) — so the centroids are BITWISE IDENTICAL to the
-  * distributed combine's, gated by KmeansSpec. Assignment — the actual
-  * compute, ~630 GFLOP/iter at the 4096 point — stays distributed.
-  * Samples past `mirrorMaxBytes` (2 GiB ≈ 1.4M×384d; huge-nlist
-  * regimes) keep the two-level distributed combine: fixed
-  * groups of consecutive partitions left-fold on executors (one partial
-  * shuffle), the driver folds only the per-group results. A treeAggregate
-  * would cut the same traffic but its combine order is
-  * scheduling-dependent, which would break run-to-run determinism; both
-  * combine shapes here are pure functions of the partition layout.
+  * bit-identical to the exhaustive scan by its error-bound contract)
+  * behind Hamerly bounds that skip provably-unchanged points. FAISS's
+  * clustering policy is kept: bounded iterations, seeded sample init,
+  * empty clusters re-seeded by splitting the largest.
   */
 object Kmeans {
 
@@ -70,21 +50,19 @@ object Kmeans {
     * Determinism: the init draw orders by a seeded hash of vector
     * CONTENT, so it is independent of partition layout entirely; the
     * Lloyd sums depend on layout only through the partition-ordered
-    * combine, which is fixed given a fixed input layout and config. Same
-    * contract as the seeded HNSW build.
-    */
-  /** `stableFrac` > 0 turns on ASSIGNMENT-STABILITY early stop (mirrored
-    * path only): when fewer than `stableFrac` of the sample changed
-    * assignment between consecutive iterations, the loop ends after that
-    * iteration's update. FAISS's 25 iterations are a default, not a
-    * convergence fact — at the 1M/nlist=4096 point the assignment
-    * churn collapses to <0.2 % well before iteration 25 while each
-    * remaining iteration still costs a full screened-GEMM assign pass.
-    * The produced centroids are EXACTLY the full trainer's at the stop
-    * iteration (stopping is the only difference — KmeansSpec gates the
-    * bitwise equality), so this trades tail iterations for wall time
-    * explicitly rather than approximating anything. Off (0.0) by default:
-    * oracle-pinned index builds keep the FAISS-parity iteration count.
+    * fold, and the layout is a pure function of (content, seed,
+    * maxParts). Same contract as the seeded HNSW build.
+    *
+    * `stableFrac` > 0 turns on ASSIGNMENT-STABILITY early stop: when
+    * fewer than `stableFrac` of the sample changed assignment between
+    * consecutive iterations, the loop ends after that iteration's update.
+    * FAISS's 25 iterations are a default, not a convergence fact — at the
+    * 1M/nlist=4096 point the assignment churn collapses to <0.2 % well
+    * before iteration 25 while each remaining iteration still costs a full
+    * screened-GEMM assign pass. The produced centroids are EXACTLY the
+    * full trainer's at the stop iteration (stopping is the only
+    * difference — KmeansSpec gates the bitwise equality). Off (0.0) by
+    * default; inert on the driver-local small-sample path.
     */
   def fit(sample: DataFrame, k: Int, seed: Long, maxIter: Int = 25,
           tol: Double = 1e-4, vecCol: String = "vec",
@@ -95,360 +73,213 @@ object Kmeans {
     // Deterministic CONTENT-HASH layout of the sample, replacing the r10
     // coalesce of the scan's own splits. Two reasons, both measured r11:
     //  - BALANCE: the id-prefix training sample arrives pushdown-pruned to
-    //    a handful of parquet splits (the 200k×4096 point ran SEVEN
-    //    non-empty partitions on a 32-core box — the actual train wall:
-    //    every Lloyd iteration was a 7-wide job with 5 s stragglers, not
-    //    kernel- or combine-bound at all). A seeded-hash shuffle spreads
-    //    the sample evenly over maxParts regardless of file layout.
+    //    a handful of parquet splits; a seeded-hash shuffle spreads it
+    //    evenly over maxParts partitions regardless of file layout — now
+    //    the unit of parallel assignment on the driver.
     //  - DETERMINISM: the layout becomes a pure function of (content,
-    //    seed, maxParts) — the r10 layout depended on file split planning,
-    //    which the combine's run-to-run contract had to assume fixed.
+    //    seed, maxParts) — the r10 layout depended on file split planning.
     //    Within-partition order is pinned by the (hash, vec) sort: shuffle
     //    fetch order is scheduling-dependent, so an unsorted partition
     //    would re-fold sums in a different order across runs. Hash ties
     //    are either duplicate vectors (commute exactly in the sums) or
     //    64-bit collisions broken by the vec tiebreak.
-    // Trained centroids shift numerically vs the r10 layout (same
-    // algorithm, different fold tree) — index cache keys bumped |t4→|t5.
-    val spreadKey = xxhash64(col("v"), lit(seed))
-    val rdd = sample.select(col(vecCol).as("v"))
-      .repartition(maxParts, spreadKey)
-      .sortWithinPartitions(spreadKey, col("v"))
-      .as[Array[Float]].rdd
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = rdd.count()
-      require(n >= k, s"k-means sample has $n rows < k=$k")
-      val dim = rdd.first().length
-
-      // Init draw by smallest seeded CONTENT hash — a TakeOrdered over the
-      // sample (driver-bounded at subN rows), NOT rdd.takeSample, whose
-      // draw depends on the partition layout: a layout change (different
-      // session defaults, file split planning) would silently reseed the
-      // quantizer, and fixture-sized corpora are threshold-sensitive to
-      // that luck (measured ±0.04 probe recall across draws at n=500).
-      def hashDraw(m: Int): Array[Array[Float]] =
-        sample.select(col(vecCol))
-          .orderBy(xxhash64(col(vecCol), lit(seed)))
-          .limit(m).as[Array[Float]].collect()
-          // 64-bit content hashes only collide for duplicate vectors,
-          // whose relative order is value-irrelevant — no tie-break needed
-
-      // Small problems (every sf-fixture index, and any sub-codebook on a
-      // modest sample) run ENTIRELY on the driver with FAISS's nredo
-      // semantics — full Lloyd from 4 k-means++ seedings, keep the
-      // lowest-quantization-error run. A single shot is one local optimum
-      // whose quality swings ±0.05 probe recall with the init draw on a
-      // 500-row fixture; best-of-4 restarts removes that luck for the
-      // price of milliseconds at this size. `Pq.train` tests the same
-      // predicate and, for its m sub-codebooks, collects the sample once
-      // and calls fitLocal per driver-side slice instead of paying this
-      // shuffle + collect m times.
-      if (localEligible(k, n)) {
-        lastRunIters.set(-1)
-        return fitLocal(rdd.collect(), k, seed, maxIter, tol, selectByRecall)
+    // One collect (one Spark job, plus the shuffle's map stage) brings
+    // every partition's rows to the driver, in partition and row order,
+    // with each row's hash: n, dim and the init draw come from what arrived.
+    val collected = sample.select(xxhash64(col(vecCol), lit(seed)).as("h"), col(vecCol).as("v"))
+      .repartition(maxParts, col("h"))
+      .sortWithinPartitions(col("h"), col("v"))
+      .as[(Long, Array[Float])].rdd
+      .mapPartitions { it =>
+        val rows = it.toArray
+        Iterator.single((rows.map(_._1), rows.map(_._2)))
       }
+      .collect()
+    val hashes = collected.map(_._1)
+    val parts = collected.map(_._2)
+    val n = parts.map(_.length.toLong).sum
+    require(n >= k, s"k-means sample has $n rows < k=$k")
+    val dim = parts.find(_.nonEmpty).get.head.length
+    require(n * dim * 4L <= sampleMaxBytes,
+      s"k-means sample of $n rows x $dim dims exceeds the ${sampleMaxBytes >> 20} MiB " +
+        "driver budget: cap the training sample (Ivf.train's maxPointsPerCentroid)")
 
-      var cents: Array[Array[Float]] =
-        if (k >= 256) hashDraw(k)
-        else
-          // distributed mid-size path: k-means++ spread on a bounded
-          // driver subsample seeds ONE distributed Lloyd run
-          kmeansPlusPlus(
-            hashDraw(math.min(n, math.max(k.toLong * 40, 4096L)).toInt), k, seed)
+    // Small problems (every sf-fixture index, and any sub-codebook on a
+    // modest sample) run FAISS's nredo semantics — full Lloyd from 4
+    // k-means++ seedings, keep the best run. A single shot is one local
+    // optimum whose quality swings ±0.05 probe recall with the init draw
+    // on a 500-row fixture; best-of-4 restarts removes that luck for the
+    // price of milliseconds at this size.
+    if (localEligible(k, n)) {
+      lastRunIters.set(-1)
+      return fitLocal(parts.flatten, k, seed, maxIter, tol, selectByRecall)
+    }
 
-      val numParts = rdd.getNumPartitions
-      // Driver mirror of the bounded sample (see the combine note above):
-      // per-partition row arrays in the EXACT iterator order the map tasks
-      // see, so the driver-side partial rebuild replays the same adds.
-      val mirror: Array[Array[Array[Float]]] =
-        if (!mirrorEnabled || n * dim.toLong * 4L > mirrorMaxBytes) null
-        else {
-          val arr = new Array[Array[Array[Float]]](numParts)
-          rdd.mapPartitionsWithIndex((pid, it) => Iterator.single((pid, it.toArray)))
-            .collect().foreach { case (pid, rows) => arr(pid) = rows }
-          arr
-        }
-      // Hamerly bound state (mirror path only): per-pid (assign, u, l)
-      // arrays plus the per-iteration centroid move distances — see the
-      // skip test below for the soundness story.
-      val hamerly = mirror != null && hamerlyEnabled
-      var hamState: Array[(Array[Int], Array[Double], Array[Double])] = null
-      var hamDeltas: Array[Double] = null
-      var hamMaxDelta = 0.0
-      var iter = 0
-      var moved = Double.MaxValue
-      // assignment-stability early stop state (mirrored path only): the
-      // previous iteration's full assignment vectors, driver-held
-      var prevAssigns: Array[Array[Int]] = null
-      var stableStop = false
-      while (iter < maxIter && moved > tol && !stableStop) {
-        val bc = spark.sparkContext.broadcast(cents)
-        val bcHam = if (hamerly && hamState != null)
-          spark.sparkContext.broadcast((hamDeltas, hamMaxDelta, hamState)) else null
-        val (sums, counts): (Array[Double], Array[Long]) =
-        if (mirror != null) {
-          // MIRRORED combine: map tasks run the batched screened argmin
-          // (CentroidOps.assignBatch family) and ship ONLY the assignment
-          // vector (plus the Hamerly bound arrays); the driver rebuilds
-          // each partition's partial from its mirror and folds through
-          // the identical association tree as the distributed combine
-          // (gated bitwise by KmeansSpec).
-          //
-          // HAMERLY SKIP (Hamerly 2010, re-expressed with directed
-          // rounding): each point carries an INFLATED upper bound u on
-          // its distance to its assigned centroid and a DEFLATED lower
-          // bound l on its distance to the nearest other. After the
-          // centroids move, u += δ(assigned) and l −= max δ keep both
-          // bounds valid (triangle inequality; δ itself is inflated and
-          // every update multiplies by BoundInflate/BoundDeflate, so
-          // double rounding can never tip a bound the unsafe way —
-          // inputs to each op are exact stored doubles, making each
-          // result correctly rounded, and the 1e-12 relative slack
-          // dwarfs the ≤2⁻⁵² per-op error plus the γ₃₈₄ ≈ 8.5e-14 kernel
-          // accumulation error). If u < l strictly, the assignment
-          // provably cannot have changed (every other centroid is
-          // strictly farther) — the point is SKIPPED with zero kernel
-          // work, preserving lowest-index tie-breaks exactly because a
-          // skip certifies a UNIQUE argmin. Points that fail the cheap
-          // test get one exact kernel eval to tighten u; only the
-          // remainder re-runs the full screen. Assignments — and hence
-          // the folded centroids — are BITWISE IDENTICAL to the
-          // full-rescan trainer (KmeansSpec gate), so no trainer tag
-          // bump; late Lloyd iterations (tiny moves) collapse to nearly
-          // zero screen work, which is the FAISS-gap closer after r11's
-          // layout fix made iterations kernel-bound.
-          val hamOn = hamerly
-          val assignsRdd = rdd.mapPartitionsWithIndex { (pid, it) =>
-            val cs = bc.value
-            import graft.functions.expressions.CentroidOps
-            val rows = it.toArray
-            val nr = rows.length
-            val newA = new Array[Int](nr)
-            val newU = if (hamOn) new Array[Double](nr) else null
-            val newL = if (hamOn) new Array[Double](nr) else null
-            val prev = if (bcHam != null) bcHam.value else null
-            if (prev == null || prev._3(pid) == null) {
-              if (hamOn) CentroidOps.assignBatchBounded(rows, nr, cs, newA, newU, newL)
-              else CentroidOps.assignBatch(rows, nr, cs, newA)
-            } else {
-              val (deltas, maxD, stArr) = prev
-              val (pa, pu, pl) = stArr(pid)
-              val survIdx = new Array[Int](nr)
-              var ns = 0
-              var i = 0
-              while (i < nr) {
-                val a = pa(i)
-                val u1 = (pu(i) + deltas(a)) * CentroidOps.BoundInflate
-                val l1 = (pl(i) - maxD) * CentroidOps.BoundDeflate
-                if (u1 < l1) {
-                  newA(i) = a; newU(i) = u1; newL(i) = l1
-                } else {
-                  val ut = math.sqrt(
-                    graft.functions.expressions.VectorKernels.l2Sq(rows(i), cs(a))) *
-                    CentroidOps.BoundInflate
-                  if (ut < l1) {
-                    newA(i) = a; newU(i) = ut; newL(i) = l1
-                  } else {
-                    survIdx(ns) = i; ns += 1
-                  }
-                }
-                i += 1
-              }
-              if (ns > 0) {
-                val sRows = new Array[Array[Float]](ns)
-                var j = 0
-                while (j < ns) { sRows(j) = rows(survIdx(j)); j += 1 }
-                val sA = new Array[Int](ns)
-                val sU = new Array[Double](ns)
-                val sL = new Array[Double](ns)
-                CentroidOps.assignBatchBounded(sRows, ns, cs, sA, sU, sL)
-                j = 0
-                while (j < ns) {
-                  val i0 = survIdx(j)
-                  newA(i0) = sA(j); newU(i0) = sU(j); newL(i0) = sL(j)
-                  j += 1
-                }
-              }
-            }
-            Iterator.single((pid, newA, newU, newL))
-          }
-          val assigns = new Array[Array[Int]](numParts)
-          val nextState =
-            if (hamOn) new Array[(Array[Int], Array[Double], Array[Double])](numParts)
-            else null
-          assignsRdd.collect().foreach { case (pid, a, u, l) =>
-            assigns(pid) = a
-            if (hamOn) nextState(pid) = (a, u, l)
-          }
-          hamState = nextState
-          if (stableFrac > 0) {
-            if (prevAssigns != null) {
-              var changed = 0L
-              var tot = 0L
-              var pid = 0
-              while (pid < numParts) {
-                val cur = assigns(pid); val prev = prevAssigns(pid)
-                if (cur != null && prev != null) {
-                  var i = 0
-                  while (i < cur.length) {
-                    if (cur(i) != prev(i)) changed += 1
-                    i += 1
-                  }
-                  tot += cur.length
-                }
-                pid += 1
-              }
-              // the update below still runs (that IS this iteration);
-              // the loop condition ends the walk after it
-              if (tot > 0 && changed <= stableFrac * tot) stableStop = true
-            }
-            prevAssigns = assigns
-          }
-          foldMirrored(mirror, assigns, k, dim, numParts)
-        } else {
-        val partialsRdd = rdd
-          .mapPartitionsWithIndex { (pid, it) =>
-            val cs = bc.value
-            // assignment is the BATCHED screened argmin
-            // (CentroidOps.assignBatch — FAISS's blocked-GEMM shape):
-            // float-dot screen over L2-resident centroid chunks reused
-            // across 16 buffered points, exact double-kernel re-eval of
-            // an error-bounded shortlist. Bit-identical to the per-point
-            // scan by the screen's soundness contract; the point-blocking
-            // is what keeps 32 concurrent assignment threads off the
-            // shared-L3 wall (per-iteration centroid traffic drops 16×).
-            import graft.functions.expressions.CentroidOps
-            val sums = new Array[Double](k * dim)
-            val counts = new Array[Long](k)
-            val bsize = CentroidOps.AssignBatchSize
-            val batch = new Array[Array[Float]](bsize)
-            val assigned = new Array[Int](bsize)
-            def fold(bn: Int): Unit = {
-              CentroidOps.assignBatch(batch, bn, cs, assigned)
-              var p = 0
-              while (p < bn) {
-                val c = assigned(p)
-                val v = batch(p)
-                counts(c) += 1
-                var i = 0
-                val off = c * dim
-                while (i < dim) { sums(off + i) += v(i); i += 1 }
-                p += 1
-              }
-            }
-            var bn = 0
-            while (it.hasNext) {
-              batch(bn) = it.next()
-              bn += 1
-              if (bn == bsize) { fold(bn); bn = 0 }
-            }
-            if (bn > 0) fold(bn)
-            Iterator.single((pid, (sums, counts)))
-          }
-        // Ordered combine, two-level past `combineGroupSize` partitions:
-        // fixed groups of CONSECUTIVE partitions left-fold in ascending
-        // pid order on executors (one shuffle of the partials), and the
-        // driver left-folds only the per-group results in ascending group
-        // order — determinism is unchanged (the association tree is a
-        // pure function of numParts and groupSize, never of scheduling)
-        // while per-iteration driver traffic drops from numParts×k×dim×8 B
-        // to nGroups×k×dim×8 B. Flat collect below the threshold keeps
-        // fixture-scale training byte-identical to the r8 trainer.
-        val partials: Array[(Int, (Array[Double], Array[Long]))] =
-          if (numParts <= combineGroupSize) partialsRdd.collect()
-          else {
-            val nGroups = (numParts + combineGroupSize - 1) / combineGroupSize
-            partialsRdd
-              .repartitionAndSortWithinPartitions(
-                new GroupPartitioner(nGroups, combineGroupSize))
-              .mapPartitions { it =>
-                var gid = -1
-                var acc: (Array[Double], Array[Long]) = null
-                it.foreach { case (pid, (s, c)) =>
-                  gid = pid / combineGroupSize
-                  if (acc == null) acc = (s, c)
-                  else {
-                    var i = 0
-                    while (i < acc._1.length) { acc._1(i) += s(i); i += 1 }
-                    var j = 0
-                    while (j < acc._2.length) { acc._2(j) += c(j); j += 1 }
-                  }
-                }
-                if (acc == null) Iterator.empty else Iterator.single((gid, acc))
-              }
-              .collect()
-          }
-        val sorted = partials.sortBy(_._1)
-        val sums = new Array[Double](k * dim)
-        val counts = new Array[Long](k)
-        sorted.foreach { case (_, (s, c)) =>
-          var i = 0
-          while (i < sums.length) { sums(i) += s(i); i += 1 }
-          var j = 0
-          while (j < k) { counts(j) += c(j); j += 1 }
-        }
-        (sums, counts)
-        }
-        bc.destroy()
-        if (bcHam != null) bcHam.destroy()
-        val next = Array.tabulate(k) { c =>
-          if (counts(c) == 0L) null // re-seeded below
-          else {
-            val off = c * dim
-            Array.tabulate(dim)(i => (sums(off + i) / counts(c)).toFloat)
-          }
-        }
-        reseedEmpties(next, counts, seed + iter)
-        // centroid moves: `moved` drives the tol stop (exact, as before);
-        // the INFLATED copies feed the next iteration's Hamerly bound
-        // adjustments (inflation covers the kernel's γ₃₈₄ accumulation
-        // error and the sqrt rounding, keeping δ an upper bound)
-        if (hamerly && (hamDeltas == null || hamDeltas.length != k))
-          hamDeltas = new Array[Double](k)
-        moved = 0.0
-        hamMaxDelta = 0.0
-        var c = 0
-        while (c < k) {
-          val d = math.sqrt(VectorKernels.l2Sq(cents(c), next(c)))
-          if (d > moved) moved = d
-          if (hamerly) {
-            val dInf = d * graft.functions.expressions.CentroidOps.BoundInflate
-            hamDeltas(c) = dInf
-            if (dInf > hamMaxDelta) hamMaxDelta = dInf
-          }
-          c += 1
-        }
-        cents = next
-        iter += 1
-      }
-      lastRunIters.set(iter)
-      cents
-    } finally rdd.unpersist(blocking = false)
+    // Init draw by smallest seeded CONTENT hash — exactly what
+    // `orderBy(xxhash64(vec, seed)).limit(m)` over the sample returns, NOT
+    // a takeSample, whose draw depends on the partition layout: a layout
+    // change would silently reseed the quantizer, and fixture-sized
+    // corpora are threshold-sensitive to that luck (measured ±0.04 probe
+    // recall across draws at n=500). 64-bit content hashes only collide
+    // for duplicate vectors, whose relative order is value-irrelevant.
+    def hashDraw(m: Int): Array[Array[Float]] = {
+      val sorted = hashes.flatten
+      java.util.Arrays.sort(sorted)
+      val cut = sorted(m - 1)
+      parts.indices.flatMap { p =>
+        hashes(p).indices.filter(hashes(p)(_) <= cut).map(i => (hashes(p)(i), parts(p)(i)))
+      }.sortBy(_._1).take(m).map(_._2).toArray
+    }
+    val init =
+      if (k >= 256) hashDraw(k)
+      else
+        // mid-size path: k-means++ spread on a bounded subsample seeds ONE
+        // Lloyd run
+        kmeansPlusPlus(hashDraw(math.min(n, math.max(k.toLong * 40, 4096L)).toInt), k, seed)
+    val (cents, iters) = lloyd(parts, init, seed, maxIter, tol, stableFrac)
+    lastRunIters.set(iters)
+    cents
   }
 
-  /** Whether [[fit]] trains `k` centroids on an `n`-row sample entirely on
-    * the driver ([[fitLocal]]) instead of running distributed Lloyd. Callers
-    * that already hold the sample on the driver (`Pq.train`'s sub-codebooks)
+  /** Lloyd's iterations on the driver from `init` over `parts` — the
+    * sample in its fixed partition layout. Returns the centroids and the
+    * number of iterations run.
+    *
+    * Each iteration assigns every partition (in parallel on [[pool]]),
+    * folds the per-partition sums through [[foldMirrored]]'s fixed tree,
+    * re-seeds empty clusters, and stops on centroid movement ≤ `tol` or,
+    * with `stableFrac` > 0, on assignment churn ≤ `stableFrac`.
+    *
+    * HAMERLY SKIP (Hamerly 2010, re-expressed with directed rounding):
+    * each point carries an INFLATED upper bound u on its distance to its
+    * assigned centroid and a DEFLATED lower bound l on its distance to the
+    * nearest other. After the centroids move, u += δ(assigned) and
+    * l −= max δ keep both bounds valid (triangle inequality; δ itself is
+    * inflated and every update multiplies by BoundInflate/BoundDeflate, so
+    * double rounding can never tip a bound the unsafe way — inputs to each
+    * op are exact stored doubles, making each result correctly rounded,
+    * and the 1e-12 relative slack dwarfs the ≤2⁻⁵² per-op error plus the
+    * γ₃₈₄ ≈ 8.5e-14 kernel accumulation error). If u < l strictly, the
+    * assignment provably cannot have changed (every other centroid is
+    * strictly farther) — the point is SKIPPED with zero kernel work,
+    * preserving lowest-index tie-breaks exactly because a skip certifies a
+    * UNIQUE argmin. Points that fail the cheap test get one exact kernel
+    * eval to tighten u; only the remainder re-runs the full screen.
+    * Assignments — and hence the folded centroids — are BITWISE IDENTICAL
+    * to the full rescan every iteration, which `hamerly = false` runs as
+    * the reference (KmeansSpec gate).
+    */
+  private[graft] def lloyd(parts: Array[Array[Array[Float]]], init: Array[Array[Float]],
+                           seed: Long, maxIter: Int, tol: Double,
+                           stableFrac: Double = 0.0,
+                           hamerly: Boolean = true): (Array[Array[Float]], Int) = {
+    val k = init.length
+    val dim = init(0).length
+    val assigns = parts.map(p => new Array[Int](p.length))
+    val us = parts.map(p => new Array[Double](p.length))
+    val ls = parts.map(p => new Array[Double](p.length))
+    val n = parts.map(_.length.toLong).sum
+    // inflated centroid moves of the last update, and their max
+    val deltas = new Array[Double](k)
+    var maxDelta = 0.0
+    var cents = init
+    var iter = 0
+    var moved = Double.MaxValue
+    var stableStop = false
+    while (iter < maxIter && moved > tol && !stableStop) {
+      val cs = cents
+      val first = iter == 0
+      // assign partition p in place; returns how many of its points changed
+      // cluster (meaningless on the first iteration, which has no previous)
+      def assignPart(p: Int): Long = {
+        val rows = parts(p)
+        val nr = rows.length
+        val a = assigns(p)
+        if (!hamerly) {
+          val next = new Array[Int](nr)
+          CentroidOps.assignBatch(rows, nr, cs, next)
+          assigns(p) = next
+          (0 until nr).count(i => next(i) != a(i)).toLong
+        } else if (first) {
+          CentroidOps.assignBatchBounded(rows, nr, cs, a, us(p), ls(p))
+          0L
+        } else {
+          val u = us(p)
+          val l = ls(p)
+          val survIdx = new Array[Int](nr)
+          var ns = 0
+          var i = 0
+          while (i < nr) {
+            val c = a(i)
+            val u1 = (u(i) + deltas(c)) * CentroidOps.BoundInflate
+            val l1 = (l(i) - maxDelta) * CentroidOps.BoundDeflate
+            l(i) = l1
+            if (u1 < l1) u(i) = u1
+            else {
+              val ut = math.sqrt(VectorKernels.l2Sq(rows(i), cs(c))) * CentroidOps.BoundInflate
+              if (ut < l1) u(i) = ut
+              else { survIdx(ns) = i; ns += 1 }
+            }
+            i += 1
+          }
+          var changed = 0L
+          if (ns > 0) {
+            val sRows = Array.tabulate(ns)(j => rows(survIdx(j)))
+            val sA = new Array[Int](ns)
+            val sU = new Array[Double](ns)
+            val sL = new Array[Double](ns)
+            CentroidOps.assignBatchBounded(sRows, ns, cs, sA, sU, sL)
+            var j = 0
+            while (j < ns) {
+              val i0 = survIdx(j)
+              if (sA(j) != a(i0)) changed += 1
+              a(i0) = sA(j); u(i0) = sU(j); l(i0) = sL(j)
+              j += 1
+            }
+          }
+          changed
+        }
+      }
+      val changed = parallel(parts.length)(assignPart).sum
+      // the update below still runs (that IS this iteration); the loop
+      // condition ends the walk after it
+      if (stableFrac > 0 && !first && n > 0 && changed <= stableFrac * n) stableStop = true
+      val (sums, counts) = foldMirrored(parts, assigns, k, dim)
+      val next = Array.tabulate(k) { c =>
+        if (counts(c) == 0L) null // re-seeded below
+        else {
+          val off = c * dim
+          Array.tabulate(dim)(i => (sums(off + i) / counts(c)).toFloat)
+        }
+      }
+      reseedEmpties(next, counts, seed + iter)
+      // centroid moves: `moved` drives the tol stop (exact); the INFLATED
+      // copies feed the next iteration's Hamerly bound adjustments
+      // (inflation covers the kernel's γ₃₈₄ accumulation error and the sqrt
+      // rounding, keeping δ an upper bound)
+      moved = 0.0
+      maxDelta = 0.0
+      var c = 0
+      while (c < k) {
+        val d = math.sqrt(VectorKernels.l2Sq(cents(c), next(c)))
+        if (d > moved) moved = d
+        deltas(c) = d * CentroidOps.BoundInflate
+        if (deltas(c) > maxDelta) maxDelta = deltas(c)
+        c += 1
+      }
+      cents = next
+      iter += 1
+    }
+    (cents, iter)
+  }
+
+  /** Whether [[fit]] trains `k` centroids on an `n`-row sample with
+    * [[fitLocal]]'s restarts instead of one seeded Lloyd run. Callers that
+    * already hold the sample on the driver (`Pq.train`'s sub-codebooks)
     * test the same predicate and call [[fitLocal]] directly, skipping the
     * per-fit shuffle and collect.
     */
   private[graft] def localEligible(k: Int, n: Long): Boolean = k < 256 && n <= 16384
-
-  /** [[fit]]'s driver-local path on points already on the driver. The
-    * points are sorted by content (FNV-1a hash of the float bits, then the
-    * values) before the restarts, so the result is a pure function of the
-    * point multiset: any collection order of the same sample — a shuffled
-    * partition layout, or a driver-side slice of a plain collect — gives
-    * bitwise the same centroids.
-    */
-  private[graft] def fitLocal(pts: Array[Array[Float]], k: Int, seed: Long,
-                              maxIter: Int = 25, tol: Double = 1e-4,
-                              selectByRecall: Boolean = false): Array[Array[Float]] = {
-    val sorted = pts.map(v => (contentHash64(v), v)).sorted(contentOrder).map(_._2)
-    localFit(sorted, k, sorted.head.length, seed, maxIter, tol,
-      nredo = localNredo, selectByRecall)
-  }
 
   /** Hash first; equal hashes fall back to the values, so distinct points
     * that collide still sort the same whatever order they arrive in.
@@ -458,65 +289,74 @@ object Kmeans {
     if (c != 0) c else java.util.Arrays.compare(a._2, b._2)
   }
 
-  /** Iterations the last DISTRIBUTED fit on this JVM ran (−1 after a
-    * driver-local fit) — diagnostic for the early-stop spec gate and the
+  /** Iterations the last [[fit]] on this JVM ran (−1 after a small-sample
+    * [[fitLocal]] fit) — diagnostic for the early-stop spec gate and the
     * bench ledger; not synchronized across concurrent fits.
     */
   private[graft] val lastRunIters = new java.util.concurrent.atomic.AtomicInteger(-1)
 
-  /** Restart budget for the small-sample driver-local path (FAISS nredo
-    * semantics).
-    */
+  /** Restart budget for the small-sample path (FAISS nredo semantics). */
   private val localNredo = 4
 
-  /** Partition-group width for the two-level combine: past this many
-    * sample partitions, consecutive-pid groups fold on executors first.
-    * 8 keeps the fixture/sf paths (≤ a dozen splits) mostly on the flat
-    * combine while cutting the 64-partition worst case's driver traffic
-    * 8× (the r8 verdict's "next wall on the train path").
+  /** Partition-group width of [[foldMirrored]]'s two-level tree: past this
+    * many sample partitions, consecutive-pid groups fold first.
     */
   private val combineGroupSize = 8
 
-  /** Mirror kill-switch (`-Dgraft.kmeans.mirror=false`) — used by the
-    * KmeansSpec equality gate and as an operational escape hatch.
-    */
-  private def mirrorEnabled: Boolean =
-    !"false".equals(System.getProperty("graft.kmeans.mirror"))
-
-  /** Hamerly-skip kill-switch (`-Dgraft.kmeans.hamerly=false`) — used by
-    * the KmeansSpec bitwise-equality gate vs the full-rescan trainer.
-    */
-  private def hamerlyEnabled: Boolean =
-    !"false".equals(System.getProperty("graft.kmeans.hamerly"))
-
-  /** Driver-memory budget for the sample mirror (float payload bytes).
+  /** Driver-memory budget for the collected sample (float payload bytes).
     * 2 GiB covers the FAISS cap nlist × 256 up to nlist ≈ 5,500 at 384d;
-    * bigger-nlist regimes fall back to the two-level distributed combine
-    * automatically.
+    * a bigger sample fails instead of training.
     */
-  private final val mirrorMaxBytes = 2L << 30
+  private final val sampleMaxBytes = 2L << 30
 
-  /** Driver-side rebuild of the per-partition partials from the sample
-    * mirror + collected assignments, folded through the EXACT association
-    * tree of the distributed combine so the result is bitwise identical:
-    *  - each partition's partial accumulates its rows in iterator order
-    *    (fresh-zero arrays — same as the map-task fold);
-    *  - numParts ≤ combineGroupSize: partials fold into fresh-zero totals
-    *    in ascending pid order (the flat collect path);
-    *  - otherwise: fixed consecutive-pid groups of combineGroupSize — the
-    *    group acc IS the first partial, subsequent partials add into it
-    *    (the executor fold's `acc = first, acc += rest`), and group
-    *    results fold into fresh-zero totals in ascending group order.
+  /** Driver threads every fit shares, for the per-partition assignment and
+    * the fold's groups: at most one per core however many fits run at once
+    * (`Pq.train` runs up to m sub-fits concurrently). Daemon threads, so an
+    * idle pool never holds the JVM open.
     */
-  private def foldMirrored(mirror: Array[Array[Array[Float]]],
-                           assigns: Array[Array[Int]], k: Int, dim: Int,
-                           numParts: Int): (Array[Double], Array[Long]) = {
+  private lazy val pool: ExecutorService =
+    Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors, r => {
+      val t = new Thread(r, "graft-kmeans")
+      t.setDaemon(true)
+      t
+    })
+
+  /** `f(i)` for i in 0 until n on [[pool]] (inline when n == 1); a failed
+    * task rethrows its own exception.
+    */
+  private def parallel[T: ClassTag](n: Int)(f: Int => T): Array[T] =
+    if (n == 1) Array(f(0))
+    else
+      Array.tabulate(n)(i => pool.submit(() => f(i))).map { fu =>
+        try fu.get()
+        catch { case e: ExecutionException => throw e.getCause }
+      }
+
+  /** Per-cluster sums and counts of `parts` under `assigns`, folded
+    * through a FIXED association tree so the result is a pure function of
+    * the partition layout:
+    *  - each partition's partial accumulates its rows in row order into
+    *    fresh-zero arrays;
+    *  - numParts ≤ combineGroupSize: partials fold into fresh-zero totals
+    *    in ascending pid order;
+    *  - otherwise: fixed consecutive-pid groups of combineGroupSize — the
+    *    group acc IS the first partial, subsequent partials add into it —
+    *    and group results fold into fresh-zero totals in ascending group
+    *    order. Groups are arithmetically independent, so they run in
+    *    parallel; the add sequence is the single-threaded one.
+    * Every artifact trained since trainer tag t5 depends on this tree:
+    * changing it moves centroids, which needs a tag bump.
+    */
+  private def foldMirrored(parts: Array[Array[Array[Float]]],
+                           assigns: Array[Array[Int]], k: Int,
+                           dim: Int): (Array[Double], Array[Long]) = {
+    val numParts = parts.length
     val sums = new Array[Double](k * dim)
     val counts = new Array[Long](k)
     def partialInto(pid: Int, s: Array[Double], c: Array[Long]): Unit = {
       java.util.Arrays.fill(s, 0.0)
       java.util.Arrays.fill(c, 0L)
-      val rows = mirror(pid)
+      val rows = parts(pid)
       val asg = assigns(pid)
       var r = 0
       while (r < rows.length) {
@@ -546,54 +386,28 @@ object Kmeans {
         pid += 1
       }
     } else {
-      // groups are arithmetically independent (each folds only its own
-      // consecutive pids), so they run on parallel driver threads; the
-      // final group-order fold below is sequential — the add sequence is
-      // IDENTICAL to the single-threaded version, just overlapped in time
       val nGroups = (numParts + combineGroupSize - 1) / combineGroupSize
-      val gaccS = new Array[Array[Double]](nGroups)
-      val gaccC = new Array[Array[Long]](nGroups)
-      val threads = (0 until nGroups).map { g =>
-        new Thread(() => {
-          val start = g * combineGroupSize
-          val end = math.min(start + combineGroupSize, numParts)
-          val gs = new Array[Double](k * dim)
-          val gc = new Array[Long](k)
-          partialInto(start, gs, gc)
-          if (start + 1 < end) {
-            val ps = new Array[Double](k * dim)
-            val pc = new Array[Long](k)
-            var pid = start + 1
-            while (pid < end) {
-              partialInto(pid, ps, pc)
-              addInto(gs, ps, gc, pc)
-              pid += 1
-            }
+      val groups = parallel(nGroups) { g =>
+        val start = g * combineGroupSize
+        val end = math.min(start + combineGroupSize, numParts)
+        val gs = new Array[Double](k * dim)
+        val gc = new Array[Long](k)
+        partialInto(start, gs, gc)
+        if (start + 1 < end) {
+          val ps = new Array[Double](k * dim)
+          val pc = new Array[Long](k)
+          var pid = start + 1
+          while (pid < end) {
+            partialInto(pid, ps, pc)
+            addInto(gs, ps, gc, pc)
+            pid += 1
           }
-          gaccS(g) = gs; gaccC(g) = gc
-        })
+        }
+        (gs, gc)
       }
-      threads.foreach(_.start())
-      threads.foreach(_.join())
-      var g = 0
-      while (g < nGroups) { addInto(sums, gaccS(g), counts, gaccC(g)); g += 1 }
+      groups.foreach { case (gs, gc) => addInto(sums, gs, counts, gc) }
     }
     (sums, counts)
-  }
-
-  /** Maps partial key `pid` to partition `pid / groupSize` — consecutive
-    * source partitions land (sorted) in one combine task.
-    */
-  private final class GroupPartitioner(val nGroups: Int, val groupSize: Int)
-      extends org.apache.spark.Partitioner {
-    override def numPartitions: Int = nGroups
-    override def getPartition(key: Any): Int = key.asInstanceOf[Int] / groupSize
-    override def equals(o: Any): Boolean = o match {
-      case g: GroupPartitioner =>
-        g.numPartitions == nGroups && g.groupSize == groupSize
-      case _ => false
-    }
-    override def hashCode: Int = 31 * nGroups + groupSize
   }
 
   /** FNV-1a over the float bit patterns — a driver-side stand-in for the
@@ -612,9 +426,13 @@ object Kmeans {
     h
   }
 
-  /** Driver-local Lloyd with FAISS-nredo restarts for small samples: full
-    * k-means from `nredo` k-means++ seedings. Same assignment rule,
-    * empty-cluster policy, and tol stop as the distributed path.
+  /** [[fit]]'s small-sample path on points already on the driver: full
+    * [[lloyd]] (one partition) from `localNredo` k-means++ seedings, FAISS
+    * nredo semantics. The points are sorted by content (FNV-1a hash of the
+    * float bits, then the values) first, so the result is a pure function
+    * of the point multiset: any collection order of the same sample — a
+    * shuffled partition layout, or a driver-side slice of a plain collect
+    * — gives bitwise the same centroids.
     *
     * Restart SELECTION depends on what the centroids are for:
     *  - `selectByRecall = false` (PQ/OPQ sub-codebooks): lowest total
@@ -632,10 +450,10 @@ object Kmeans {
     *    quantization error, then lower restart index — fully
     *    deterministic.
     */
-  private[graft] def localFit(pts: Array[Array[Float]], k: Int, dim: Int,
-                              seed: Long, maxIter: Int, tol: Double,
-                              nredo: Int,
+  private[graft] def fitLocal(points: Array[Array[Float]], k: Int, seed: Long,
+                              maxIter: Int = 25, tol: Double = 1e-4,
                               selectByRecall: Boolean = false): Array[Array[Float]] = {
+    val pts = points.map(v => (contentHash64(v), v)).sorted(contentOrder).map(_._2)
     // proxy ground truth once per call (restart-independent): true top-k
     // neighbors of the first nq points in content-hash order
     val nq = if (selectByRecall) math.min(64, pts.length) else 0
@@ -665,49 +483,12 @@ object Kmeans {
     var bestErr = Double.MaxValue
     var bestRecall = -1.0
     var best: Array[Array[Float]] = null
+    val localAssign = new Array[Int](pts.length)
     var r = 0
-    while (r < nredo) {
-      var cents = kmeansPlusPlus(pts, k, seed + r * 7919L)
-      var iter = 0
-      var moved = Double.MaxValue
-      val sums = new Array[Double](k * dim)
-      val counts = new Array[Long](k)
-      val localAssign = new Array[Int](pts.length)
-      while (iter < maxIter && moved > tol) {
-        java.util.Arrays.fill(sums, 0.0)
-        java.util.Arrays.fill(counts, 0L)
-        graft.functions.expressions.CentroidOps.assignBatch(
-          pts, pts.length, cents, localAssign)
-        var pi = 0
-        while (pi < pts.length) {
-          val c = localAssign(pi)
-          val v = pts(pi)
-          counts(c) += 1
-          val off = c * dim
-          var i = 0
-          while (i < dim) { sums(off + i) += v(i); i += 1 }
-          pi += 1
-        }
-        val next = Array.tabulate(k) { c =>
-          if (counts(c) == 0L) null
-          else {
-            val off = c * dim
-            Array.tabulate(dim)(i => (sums(off + i) / counts(c)).toFloat)
-          }
-        }
-        reseedEmpties(next, counts, seed + iter)
-        moved = 0.0
-        var c = 0
-        while (c < k) {
-          val d = math.sqrt(VectorKernels.l2Sq(cents(c), next(c)))
-          if (d > moved) moved = d
-          c += 1
-        }
-        cents = next
-        iter += 1
-      }
-      graft.functions.expressions.CentroidOps.assignBatch(
-        pts, pts.length, cents, localAssign)
+    while (r < localNredo) {
+      val (cents, _) = lloyd(Array(pts), kmeansPlusPlus(pts, k, seed + r * 7919L),
+        seed, maxIter, tol)
+      CentroidOps.assignBatch(pts, pts.length, cents, localAssign)
       var err = 0.0
       var ei = 0
       while (ei < pts.length) {
@@ -734,7 +515,7 @@ object Kmeans {
     * disagree.
     */
   private def nearestBounded(v: Array[Float], cs: Array[Array[Float]]): Int =
-    graft.functions.expressions.CentroidOps.argminL2F(v, cs)
+    CentroidOps.argminL2F(v, cs)
 
   /** FAISS `Clustering.cpp` empty-cluster policy, re-expressed: an empty
     * cluster re-seeds from the LARGEST cluster's centroid, nudged by a

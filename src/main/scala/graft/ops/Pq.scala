@@ -30,14 +30,16 @@ object Pq {
     * min(m, availableProcessors) threads created per call. Threads created
     * inside the call inherit Spark's local properties (job group,
     * scheduler pool, tracing tags), so their jobs stay attributed to the
-    * caller. When a sub-fit would take [[Kmeans.fit]]'s driver-local path
+    * caller. When a sub-fit would take [[Kmeans.fit]]'s small-sample path
     * ([[Kmeans.localEligible]]), the sample is collected ONCE and each
     * subspace runs [[Kmeans.fitLocal]] on its driver-side slice; otherwise
-    * each subspace runs the unchanged [[Kmeans.fit]]. Either way codebook s
-    * is bitwise the one a sequential `Kmeans.fit(slice s, ksub, seed + s,
-    * maxIter = 15)` loop gives (BuildPathSpec gates it): fitLocal's content
-    * sort makes the local result independent of collection order, and
-    * concurrent distributed fits share no state.
+    * (ksub = 256) each subspace runs [[Kmeans.fit]], whose one collect
+    * brings its slice to the driver and whose Lloyd iterations share
+    * Kmeans's one pool of driver threads with the other sub-fits. Either
+    * way codebook s is bitwise the one a sequential `Kmeans.fit(slice s,
+    * ksub, seed + s, maxIter = 15)` loop gives (BuildPathSpec gates it):
+    * fitLocal's content sort makes the local result independent of
+    * collection order, and concurrent fits share no mutable state.
     */
   def train(base: DataFrame, m: Int, ksub: Int, ntrain: Int = 200000,
             seed: Long = 42L, vecCol: String = "vec",
@@ -122,38 +124,15 @@ object Pq {
     TopK.perGroup(scored, "qid", "gid", "score", k, larger = !l2)
   }
 
-  /** Batched flat ADC search: the query batch's LUTs ride as ONE codegen
-    * reference object, the code table streams once, and per-partition
-    * top-k buffers absorb the scores (`Search.scoredTopK`) — no Q×N
-    * joined rows. Per-pair lookup-sums are [[PqOps.adc]]'s exactly
-    * (driver builds LUTs with the same [[PqOps.lut]] the broadcast side
-    * runs), so ranks match [[search]] (PqSpec gates it). This is the
-    * probe shape for serving-latency measurements.
-    */
-  def searchBatched(encoded: DataFrame, queries: DataFrame, books: Codebooks,
-                    k: Int, l2: Boolean = true, idCol: String = "id"): DataFrame = {
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import graft.functions.expressions.{BatchAdcScores, PqOps}
-    val q = collectQueryVecs(queries)
-    val qids = q.map(_._1)
-    val luts = q.map { case (_, qv) =>
-      PqOps.lut(new GenericArrayData(qv), books, l2).toFloatArray()
-    }
-    Search.scoredTopK(
-      encoded.select(col(idCol).cast("long"),
-        Bridge.column(BatchAdcScores(Bridge.expression(col("codes")), luts))
-          .as("scores")),
-      qids, k, larger = !l2, "qid")
-  }
-
   /** Batched ADC scan over a BLOCK-PACKED code table
     * (`QuantizedTables.writeBytesBlocked` — up to 128 id-sorted code rows
     * per stored row, one contiguous blob): the 1M row-wise ADC scan pays
     * ~µs-per-row plan overhead to read 48 BYTES of codes, which dwarfs
     * the 768 L2-resident lookups the row actually costs — the same
     * fixed-cost wall the blocked vector scans hit, fixed the same way.
-    * Lookup-sums are bitwise [[searchBatched]]'s ([[PqOps.adcAllSlice]];
-    * PqSpec gates rank equality).
+    * Lookup-sums are bitwise [[search]]'s ([[PqOps.adcSlice]] is
+    * [[PqOps.adc]]'s lookups in the same order; PqSpec gates rank
+    * equality).
     */
   def searchBatchedBlocked(blocked: DataFrame, queries: DataFrame,
                            books: Codebooks, k: Int,
@@ -491,20 +470,16 @@ object Pq {
 
   /** ADC candidates → exact-L2 refine (J3), the reference's
     * PQ+Refine operating point (recall 0.974 @ R=50, `Performance.md:623`).
-    * `batched = true` generates candidates via [[searchBatched]] (same
-    * ranks, one code-table pass for the whole query batch).
     */
   def searchRefined(base: DataFrame, encoded: DataFrame, queries: DataFrame,
                     books: Codebooks, k: Int, refineK: Int, l2: Boolean = true,
-                    idCol: String = "id", vecCol: String = "vec",
-                    batched: Boolean = false): DataFrame = {
-    def adc(kk: Int) =
-      if (batched) searchBatched(encoded, queries, books, kk, l2, idCol)
-      else search(encoded, queries, books, kk, l2, idCol)
-    refineAdc(base, queries, k, refineK, adc, idCol, vecCol)
-  }
+                    idCol: String = "id", vecCol: String = "vec"): DataFrame =
+    refineAdc(base, queries, k, refineK,
+      kk => search(encoded, queries, books, kk, l2, idCol), idCol, vecCol)
 
-  /** [[searchRefined]] over the block-packed code table. */
+  /** [[searchRefined]] over the block-packed code table: candidates are
+    * bitwise [[search]]'s lookup-sums ([[searchBatchedBlocked]]).
+    */
   def searchRefinedBlocked(base: DataFrame, blocked: DataFrame,
                            queries: DataFrame, books: Codebooks, k: Int,
                            refineK: Int, l2: Boolean = true,

@@ -419,8 +419,7 @@ object BenchScale {
       // nlist=4096 train point (the reference's own build setting —
       // `Performance.md:578` trains 4096 in 13.9 s via FAISS): train-only
       // (the assign+write pass is nlist-independent, measured above), one
-      // shot, exercising the two-level ordered combine so the per-iteration
-      // driver traffic is ⌈parts/8⌉ × 4096 × 384 × 8 B, not parts×.
+      // shot, exercising the two-level ordered fold.
       // Determinism of this path is spec-gated (KmeansSpec two-level test).
       if (only.forall(_.contains("ann_ivf_train4096"))) {
         val t4096 = System.nanoTime()

@@ -75,30 +75,6 @@ object SyntheticVectors {
     * ground truth rank identically — no metric-mismatch artifacts in
     * the recorded frontier.
     */
-  /** Off-manifold perturbation of an (id, vec) table: each vector gains iid
-    * per-dimension noise with expected norm `noiseFrac`·‖vec‖ and is
-    * re-normalized. On a [[lowRank]] corpus the perturbed point sits
-    * BETWEEN manifold cells, so its nearest neighbors have low margin —
-    * the hard-query draw that gives ANN recall frontiers a visible knee
-    * (on-manifold queries read recall 1.0 at every efSearch and show
-    * nothing). Deterministic like everything here (seeded hashes).
-    */
-  def perturb(df: DataFrame, noiseFrac: Double, seed: Long = 7L,
-              idCol: String = "id", vecCol: String = "vec"): DataFrame = {
-    val dimCol = size(col(vecCol))
-    // u is uniform [-1,1] (variance 1/3): per-dim scale s with
-    // E‖noise‖² = dim·s²/3 = noiseFrac² on a unit vector
-    val s = sqrt(lit(3.0 * noiseFrac * noiseFrac) / dimCol)
-    df.select(col(idCol),
-        transform(col(vecCol), (e, d) =>
-          e.cast("double") + u(xxhash64(col(idCol), d, lit(seed))) * s).as("x"))
-      .select(col(idCol), col("x"),
-        sqrt(aggregate(col("x"), lit(0.0d), (acc, e) => acc + e * e)).as("nrm"))
-      .select(col(idCol),
-        transform(col("x"), e => (e / greatest(col("nrm"), lit(1e-12d)))
-          .cast("float")).as(vecCol))
-  }
-
   /** Unit-normalized iid corpus — FULL intrinsic dimension, the opposite
     * end of the hardness spectrum from [[lowRank]]: every direction
     * carries equal variance, distances concentrate, nearest-neighbor

@@ -11,7 +11,7 @@ import graft.ops.{Ivf, Kmeans, Pq}
 /** The index set-up path does each piece of work once and in parallel,
   * with every artifact bitwise what the sequential path built:
   *  - `Pq.train`'s concurrent sub-fits equal a sequential per-subspace
-  *    `Kmeans.fit` loop, on the driver-local path and both distributed ones;
+  *    `Kmeans.fit` loop, on the small-sample path and both seeded-Lloyd ones;
   *  - one coarse quantizer per key, trained once whichever builder runs
   *    first, and equal to a fresh `Ivf.train`;
   *  - the clustered pq4 writer runs `defaultParallelism` write tasks and

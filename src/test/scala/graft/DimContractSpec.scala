@@ -92,8 +92,11 @@ class DimContractSpec extends AnyFunSuite {
     val books = Pq.train(base, m = dim / 4, ksub = 16, ntrain = n)
     val encoded = Pq.encode(base, books)
     eachWrongDim("pq search")((q, _) => Pq.search(encoded, q, books, 5).collect())
-    eachWrongDim("pq searchBatched")((q, _) => Pq.searchBatched(encoded, q, books, 5).collect())
     val tmp = java.nio.file.Files.createTempDirectory("dim_pq4").toString
+    QuantizedTables.writeBytesBlocked(encoded, s"$tmp/blocked", bytesCol = "codes")
+    val blocked = QuantizedTables.readBlocked(spark, s"$tmp/blocked")
+    eachWrongDim("pq searchBatchedBlocked")((q, _) =>
+      Pq.searchBatchedBlocked(blocked, q, books, 5).collect())
     QuantizedTables.writePq4Blocked(encoded, s"$tmp/codes")
     eachWrongDim("pq4 fastscan")((q, _) =>
       Pq.searchFastScan(spark.read.parquet(s"$tmp/codes"), q, books, 5).collect())

@@ -236,7 +236,7 @@ class HnswSpec extends AnyFunSuite {
     assert(rFull >= rPruned - 1e-9, s"full fan-out below pruned: $rFull < $rPruned")
     // threshold = measured-minus-margin under the r9 trainer (restart
     // selection by retrieval-recall proxy for the coarse quantizer — see
-    // Kmeans.localFit; the measured value is in the message; training is
+    // Kmeans.fitLocal; the measured value is in the message; training is
     // seeded-deterministic, so the margin covers only future code drift)
     assert(rPruned >= 0.74, s"a11-config routed recall $rPruned (measured 0.7550)")
     assert(accP.value * 3 < accF.value * 2, // probing 4/8 shards: evals ≤ ~2/3 of full

@@ -41,7 +41,7 @@ class IvfSpec extends AnyFunSuite {
     assert(r8 >= r2, s"recall must not degrade with more probes: $r2 -> $r8")
     // threshold = measured-minus-margin under the r9 trainer (restart
     // selection by retrieval-recall proxy for the coarse quantizer — see
-    // Kmeans.localFit; the measured value is in the message; training is
+    // Kmeans.fitLocal; the measured value is in the message; training is
     // seeded-deterministic, so the margin covers only future code drift)
     assert(r8 >= 0.82, s"nprobe=8/16 recall too low: $r8 (measured 0.8375)")
   }

@@ -19,8 +19,6 @@ class KnobInventorySpec extends AnyFunSuite {
     // engine knobs
     "graft.simd" -> Set("VectorKernels.scala"), // platform fallback, scalar reference
     "graft.vecbin.maxExportRows" -> Set("Vecbin.scala"), // export guard
-    "graft.kmeans.mirror" -> Set("Kmeans.scala"), // reference combine path
-    "graft.kmeans.hamerly" -> Set("Kmeans.scala"), // reference full-rescan path
     "graft.predSidecar" -> Set("SparkEntry.scala"),
     // harness env reads of the three mains
     "SPARK_GRAFT_SF_DIR" -> Set("Bench.scala"),

@@ -67,15 +67,9 @@ class PqSpec extends AnyFunSuite {
     def asSet(df: org.apache.spark.sql.DataFrame) =
       df.select("qid", "id", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    // driver-built LUTs run the same PqOps.lut as the broadcast side, and
-    // adcAll's per-pair lookup-sum is adc's — ranks must be equal
-    assert(asSet(Pq.searchBatched(encoded, queries, books, 10))
-      == asSet(Pq.search(encoded, queries, books, 10)))
-    assert(asSet(Pq.searchRefined(base, encoded, queries, books, 10,
-        refineK = 50, batched = true))
-      == asSet(Pq.searchRefined(base, encoded, queries, books, 10, refineK = 50)))
-    // BLOCKED code table (r10): adcAllSlice over the packed blob performs
-    // the identical lookup-sums, so ranks must equal every flavor above —
+    // BLOCKED code table (r10): driver-built LUTs run the same PqOps.lut
+    // as the broadcast side, and adcSlice over the packed blob performs
+    // adc's lookup-sums, so ranks must equal the joined flavor's —
     // block=96 does not divide 500, exercising the ragged tail
     val tmp = java.nio.file.Files.createTempDirectory("pq_blocked").toString
     graft.io.QuantizedTables.writeBytesBlocked(
@@ -126,7 +120,7 @@ class PqSpec extends AnyFunSuite {
     val r = Ivf.meanRecall(pred, gt, 10).collect()(0).getDouble(0)
     // threshold = measured-minus-margin under the r9 trainer (restart
     // selection by retrieval-recall proxy for the coarse quantizer — see
-    // Kmeans.localFit; the measured value is in the message; training is
+    // Kmeans.fitLocal; the measured value is in the message; training is
     // seeded-deterministic, so the margin covers only future code drift)
     assert(r >= 0.58, s"full-probe IVF-PQ ADC recall too low: $r (measured 0.6000)")
     // widened candidates + exact refine recovers near-exact results
